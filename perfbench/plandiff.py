@@ -8,8 +8,8 @@ change, and one label:
 
 - ``plan changed``: the executed operator trees differ (``plan_fp``);
 - ``same plan, time moved``: same trees, latency moved by more than
-  ``--threshold``;
-- ``same plan``: same trees, latency within the threshold;
+  ``MOVED`` (10 %);
+- ``same plan``: same trees, latency within ``MOVED``;
 - ``plan unknown``: a side has no fingerprint (an untraced run).
 """
 
@@ -18,6 +18,8 @@ from __future__ import annotations
 import argparse
 import json
 import statistics
+
+MOVED = 0.1  # relative latency change that counts as moved
 
 
 def summarize(result: dict) -> dict[str, tuple[float, frozenset[str]]]:
@@ -33,20 +35,20 @@ def summarize(result: dict) -> dict[str, tuple[float, frozenset[str]]]:
     return {op: (statistics.median(v), frozenset(fps.get(op, ()))) for op, v in lat.items()}
 
 
-def label(a: tuple[float, frozenset], b: tuple[float, frozenset], threshold: float) -> str:
+def label(a: tuple[float, frozenset], b: tuple[float, frozenset]) -> str:
     if not a[1] or not b[1]:
         return "plan unknown"
     if a[1] != b[1]:
         return "plan changed"
-    if abs(b[0] - a[0]) > threshold * a[0]:
+    if abs(b[0] - a[0]) > MOVED * a[0]:
         return "same plan, time moved"
     return "same plan"
 
 
-def diff(a: dict, b: dict, threshold: float) -> list[tuple[str, float, float, float, str]]:
+def diff(a: dict, b: dict) -> list[tuple[str, float, float, float, str]]:
     sa, sb = summarize(a), summarize(b)
     return [
-        (op, sa[op][0], sb[op][0], sb[op][0] / sa[op][0] - 1, label(sa[op], sb[op], threshold))
+        (op, sa[op][0], sb[op][0], sb[op][0] / sa[op][0] - 1, label(sa[op], sb[op]))
         for op in sorted(sa.keys() & sb.keys())
     ]
 
@@ -55,15 +57,13 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("before")
     ap.add_argument("after")
-    ap.add_argument("--threshold", type=float, default=0.1,
-                    help="relative latency change that counts as moved (default 0.1)")
     args = ap.parse_args(argv)
     with open(args.before) as f:
         before = json.load(f)
     with open(args.after) as f:
         after = json.load(f)
     print(f"{'op':28s} {'before_s':>9s} {'after_s':>9s} {'change':>8s}  label")
-    for op, x, y, rel, what in diff(before, after, args.threshold):
+    for op, x, y, rel, what in diff(before, after):
         print(f"{op:28s} {x:9.4f} {y:9.4f} {rel:+8.1%}  {what}")
     return 0
 

@@ -1,6 +1,6 @@
 """Benchmark of the datalake_brief_spark engine.
 
-    python3 perfbench/run.py --workload curation --seed 1 --seconds 5 --trace 0
+    python3 perfbench/run.py --workload curation --seed 1 --seconds 8 --trace 0
 
 Workloads: ``curation`` and ``lakehouse`` (the ones BENCHMARK.json lists)
 and ``analytics``, the JVM-only control, which is run by hand.
@@ -11,8 +11,9 @@ library user makes (build a DataFrame and ``collect()`` it, or one
 ``txlog`` write); its latency covers build plus collect. Outputs are
 checked outside the timed region. Set-up (session start and one cold pass
 over the workload's ops) is timed as ``setup_s``; then whole passes run
-until ``--seconds`` have passed. Inputs that do not depend on the seed
-(the tables, DuckDB's answers, the lakehouse base table) are made by the
+until ``--seconds`` have passed. The input tables are the engine's stock
+sf0.1 tables, kept in ``perfbench/data/sf0.1``. Inputs that do not depend
+on the seed (DuckDB's answers, the lakehouse base table) are made by the
 first run in a checkout and reused, untimed.
 
 ``--trace 0`` prints the end-to-end metrics. ``--trace 1`` alternates
@@ -34,6 +35,7 @@ import hashlib
 import json
 import os
 import pickle
+import re
 import shutil
 import statistics
 import subprocess
@@ -45,6 +47,8 @@ from pathlib import Path
 HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
 WORK = HERE / ".work"
+DATA = HERE / "data" / "sf0.1"
+BASE = WORK / "base"  # the lakehouse base table, see basetable.py
 RESULTS = HERE / "results"
 sys.path.insert(0, str(HERE))
 
@@ -93,9 +97,8 @@ def _cpu_ticks() -> tuple[int, int]:
     return sum(ticks), ticks[7]
 
 
-def _tree_pids() -> list[int]:
-    """This process and its descendants: the Spark JVM and its Python
-    worker daemon and workers."""
+def _tree_pids(root: int) -> list[int]:
+    """Process ``root`` and its descendants."""
     kids: dict[int, list[int]] = {}
     for entry in os.listdir("/proc"):
         if entry.isdigit():
@@ -105,7 +108,7 @@ def _tree_pids() -> list[int]:
             except OSError:  # the process ended while we looked
                 continue
             kids.setdefault(ppid, []).append(int(entry))
-    out, todo = [], [os.getpid()]
+    out, todo = [], [root]
     while todo:
         pid = todo.pop()
         out.append(pid)
@@ -113,24 +116,25 @@ def _tree_pids() -> list[int]:
     return out
 
 
-def _tree_rss_mb() -> float:
-    """Sum of peak RSS (VmHWM) over the process tree."""
-    total_kb = 0
-    for pid in _tree_pids():
+def _tree_hwm_kb(root: int, into: dict[int, int]) -> None:
+    """Record in ``into`` the peak RSS (VmHWM, KiB) of ``root`` and each
+    of its descendants, keeping the larger of the old and new reading."""
+    for pid in _tree_pids(root):
         try:
             with open(f"/proc/{pid}/status") as f:
-                total_kb += sum(int(line.split()[1]) for line in f if line.startswith("VmHWM:"))
+                kb = sum(int(line.split()[1]) for line in f if line.startswith("VmHWM:"))
         except OSError:
             continue
-    return total_kb / 1024
+        into[pid] = max(into.get(pid, 0), kb)
 
 
 def _tree_cpu_s() -> float:
     """CPU seconds (user + system, with reaped children) the process tree
-    has used. Unlike wall time, it does not grow with the CPU time other
-    tenants of the host take from this machine."""
+    has used: this client, the Spark JVM and its Python workers. Unlike
+    wall time, it does not grow with the CPU time other tenants of the host
+    take from this machine."""
     ticks = 0
-    for pid in _tree_pids():
+    for pid in _tree_pids(os.getpid()):
         try:
             with open(f"/proc/{pid}/stat") as f:
                 fields = f.read().rsplit(")", 1)[1].split()
@@ -138,6 +142,14 @@ def _tree_cpu_s() -> float:
             continue
         ticks += sum(int(x) for x in fields[11:15])  # utime stime cutime cstime
     return ticks / os.sysconf("SC_CLK_TCK")
+
+
+def _live_heap_peak_mb(gc_log: Path) -> float:
+    """The largest heap occupancy right after a GC pause, from the JVM's
+    GC log (``... Pause Young (Normal) (G1 Evacuation Pause) 95M->29M(254M)``):
+    what the program kept live, whatever size the collector grew the heap to."""
+    after = [int(m[1]) for m in re.finditer(r"Pause .* \d+M->(\d+)M\(", gc_log.read_text())]
+    return float(max(after, default=0))
 
 
 def _dir_files(path: str) -> dict[str, int]:
@@ -157,12 +169,12 @@ class Bench:
         self.records: list[dict] = []
         self.cycles: list[dict] = []
         self.hashes: dict[str, str] = {}
+        self.hwm_kb: dict[int, int] = {}
 
     # -- set-up ------------------------------------------------------------
 
     def prepare(self) -> None:
         """Inputs and expected outputs, before anything is timed."""
-        import datagen
         import duckdb
 
         from datalake_brief_spark.catalog import TABLES, table_path
@@ -170,7 +182,7 @@ class Bench:
         from tests.test_oracle_parity import _canon
 
         self.canon = _canon
-        self.sf_dir = datagen.ensure(str(WORK / "data" / "sf0.1"))
+        self.sf_dir = str(DATA)
         self.orders_path = table_path(self.sf_dir, "orders")
         self.ddb = duckdb.connect()
         for name in TABLES:
@@ -178,7 +190,11 @@ class Bench:
                 f"CREATE VIEW {name} AS SELECT * FROM '{table_path(self.sf_dir, name)}'"
             )
         self.expected: dict[str, tuple] = {}
-        if self.workload != "lakehouse":
+        if self.workload == "lakehouse":
+            if not (BASE / "_COMPLETE").exists():
+                subprocess.run([sys.executable, str(HERE / "basetable.py")], check=True)
+            self.base = str(BASE / "t")
+        else:
             names = wl.ANALYTICS if self.workload == "analytics" else wl.CURATION
             for name in names:
                 if QUERIES[name].oracle is not None:
@@ -203,25 +219,23 @@ class Bench:
     def setup(self) -> float:
         from datalake_brief_spark import get_spark
 
+        self.gc_log = Path(os.environ["TMPDIR"]) / "gc.log"
         t0 = time.perf_counter()
         with self.tracer.span("session.start"):
             self.spark = get_spark(
                 "perfbench",
                 extra_conf={
                     "spark.sql.warehouse.dir": str(Path(os.environ["TMPDIR"]) / "warehouse"),
-                    # a fixed, pre-touched heap: peak RSS then moves with
-                    # off-heap, JVM-native and Python-worker memory, not with
-                    # when the garbage collector chose to grow the heap
-                    "spark.driver.extraJavaOptions": (
-                        f"-Xms{os.environ['SPARK_DRIVER_MEMORY']} -XX:+AlwaysPreTouch"
-                    ),
+                    # every GC's heap occupancy, for the live-heap peak
+                    "spark.driver.extraJavaOptions": f"-Xlog:gc:file={self.gc_log}",
                     # keep every execution of the run readable by the tracer
                     "spark.sql.ui.retainedExecutions": "100000",
                 },
             )
         self.start_s = time.perf_counter() - t0
-        if self.workload == "lakehouse":
-            self.base = self._base_table()  # an input, not timed
+        # the JVM (the launcher execs into it) and, under it, the Python
+        # worker daemon and workers: the program's memory, not this client's
+        self.jvm_pid = self.spark.sparkContext._gateway.proc.pid  # noqa: SLF001
         if self.tracer.enabled:
             from sqlmetrics import StatusStoreReader
 
@@ -230,38 +244,13 @@ class Bench:
         with self.tracer.span("session.warmup"):
             self.run_pass(0, self.passes[0], traced=False)
         self.warmup_s = time.perf_counter() - t1
+        _tree_hwm_kb(self.jvm_pid, self.hwm_kb)
         return self.start_s + self.warmup_s
 
     def _orders(self):
         from datalake_brief_spark.catalog import load_table
 
         return load_table(self.spark, self.sf_dir, "orders").select(*ORDERS_COLS)
-
-    def _base_table(self) -> str:
-        """The 8-band ``orders`` table every cycle clones: one append per
-        contiguous key band, with key stats, like the merge sentinel. It
-        is the same for every seed, so the first run builds it and later
-        runs reuse it."""
-        from pyspark.sql import functions as F
-
-        from datalake_brief_spark.sources import txlog
-
-        base = WORK / "base"
-        if (base / "_COMPLETE").exists():
-            return str(base / "t")
-        tmp = WORK / f"base.tmp{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        orders = self._orders()
-        for i in range(wl.BANDS):
-            band = orders.filter(
-                (F.col("o_orderkey") >= i * wl.BAND_STEP)
-                & (F.col("o_orderkey") < (i + 1) * wl.BAND_STEP)
-            )
-            txlog.append(band.coalesce(1), str(tmp / "t"), stats_cols=["o_orderkey"])
-        (tmp / "_COMPLETE").touch()
-        shutil.rmtree(base, ignore_errors=True)
-        tmp.rename(base)
-        return str(base / "t")
 
     # -- ops ---------------------------------------------------------------
 
@@ -477,21 +466,24 @@ class Bench:
             traced = self.tracer.enabled and index % 2 == 0
             with self.tracer.span("run", passno=index):
                 self.run_pass(index, self.passes[index], traced)
+            # after every pass, so a Python worker that exits later still counts
+            _tree_hwm_kb(self.jvm_pid, self.hwm_kb)
             index += 1
 
+    def _plain(self) -> list[dict]:
+        """Records of the warm, untraced passes."""
+        return [r for r in self.records if r["pass"] > 0 and not r["traced"]]
+
     def end_to_end(self, setup_s: float) -> dict[str, float]:
-        warm = [r["cpu_s"] for r in self.records if r["pass"] > 0]
         return {
             "setup_s": setup_s,
-            "cpu_s_per_op": statistics.fmean(warm),
-            "peak_rss_mb": self.rss_mb,
+            "cpu_s_per_op": statistics.fmean(r["cpu_s"] for r in self._plain()),
         }
 
     def per_layer(self) -> dict[str, float]:
         from sqlmetrics import COUNT_METRICS, OPERATOR_METRICS
 
         traced = [r for r in self.records if r.get("layers") is not None]
-        plain = [r for r in self.records if r["pass"] > 0 and not r["traced"]]
         op_pass = {s["id"]: s["passno"] for s in self.tracer.spans if s["name"].startswith("op:")}
         builds = [
             (op_pass[s["parent"]], s["end"] - s["start"])
@@ -500,6 +492,8 @@ class Bench:
         m = {
             "session.start_s": self.start_s,
             "session.warmup_s": self.warmup_s,
+            "memory.peak_rss_mb": sum(self.hwm_kb.values()) / 1024,
+            "memory.live_heap_peak_mb": _live_heap_peak_mb(self.gc_log),
             "queries.build_s": statistics.median([d for p, d in builds if p > 0] or [0.0]),
             "queries.cold_build_s": sum(d for p, d in builds if p == 0),
         }
@@ -525,9 +519,11 @@ class Bench:
             m[name] = statistics.fmean([c[key] for c in cyc]) if cyc else 0.0
         ratios = [c["files_read_ratio"] for c in cyc if c["files_read_ratio"] is not None]
         m["txlog.files_read_ratio"] = statistics.fmean(ratios) if ratios else 0.0
-        # what the caller waits for, from the untraced passes; not gated,
-        # because host CPU steal moves it by more than any allowed bound
-        lat_p = [r["latency_s"] for r in plain]
+        # what the caller waits for, from the untraced passes. Not gated:
+        # other tenants of the host move wall time by more than any allowed
+        # bound, and the median op jumps between op types, whose latencies
+        # differ several-fold
+        lat_p = [r["latency_s"] for r in self._plain()]
         m["client.ops_per_s"] = len(lat_p) / sum(lat_p)
         m["client.op_p50_s"] = statistics.median(lat_p)
         lat_t = [r["latency_s"] for r in traced]
@@ -535,23 +531,25 @@ class Bench:
         return m
 
     def stop(self) -> None:
-        """Stop Spark and wait for its JVM (and with it the Python workers)
-        to exit."""
-        spark = getattr(self, "spark", None)
-        if spark is None:
-            return
-        gateway = spark.sparkContext._gateway  # noqa: SLF001
-        proc = getattr(gateway, "proc", None)
-        spark.stop()
-        gateway.shutdown()
-        if proc is not None:
-            if proc.stdin:
-                proc.stdin.close()
-            try:
-                proc.wait(timeout=60)
-            except subprocess.TimeoutExpired:
-                proc.kill()
-                proc.wait()
+        if getattr(self, "spark", None) is not None:
+            stop_spark(self.spark)
+
+
+def stop_spark(spark) -> None:
+    """Stop Spark and wait for its JVM (and with it the Python workers)
+    to exit."""
+    gateway = spark.sparkContext._gateway  # noqa: SLF001
+    proc = getattr(gateway, "proc", None)
+    spark.stop()
+    gateway.shutdown()
+    if proc is not None:
+        if proc.stdin:
+            proc.stdin.close()
+        try:
+            proc.wait(timeout=60)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
 
 
 def main(argv=None) -> int:
@@ -567,6 +565,9 @@ def main(argv=None) -> int:
         import datalake_brief_spark  # noqa: F401
     except ImportError as exc:
         print(f"cannot import the engine from {ROOT}: {exc}", file=sys.stderr)
+        return 2
+    if not (DATA / "orders.parquet").exists():
+        print(f"input tables missing from {DATA}", file=sys.stderr)
         return 2
     env = pin_env()
 
@@ -585,7 +586,6 @@ def main(argv=None) -> int:
         phase("setup_s")
         bench.measure(args.seconds)
         phase("measure_s")
-        bench.rss_mb = _tree_rss_mb()
         metrics = bench.per_layer() if args.trace else bench.end_to_end(setup_s)
     finally:
         bench.stop()

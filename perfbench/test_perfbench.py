@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 
 import plandiff
+import run
 import spans
 import sqlmetrics
 import workloads as wl
@@ -152,7 +153,20 @@ def test_plandiff_labels():
             {"pass": 1, "op": "q", "latency_s": lat, "plan_fp": fp},
         ]}
 
-    assert plandiff.diff(result(1.0, "a"), result(1.5, "b"), 0.1)[0][-1] == "plan changed"
-    assert plandiff.diff(result(1.0, "a"), result(1.5, "a"), 0.1)[0][-1] == "same plan, time moved"
-    assert plandiff.diff(result(1.0, "a"), result(1.05, "a"), 0.1)[0][-1] == "same plan"
-    assert plandiff.diff(result(1.0, None), result(1.0, "a"), 0.1)[0][-1] == "plan unknown"
+    assert plandiff.diff(result(1.0, "a"), result(1.5, "b"))[0][-1] == "plan changed"
+    assert plandiff.diff(result(1.0, "a"), result(1.5, "a"))[0][-1] == "same plan, time moved"
+    assert plandiff.diff(result(1.0, "a"), result(1.05, "a"))[0][-1] == "same plan"
+    assert plandiff.diff(result(1.0, None), result(1.0, "a"))[0][-1] == "plan unknown"
+
+
+def test_live_heap_peak_reads_the_largest_occupancy_after_a_pause(tmp_path):
+    log = tmp_path / "gc.log"
+    log.write_text(
+        "[0.002s][info][gc] Using G1\n"
+        "[0.125s][info][gc] GC(0) Pause Young (Normal) (G1 Evacuation Pause) 20M->17M(254M) 3.526ms\n"
+        "[1.178s][info][gc] GC(3) Pause Young (Concurrent Start) (Metadata GC Threshold) "
+        "95M->29M(254M) 5.115ms\n"
+        "[1.180s][info][gc] GC(4) Concurrent Mark Cycle\n"
+        "[1.300s][info][gc] GC(4) Pause Remark 40M->24M(254M) 1.1ms\n"
+    )
+    assert run._live_heap_peak_mb(log) == 29.0
