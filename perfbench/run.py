@@ -1,6 +1,6 @@
 """Benchmark of the datalake_brief_spark engine.
 
-    python3 perfbench/run.py --workload curation --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload curation --seed 1 --seconds 4 --trace 0
 
 Workloads: ``curation`` and ``lakehouse`` (the ones BENCHMARK.json lists)
 and ``analytics``, the JVM-only control, which is run by hand.
@@ -16,7 +16,10 @@ sf0.1 tables, kept in ``perfbench/data/sf0.1``. Inputs that do not depend
 on the seed (DuckDB's answers, the lakehouse base table) are made by the
 first run in a checkout and reused, untimed.
 
-``--trace 0`` prints the end-to-end metrics. ``--trace 1`` alternates
+``--trace 0`` prints the end-to-end metrics: ``setup_s`` and
+``cpu_s_per_op``, the CPU time a warm op costs the client, the Spark JVM
+(without its JIT compiler threads) and the Python workers, taken per op as
+the median over the warm passes. ``--trace 1`` alternates
 untraced and traced passes and prints the per-layer metrics: spans around
 every call into the engine plus the Spark SQL status store's operator
 metrics of each op's executions. Every run also writes a detailed result
@@ -128,20 +131,49 @@ def _tree_hwm_kb(root: int, into: dict[int, int]) -> None:
         into[pid] = max(into.get(pid, 0), kb)
 
 
-def _tree_cpu_s() -> float:
-    """CPU seconds (user + system, with reaped children) the process tree
-    has used: this client, the Spark JVM and its Python workers. Unlike
-    wall time, it does not grow with the CPU time other tenants of the host
-    take from this machine."""
+# the JVM's JIT compiler threads ("C1 CompilerThread0", truncated by the
+# kernel to 15 characters); kept alive for the whole run, see setup()
+JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre")
+
+
+def _ticks(stat: str, reaped: bool = True) -> int:
+    """utime + stime of a /proc stat line and, if ``reaped``, cutime +
+    cstime: the CPU time of the children the process has waited for. A
+    thread's line repeats the latter for its whole process."""
+    return sum(int(x) for x in stat.rsplit(")", 1)[1].split()[11:15 if reaped else 13])
+
+
+def _jit_cpu_s(jvm: int) -> float:
+    """CPU seconds the JVM's JIT compiler threads have used."""
+    ticks = 0
+    task = f"/proc/{jvm}/task"
+    for tid in os.listdir(task) if os.path.isdir(task) else ():
+        try:
+            with open(f"{task}/{tid}/stat") as f:
+                stat = f.read()
+        except OSError:  # the thread ended while we looked
+            continue
+        if stat[stat.index("(") + 1:stat.rindex(")")].startswith(JIT_THREADS):
+            ticks += _ticks(stat, reaped=False)
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
+def _tree_cpu_s(jvm: int) -> tuple[float, float]:
+    """(work, jit): CPU seconds the process tree has used (user + system,
+    with reaped children) -- this client, the Spark JVM and its Python
+    workers -- split into the JVM's JIT compilers and all the rest. Unlike
+    wall time, neither grows with the CPU time other tenants of the host
+    take from this machine. JIT compiling is a warm-up cost that falls
+    pass after pass, so it is kept apart from the per-op work."""
     ticks = 0
     for pid in _tree_pids(os.getpid()):
         try:
             with open(f"/proc/{pid}/stat") as f:
-                fields = f.read().rsplit(")", 1)[1].split()
+                ticks += _ticks(f.read())
         except OSError:
             continue
-        ticks += sum(int(x) for x in fields[11:15])  # utime stime cutime cstime
-    return ticks / os.sysconf("SC_CLK_TCK")
+    jit = _jit_cpu_s(jvm)
+    return ticks / os.sysconf("SC_CLK_TCK") - jit, jit
 
 
 def _live_heap_peak_mb(gc_log: Path) -> float:
@@ -226,8 +258,11 @@ class Bench:
                 "perfbench",
                 extra_conf={
                     "spark.sql.warehouse.dir": str(Path(os.environ["TMPDIR"]) / "warehouse"),
-                    # every GC's heap occupancy, for the live-heap peak
-                    "spark.driver.extraJavaOptions": f"-Xlog:gc:file={self.gc_log}",
+                    # every GC's heap occupancy, for the live-heap peak; and
+                    # JIT compiler threads that live as long as the JVM, so
+                    # _jit_cpu_s sees all their CPU time
+                    "spark.driver.extraJavaOptions": f"-Xlog:gc:file={self.gc_log} "
+                    "-XX:-UseDynamicNumberOfCompilerThreads",
                     # keep every execution of the run readable by the tracer
                     "spark.sql.ui.retainedExecutions": "100000",
                 },
@@ -266,7 +301,7 @@ class Bench:
         mark = self.reader.mark() if traced else None
         tr = self.tracer
         failed, out = "", None
-        cpu0 = _tree_cpu_s()
+        cpu0, jit0 = _tree_cpu_s(self.jvm_pid)
         with tr.span(f"op:{name}", passno=index) as sp:
             t0 = time.perf_counter()
             try:
@@ -274,7 +309,7 @@ class Bench:
             except Exception as exc:  # an op that raises is a failed op
                 failed = f"raised {exc!r}"
             latency = time.perf_counter() - t0
-        cpu_s = _tree_cpu_s() - cpu0
+        cpu1, jit1 = _tree_cpu_s(self.jvm_pid)
         if not failed:
             try:
                 failed = "" if check(out) else f"wrong result {out!r:.300}"
@@ -282,8 +317,9 @@ class Bench:
                 failed = f"check raised {exc!r}"
         if failed:
             print(f"op {name} (pass {index}): {failed}", file=sys.stderr)
-        rec = {"pass": index, "op": name, "latency_s": latency, "cpu_s": cpu_s,
-               "ok": not failed, "traced": traced, "error": failed or None}
+        rec = {"pass": index, "op": name, "latency_s": latency, "cpu_s": cpu1 - cpu0,
+               "jit_cpu_s": jit1 - jit0, "ok": not failed, "traced": traced,
+               "error": failed or None}
         if traced:
             ids, layers, fp = self.reader.since(mark)
             rec.update(exec_ids=ids, layers=layers, plan_fp=fp)
@@ -474,11 +510,17 @@ class Bench:
         """Records of the warm, untraced passes."""
         return [r for r in self.records if r["pass"] > 0 and not r["traced"]]
 
+    def _per_op(self, key: str) -> float:
+        """``key`` of a warm untraced op: each op's median over the passes,
+        averaged over the workload's ops. The median keeps a pass that ran
+        while the host was busy from moving it."""
+        by_op: dict[str, list[float]] = {}
+        for r in self._plain():
+            by_op.setdefault(r["op"], []).append(r[key])
+        return statistics.fmean(statistics.median(v) for v in by_op.values())
+
     def end_to_end(self, setup_s: float) -> dict[str, float]:
-        return {
-            "setup_s": setup_s,
-            "cpu_s_per_op": statistics.fmean(r["cpu_s"] for r in self._plain()),
-        }
+        return {"setup_s": setup_s, "cpu_s_per_op": self._per_op("cpu_s")}
 
     def per_layer(self) -> dict[str, float]:
         from sqlmetrics import COUNT_METRICS, OPERATOR_METRICS
@@ -496,6 +538,7 @@ class Bench:
             "memory.live_heap_peak_mb": _live_heap_peak_mb(self.gc_log),
             "queries.build_s": statistics.median([d for p, d in builds if p > 0] or [0.0]),
             "queries.cold_build_s": sum(d for p, d in builds if p == 0),
+            "jvm.jit_cpu_s_per_op": self._per_op("jit_cpu_s"),
         }
         for key in OPERATOR_METRICS + COUNT_METRICS:
             m[key] = statistics.fmean([r["layers"][key] for r in traced]) if traced else 0.0

@@ -170,3 +170,24 @@ def test_live_heap_peak_reads_the_largest_occupancy_after_a_pause(tmp_path):
         "[1.300s][info][gc] GC(4) Pause Remark 40M->24M(254M) 1.1ms\n"
     )
     assert run._live_heap_peak_mb(log) == 29.0
+
+
+def test_per_op_takes_each_ops_median_over_the_warm_untraced_passes():
+    bench = run.Bench("curation", 1, trace=False)
+    bench.records = [
+        {"pass": p, "op": op, "cpu_s": cpu, "traced": traced}
+        for p, op, cpu, traced in [
+            (0, "a", 50.0, False),  # the cold pass
+            (1, "a", 1.0, False), (2, "a", 7.0, True), (3, "a", 3.0, False),
+            (4, "a", 2.0, False), (1, "b", 4.0, False),
+        ]
+    ]
+    assert bench._per_op("cpu_s") == (2.0 + 4.0) / 2
+
+
+def test_jit_cpu_is_zero_for_a_process_without_compiler_threads():
+    import os
+
+    assert run._jit_cpu_s(os.getpid()) == 0.0
+    work, jit = run._tree_cpu_s(os.getpid())
+    assert work > 0 and jit == 0.0
