@@ -89,8 +89,9 @@ def _merge_sentinel(spark, sf_dir: str) -> dict[str, float]:
     every run measures the identical (prebuilt-table, fixed-band) merge,
     never a mutated snapshot. Catches regressions in the candidate-
     pruning ladder, the phase-1 tag scan, and the commit path that the
-    headline merges (which rebuild their tables inside the timed query)
-    can mask. Excluded from the headline total like the checkpoint
+    headline merges cannot see: ``_lakehouse_table`` builds (and
+    memoizes) their tables before the timed loop, so the timer covers
+    only the read. Excluded from the headline total like the checkpoint
     sentinels."""
     import tempfile
 

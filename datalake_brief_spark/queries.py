@@ -11567,56 +11567,6 @@ _DRIVER_WINDOW_PRIORITY = [
     # widening, BM25, TBLPROPERTIES) + every remaining r5 entry + the
     # stalest r7 slice. Tail = everything else in non-decreasing
     # latest-attested-round order (pinned in tests/test_plans.py).
-    "semantic_dedup_recall",
-    "ml_normalize_minmax",
-    "asof_join_forward",
-    "corpus_domain_cap",
-    "sample_weighted_aes",
-    "ml_target_encode",
-    "profile_winsorized",
-    "source_token_kl",
-    "ml_quantile_bins",
-    "dq_benford",
-    "text_normalize_nfc",
-    "emb_norm_profile",
-    "emb_label_balance",
-    "ml_feature_mi",
-    "profile_group_quantiles",
-    "text_lm_perplexity",
-    "corpus_quality_cut",
-    "text_compression_ratio",
-    "graph_components_chain",
-    "events_pareto",
-    "customer_rfm",
-    "ml_auc_rank",
-    "profile_entropy",
-    "txlog_restore",
-    "txlog_dv_metrics",
-    "knn_lsh",
-    "knn_ivf",
-    "knn_ivf_indexed",
-    "leakage_safe_split",
-    "pipeline_curation",
-    "pipeline_curation_v2",
-    "emb_near_dup_srp45",
-    "emb_near_dup_exact",
-    "events_ewma",
-    "table_diff_audit",
-    "q1_pricing_summary",
-    "q5_nation_revenue",
-    "q3_shipping_priority",
-    "txlog_cdf_update",
-    "txlog_convert_in_place",
-    "txlog_symlink_manifest",
-    "txlog_row_ids",
-    "txlog_cdf_rowids",
-    "proj_select",
-    "proj_derive",
-    "proj_rename_drop",
-    "filter_sql_string",
-    "filter_column_expr",
-    "filter_conjunction",
-    "filter_negation",
     "filter_contains",
     "filter_project_pipeline",
     "agg_groupby_sum",
@@ -11854,6 +11804,56 @@ _DRIVER_WINDOW_PRIORITY = [
     "dq_mad_outliers",
     "dq_ks_drift",
     "dedup_minhash_recall",
+    "semantic_dedup_recall",
+    "ml_normalize_minmax",
+    "asof_join_forward",
+    "corpus_domain_cap",
+    "sample_weighted_aes",
+    "ml_target_encode",
+    "profile_winsorized",
+    "source_token_kl",
+    "ml_quantile_bins",
+    "dq_benford",
+    "text_normalize_nfc",
+    "emb_norm_profile",
+    "emb_label_balance",
+    "ml_feature_mi",
+    "profile_group_quantiles",
+    "text_lm_perplexity",
+    "corpus_quality_cut",
+    "text_compression_ratio",
+    "graph_components_chain",
+    "events_pareto",
+    "customer_rfm",
+    "ml_auc_rank",
+    "profile_entropy",
+    "txlog_restore",
+    "txlog_dv_metrics",
+    "knn_lsh",
+    "knn_ivf",
+    "knn_ivf_indexed",
+    "leakage_safe_split",
+    "pipeline_curation",
+    "pipeline_curation_v2",
+    "emb_near_dup_srp45",
+    "emb_near_dup_exact",
+    "events_ewma",
+    "table_diff_audit",
+    "q1_pricing_summary",
+    "q5_nation_revenue",
+    "q3_shipping_priority",
+    "txlog_cdf_update",
+    "txlog_convert_in_place",
+    "txlog_symlink_manifest",
+    "txlog_row_ids",
+    "txlog_cdf_rowids",
+    "proj_select",
+    "proj_derive",
+    "proj_rename_drop",
+    "filter_sql_string",
+    "filter_column_expr",
+    "filter_conjunction",
+    "filter_negation",
 ]
 
 

@@ -3282,11 +3282,11 @@ def _merge_candidate_files(
        against the source keys) decides the final rewrite set.
 
     Returns ``(candidate absolute paths, {key: (lo, hi)} envelope,
-    n_source_rows, src_keys_unique)`` — the envelope doubles as the WriteSerializable
-    phantom predicate; the row count (free: it rides the SAME one-pass
-    agg as the envelope) drives the explicit broadcast decision for the
-    merge's source-side joins. A Python-created source plans as a
-    LogicalRDD whose size statistic is UNKNOWN (Spark substitutes
+    n_source_rows, src_keys_unique)`` — the envelope doubles as the
+    WriteSerializable phantom predicate; the row count (no extra job: it
+    rides the SAME agg as the envelope) drives the explicit broadcast
+    decision for the merge's source-side joins. A Python-created source
+    plans as a LogicalRDD whose size statistic is UNKNOWN (Spark substitutes
     defaultSizeInBytes ≈ 8 EB), so the planner NEVER auto-broadcasts it
     and every merge join sort-merges the whole candidate band — measured
     4-8× of pure sort waste on a 16M-row band against a 40-row CDC
@@ -3297,12 +3297,14 @@ def _merge_candidate_files(
         aggs += [F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}")]
         leg = F.col(k).isNotNull()
         nn = leg if nn is None else (nn & leg)
-    # key-uniqueness rides the SAME one-pass agg (r14): when every non-null
-    # key tuple is distinct, NO target row can match two source rows, so
-    # the caller skips the dup-keys guard job entirely — one fewer Spark
-    # job per merge in the overwhelmingly common unique-key CDC case.
-    # Null-key rows never equi-match anything, so they are excluded from
-    # both sides of the comparison.
+    # key-uniqueness rides the SAME agg job — one job, but not one
+    # pass: the count_distinct plans as a multi-level aggregate (a partial
+    # aggregate, an exchange on the key tuple, then the merge levels).
+    # When every non-null key tuple is distinct, NO target row can match
+    # two source rows, so the caller skips the dup-keys guard job entirely
+    # — one fewer Spark job per merge in the overwhelmingly common
+    # unique-key CDC case. Null-key rows never equi-match anything, so
+    # they are excluded from both sides of the comparison.
     aggs += [
         F.count_if(nn).alias("__nn"),
         F.count_distinct(*[F.col(k) for k in keys]).alias("__nd"),
@@ -3359,6 +3361,28 @@ def _merge_candidate_files(
         if not candidates:
             break
     return candidates, envelope, n_src, src_keys_unique
+
+
+def _merge_clauses(clauses, name: str) -> list[tuple]:
+    """Normalize one ordered MERGE clause list to ``(kind, assigns,
+    cond)`` triples: ``("update", assigns, cond)`` / ``("delete", cond)``
+    with the condition optional; every clause but the last must carry
+    one (later clauses would be unreachable — the Delta rule)."""
+    out: list[tuple] = []
+    for cl in clauses or []:
+        kind = cl[0]
+        if kind == "update":
+            out.append((kind, cl[1], cl[2] if len(cl) > 2 else None))
+        elif kind == "delete":
+            out.append((kind, None, cl[1] if len(cl) > 1 else None))
+        else:
+            raise ValueError(f"unknown {name} clause kind {kind!r}")
+    if any(cond is None for _, _, cond in out[:-1]):
+        raise ValueError(
+            f"every {name} clause except the last needs a condition "
+            f"(later clauses would be unreachable)"
+        )
+    return out
 
 
 def merge_into(
@@ -3451,49 +3475,15 @@ def merge_into(
             == "true"
         )
     # --- normalize clauses -------------------------------------------------
-    matched_clauses: list[tuple] = []
-    for cl in when_matched or []:
-        kind = cl[0]
-        if kind == "update":
-            assigns = cl[1]
-            cond = cl[2] if len(cl) > 2 else None
-        elif kind == "delete":
-            assigns = None
-            cond = cl[1] if len(cl) > 1 else None
-        else:
-            raise ValueError(f"unknown when_matched clause kind {kind!r}")
-        matched_clauses.append((kind, assigns, cond))
-    for kind, _, cond in matched_clauses[:-1]:
-        if cond is None:
-            raise ValueError(
-                "every when_matched clause except the last needs a "
-                "condition (later clauses would be unreachable)"
-            )
-    bys_clauses: list[tuple] = []
-    for cl in when_not_matched_by_source or []:
-        kind = cl[0]
-        if kind == "update":
-            assigns = cl[1]
-            cond = cl[2] if len(cl) > 2 else None
-        elif kind == "delete":
-            assigns = None
-            cond = cl[1] if len(cl) > 1 else None
-        else:
-            raise ValueError(
-                f"unknown when_not_matched_by_source clause kind {kind!r}"
-            )
-        if assigns == "*":
-            raise ValueError(
-                "when_not_matched_by_source UPDATE cannot use '*' — there "
-                "is no source row to copy from"
-            )
-        bys_clauses.append((kind, assigns, cond))
-    for kind, _, cond in bys_clauses[:-1]:
-        if cond is None:
-            raise ValueError(
-                "every when_not_matched_by_source clause except the last "
-                "needs a condition (later clauses would be unreachable)"
-            )
+    matched_clauses = _merge_clauses(when_matched, "when_matched")
+    bys_clauses = _merge_clauses(
+        when_not_matched_by_source, "when_not_matched_by_source"
+    )
+    if any(assigns == "*" for _, assigns, _ in bys_clauses):
+        raise ValueError(
+            "when_not_matched_by_source UPDATE cannot use '*' — there "
+            "is no source row to copy from"
+        )
     if when_not_matched is True:
         ins_clause = (None, None)
     elif when_not_matched in (None, False):
@@ -3720,25 +3710,27 @@ def merge_into(
     rowid_pass = ()
 
     # Frames re-evaluated across several actions inside one commit are
-    # persisted for the commit's duration and dropped in the finally
-    # (VERDICT r10 ask #4: the joined rewrite frame fed the rewritten
-    # output plus up to five change-feed legs as redundant scans).
-    _cached: list = []
-    # r14 (guide §2.6 — overlap independent jobs): the phase-2 data-file
-    # write, the change-feed write and the phase-3 insert job are
-    # INDEPENDENT Spark jobs (all derive from the persisted join frame /
-    # the persisted source, none reads another's output), yet they ran
-    # strictly serially — each job's straggler tail left the cluster idle.
-    # The phase-2 write is submitted to a driver thread; the change/insert
-    # jobs back-fill its tail, and the future resolves before the stats
-    # collection that needs the written paths (and in the finally on every
-    # error path). Spark's cache locks serialize the first materialization
-    # of the shared persisted frame, so no work duplicates.
+    # persisted for the commit's duration and released when the block
+    # exits (the joined rewrite frame feeds the rewritten output plus up
+    # to five change-feed legs, each a redundant scan otherwise). The phase-2 data-file write, the change-feed write and the
+    # phase-3 insert job are INDEPENDENT Spark jobs (all derive from the
+    # persisted join frame / the persisted source, none reads another's
+    # output): the phase-2 write runs on this call's own driver thread so
+    # the change/insert jobs back-fill its straggler tail, and it resolves
+    # before the stats collection that needs the written paths. Leaving
+    # the block waits out an in-flight write (the pool exits first) before
+    # any frame is unpersisted from under it; on an error path its files
+    # are unreferenced by any commit — vacuum territory, same as any
+    # failed CoW write. Spark's cache locks serialize the first
+    # materialization of the shared persisted frame, so no work
+    # duplicates.
     from concurrent.futures import ThreadPoolExecutor
+    from contextlib import ExitStack
 
-    _write_pool: ThreadPoolExecutor | None = None
-    _pending_adds: tuple | None = None  # (future, insert_at, dv_sweep)
-    try:
+    with ExitStack() as release, ThreadPoolExecutor(max_workers=1) as pool:
+        if _src_persisted:
+            release.callback(source.unpersist)
+        phase2_write = None
         # --- phase 2: rewrite the files where a clause fires ---------------------
         tgt_m = None
         if matched:
@@ -3825,7 +3817,7 @@ def merge_into(
                 ).persist()
             else:
                 j = j.persist()
-            _cached.append(j)
+            release.callback(j.unpersist)
 
             def t_val(c):
                 if c in tgt_r.columns:
@@ -3878,40 +3870,23 @@ def merge_into(
             if tracking:
                 rowid_pass = (F.col(f"t.`{_ROWID}`").alias(_ROWID),)
             phase2_live = True
+            rewritten = None
             if use_dvs:
                 # merge-on-read: every clause-hit row's PRE-IMAGE position
                 # lands in one DV sidecar group (hiding it from read_mor);
                 # only the UPDATE outputs append. No candidate file is
-                # rewritten — cost ∝ hit rows, never file count.
-                dv_group = os.path.join(_DV_DIR, uuid.uuid4().hex)
-                dv_target = os.path.join(path, dv_group)
-                # j is already the persisted clause-hit subset here
-                j.select(
-                    F.col("t.__fn").alias("file_name"),
-                    F.col("t.__ri").alias("row_index"),
-                ).write.mode("error").parquet(dv_target)
-                touched = [
-                    r.file_name
-                    for r in spark.read.parquet(dv_target)
-                    .select("file_name")
-                    .distinct()
-                    .collect()
-                ]
-                if not touched:
+                # rewritten — cost ∝ hit rows, never file count. j is
+                # already the persisted clause-hit subset here.
+                dv_target, dv_adds = _land_dv_positions(
+                    spark, path, read_v, j.select("t.__fn", "t.__ri")
+                )
+                if dv_target is None:
                     # every phase-1 hit row was already DV-dead (phase 1
                     # scans raw files): phase 2 contributes nothing — the
                     # redelivered-batch no-op shape
-                    logstore.for_path(path).delete_tree(dv_target)
                     phase2_live = False
                 else:
                     _sweep.append(dv_target)
-                    by_base = {
-                        os.path.basename(p): os.path.relpath(p, path)
-                        for p in visible_files(path, read_v)
-                    }
-                    dv_adds = {
-                        by_base[fn]: dv_group for fn in touched if fn in by_base
-                    }
                     upd_hit = F.lit(False)
                     if upd_idx:
                         upd_hit = upd_hit | F.col("__act").isin(upd_idx)
@@ -3921,19 +3896,8 @@ def merge_into(
                         rewritten = j.filter(upd_hit).select(
                             *out_vals, *rowid_pass
                         )
-                        if rewritten.limit(1).count():
-                            _enforce_constraints(rewritten, path)
-                            _apply_generated(rewritten, path)
-                            _write_pool = ThreadPoolExecutor(max_workers=1)
-                            _pending_adds = (
-                                _write_pool.submit(
-                                    _write_data_files,
-                                    _to_physical(rewritten, mapping),
-                                    path,
-                                ),
-                                len(adds),
-                                True,
-                            )
+                        if not rewritten.limit(1).count():
+                            rewritten = None
             else:
                 keep = j
                 if del_idx:
@@ -3941,19 +3905,15 @@ def merge_into(
                 if bs_del:
                     keep = keep.filter(~F.col("__bact").isin(bs_del))
                 rewritten = keep.select(*out_vals, *rowid_pass)
+                removes = [os.path.relpath(p, path) for p in rewrite]
+            if rewritten is not None:
                 _enforce_constraints(rewritten, path)
                 # an UPDATE clause that changes a generated column's inputs
                 # must keep the derivation true (assign both consistently) —
                 # validated here, never silently broken into the files
                 _apply_generated(rewritten, path)
-                removes = [os.path.relpath(p, path) for p in rewrite]
-                _write_pool = ThreadPoolExecutor(max_workers=1)
-                _pending_adds = (
-                    _write_pool.submit(
-                        _write_data_files, _to_physical(rewritten, mapping), path
-                    ),
-                    len(adds),
-                    False,
+                phase2_write = pool.submit(
+                    _write_data_files, _to_physical(rewritten, mapping), path
                 )
             # change record: each clause-hit row's images — updates as their
             # delete+insert pair SHARING the row's stable id, deletes as
@@ -4052,7 +4012,7 @@ def merge_into(
             # files for the non-empty probe, the data write, the change leg,
             # and every constraint/generated validation (VERDICT r10 ask #4)
             inserts = inserts.persist()
-            _cached.append(inserts)
+            release.callback(inserts.unpersist)
             if inserts.limit(1).count():
                 if idents:
                     # the reservation protocol: values assigned inside the
@@ -4067,6 +4027,10 @@ def merge_into(
                         _apply_generated(inserts, path)  # validate supplied values
                     ins_adds = _write_data_files(_to_physical(inserts, mapping), path)
                     adds += ins_adds
+                    if use_dvs and ins_adds:
+                        _sweep.append(
+                            os.path.dirname(os.path.join(path, ins_adds[0]))
+                        )
                     change_legs.append(
                         inserts.withColumn("_change_type", F.lit("insert"))
                     )
@@ -4089,17 +4053,16 @@ def merge_into(
         # skipping channels: CoW recollects what the removed files carried;
         # the DV path removes nothing, so its appended update outputs keep
         # the TABLE's live channels alive (the update_where_dv contract)
-        if _pending_adds is not None:
+        if phase2_write is not None:
             # resolve the overlapped phase-2 write: every job that could
-            # back-fill it (change feed, inserts) has now run
-            _fut, _at, _dv_sweep = _pending_adds
-            _new_adds = _fut.result()
-            adds[_at:_at] = _new_adds
-            if _dv_sweep and _new_adds:
+            # back-fill it (change feed, inserts) has now run. Its files
+            # lead the adds, ahead of the phase-3 inserts.
+            phase2_adds = phase2_write.result()
+            adds[:0] = phase2_adds
+            if use_dvs and phase2_adds:
                 _sweep.append(
-                    os.path.dirname(os.path.join(path, _new_adds[0]))
+                    os.path.dirname(os.path.join(path, phase2_adds[0]))
                 )
-            _pending_adds = None
         skip_src = removes
         if dv_adds:
             skip_src = [
@@ -4140,27 +4103,12 @@ def merge_into(
             )
         except CommitConflict:
             # losing DV writer sweeps its pre-landed groups (sidecar +
-            # update outputs + change record), mirroring update_where_dv;
+            # update and insert outputs + change record), mirroring
+            # update_where_dv;
             # the CoW path keeps its historical leave-to-vacuum behavior
             for g in _sweep:
                 logstore.for_path(path).delete_tree(g)
             raise
-    finally:
-        if _pending_adds is not None:
-            # error path with the write still in flight: wait it out so the
-            # unpersists below never yank a frame from under a running job
-            # (its files are unreferenced by any commit — vacuum territory,
-            # same as any failed CoW write)
-            try:
-                _pending_adds[0].result()
-            except Exception:
-                pass
-        if _write_pool is not None:
-            _write_pool.shutdown(wait=True)
-        for _df in _cached:
-            _df.unpersist()
-        if _src_persisted:
-            source.unpersist()
 
 
 def _identity_insert_factory(
@@ -4466,6 +4414,33 @@ def _commit_serializable(
     )
 
 
+def _prune_candidates(
+    path: str, read_v: int, prune_col: str | None, lo, hi
+) -> list[str]:
+    """The pruning ladder of the row-level mutations: the visible files
+    whose ``prune_col`` stats range can meet [lo, hi], minus those whose
+    bloom excludes a point predicate's value (lo == hi — the
+    unclustered-key case where every file's range matches). Every
+    visible file when ``prune_col`` is None."""
+    all_files = visible_files(path, read_v)
+    if prune_col is None:
+        return all_files
+    prune_col = _phys_name(path, read_v, prune_col)
+    stats = visible_stats(path, read_v)
+    blooms = visible_blooms(path, read_v) if lo is not None and lo == hi else {}
+    c_lo, c_hi = _canon_bound(lo), _canon_bound(hi)
+    candidates = []
+    for abs_p in all_files:
+        rel = os.path.relpath(abs_p, path)
+        if _range_excludes(stats.get(rel, {}).get(prune_col), c_lo, c_hi):
+            continue
+        b64 = blooms.get(rel, {}).get(prune_col)
+        if b64 is not None and not _bloom_may_contain(b64, lo):
+            continue
+        candidates.append(abs_p)
+    return candidates
+
+
 def _matched_files(
     spark: SparkSession,
     path: str,
@@ -4482,24 +4457,7 @@ def _matched_files(
     Returns absolute paths of matched files (empty = nothing to rewrite)."""
     from urllib.parse import unquote, urlparse
 
-    all_files = visible_files(path, read_v)
-    candidates = all_files
-    if prune_col is not None:
-        prune_col = _phys_name(path, read_v, prune_col)
-        stats = visible_stats(path, read_v)
-        # a point predicate (lo == hi) can additionally consult the blooms —
-        # the unclustered-key case where every file's range matches
-        blooms = visible_blooms(path, read_v) if lo is not None and lo == hi else {}
-        c_lo, c_hi = _canon_bound(lo), _canon_bound(hi)
-        candidates = []
-        for abs_p in all_files:
-            rel = os.path.relpath(abs_p, path)
-            if _range_excludes(stats.get(rel, {}).get(prune_col), c_lo, c_hi):
-                continue
-            b64 = blooms.get(rel, {}).get(prune_col)
-            if b64 is not None and not _bloom_may_contain(b64, lo):
-                continue
-            candidates.append(abs_p)
+    candidates = _prune_candidates(path, read_v, prune_col, lo, hi)
     if not candidates:
         return []
     # mergeSchema: candidate files may span additive schema evolution; the
@@ -5178,11 +5136,7 @@ def table_changes(
                     "__fn string, __base long",
                 )
                 raw = (
-                    raw.select(
-                        "*",
-                        _file_name_col().alias("__fn"),
-                        F.col("_metadata.row_index").alias("__ri"),
-                    )
+                    raw.select("*", *_position_tags())
                     .join(F.broadcast(base_df), "__fn", "left")
                     .withColumn("row_id", F.col("__base") + F.col("__ri"))
                     .drop("__fn", "__ri", "__base")
@@ -5299,22 +5253,11 @@ def _snapshot_diff(
     dvs_from = visible_dvs(path, v_from)
     dvs_to = visible_dvs(path, v_to)
 
-    def _positions(dv_map, files):
-        rels = {os.path.relpath(f, path) for f in files}
-        paths = sorted({p for rel, ps in dv_map.items() if rel in rels for p in ps})
-        if not paths:
-            return None
-        return spark.read.parquet(*paths).select("file_name", "row_index")
-
     def _read_minus_dvs(files, dv_map):
         df = _read_data(
             spark, path, files, version=schema_v,
             type_overrides=type_overrides or None,
-        ).select(
-            "*",
-            _file_name_col().alias("__fn"),
-            F.col("_metadata.row_index").alias("__ri"),
-        )
+        ).select("*", *_position_tags())
         # render at schema_v's logical names but the COVERING types (the
         # narrow logged type would downcast-overflow the wide rows this
         # record exists to report)
@@ -5327,13 +5270,8 @@ def _snapshot_diff(
             _column_mapping(path, schema_v),
             passthrough=("__fn", "__ri"),
         )
-        pos = _positions(dv_map, files)
-        if pos is not None:
-            pos = pos.select(
-                F.col("file_name").alias("__fn"), F.col("row_index").alias("__ri")
-            )
-            df = df.join(F.broadcast(pos), ["__fn", "__ri"], "left_anti")
-        return df.drop("__fn", "__ri")
+        pos = _dv_positions(spark, path, dv_map, files)
+        return _anti_join_dvs(df, pos).drop("__fn", "__ri")
 
     common = sorted(f_from & f_to)
     dv_changed = [
@@ -5366,14 +5304,10 @@ def _snapshot_diff(
         # writers; NULL, never a guess
         out = out.withColumn("row_id", F.lit(None).cast("long"))
     if dv_changed:
-        new_pos = _positions(dvs_to, dv_changed)
-        old_pos = _positions(dvs_from, dv_changed)
+        new_pos = _dv_positions(spark, path, dvs_to, dv_changed)
+        old_pos = _dv_positions(spark, path, dvs_from, dv_changed)
         raw = _read_data(spark, path, dv_changed, version=schema_v)
-        rows = raw.select(
-            "*",
-            _file_name_col().alias("__fn"),
-            F.col("_metadata.row_index").alias("__ri"),
-        )
+        rows = raw.select("*", *_position_tags())
         passthrough = ["__fn", "__ri"]
         if include_row_ids:
             # position-exact identity for DV-commit changes: materialized
@@ -5401,16 +5335,11 @@ def _snapshot_diff(
         rows = _logical_view(rows, path, schema_v, passthrough=tuple(passthrough))
 
         def _emit(pos, change_type):
+            # pos is a _dv_positions frame (capped broadcast hint) or an
+            # anti-join of two, which the planner sizes: no forced
+            # broadcast of positions here
             return (
-                rows.join(
-                    F.broadcast(
-                        pos.select(
-                            F.col("file_name").alias("__fn"),
-                            F.col("row_index").alias("__ri"),
-                        )
-                    ),
-                    ["__fn", "__ri"],
-                )
+                rows.join(pos, ["__fn", "__ri"])
                 .drop("__fn", "__ri")
                 .withColumn("_change_type", F.lit(change_type))
             )
@@ -5418,12 +5347,12 @@ def _snapshot_diff(
         if new_pos is not None:
             d = new_pos
             if old_pos is not None:
-                d = d.join(old_pos, ["file_name", "row_index"], "left_anti")
+                d = _anti_join_dvs(d, old_pos)
             out = out.unionByName(_emit(d, "delete"))
         if old_pos is not None:
             i = old_pos
             if new_pos is not None:
-                i = i.join(new_pos, ["file_name", "row_index"], "left_anti")
+                i = _anti_join_dvs(i, new_pos)
             out = out.unionByName(_emit(i, "insert"))
     return out
 
@@ -6042,12 +5971,8 @@ def needs_optimize(
         "small_bytes": int(sum(small)),
         "recommended": len(small) >= min_small_files,
         "n_dv_rows": n_dv_rows,
-        "mor_join_strategy": (
-            "none"
-            if not n_dv_rows
-            else ("broadcast" if n_dv_rows <= DV_BROADCAST_MAX_ROWS else "shuffle")
-        ),
-        "reorg_recommended": n_dv_rows > DV_BROADCAST_MAX_ROWS,
+        "mor_join_strategy": _mor_join_strategy(n_dv_rows),
+        "reorg_recommended": _mor_join_strategy(n_dv_rows) == "shuffle",
     }
 
 
@@ -6209,11 +6134,79 @@ def visible_dvs(path: str, version: int | None = None) -> dict[str, list[str]]:
     }
 
 
-def _file_name_col():
-    """Basename of the scanned parquet file — data files are uuid-grouped
-    part files, so the basename is unique table-wide and stable under
-    table relocation (absolute URIs are not)."""
-    return F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
+def _position_tags():
+    """Each row's position, the key of every deletion vector: ``__fn``, the
+    scanned parquet file's basename (data files are uuid-grouped part
+    files, so the basename is unique table-wide and stable under table
+    relocation — absolute URIs are not), and ``__ri``, its row index in
+    that file. Select them on the RAW scan: the _metadata pseudo-column
+    resolves only on the file-source relation."""
+    return (
+        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("__fn"),
+        F.col("_metadata.row_index").alias("__ri"),
+    )
+
+
+# Past this many accumulated DV positions the MOR anti-join build side no
+# longer broadcasts: a broadcast must fit in driver + every executor's
+# memory, and a few hundred MB of (file_name, row_index) pairs IS the
+# failure mode at that point. The fallback is a shuffle anti-join — cost
+# still tracks the deleted-row count, spread across reducers instead of
+# materialized whole on every node. ~4M positions ≈ 60-80 MB serialized,
+# comfortably under Spark's own 8 GB broadcast hard cap with margin for
+# row overhead.
+DV_BROADCAST_MAX_ROWS = 4_000_000
+
+
+def _dv_rows_from_footers(paths: list[str]) -> int:
+    """Total DV positions across sidecar groups, from parquet FOOTERS only
+    (each group is a directory of part files; no data pages read) — the
+    metadata-cost signal that picks the MOR anti-join strategy."""
+    total = 0
+    for group in paths:
+        for root, _, files in os.walk(group):
+            for f in files:
+                if f.endswith(".parquet"):
+                    total += _file_rows(os.path.join(root, f))
+    return total
+
+
+def _mor_join_strategy(n_dv_rows: int) -> str:
+    """``none`` / ``broadcast`` / ``shuffle``: how a merge-on-read
+    anti-join builds ``n_dv_rows`` DV positions (DV_BROADCAST_MAX_ROWS)."""
+    if not n_dv_rows:
+        return "none"
+    return "broadcast" if n_dv_rows <= DV_BROADCAST_MAX_ROWS else "shuffle"
+
+
+def _dv_positions(
+    spark: SparkSession, path: str, dvs: dict, files: list[str] | None = None
+) -> DataFrame | None:
+    """The ``(__fn, __ri)`` positions of the sidecars in ``dvs`` (a
+    :func:`visible_dvs` map) that cover ``files`` (absolute; all files
+    when None), or None when no sidecar does. The ONE reader of DV
+    positions for an anti-join: the frame comes broadcast-hinted while
+    the footer row total is within DV_BROADCAST_MAX_ROWS and unhinted
+    past it, so every MOR read and mutation picks its build side the
+    same, metadata-only way."""
+    rels = None if files is None else {os.path.relpath(f, path) for f in files}
+    dv_paths = sorted(
+        {p for rel, ps in dvs.items() if rels is None or rel in rels for p in ps}
+    )
+    if not dv_paths:
+        return None
+    pos = spark.read.parquet(*dv_paths).select(
+        F.col("file_name").alias("__fn"), F.col("row_index").alias("__ri")
+    )
+    if _mor_join_strategy(_dv_rows_from_footers(dv_paths)) != "shuffle":
+        return F.broadcast(pos)
+    return pos
+
+
+def _anti_join_dvs(df: DataFrame, pos: DataFrame | None) -> DataFrame:
+    """``df`` (position-tagged) minus the rows whose position is in
+    ``pos`` (a :func:`_dv_positions` frame; None deletes nothing)."""
+    return df if pos is None else df.join(pos, ["__fn", "__ri"], "left_anti")
 
 
 def _read_files_with_dvs(
@@ -6234,39 +6227,14 @@ def _read_files_with_dvs(
     rewrite that lands this frame MATERIALIZES the ids into its new
     files — preservation happens by construction, no rewrite path can
     forget it."""
-    if row_tracking_enabled(path, read_v):
-        tagged = _rid_frame(spark, path, read_v, files)
-    else:
-        raw = _read_data(spark, path, files, merge_schema=True, version=read_v)
-        tagged = None
-    dvs = visible_dvs(path, read_v)
     rels = {os.path.relpath(f, path) for f in files}
-    dv_paths = sorted(
-        {p for rel, ps in dvs.items() if rel in rels for p in ps}
-    )
-    if tagged is None and not dv_paths:
+    if not row_tracking_enabled(path, read_v) and rels.isdisjoint(
+        visible_dvs(path, read_v)
+    ):
+        # nothing to tag: the plain scan
+        raw = _read_data(spark, path, files, merge_schema=True, version=read_v)
         return _logical_view(raw, path, read_v)
-    if tagged is None:
-        # tag from the RAW scan (the _metadata pseudo-column resolves only
-        # on the file-source relation), then translate to the logical view
-        tagged = raw.select(
-            "*",
-            _file_name_col().alias("__fn"),
-            F.col("_metadata.row_index").alias("__ri"),
-        )
-        tagged = _logical_view(tagged, path, read_v, passthrough=("__fn", "__ri"))
-    if dv_paths:
-        dv = spark.read.parquet(*dv_paths).select(
-            F.col("file_name").alias("__fn"), F.col("row_index").alias("__ri")
-        )
-        out = _anti_join_dvs(
-            tagged, dv, _dv_rows_from_footers(dv_paths), DV_BROADCAST_MAX_ROWS
-        )
-    else:
-        out = tagged.drop("__fn", "__ri")
-    if "__rid" in out.columns:
-        out = out.withColumnRenamed("__rid", _ROWID)
-    return out
+    return _tagged_live_frame(spark, path, read_v, files).drop("__fn", "__ri")
 
 
 def _tagged_live_frame(
@@ -6276,34 +6244,47 @@ def _tagged_live_frame(
     (``__fn`` file basename / ``__ri`` row index) — the input for
     merge-on-read mutations, which land the live hit positions as
     deletion-vector sidecar rows instead of rewriting files. Existing DV
-    positions are anti-joined out here, so a caller can never re-delete
-    (or resurrect) an already-dead row. On a row-tracking table the
-    stable id rides in ``__row_id`` like the CoW twin's frame."""
+    positions of ``files`` are anti-joined out here, so a caller can
+    never re-delete (or resurrect) an already-dead row. On a
+    row-tracking table the stable id rides in ``__row_id`` like the CoW
+    twin's frame."""
     if row_tracking_enabled(path, read_v):
         tagged = _rid_frame(spark, path, read_v, files)
         tagged = tagged.withColumnRenamed("__rid", _ROWID)
     else:
         raw = _read_data(spark, path, files, merge_schema=True, version=read_v)
-        tagged = raw.select(
-            "*",
-            _file_name_col().alias("__fn"),
-            F.col("_metadata.row_index").alias("__ri"),
-        )
+        tagged = raw.select("*", *_position_tags())
         tagged = _logical_view(tagged, path, read_v, passthrough=("__fn", "__ri"))
-    dvs = visible_dvs(path, read_v)
-    rels = {os.path.relpath(f, path) for f in files}
-    dv_paths = sorted({p for rel, ps in dvs.items() if rel in rels for p in ps})
-    if dv_paths:
-        dv = spark.read.parquet(*dv_paths).select(
-            F.col("file_name").alias("__fn"), F.col("row_index").alias("__ri")
-        )
-        build = (
-            F.broadcast(dv)
-            if _dv_rows_from_footers(dv_paths) <= DV_BROADCAST_MAX_ROWS
-            else dv
-        )
-        tagged = tagged.join(build, ["__fn", "__ri"], "left_anti")
-    return tagged
+    pos = _dv_positions(spark, path, visible_dvs(path, read_v), files)
+    return _anti_join_dvs(tagged, pos)
+
+
+def _land_dv_positions(
+    spark: SparkSession, path: str, read_v: int, positions: DataFrame
+) -> tuple[str | None, dict[str, str]]:
+    """Land ``positions`` (a frame carrying ``__fn``/``__ri``) as ONE
+    deletion-vector sidecar group — a distributed write, never a driver
+    collect of row ids — and map it onto the files it touches. Returns
+    ``(absolute group dir, dv_adds)`` for the commit, or ``(None, {})``
+    when no position landed (the empty group is swept). A caller that
+    loses the commit race must sweep the returned group."""
+    group = os.path.join(_DV_DIR, uuid.uuid4().hex)
+    target = os.path.join(path, group)
+    positions.select(
+        F.col("__fn").alias("file_name"), F.col("__ri").alias("row_index")
+    ).write.mode("error").parquet(target)
+    touched = [
+        r.file_name
+        for r in spark.read.parquet(target).select("file_name").distinct().collect()
+    ]
+    if not touched:
+        logstore.for_path(path).delete_tree(target)
+        return None, {}
+    by_base = {
+        os.path.basename(p): os.path.relpath(p, path)
+        for p in visible_files(path, read_v)
+    }
+    return target, {by_base[fn]: group for fn in touched if fn in by_base}
 
 
 def delete_where_dv(
@@ -6333,52 +6314,13 @@ def delete_where_dv(
         raise FileNotFoundError(f"no table at {path!r} (empty log)")
     if isinstance(predicate, str):
         predicate = F.expr(predicate)
-    all_files = visible_files(path, read_v)
-    candidates = all_files
-    if prune_col is not None:
-        prune_col = _phys_name(path, read_v, prune_col)
-        stats = visible_stats(path, read_v)
-        blooms = visible_blooms(path, read_v) if lo is not None and lo == hi else {}
-        c_lo, c_hi = _canon_bound(lo), _canon_bound(hi)
-        candidates = []
-        for abs_p in all_files:
-            rel = os.path.relpath(abs_p, path)
-            if _range_excludes(stats.get(rel, {}).get(prune_col), c_lo, c_hi):
-                continue
-            b64 = blooms.get(rel, {}).get(prune_col)
-            if b64 is not None and not _bloom_may_contain(b64, lo):
-                continue
-            candidates.append(abs_p)
+    candidates = _prune_candidates(path, read_v, prune_col, lo, hi)
     if not candidates:
         return read_v
-    # tag positions on the RAW scan, then evaluate the LOGICAL predicate
-    # against the logical view (passthrough keeps the position tags)
-    scan = _read_data(spark, path, candidates, merge_schema=True, version=read_v).select(
-        "*",
-        _file_name_col().alias("file_name"),
-        F.col("_metadata.row_index").alias("row_index"),
-    )
-    scan = _logical_view(
-        scan, path, read_v, passthrough=("file_name", "row_index")
-    )
-    hits = scan.filter(predicate).select("file_name", "row_index")
-    existing = visible_dvs(path, read_v)
-    existing_paths = sorted({p for ps in existing.values() for p in ps})
-    if existing_paths:
-        prior = spark.read.parquet(*existing_paths).select("file_name", "row_index")
-        hits = hits.join(F.broadcast(prior), ["file_name", "row_index"], "left_anti")
-    group = os.path.join(_DV_DIR, uuid.uuid4().hex)
-    target = os.path.join(path, group)
-    hits.write.mode("error").parquet(target)
-    touched = [
-        r.file_name
-        for r in spark.read.parquet(target).select("file_name").distinct().collect()
-    ]
-    if not touched:
-        logstore.for_path(path).delete_tree(target)
+    hits = _tagged_live_frame(spark, path, read_v, candidates).filter(predicate)
+    target, dv_adds = _land_dv_positions(spark, path, read_v, hits)
+    if target is None:
         return read_v
-    by_base = {os.path.basename(p): os.path.relpath(p, path) for p in all_files}
-    dv_adds = {by_base[fn]: group for fn in touched if fn in by_base}
     try:
         return _commit_serializable(
             spark, path, read_v, [], [], None, None,
@@ -6393,76 +6335,34 @@ def delete_where_dv(
         raise
 
 
-# Past this many accumulated DV positions the MOR anti-join build side no
-# longer broadcasts: a broadcast must fit in driver + every executor's
-# memory, and a few hundred MB of (file_name, row_index) pairs IS the
-# failure mode at that point. The fallback is a shuffle anti-join — cost
-# still tracks the deleted-row count, spread across reducers instead of
-# materialized whole on every node. ~4M positions ≈ 60-80 MB serialized,
-# comfortably under Spark's own 8 GB broadcast hard cap with margin for
-# row overhead.
-DV_BROADCAST_MAX_ROWS = 4_000_000
-
-
-def _dv_rows_from_footers(paths: list[str]) -> int:
-    """Total DV positions across sidecar groups, from parquet FOOTERS only
-    (each group is a directory of part files; no data pages read) — the
-    metadata-cost signal that picks the MOR anti-join strategy."""
-    total = 0
-    for group in paths:
-        for root, _, files in os.walk(group):
-            for f in files:
-                if f.endswith(".parquet"):
-                    total += _file_rows(os.path.join(root, f))
-    return total
-
-
-def _anti_join_dvs(df: DataFrame, dv: DataFrame, n_dv_rows: int, max_broadcast: int):
-    """Anti-join ``df`` (tagged __fn/__ri) against DV positions, choosing
-    the build strategy by DV size: broadcast below ``max_broadcast``
-    positions, shuffle above (see DV_BROADCAST_MAX_ROWS)."""
-    build = F.broadcast(dv) if n_dv_rows <= max_broadcast else dv
-    return df.join(build, ["__fn", "__ri"], "left_anti").drop("__fn", "__ri")
-
-
 def read_mor(
     spark: SparkSession,
     path: str,
     version: int | None = None,
     merge_schema: bool = False,
-    dv_broadcast_max_rows: int | None = None,
 ) -> DataFrame:
     """Merge-on-read snapshot: the plain snapshot scan anti-joined against
     the union of the visible deletion-vector sidecars on
     (file basename, _metadata.row_index). With no live DVs this IS
     :func:`read` — zero overhead on pure-CoW tables. The anti-join
-    build side is the DELETED-ROW COUNT, not the table size; below
-    ``dv_broadcast_max_rows`` (default DV_BROADCAST_MAX_ROWS) it
-    broadcasts and MOR read cost is scan + a broadcast hash anti-join at
-    any table size; above it the build switches to a shuffle anti-join —
-    a table that has accumulated hundreds of MB of positions must not
-    materialize them whole on every executor (dv_metrics surfaces the
-    chosen strategy and is the OPTIMIZE trigger). The row total comes
-    from sidecar parquet footers, so strategy choice is metadata-only.
-    Time travel works unchanged: a version below the delete resolves no
-    DVs."""
+    build side is the DELETED-ROW COUNT, not the table size; up to
+    DV_BROADCAST_MAX_ROWS positions it broadcasts and MOR read cost is
+    scan + a broadcast hash anti-join at any table size; above it the
+    build switches to a shuffle anti-join — a table that has accumulated
+    hundreds of MB of positions must not materialize them whole on every
+    executor (dv_metrics surfaces the chosen strategy and is the
+    OPTIMIZE trigger). The row total comes from sidecar parquet footers,
+    so strategy choice is metadata-only. Time travel works unchanged: a
+    version below the delete resolves no DVs."""
     _check_reader(path, version)
     dvs = visible_dvs(path, version)
     if not dvs:
         return read(spark, path, version, merge_schema)
     files = visible_files(path, version)
-    df = _read_data(spark, path, files, merge_schema, version=version).select(
-        "*",
-        _file_name_col().alias("__fn"),
-        F.col("_metadata.row_index").alias("__ri"),
-    )
+    df = _read_data(spark, path, files, merge_schema, version=version)
+    df = df.select("*", *_position_tags())
     df = _logical_view(df, path, version, passthrough=("__fn", "__ri"))
-    dv_paths = sorted({p for ps in dvs.values() for p in ps})
-    dv = spark.read.parquet(*dv_paths).select(
-        F.col("file_name").alias("__fn"), F.col("row_index").alias("__ri")
-    )
-    cap = DV_BROADCAST_MAX_ROWS if dv_broadcast_max_rows is None else dv_broadcast_max_rows
-    return _anti_join_dvs(df, dv, _dv_rows_from_footers(dv_paths), cap)
+    return _anti_join_dvs(df, _dv_positions(spark, path, dvs)).drop("__fn", "__ri")
 
 
 def update_where_dv(
@@ -6505,84 +6405,24 @@ def update_where_dv(
     unknown = set(assignments) - set(table_fields)
     if unknown:
         raise ValueError(f"assignments reference unknown columns: {sorted(unknown)}")
-    all_files = visible_files(path, read_v)
-    candidates = all_files
-    if prune_col is not None:
-        prune_col = _phys_name(path, read_v, prune_col)
-        stats = visible_stats(path, read_v)
-        blooms = visible_blooms(path, read_v) if lo is not None and lo == hi else {}
-        c_lo, c_hi = _canon_bound(lo), _canon_bound(hi)
-        candidates = []
-        for abs_p in all_files:
-            rel = os.path.relpath(abs_p, path)
-            if _range_excludes(stats.get(rel, {}).get(prune_col), c_lo, c_hi):
-                continue
-            b64 = blooms.get(rel, {}).get(prune_col)
-            if b64 is not None and not _bloom_may_contain(b64, lo):
-                continue
-            candidates.append(abs_p)
+    candidates = _prune_candidates(path, read_v, prune_col, lo, hi)
     if not candidates:
         return read_v
-    # tag positions on the RAW scan, then evaluate the LOGICAL predicate
-    # against the logical view (passthrough keeps the position tags)
-    raw = _read_data(spark, path, candidates, merge_schema=True, version=read_v)
-    scan = raw.select(
-        "*",
-        _file_name_col().alias("file_name"),
-        F.col("_metadata.row_index").alias("row_index"),
-    )
-    tracking = row_tracking_enabled(path, read_v)
-    passthrough = ["file_name", "row_index"]
-    if tracking:
-        # stable row ids ride with the updated rows: resolve each hit's id
-        # (materialized column or base + position) so the appended rewrite
-        # MATERIALIZES it — a DV UPDATE preserves identity like the CoW twin
-        mat = (
-            F.col(_ROWID) if _ROWID in raw.columns else F.lit(None).cast("long")
-        )
-        bases = visible_row_bases(path, read_v)
-        base_df = spark.createDataFrame(
-            [(os.path.basename(r), b) for r, b in bases.items()],
-            "file_name string, __base long",
-        )
-        scan = scan.withColumn("__mat", mat).join(
-            F.broadcast(base_df), "file_name", "left"
-        )
-        scan = scan.withColumn(
-            "__rid",
-            F.coalesce(F.col("__mat"), F.col("__base") + F.col("row_index")),
-        ).drop("__mat", "__base")
-        passthrough.append("__rid")
-    scan = _logical_view(scan, path, read_v, passthrough=tuple(passthrough))
-    hits = scan.filter(predicate)
-    existing = visible_dvs(path, read_v)
-    existing_paths = sorted({p for ps in existing.values() for p in ps})
-    if existing_paths:
-        prior = spark.read.parquet(*existing_paths).select("file_name", "row_index")
-        hits = hits.join(
-            F.broadcast(prior)
-            if _dv_rows_from_footers(existing_paths) <= DV_BROADCAST_MAX_ROWS
-            else prior,
-            ["file_name", "row_index"],
-            "left_anti",
-        )
-    group = os.path.join(_DV_DIR, uuid.uuid4().hex)
-    target = os.path.join(path, group)
-    hits.select("file_name", "row_index").write.mode("error").parquet(target)
-    touched = [
-        r.file_name
-        for r in spark.read.parquet(target).select("file_name").distinct().collect()
-    ]
-    if not touched:
-        logstore.for_path(path).delete_tree(target)
+    hits = _tagged_live_frame(spark, path, read_v, candidates).filter(predicate)
+    target, dv_adds = _land_dv_positions(spark, path, read_v, hits)
+    if target is None:
         return read_v
     # rewrite ONLY the matched rows (recomputed from the same immutable
     # candidate files — deterministic), padded to the evolved table schema,
     # every row predicate-TRUE so assignments apply unconditionally
-    src = hits.drop("file_name", "row_index")
+    src = hits.drop("__fn", "__ri")
     for name, dtype in table_fields.items():
         if name not in src.columns:
             src = src.withColumn(name, F.lit(None).cast(dtype))
+    # on a row-tracking table each hit's stable id rides along, so the
+    # appended rewrite MATERIALIZES it — a DV UPDATE preserves identity
+    # like the CoW twin
+    row_id = [F.col(_ROWID)] if _ROWID in src.columns else []
     cols = []
     for field in table_schema.fields:
         if field.name in assignments:
@@ -6591,11 +6431,9 @@ def update_where_dv(
             cols.append(a.cast(field.dataType).alias(field.name))
         else:
             cols.append(F.col(field.name))
-    if tracking:
-        cols.append(F.col("__rid").alias(_ROWID))
-    rewritten = src.select(*cols)
+    rewritten = src.select(*cols, *row_id)
     _enforce_constraints(rewritten, path)
-    live_rels = [os.path.relpath(p, path) for p in all_files]
+    live_rels = [os.path.relpath(p, path) for p in visible_files(path, read_v)]
     stat_cols, bloom_cols = _removed_skipping_cols(path, read_v, live_rels)
     mapping = _column_mapping(path, read_v)
     adds = _write_data_files(_to_physical(rewritten, mapping), path)
@@ -6606,18 +6444,14 @@ def update_where_dv(
     # positions themselves must NOT be reported separately; the stored
     # record covers them, which is why the resolution ladder checks
     # change_data before dv state).
-    pre_cols = [F.col(f.name) for f in table_schema.fields]
-    if tracking:
-        pre_cols.append(F.col("__rid").alias(_ROWID))
-    pre = src.select(*pre_cols).withColumn("_change_type", F.lit("delete"))
+    pre = src.select(*[F.col(f.name) for f in table_schema.fields], *row_id)
+    pre = pre.withColumn("_change_type", F.lit("delete"))
     post = rewritten.withColumn("_change_type", F.lit("insert"))
     change_data = _write_change_files(
         _to_physical(pre.unionByName(post), mapping), path
     )
     stats_new = _collect_stats(path, adds, stat_cols or None)
     blooms_new = _collect_blooms(path, adds, bloom_cols or None)
-    by_base = {os.path.basename(p): os.path.relpath(p, path) for p in all_files}
-    dv_adds = {by_base[fn]: group for fn in touched if fn in by_base}
     try:
         return _commit_serializable(
             spark, path, read_v, adds, [], stats_new, blooms_new,
@@ -6640,7 +6474,7 @@ def dv_metrics(spark: SparkSession, path: str, version: int | None = None):
     """Deletion-vector health at a snapshot (metadata + sidecars only, no
     data pages): total DV'd rows, files carrying DVs, the worst
     single-file DV count, and the MOR anti-join strategy those numbers
-    select (``broadcast`` under DV_BROADCAST_MAX_ROWS positions,
+    select (``broadcast`` up to DV_BROADCAST_MAX_ROWS positions,
     ``shuffle`` past it) — the read-amplification signals that say when
     to OPTIMIZE a merge-on-read table (every MOR read anti-joins
     n_dv_rows; a file with a huge DV share is mostly-dead bytes; a
@@ -6656,11 +6490,7 @@ def dv_metrics(spark: SparkSession, path: str, version: int | None = None):
             "n_files long, n_files_with_dv long, n_dv_rows long, "
             "max_file_dv_rows long, mor_join_strategy string",
         )
-    strategy = (
-        "broadcast"
-        if _dv_rows_from_footers(dv_paths) <= DV_BROADCAST_MAX_ROWS
-        else "shuffle"
-    )
+    strategy = _mor_join_strategy(_dv_rows_from_footers(dv_paths))
     per = (
         spark.read.parquet(*dv_paths)
         .groupBy("file_name")
@@ -7023,7 +6853,7 @@ def enable_row_tracking(path: str) -> int:
     return v + 1
 
 
-def _rid_frame(spark: SparkSession, path: str, version, files, passthrough=()):
+def _rid_frame(spark: SparkSession, path: str, version, files):
     """Internal: logical view of ``files`` with a ``__rid`` column — each
     row's stable id, resolved per file as COALESCE(materialized
     ``__row_id`` column, base_row_id + ``_metadata.row_index``). The base
@@ -7033,11 +6863,7 @@ def _rid_frame(spark: SparkSession, path: str, version, files, passthrough=()):
     ``__ri`` are kept for the caller's DV handling."""
     raw = _read_data(spark, path, files, merge_schema=True, version=version)
     mat = F.col(_ROWID) if _ROWID in raw.columns else F.lit(None).cast("long")
-    tagged = raw.select(
-        "*",
-        _file_name_col().alias("__fn"),
-        F.col("_metadata.row_index").alias("__ri"),
-    )
+    tagged = raw.select("*", *_position_tags())
     bases = visible_row_bases(path, version)
     base_df = spark.createDataFrame(
         [(os.path.basename(r), b) for r, b in bases.items()],
@@ -7057,9 +6883,7 @@ def _rid_frame(spark: SparkSession, path: str, version, files, passthrough=()):
         ).cast("long"),
     ).otherwise(rid)
     out = tagged.withColumn("__rid", rid).drop("__base")
-    return _logical_view(
-        out, path, version, passthrough=("__fn", "__ri", "__rid", *passthrough)
-    )
+    return _logical_view(out, path, version, passthrough=("__fn", "__ri", "__rid"))
 
 
 def read_with_row_ids(
@@ -7079,16 +6903,5 @@ def read_with_row_ids(
     files = visible_files(path, version)
     if not files:
         raise FileNotFoundError(f"no table at {path!r} (empty log)")
-    df = _rid_frame(spark, path, version, files)
-    dvs = visible_dvs(path, version)
-    dv_paths = sorted({p for ps in dvs.values() for p in ps})
-    if dv_paths:
-        dv = spark.read.parquet(*dv_paths).select(
-            F.col("file_name").alias("__fn"), F.col("row_index").alias("__ri")
-        )
-        df = _anti_join_dvs(
-            df, dv, _dv_rows_from_footers(dv_paths), DV_BROADCAST_MAX_ROWS
-        )
-    else:
-        df = df.drop("__fn", "__ri")
-    return df.withColumnRenamed("__rid", "row_id")
+    df = _read_files_with_dvs(spark, path, version, files)
+    return df.withColumnRenamed(_ROWID, "row_id")

@@ -2875,7 +2875,7 @@ class TestDeletionVectorsRound8:
         assert got.filter("k = 42").count() == 14
         assert got.filter("k = 3").count() == 0
 
-    def test_mor_broadcast_guard_switches_strategy(self, spark, table):
+    def test_mor_broadcast_guard_switches_strategy(self, spark, table, monkeypatch):
         """Past the threshold the hint must be ABSENT — Catalyst then
         chooses by its own size estimate (auto-broadcast disabled here to
         make the difference observable on a toy DV set): hinted plan
@@ -2886,7 +2886,8 @@ class TestDeletionVectorsRound8:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             bc = txlog.read_mor(spark, table)
-            sh = txlog.read_mor(spark, table, dv_broadcast_max_rows=0)
+            monkeypatch.setattr(txlog, "DV_BROADCAST_MAX_ROWS", 0)
+            sh = txlog.read_mor(spark, table)
             bc_plan = bc._jdf.queryExecution().sparkPlan().toString()  # noqa: SLF001
             sh_plan = sh._jdf.queryExecution().sparkPlan().toString()  # noqa: SLF001
             assert "BroadcastHashJoin" in bc_plan
@@ -2900,6 +2901,50 @@ class TestDeletionVectorsRound8:
             else:
                 spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
 
+    def test_delete_dv_prior_positions_respect_broadcast_cap(
+        self, spark, table, monkeypatch
+    ):
+        """delete_where_dv anti-joins the DV positions already on its
+        candidate files like every MOR read: past DV_BROADCAST_MAX_ROWS no
+        execution it starts may broadcast them (auto-broadcast disabled so
+        only an explicit hint could). Plans come from the SQL status store,
+        i.e. what actually ran."""
+        txlog.delete_where_dv(spark, table, "k = 3")  # every file gets a DV
+        monkeypatch.setattr(txlog, "DV_BROADCAST_MAX_ROWS", 0)
+        jss = spark._jsparkSession  # noqa: SLF001
+        store = jss.sharedState().statusStore()
+        bus = jss.sparkContext().listenerBus()
+        conv = spark._jvm.scala.jdk.javaapi.CollectionConverters  # noqa: SLF001
+
+        def newest(n):
+            # the store keeps a bounded window of executions, so its count
+            # stops growing in a long session: select by execution id
+            bus.waitUntilEmpty(30_000)
+            count = store.executionsCount()
+            if not count:
+                return []
+            runs = store.executionsList(max(0, count - n), min(n, count))
+            return list(conv.asJava(runs))
+
+        saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            seen = max((e.executionId() for e in newest(1)), default=-1)
+            txlog.delete_where_dv(spark, table, "k = 5")
+            plans = [
+                e.physicalPlanDescription()
+                for e in newest(100)
+                if e.executionId() > seen
+            ]
+        finally:
+            if saved is None:
+                spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+            else:
+                spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+        assert any("LeftAnti" in p for p in plans), "no prior-DV anti-join ran"
+        assert not [p for p in plans if "BroadcastHashJoin" in p]
+        assert txlog.read_mor(spark, table).count() == 100 - 2 * 14
+
     def test_dv_metrics_surfaces_strategy(self, spark, table):
         assert (
             txlog.dv_metrics(spark, table).collect()[0].mor_join_strategy == "none"
@@ -2909,13 +2954,40 @@ class TestDeletionVectorsRound8:
         assert m.mor_join_strategy == "broadcast"
         assert m.n_dv_rows == 14
 
-    def test_delete_dv_conflict_sweeps_sidecar(self, spark, table, monkeypatch):
-        """A delete_where_dv losing the commit race to an UNRESOLVABLE
+    @pytest.mark.parametrize("op", ["delete_where_dv", "update_where_dv", "merge_into"])
+    def test_delete_dv_conflict_sweeps_sidecar(self, spark, table, monkeypatch, op):
+        """A DV mutation losing the commit race to an UNRESOLVABLE
         concurrent commit (a snapshot-level op — a disjoint append would
-        now auto-resolve) must remove the sidecar group it pre-landed —
-        no lingering orphan until vacuum."""
+        now auto-resolve) must remove every group it pre-landed — DV
+        sidecar, data files, change record — no lingering orphan until
+        vacuum, and the snapshot reads as before."""
         import glob as _glob
 
+        mutate = {
+            "delete_where_dv": lambda: txlog.delete_where_dv(spark, table, "k = 3"),
+            "update_where_dv": lambda: txlog.update_where_dv(
+                spark, table, "k = 3", {"k": F.lit(42)}
+            ),
+            "merge_into": lambda: txlog.merge_into(
+                spark,
+                table,
+                spark.createDataFrame([(3, 42), (1000, 1)], "id long, k long"),
+                keys=["id"],
+                when_matched=[("update", "*")],
+                use_dvs=True,
+            ),
+        }[op]
+
+        def landed():  # every file outside the log
+            return sorted(
+                os.path.join(root, f)
+                for root, _, files in os.walk(table)
+                if not os.path.relpath(root, table).startswith("_txlog")
+                for f in files
+            )
+
+        before_files = landed()
+        before_rows = sorted(map(tuple, txlog.read_mor(spark, table).collect()))
         real_try = txlog._try_commit
 
         def stealing_try(path, version, *a, **kw):
@@ -2927,10 +2999,12 @@ class TestDeletionVectorsRound8:
         stealing_try.armed = True
         monkeypatch.setattr(txlog, "_try_commit", stealing_try)
         with pytest.raises(txlog.CommitConflict):
-            txlog.delete_where_dv(spark, table, "k = 3")
+            mutate()
         monkeypatch.undo()
         assert not _glob.glob(os.path.join(table, "_dv", "*")), "orphan sidecar"
-        assert txlog.read_mor(spark, table).count() == 100
+        assert landed() == before_files, "orphan data or change-file group"
+        after_rows = sorted(map(tuple, txlog.read_mor(spark, table).collect()))
+        assert after_rows == before_rows
 
 
 class TestColumnMapping:
