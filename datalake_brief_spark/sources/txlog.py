@@ -55,7 +55,9 @@ stream costs ∝ its touched data, never the table.
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import json
+import operator
 import os
 import re
 import uuid
@@ -3313,30 +3315,21 @@ def _merge_candidate_files(
     envelope = {k: (row[f"__lo_{k}"], row[f"__hi_{k}"]) for k in keys}
     n_src = int(row["__n"])
     src_keys_unique = int(row["__nd"]) == int(row["__nn"])
-    all_files = visible_files(path, read_v)
     if any(lo is None for lo, _ in envelope.values()):
         # some key column is all-NULL in the source → no source tuple can
         # equal any target tuple (NULL never matches an equi-join)
         return [], envelope, n_src, src_keys_unique
-    stats = visible_stats(path, read_v)
-    phys = {k: _phys_name(path, read_v, k) for k in keys}
-    canon = {k: (_canon_bound(lo), _canon_bound(hi)) for k, (lo, hi) in envelope.items()}
-    candidates = []
-    for abs_p in all_files:
-        fstats = stats.get(os.path.relpath(abs_p, path), {})
-        if any(
-            _range_excludes(fstats.get(phys[k]), *canon[k]) for k in keys
-        ):
-            continue
-        candidates.append(abs_p)
-    if not candidates:
-        return [], envelope, n_src, src_keys_unique
-    # bloom probe: per key column, collect the source's distinct values
-    # only when bounded (the driver holds ≤ _MERGE_BLOOM_PROBE_MAX values)
-    blooms = visible_blooms(path, read_v)
+    candidates = _prune_candidates(path, read_v, envelope)
+    # bloom probe: per key column a surviving file carries a bloom for,
+    # collect the source's distinct values only when bounded (the driver
+    # holds ≤ _MERGE_BLOOM_PROBE_MAX values); unbounded key sets leave
+    # the pruning to the stats and the match scan
+    blooms = visible_blooms(path, read_v) if candidates else {}
+    points = {}
     for k in keys:
+        phys = _phys_name(path, read_v, k)
         if not any(
-            phys[k] in blooms.get(os.path.relpath(p, path), {}) for p in candidates
+            phys in blooms.get(os.path.relpath(p, path), {}) for p in candidates
         ):
             continue
         vals = [
@@ -3347,19 +3340,10 @@ def _merge_candidate_files(
             .limit(_MERGE_BLOOM_PROBE_MAX + 1)
             .collect()
         ]
-        if len(vals) > _MERGE_BLOOM_PROBE_MAX:
-            continue  # unbounded key set: stats + match scan carry it
-        kept = []
-        for abs_p in candidates:
-            b64 = blooms.get(os.path.relpath(abs_p, path), {}).get(phys[k])
-            if b64 is not None and not any(
-                _bloom_may_contain(b64, v) for v in vals
-            ):
-                continue
-            kept.append(abs_p)
-        candidates = kept
-        if not candidates:
-            break
+        if len(vals) <= _MERGE_BLOOM_PROBE_MAX:
+            points[k] = vals
+    if points:
+        candidates = _prune_candidates(path, read_v, envelope, points)
     return candidates, envelope, n_src, src_keys_unique
 
 
@@ -3450,6 +3434,13 @@ def merge_into(
     inside the source's key range conflicts, disjoint appends re-target.
     Returns the new version (the current one when nothing changed).
 
+    Phases 1 and 2 — candidate pruning, the file-tag scan, the joined
+    target frame with its per-row clause indices — are merge's own;
+    clause application, landing and the commit run in the row-level
+    mutation core :func:`_mutate`, shared with every DELETE, UPDATE and
+    replaceWhere. A writer losing the commit race sweeps every group it
+    landed, in both modes.
+
     ``use_dvs=True`` (or the ``deletionVectors`` = 'true' TBLPROPERTY,
     overridable per call) switches the matched UPDATE/DELETE clauses to
     MERGE-ON-READ: clause-hit rows' pre-image POSITIONS land in a
@@ -3460,7 +3451,9 @@ def merge_into(
     ROWS, not touched FILES — the Delta merge-with-DVs shape). The
     contract surface is identical to the CoW path: same clause
     semantics, same CDF delete+insert pairs sharing stable row ids, same
-    WriteSerializable conflicts; readers must use :func:`read_mor` (plain
+    WriteSerializable conflicts (a delete-only DV merge stores no change
+    record: its deletes come from the DV state, as delete_where_dv's
+    do); readers must use :func:`read_mor` (plain
     :func:`read` sees pre-merge rows — the delete_where_dv contract),
     and OPTIMIZE/REORG PURGE materialize later. Default (``None``)
     consults the table property and falls back to copy-on-write."""
@@ -3500,12 +3493,8 @@ def merge_into(
     if not matched_clauses and ins_clause is None and not bys_clauses:
         raise ValueError("merge_into with no clauses is a no-op by construction")
 
-    def _as_cond(c):
-        return F.expr(c) if isinstance(c, str) else c
-
     # --- post-merge schema -------------------------------------------------
-    table_df = read(spark, path, read_v, merge_schema=True)
-    table_fields = dict(table_df.dtypes)
+    table_fields = _table_fields(spark, path, read_v)
     src_fields = dict(source.dtypes)
     missing_keys = [k for k in keys if k not in table_fields or k not in src_fields]
     if missing_keys:
@@ -3531,7 +3520,11 @@ def merge_into(
         extra = []
     post_cols = list(table_fields) + extra
     post_types = {**table_fields, **{c: src_fields[c] for c in extra}}
-    tracking = row_tracking_enabled(path, read_v)
+    _check_assignments(
+        [a for _, a, _ in matched_clauses + bys_clauses]
+        + [ins_clause[0] if ins_clause else None],
+        post_cols,
+    )
     if _ROWID in source.columns:
         raise ValueError(
             f"{_ROWID!r} is the reserved row-tracking column; merge "
@@ -3543,8 +3536,8 @@ def merge_into(
     # values are reserved per commit ATTEMPT inside _commit_serializable's
     # retry body (the same per-attempt re-read append's loop does for row
     # bases), so a lost race re-lands the insert files with fresh ids off
-    # the winner's advanced watermark instead of refusing — see the
-    # ins_factory built in phase 3.
+    # the winner's advanced watermark instead of refusing — the core
+    # hands the insert rows to _identity_insert_factory.
     idents = latest_meta(path, "identity", read_v) or {}
     if idents:
         bad_src = [c for c in idents if c in source.columns]
@@ -3571,6 +3564,13 @@ def merge_into(
                     f"GENERATED ALWAYS AS IDENTITY; INSERT values must "
                     f"not supply them"
                 )
+    # verbatim clauses (UPDATE *, INSERT without values) copy every
+    # source column the merged table has
+    verbatim = {c: F.col(f"s.`{c}`") for c in post_cols if c in src_fields}
+    matched_clauses = [
+        (kind, verbatim if assigns == "*" else assigns, cond)
+        for kind, assigns, cond in matched_clauses
+    ]
 
     # --- phase 1: which files contain source keys, and which must REWRITE --
     # Two file sets fall out of one scan of the stats/bloom candidates:
@@ -3587,7 +3587,7 @@ def merge_into(
     # Python-worker evaluation PER JOB (measured seconds each, dwarfing
     # the actual merge work), and a non-deterministic source could even
     # change between phases. First evaluation fills the cache; every
-    # later job reads it. Released in the finally with the joined frame.
+    # later job reads it. Released when the merge returns.
     _src_persisted = False
     if not (source.storageLevel.useMemory or source.storageLevel.useDisk):
         source = source.persist()
@@ -3605,8 +3605,6 @@ def merge_into(
     else:
         def _src_b(df):
             return df
-    matched: list[str] = []
-    rewrite: list[str] = []
     on = None
     for k in keys:
         leg = F.col(f"t.`{k}`") == F.col(f"s.`{k}`")
@@ -3618,52 +3616,37 @@ def merge_into(
             leg = (
                 F.lit(True)
                 if cond is None
-                else F.coalesce(_as_cond(cond), F.lit(False))
+                else F.coalesce(_as_col(cond), F.lit(False))
             )
             fires = fires | leg
         return fires
 
-    # by-source clauses act on rows with NO source match — any file may
-    # hold one, so their scan is the whole snapshot (inherent; see doc)
-    scan_files = visible_files(path, read_v) if bys_clauses else candidates
-    if scan_files:
-        from urllib.parse import unquote, urlparse
-
-        def _norm(p: str) -> str:
-            return unquote(urlparse(p).path) if p.startswith("file:") else p
-
-        # the file tag must be a REAL column before the join —
-        # input_file_name()/_metadata resolve on the scan stage only, and
-        # a post-shuffle evaluation would return "" (wrong files matched)
-        raw = _read_data(spark, path, scan_files, merge_schema=True, version=read_v)
-        raw = raw.select("*", F.col("_metadata.file_path").alias("__fp"))
-        scan = _logical_view(raw, path, read_v, passthrough=("__fp",))
-        fires = _or_conds(matched_clauses)
-        if bys_clauses:
+    fires = _or_conds(matched_clauses)
+    if bys_clauses:
+        def per_file(scan):
             srcm1 = source.withColumn("__m", F.lit(True))
             jj = scan.alias("t").join(_src_b(srcm1.alias("s")), on, "left_outer")
             m = F.coalesce(F.col("s.__m"), F.lit(False))
             need = (m & fires) | (~m & _or_conds(bys_clauses))
-            per_file = (
-                jj.groupBy(F.col("t.__fp").alias("__fp"))
-                .agg(
-                    F.max(need.cast("int")).alias("__need"),
-                    F.max(m.cast("int")).alias("__haskey"),
-                )
-                .collect()
+            return jj.groupBy(F.col("t.__fp").alias("__fp")).agg(
+                F.max(need.cast("int")).alias("__need"),
+                F.max(m.cast("int")).alias("__haskey"),
             )
-            matched = [_norm(r["__fp"]) for r in per_file if r["__haskey"]]
-            rewrite = [_norm(r["__fp"]) for r in per_file if r["__need"]]
-        else:
-            per_file = (
+    else:
+        def per_file(scan):
+            return (
                 scan.alias("t")
                 .join(_src_b(source.alias("s")), on, "inner")
                 .groupBy(F.col("t.__fp").alias("__fp"))
                 .agg(F.max(fires.cast("int")).alias("__need"))
-                .collect()
             )
-            matched = [_norm(r["__fp"]) for r in per_file]
-            rewrite = [_norm(r["__fp"]) for r in per_file if r["__need"]]
+
+    # by-source clauses act on rows with NO source match — any file may
+    # hold one, so their scan is the whole snapshot (inherent; see doc)
+    scan_files = visible_files(path, read_v) if bys_clauses else candidates
+    tags = _tag_files(spark, path, read_v, scan_files, per_file) if scan_files else []
+    matched = [t["__fp"] for t in tags if t.get("__haskey", 1)]
+    rewrite = [t["__fp"] for t in tags if t["__need"]]
     # phantom predicate for the conflict-resolution probe: a concurrent
     # append inside the source's key envelope may hold a row a serial
     # MERGE would have matched → conflict. All-NULL key column → nothing
@@ -3690,7 +3673,7 @@ def merge_into(
     # (Concurrent mapping DDL is fenced: rename/drop are _SNAPSHOT_OPS,
     # so the commit retry below surfaces any race instead of drifting.)
     mapping = dict(_column_mapping(path, read_v))
-    mapping_meta: dict = {}
+    merge_meta = {"op": "merge", "schema": post_types}
     if extra:
         reserved = _physical_reserved(path, read_v)
         for c in extra:
@@ -3698,60 +3681,29 @@ def merge_into(
                 mapping[c] = f"{c}__c{uuid.uuid4().hex[:8]}"
         reserved |= {mapping.get(c, c) for c in extra}
         if mapping:
-            mapping_meta = {
-                "column_mapping": mapping,
-                "physical_reserved": sorted(reserved),
-            }
-    adds: list[str] = []
-    removes: list[str] = []
-    dv_adds: dict[str, str] = {}
-    _sweep: list[str] = []  # pre-landed groups a losing writer must reclaim
-    change_legs: list[DataFrame] = []
-    rowid_pass = ()
+            merge_meta.update(
+                column_mapping=mapping, physical_reserved=sorted(reserved)
+            )
 
-    # Frames re-evaluated across several actions inside one commit are
-    # persisted for the commit's duration and released when the block
-    # exits (the joined rewrite frame feeds the rewritten output plus up
-    # to five change-feed legs, each a redundant scan otherwise). The phase-2 data-file write, the change-feed write and the
-    # phase-3 insert job are INDEPENDENT Spark jobs (all derive from the
-    # persisted join frame / the persisted source, none reads another's
-    # output): the phase-2 write runs on this call's own driver thread so
-    # the change/insert jobs back-fill its straggler tail, and it resolves
-    # before the stats collection that needs the written paths. Leaving
-    # the block waits out an in-flight write (the pool exits first) before
-    # any frame is unpersisted from under it; on an error path its files
-    # are unreferenced by any commit — vacuum territory, same as any
-    # failed CoW write. Spark's cache locks serialize the first
-    # materialization of the shared persisted frame, so no work
-    # duplicates.
-    from concurrent.futures import ThreadPoolExecutor
+    # Frames re-evaluated by several actions of the core are persisted
+    # until the merge returns (the joined rewrite frame feeds the
+    # rewritten output plus up to five change-feed legs, each a redundant
+    # scan otherwise); the core's own pool has waited out its in-flight
+    # write by then, so nothing is unpersisted from under a job.
     from contextlib import ExitStack
 
-    with ExitStack() as release, ThreadPoolExecutor(max_workers=1) as pool:
+    with ExitStack() as release:
         if _src_persisted:
             release.callback(source.unpersist)
-        phase2_write = None
-        # --- phase 2: rewrite the files where a clause fires ---------------------
-        tgt_m = None
-        if matched:
-            # ALL key-matched files (DV-applied): the insert anti-join's view
-            # of "exists in target" — a superset of the rewrite set when
-            # clause conditions spared some files
-            tgt_m = _read_files_with_dvs(spark, path, read_v, matched)
-            for name, dtype in table_fields.items():
-                if name not in tgt_m.columns:
-                    tgt_m = tgt_m.withColumn(name, F.lit(None).cast(dtype))
+        # --- phase 2: the joined target frame, one clause index per row ------
+        j = None
         if rewrite and (matched_clauses or bys_clauses):
-            if use_dvs:
-                # merge-on-read input: DV-applied rows WITH their (file,
-                # row_index) position tags — clause hits land as sidecar
-                # positions instead of file rewrites
-                tgt_r = _tagged_live_frame(spark, path, read_v, rewrite)
-            else:
-                tgt_r = _read_files_with_dvs(spark, path, read_v, rewrite)
-            for name, dtype in table_fields.items():
-                if name not in tgt_r.columns:
-                    tgt_r = tgt_r.withColumn(name, F.lit(None).cast(dtype))
+            # DV-applied rows; merge-on-read keeps their (file, row_index)
+            # position tags — clause hits land as sidecar positions
+            # instead of file rewrites
+            tgt_r = _target_rows(
+                spark, path, read_v, rewrite, post_types, tagged=use_dvs
+            )
             if matched_clauses and not _src_keys_unique:
                 # the Delta nondeterminism rule: >1 source row matching one
                 # target row with any when_matched clause is ill-defined.
@@ -3787,18 +3739,6 @@ def merge_into(
             jtype = "inner" if (use_dvs and not bys_clauses) else "left_outer"
             j = tgt_r.alias("t").join(_src_b(srcm.alias("s")), on, jtype)
             is_matched = F.coalesce(F.col("s.__m"), F.lit(False))
-
-            def _act_chain(clauses, gate):
-                chain = None
-                for i, (kind, _, cond) in enumerate(clauses):
-                    c = gate
-                    if cond is not None:
-                        c = c & F.coalesce(_as_cond(cond), F.lit(False))
-                    chain = (
-                        F.when(c, F.lit(i)) if chain is None else chain.when(c, F.lit(i))
-                    )
-                return F.lit(-1) if chain is None else chain.otherwise(F.lit(-1))
-
             j = j.withColumn("__act", _act_chain(matched_clauses, is_matched))
             j = j.withColumn("__bact", _act_chain(bys_clauses, ~is_matched))
             # persist: the joined frame feeds the rewritten output AND up
@@ -3812,185 +3752,38 @@ def merge_into(
             # candidate band materializes a hit-row-sized cache, and all
             # later actions are O(hits), never O(band).
             if use_dvs:
-                j = j.filter(
-                    (F.col("__act") >= 0) | (F.col("__bact") >= 0)
-                ).persist()
-            else:
-                j = j.persist()
+                j = j.filter((F.col("__act") >= 0) | (F.col("__bact") >= 0))
+            j = j.persist()
             release.callback(j.unpersist)
 
-            def t_val(c):
-                if c in tgt_r.columns:
-                    return F.col(f"t.`{c}`")
-                return F.lit(None).cast(post_types[c])
-
-            out_vals, pre_vals = [], []
-            for c in post_cols:
-                v = t_val(c)
-                for i, (kind, assigns, _) in enumerate(matched_clauses):
-                    if kind != "update":
-                        continue
-                    if assigns == "*":
-                        av = F.col(f"s.`{c}`") if c in source.columns else None
-                    else:
-                        unknown = set(assigns) - set(post_cols)
-                        if unknown:
-                            raise ValueError(
-                                f"update assignments reference unknown "
-                                f"columns: {sorted(unknown)}"
-                            )
-                        av = assigns.get(c)
-                        if av is not None:
-                            av = F.expr(av) if isinstance(av, str) else av
-                    if av is not None:
-                        v = F.when(
-                            F.col("__act") == i, av.cast(post_types[c])
-                        ).otherwise(v)
-                for i, (kind, assigns, _) in enumerate(bys_clauses):
-                    if kind != "update":
-                        continue
-                    unknown = set(assigns) - set(post_cols)
-                    if unknown:
-                        raise ValueError(
-                            f"by-source update assignments reference unknown "
-                            f"columns: {sorted(unknown)}"
-                        )
-                    av = assigns.get(c)
-                    if av is not None:
-                        av = F.expr(av) if isinstance(av, str) else av
-                        v = F.when(
-                            F.col("__bact") == i, av.cast(post_types[c])
-                        ).otherwise(v)
-                out_vals.append(v.alias(c))
-                pre_vals.append(t_val(c).alias(c))
-            del_idx = [i for i, (k, _, _) in enumerate(matched_clauses) if k == "delete"]
-            upd_idx = [i for i, (k, _, _) in enumerate(matched_clauses) if k == "update"]
-            bs_del = [i for i, (k, _, _) in enumerate(bys_clauses) if k == "delete"]
-            bs_upd = [i for i, (k, _, _) in enumerate(bys_clauses) if k == "update"]
-            if tracking:
-                rowid_pass = (F.col(f"t.`{_ROWID}`").alias(_ROWID),)
-            phase2_live = True
-            rewritten = None
-            if use_dvs:
-                # merge-on-read: every clause-hit row's PRE-IMAGE position
-                # lands in one DV sidecar group (hiding it from read_mor);
-                # only the UPDATE outputs append. No candidate file is
-                # rewritten — cost ∝ hit rows, never file count. j is
-                # already the persisted clause-hit subset here.
-                dv_target, dv_adds = _land_dv_positions(
-                    spark, path, read_v, j.select("t.__fn", "t.__ri")
-                )
-                if dv_target is None:
-                    # every phase-1 hit row was already DV-dead (phase 1
-                    # scans raw files): phase 2 contributes nothing — the
-                    # redelivered-batch no-op shape
-                    phase2_live = False
-                else:
-                    _sweep.append(dv_target)
-                    upd_hit = F.lit(False)
-                    if upd_idx:
-                        upd_hit = upd_hit | F.col("__act").isin(upd_idx)
-                    if bs_upd:
-                        upd_hit = upd_hit | F.col("__bact").isin(bs_upd)
-                    if upd_idx or bs_upd:
-                        rewritten = j.filter(upd_hit).select(
-                            *out_vals, *rowid_pass
-                        )
-                        if not rewritten.limit(1).count():
-                            rewritten = None
-            else:
-                keep = j
-                if del_idx:
-                    keep = keep.filter(~F.col("__act").isin(del_idx))
-                if bs_del:
-                    keep = keep.filter(~F.col("__bact").isin(bs_del))
-                rewritten = keep.select(*out_vals, *rowid_pass)
-                removes = [os.path.relpath(p, path) for p in rewrite]
-            if rewritten is not None:
-                _enforce_constraints(rewritten, path)
-                # an UPDATE clause that changes a generated column's inputs
-                # must keep the derivation true (assign both consistently) —
-                # validated here, never silently broken into the files
-                _apply_generated(rewritten, path)
-                phase2_write = pool.submit(
-                    _write_data_files, _to_physical(rewritten, mapping), path
-                )
-            # change record: each clause-hit row's images — updates as their
-            # delete+insert pair SHARING the row's stable id, deletes as
-            # pre-images. No-hit and unmatched rows re-land byte-identical
-            # (CoW) or stay untouched in place (DV): not a change, not
-            # recorded.
-            if phase2_live and upd_idx:
-                hit_u = j.filter(F.col("__act").isin(upd_idx))
-                change_legs.append(
-                    hit_u.select(*pre_vals, *rowid_pass).withColumn(
-                        "_change_type", F.lit("delete")
-                    )
-                )
-                change_legs.append(
-                    hit_u.select(*out_vals, *rowid_pass).withColumn(
-                        "_change_type", F.lit("insert")
-                    )
-                )
-            if phase2_live and del_idx:
-                change_legs.append(
-                    j.filter(F.col("__act").isin(del_idx))
-                    .select(*pre_vals, *rowid_pass)
-                    .withColumn("_change_type", F.lit("delete"))
-                )
-            if phase2_live and bs_upd:
-                hit_b = j.filter(F.col("__bact").isin(bs_upd))
-                change_legs.append(
-                    hit_b.select(*pre_vals, *rowid_pass).withColumn(
-                        "_change_type", F.lit("delete")
-                    )
-                )
-                change_legs.append(
-                    hit_b.select(*out_vals, *rowid_pass).withColumn(
-                        "_change_type", F.lit("insert")
-                    )
-                )
-            if phase2_live and bs_del:
-                change_legs.append(
-                    j.filter(F.col("__bact").isin(bs_del))
-                    .select(*pre_vals, *rowid_pass)
-                    .withColumn("_change_type", F.lit("delete"))
-                )
-
-        # --- phase 3: not-matched inserts ---------------------------------------
-        ins_adds: list[str] = []
-        ins_factory = None
-        ins_frame = None
+        # --- the not-matched INSERT rows ---------------------------------------
+        inserts = None
         if ins_clause is not None:
             ins_values, ins_cond = ins_clause
             nm = source
-            if tgt_m is not None:
-                # anti-join against the DV-APPLIED matched rows: a key whose
-                # only target occurrence is deletion-vector-deleted is NOT
-                # matched (it must insert, not vanish). Files outside the
-                # matched set hold no source keys by phase-1 construction.
+            if matched:
+                # anti-join against the DV-APPLIED rows of ALL key-matched
+                # files — a superset of the rewrite set when clause
+                # conditions spared some files: a key whose only target
+                # occurrence is deletion-vector-deleted is NOT matched (it
+                # must insert, not vanish). Files outside the matched set
+                # hold no source keys by phase-1 construction.
+                tgt_m = _target_rows(spark, path, read_v, matched, table_fields)
                 nm = nm.join(tgt_m.select(*keys), keys, "left_anti")
             nm = nm.alias("s")
             if ins_cond is not None:
-                nm = nm.filter(F.coalesce(_as_cond(ins_cond), F.lit(False)))
+                nm = nm.filter(F.coalesce(_as_col(ins_cond), F.lit(False)))
+            if ins_values is None:
+                ins_values = verbatim
             gens = latest_meta(path, "generated", read_v) or {}
+            defaults = latest_meta(path, "column_defaults", read_v) or {}
             ins_cols, computed_later = [], []
             for c in post_cols:
                 if c in idents:
                     # GENERATED ALWAYS AS IDENTITY: assigned per commit
-                    # ATTEMPT from the tip watermark (the ins_factory below)
+                    # ATTEMPT from the tip watermark (the identity factory)
                     continue
-                if ins_values is not None:
-                    unknown = set(ins_values) - set(post_cols)
-                    if unknown:
-                        raise ValueError(
-                            f"insert values reference unknown columns: "
-                            f"{sorted(unknown)}"
-                        )
-                    iv = ins_values.get(c)
-                    iv = F.expr(iv) if isinstance(iv, str) else iv
-                else:
-                    iv = F.col(f"s.`{c}`") if c in source.columns else None
+                iv = _as_col(ins_values.get(c))
                 if iv is None:
                     if c in gens:
                         # generated column the source does not supply: compute
@@ -4000,9 +3793,7 @@ def merge_into(
                     # a write-defaulted column the source omits fills the
                     # default (the Iceberg write-default contract), same
                     # as the append path
-                    wd = (
-                        latest_meta(path, "column_defaults", read_v) or {}
-                    ).get(c, {}).get("write")
+                    wd = defaults.get(c, {}).get("write")
                     iv = F.expr(wd) if wd is not None else F.lit(None)
                 ins_cols.append(iv.cast(post_types[c]).alias(c))
             inserts = nm.select(*ins_cols)
@@ -4013,102 +3804,28 @@ def merge_into(
             # and every constraint/generated validation (VERDICT r10 ask #4)
             inserts = inserts.persist()
             release.callback(inserts.unpersist)
-            if inserts.limit(1).count():
-                if idents:
-                    # the reservation protocol: values assigned inside the
-                    # commit retry loop; generated columns compute AFTER the
-                    # identity values exist (an expression may reference
-                    # them). The factory itself is built below, once the
-                    # skipping-column set of the removed files is known.
-                    ins_frame = inserts
-                else:
-                    _enforce_constraints(inserts, path)
-                    if not computed_later:
-                        _apply_generated(inserts, path)  # validate supplied values
-                    ins_adds = _write_data_files(_to_physical(inserts, mapping), path)
-                    adds += ins_adds
-                    if use_dvs and ins_adds:
-                        _sweep.append(
-                            os.path.dirname(os.path.join(path, ins_adds[0]))
-                        )
-                    change_legs.append(
-                        inserts.withColumn("_change_type", F.lit("insert"))
-                    )
+            if not idents:
+                # validated here, before any group lands; identity inserts
+                # complete and validate per commit attempt instead
+                if not computed_later:
+                    _apply_generated(inserts, path)  # validate supplied values
+                _enforce_constraints(inserts, path)
 
-        if not removes and not dv_adds and not ins_adds and ins_frame is None:
-            return read_v  # nothing matched, nothing to insert: no empty commit
-        if change_legs:
-            change = change_legs[0]
-            for leg in change_legs[1:]:
-                change = change.unionByName(leg, allowMissingColumns=True)
-            change_data = _write_change_files(_to_physical(change, mapping), path)
-            if use_dvs and change_data:
-                _sweep.append(
-                    os.path.dirname(os.path.join(path, change_data[0]))
-                )
-        else:
-            # identity-insert-only merge: the change record rides with the
-            # per-attempt factory files (appended at commit time)
-            change_data = []
-        # skipping channels: CoW recollects what the removed files carried;
-        # the DV path removes nothing, so its appended update outputs keep
-        # the TABLE's live channels alive (the update_where_dv contract)
-        if phase2_write is not None:
-            # resolve the overlapped phase-2 write: every job that could
-            # back-fill it (change feed, inserts) has now run. Its files
-            # lead the adds, ahead of the phase-3 inserts.
-            phase2_adds = phase2_write.result()
-            adds[:0] = phase2_adds
-            if use_dvs and phase2_adds:
-                _sweep.append(
-                    os.path.dirname(os.path.join(path, phase2_adds[0]))
-                )
-        skip_src = removes
-        if dv_adds:
-            skip_src = [
-                os.path.relpath(p, path) for p in visible_files(path, read_v)
-            ]
-        stat_cols, bloom_cols = _removed_skipping_cols(path, read_v, skip_src)
-        stats = _collect_stats(path, adds, stat_cols or None)
-        blooms = _collect_blooms(path, adds, bloom_cols or None)
-        if ins_frame is not None:
-            ins_factory = _identity_insert_factory(
-                path, ins_frame, post_cols, mapping, stat_cols, bloom_cols
-            )
-        merge_meta = {
-            "op": "merge",
-            "schema": {c: post_types[c] for c in post_cols},
-            **mapping_meta,
-        }
-        if dv_adds:
-            # irreversible-layout gate, same as delete_where_dv: pre-DV
-            # engine builds must refuse the table, not resurrect rows
-            merge_meta = _with_feature(path, merge_meta, "deletion-vectors")
-        try:
-            return _commit_serializable(
-                spark,
-                path,
-                read_v,
-                adds,
-                removes,
-                stats,
-                blooms,
-                merge_meta,
-                predicate=phantom,
-                change_data=change_data,
-                dv_adds=dv_adds or None,
-                alloc_row_bases_for=(ins_adds if tracking else None) or None,
-                ins_factory=ins_factory,
-                ins_factory_alloc=tracking,
-            )
-        except CommitConflict:
-            # losing DV writer sweeps its pre-landed groups (sidecar +
-            # update and insert outputs + change record), mirroring
-            # update_where_dv;
-            # the CoW path keeps its historical leave-to-vacuum behavior
-            for g in _sweep:
-                logstore.for_path(path).delete_tree(g)
-            raise
+        return _mutate(
+            spark,
+            path,
+            read_v,
+            merge_meta,
+            phantom,
+            post_types,
+            frame=j,
+            clauses=matched_clauses,
+            bys=bys_clauses,
+            rewrite=rewrite,
+            use_dvs=use_dvs,
+            fresh=inserts,
+            mapping=mapping,
+        )
 
 
 def _identity_insert_factory(
@@ -4116,26 +3833,29 @@ def _identity_insert_factory(
     inserts: DataFrame,
     post_cols,
     mapping,
-    stat_cols=None,
-    bloom_cols=None,
+    stat_cols,
+    bloom_cols,
+    wrote: list[str],
 ):
     """MERGE INSERT into an identity table — the per-attempt reservation
     protocol (VERDICT r10 ask #3, mirroring append's loop): the returned
     closure runs inside ``_commit_serializable``'s retry body and, on
     each attempt whose identity watermark differs from the last, (1)
-    deletes the lost attempt's unreferenced files, (2) re-derives the
+    deletes the lost attempt's unreferenced groups, (2) re-derives the
     insert frame with fresh identity values from the CURRENT tip
     watermark (``_apply_identity``), (3) computes/validates generated
     columns and constraints on the completed rows, (4) lands fresh data +
-    change files, and (5) folds the footer-stats watermark advance
-    (``_advance_identity``) into the commit meta. put_if_absent then
+    change groups, recording them in ``wrote`` (the core sweeps the last
+    attempt's if the commit finally loses), and (5) folds the
+    footer-stats watermark advance (``_advance_identity``) into the
+    commit meta. put_if_absent then
     serializes the watermark read against every concurrent writer: our
     commit wins → no one else advanced it since the read; our commit
     loses → the next attempt re-reads the winner's advance. A concurrent
     plain append that read the same watermark but commits AFTER us trips
     its own identity-race guard — ids stay globally unique without any
     coordination beyond the log itself."""
-    state: dict = {"wm": None, "adds": [], "change": [], "stats": {}, "blooms": {}, "meta": {}}
+    state: dict = {"wm": None, "groups": [], "adds": [], "change": [], "stats": {}, "blooms": {}, "meta": {}}
 
     def factory() -> dict:
         cur = latest_meta(path, "identity") or {}
@@ -4143,8 +3863,8 @@ def _identity_insert_factory(
         if state["wm"] == wm:
             return state  # watermark unmoved — the landed files stay valid
         store = logstore.for_path(path)
-        for rel in state["adds"] + state["change"]:
-            store.delete(os.path.join(path, rel))  # lost-race cleanup
+        for g in state["groups"]:
+            store.delete_tree(g)  # lost-race cleanup
         frame, idents_meta = _apply_identity(inserts, path)
         frame = _apply_generated(frame, path).select(*post_cols)
         _enforce_constraints(frame, path)
@@ -4155,15 +3875,18 @@ def _identity_insert_factory(
             ),
             path,
         )
+        groups = [os.path.dirname(os.path.join(path, r[0])) for r in (adds, change) if r]
+        wrote.extend(groups)
         state.update(
             wm=wm,
+            groups=groups,
             adds=adds,
             change=change,
             # skipping parity with the rewrite adds: the commit must not
             # silently degrade pruning on the columns the removed files
             # carried stats/blooms for
-            stats=_collect_stats(path, adds, stat_cols or None),
-            blooms=_collect_blooms(path, adds, bloom_cols or None),
+            stats=_collect_stats(path, adds, stat_cols),
+            blooms=_collect_blooms(path, adds, bloom_cols),
             meta=_advance_identity(path, adds, idents_meta),
         )
         return state
@@ -4312,7 +4035,6 @@ def _commit_serializable(
     change_data: list[str] | None = None,
     alloc_row_bases_for: list[str] | None = None,
     ins_factory=None,
-    ins_factory_alloc: bool = False,
 ) -> int:
     """WriteSerializable commit for the row-level mutations — the Delta
     conflict-RESOLUTION rules instead of fail-on-any-race: when another
@@ -4338,8 +4060,9 @@ def _commit_serializable(
     files and the identity-watermark meta advance, re-landing the insert
     files with fresh values whenever the watermark moved since the last
     attempt (see :func:`_identity_insert_factory`).
-    ``ins_factory_alloc=True`` additionally allocates row-tracking bases
-    for the factory's files, per attempt like the static list."""
+    ``alloc_row_bases_for`` and the factory's adds are fresh-row files:
+    on a row-tracking table each attempt allocates their row-id bases."""
+    tracking = row_tracking_enabled(path, read_v)
     target = read_v + 1
     for _ in range(max_retries + 1):
         # row tracking: fresh-id allocation re-derives PER ATTEMPT from the
@@ -4355,9 +4078,8 @@ def _commit_serializable(
             blooms_t = {**(blooms or {}), **ins["blooms"]}
             change_t = list(change_data or []) + ins["change"]
             meta_rt.update(ins["meta"])
-            if ins_factory_alloc:
-                alloc += ins["adds"]
-        if alloc:
+            alloc += ins["adds"]
+        if alloc and tracking:
             row_bases, wm = _alloc_row_bases(path, alloc)
             meta_rt["row_id_watermark"] = wm
         try:
@@ -4415,67 +4137,68 @@ def _commit_serializable(
 
 
 def _prune_candidates(
-    path: str, read_v: int, prune_col: str | None, lo, hi
+    path: str, read_v: int, ranges: dict, points: dict | None = None
 ) -> list[str]:
-    """The pruning ladder of the row-level mutations: the visible files
-    whose ``prune_col`` stats range can meet [lo, hi], minus those whose
-    bloom excludes a point predicate's value (lo == hi — the
-    unclustered-key case where every file's range matches). Every
-    visible file when ``prune_col`` is None."""
+    """Phase 1 of the row-level mutations, metadata only: the visible
+    files whose logged stats can meet every ``{col: (lo, hi)}`` range of
+    ``ranges``, minus those whose bloom on a ``{col: values}`` column of
+    ``points`` excludes every value (the point-predicate / bounded-key
+    case where every file's range matches). Every visible file when
+    neither is given."""
     all_files = visible_files(path, read_v)
-    if prune_col is None:
+    points = points or {}
+    if not ranges and not points:
         return all_files
-    prune_col = _phys_name(path, read_v, prune_col)
+    phys = {c: _phys_name(path, read_v, c) for c in [*ranges, *points]}
     stats = visible_stats(path, read_v)
-    blooms = visible_blooms(path, read_v) if lo is not None and lo == hi else {}
-    c_lo, c_hi = _canon_bound(lo), _canon_bound(hi)
+    blooms = visible_blooms(path, read_v) if points else {}
+    canon = {c: (_canon_bound(lo), _canon_bound(hi)) for c, (lo, hi) in ranges.items()}
     candidates = []
     for abs_p in all_files:
         rel = os.path.relpath(abs_p, path)
-        if _range_excludes(stats.get(rel, {}).get(prune_col), c_lo, c_hi):
+        fstats, fblooms = stats.get(rel, {}), blooms.get(rel, {})
+        if any(_range_excludes(fstats.get(phys[c]), *canon[c]) for c in ranges):
             continue
-        b64 = blooms.get(rel, {}).get(prune_col)
-        if b64 is not None and not _bloom_may_contain(b64, lo):
+        if any(
+            phys[c] in fblooms
+            and not any(_bloom_may_contain(fblooms[phys[c]], v) for v in vals)
+            for c, vals in points.items()
+        ):
             continue
         candidates.append(abs_p)
     return candidates
 
 
-def _matched_files(
-    spark: SparkSession,
-    path: str,
-    read_v: int,
-    predicate,
-    prune_col: str | None,
-    lo,
-    hi,
-) -> list[str]:
-    """Shared candidate-pruning + file-level match scan for the
-    copy-on-write mutations (DELETE/UPDATE): stats skip (+ bloom skip for
-    point predicates) → one predicate scan tagging which files contain
-    TRUE rows (``input_file_name``, URI-normalized via urlparse+unquote).
-    Returns absolute paths of matched files (empty = nothing to rewrite)."""
+def _tag_files(
+    spark: SparkSession, path: str, read_v: int, files: list[str], per_file
+) -> list[dict]:
+    """Phase 1's one file-tag scan: the LOGICAL view of ``files`` with
+    each row's data file in ``__fp``, reduced by ``per_file(scan)`` to one
+    row per file; returns those rows as dicts, ``__fp`` an absolute local
+    path. The tag is selected on the RAW scan and is a real column before
+    any join: ``_metadata`` resolves on the file-source relation only,
+    and a post-shuffle evaluation would return "" (wrong files matched).
+    mergeSchema: candidate files may span additive schema evolution."""
     from urllib.parse import unquote, urlparse
 
-    candidates = _prune_candidates(path, read_v, prune_col, lo, hi)
-    if not candidates:
-        return []
-    # mergeSchema: candidate files may span additive schema evolution; the
-    # narrower single-footer schema would drop evolved columns on rewrite.
-    # The predicate is LOGICAL — match against the logical view.
-    scan = _logical_view(
-        _read_data(spark, path, candidates, merge_schema=True, version=read_v), path, read_v
-    )
-    matched = [
-        r[0]
-        for r in scan.filter(predicate)
-        .select(F.input_file_name())
-        .distinct()
-        .collect()
-    ]
-    return [
-        unquote(urlparse(p).path) if p.startswith("file:") else p for p in matched
-    ]
+    from pyspark.errors import AnalysisException
+
+    raw = _read_data(spark, path, files, merge_schema=True, version=read_v)
+    try:
+        raw = raw.select("*", F.col("_metadata.file_path").alias("__fp"))
+    except AnalysisException:
+        # files both before and after an initial column default scan as a
+        # union, which hides _metadata; input_file_name() still reads the
+        # file of the scan partition feeding the row
+        raw = raw.select("*", F.input_file_name().alias("__fp"))
+    scan = _logical_view(raw, path, read_v, passthrough=("__fp",))
+    out = []
+    for r in per_file(scan).collect():
+        d = r.asDict()
+        if d["__fp"].startswith("file:"):
+            d["__fp"] = unquote(urlparse(d["__fp"]).path)
+        out.append(d)
+    return out
 
 
 def _removed_skipping_cols(
@@ -4489,6 +4212,322 @@ def _removed_skipping_cols(
     stat_cols = sorted({c for rel in removes for c in live_stats.get(rel, {})})
     bloom_cols = sorted({c for rel in removes for c in live_blooms.get(rel, {})})
     return stat_cols, bloom_cols
+
+
+# ---------------------------------------------------------------------------
+# The row-level mutation core. DELETE, UPDATE, replaceWhere and MERGE, in
+# their copy-on-write and deletion-vector forms, run the same four phases:
+#   1. choose and tag files — _prune_candidates (logged stats + blooms),
+#      then, where the mutation needs it, the one _tag_files scan;
+#   2. the target frame — live rows (_target_rows) with ``__act``, the
+#      index of the first clause that fires per row (-1: none; MERGE adds
+#      ``__bact`` for its not-matched-by-source clauses);
+#   3. one clause applier and 4. one landing tail, both in _mutate.
+# Each mutation only builds its phase-1/2 inputs and calls _mutate.
+# ---------------------------------------------------------------------------
+
+
+def _as_col(x):
+    """A Column from a Column or a SQL expression string (None stays)."""
+    return F.expr(x) if isinstance(x, str) else x
+
+
+def _act_chain(clauses, gate):
+    """Per-row index of the first ``(kind, assignments, cond)`` clause
+    whose condition is TRUE (NULL → false) where ``gate`` holds; -1 when
+    none fires."""
+    chain = None
+    for i, (_kind, _, cond) in enumerate(clauses):
+        c = gate
+        if cond is not None:
+            c = c & F.coalesce(_as_col(cond), F.lit(False))
+        chain = F.when(c, F.lit(i)) if chain is None else chain.when(c, F.lit(i))
+    return F.lit(-1) if chain is None else chain.otherwise(F.lit(-1))
+
+
+def _check_assignments(assignments, cols) -> None:
+    """Reject SET / INSERT assignment dicts naming a column outside
+    ``cols`` — before any scan, so a mutation that matches nothing
+    still errors (non-dict entries: '*', verbatim, DELETE)."""
+    unknown = {c for a in assignments if isinstance(a, dict) for c in a} - set(cols)
+    if unknown:
+        raise ValueError(f"assignments reference unknown columns: {sorted(unknown)}")
+
+
+def _table_fields(spark: SparkSession, path: str, read_v: int) -> dict[str, str]:
+    """Logical column → type of the snapshot: the logged schema, or the
+    footer union for a table that predates logged schemas."""
+    _check_reader(path, read_v)
+    return latest_meta(path, "schema", read_v) or dict(
+        read(spark, path, read_v, merge_schema=True).dtypes
+    )
+
+
+def _target_rows(
+    spark: SparkSession,
+    path: str,
+    read_v: int,
+    files: list[str],
+    fields: dict[str, str],
+    tagged: bool = False,
+) -> DataFrame:
+    """Phase 2's rows: the live (DV-applied) rows of ``files``, with NULL
+    for every ``fields`` column the files predate (an assignment to an
+    evolved column must work even when every matched file predates it).
+    ``tagged`` keeps the ``__fn``/``__ri`` positions a DV mutation lands."""
+    read_live = _tagged_live_frame if tagged else _read_files_with_dvs
+    df = read_live(spark, path, read_v, files)
+    for name, dtype in fields.items():
+        if name not in df.columns:
+            df = df.withColumn(name, F.lit(None).cast(dtype))
+    return df
+
+
+def _mutate_where(
+    spark: SparkSession,
+    path: str,
+    read_v: int,
+    predicate,
+    clause: tuple,
+    prune_col: str | None,
+    lo,
+    hi,
+    use_dvs: bool,
+    meta: dict,
+    fresh: DataFrame | None = None,
+) -> int:
+    """Phases 1 and 2 of the predicate mutations (DELETE, UPDATE,
+    replaceWhere; copy-on-write or DV): ``predicate`` becomes the
+    condition of the one ``(kind, assignments)`` clause.
+
+    1. **Stats skip** over ``prune_col``'s [lo, hi] (plus the bloom skip
+       when lo == hi); every file when ``prune_col`` is None.
+    2. Copy-on-write: one predicate scan of the candidates tags the
+       files holding TRUE rows — files with none stay referenced
+       byte-identical — and the frame is every live row of those files.
+       DV: the frame is the candidates' live predicate-TRUE rows with
+       their positions (the predicate filters the scan itself, so it
+       pushes down); already-DV-dead positions never re-match.
+
+    SQL three-valued logic: a NULL predicate fires nothing."""
+    fields = _table_fields(spark, path, read_v)
+    _check_assignments([clause[1]], fields)
+    ranges = {prune_col: (lo, hi)} if prune_col is not None else {}
+    points = {prune_col: [lo]} if ranges and lo is not None and lo == hi else None
+    candidates = _prune_candidates(path, read_v, ranges, points)
+    clauses = [(*clause, predicate)]
+    matched, frame = [], None
+    if candidates and use_dvs:
+        frame = _target_rows(spark, path, read_v, candidates, fields, tagged=True)
+        frame = frame.filter(predicate)
+    elif candidates:
+        tags = _tag_files(
+            spark, path, read_v, candidates,
+            lambda scan: scan.filter(predicate).select("__fp").distinct(),
+        )
+        matched = [t["__fp"] for t in tags]
+        if matched:
+            frame = _target_rows(spark, path, read_v, matched, fields)
+    if frame is not None:
+        frame = frame.withColumn("__act", _act_chain(clauses, F.lit(True))).alias("t")
+    return _mutate(
+        spark, path, read_v, meta, predicate, fields,
+        frame=frame, clauses=clauses, rewrite=matched, use_dvs=use_dvs, fresh=fresh,
+    )
+
+
+def _mutate(
+    spark: SparkSession,
+    path: str,
+    read_v: int,
+    meta: dict,
+    predicate,
+    fields: dict[str, str],
+    *,
+    frame: DataFrame | None = None,
+    clauses=(),
+    bys=(),
+    rewrite: list[str] = (),
+    use_dvs: bool = False,
+    fresh: DataFrame | None = None,
+    mapping: dict | None = None,
+) -> int:
+    """Phases 3 and 4 of every row-level mutation: apply the clauses,
+    land the groups, commit.
+
+    ``frame`` (aliased ``t``; None when no row is targeted) carries per
+    row ``__act``, the index into ``clauses`` of the clause that fires,
+    and, for MERGE's not-matched-by-source ``bys``, ``__bact``; -1 means
+    none fires. A clause is ``(kind, assignments, cond)``; only the kind
+    and the validated ``{col: expr}`` assignments are read here, each
+    cast to the column's type in ``fields`` (the post-mutation schema).
+
+    **Phase 3, the clause applier.** Copy-on-write re-lands every frame
+    row but the deleted ones — updates applied — and removes the
+    ``rewrite`` files. The DV form lands the frame rows' positions
+    (``_land_dv_positions``; the frame holds clause hits only) and
+    appends only the update outputs. The change record holds each
+    update as its delete+insert pair sharing the row's stable id and
+    each delete as its pre-image; rows no clause hits are not a change.
+    ``fresh`` rows (MERGE INSERT, replaceWhere's new rows) land as one
+    more group, as inserts with freshly allocated row ids; into an
+    identity table they land per commit attempt
+    (:func:`_identity_insert_factory`). A frame the caller persisted is
+    probed before its group lands — the probe reads the cache — so an
+    empty group never lands; an unpersisted one lands unprobed, as a
+    probe would repeat its scan.
+
+    **Phase 4, the landing tail.** The data write runs on this call's
+    own single-thread pool, overlapped with the change-record and fresh
+    writes (leaving the block waits it out). Skipping channels are
+    recollected on the adds — the removed files' for copy-on-write, the
+    live table's when the commit adds DVs. A commit whose only change
+    is DV positions stores no change record: the change feed reads
+    those deletes from the DV state. The commit is WriteSerializable
+    (:func:`_commit_serializable`, ``predicate`` the phantom probe); a
+    writer losing it sweeps every group it landed. Returns the new
+    version, or ``read_v`` when nothing changed (no empty commit)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    mapping = _column_mapping(path, read_v) if mapping is None else mapping
+    wrote: list[str] = []  # group dirs this call landed
+
+    def land(df: DataFrame, writer) -> list[str]:
+        rels = writer(_to_physical(df, mapping), path)
+        if rels:
+            wrote.append(os.path.dirname(os.path.join(path, rels[0])))
+        return rels
+
+    removes: list[str] = []
+    dv_adds: dict[str, str] = {}
+    legs: list[DataFrame] = []
+    fresh_adds: list[str] = []
+    ins_frame = phase2 = None
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        if frame is not None and use_dvs:
+            group, dv_adds = _land_dv_positions(
+                spark, path, read_v, frame.select("t.__fn", "t.__ri")
+            )
+            if group is None:
+                frame = None  # every hit row was already DV-dead
+            else:
+                wrote.append(group)
+        if frame is not None:
+            indexed = (("__act", clauses), ("__bact", bys))
+            kinds = {
+                col: {
+                    kind: [i for i, (k, _, _) in enumerate(cls) if k == kind]
+                    for kind in ("update", "delete")
+                }
+                for col, cls in indexed
+            }
+            out_vals, pre_vals = [], []
+            for c in fields:
+                v = F.col(f"t.`{c}`")
+                for col, cls in indexed:
+                    for i, (kind, assigns, _) in enumerate(cls):
+                        av = _as_col(assigns.get(c)) if kind == "update" else None
+                        if av is not None:
+                            v = F.when(F.col(col) == i, av.cast(fields[c])).otherwise(v)
+                out_vals.append(v.alias(c))
+                pre_vals.append(F.col(f"t.`{c}`").alias(c))
+            # on a row-tracking table each row's stable id rides along, so
+            # every landed image MATERIALIZES it
+            rowid = [F.col(f"t.`{_ROWID}`").alias(_ROWID)] if _ROWID in frame.columns else []
+
+            def images(rows: DataFrame, vals, change_type: str) -> DataFrame:
+                return rows.select(*vals, *rowid).withColumn(
+                    "_change_type", F.lit(change_type)
+                )
+
+            updates = [F.col(col).isin(k["update"]) for col, k in kinds.items() if k["update"]]
+            rewritten = None
+            if not use_dvs:
+                keep = frame
+                for col, k in kinds.items():
+                    if k["delete"]:
+                        keep = keep.filter(~F.col(col).isin(k["delete"]))
+                rewritten = keep.select(*out_vals, *rowid)
+                removes = [os.path.relpath(p, path) for p in rewrite]
+            elif updates:
+                rewritten = frame.filter(functools.reduce(operator.or_, updates))
+                rewritten = rewritten.select(*out_vals, *rowid)
+                if frame.is_cached and not rewritten.limit(1).count():
+                    rewritten = None  # every hit was a delete
+            if rewritten is not None:
+                if updates:
+                    # an update must keep CHECK constraints and generated
+                    # derivations true — fail loudly, never bake a
+                    # violation into the files
+                    _enforce_constraints(rewritten, path)
+                    _apply_generated(rewritten, path)
+                # the change-record and fresh-row jobs are independent of
+                # this write and back-fill its straggler tail; Spark's
+                # cache locks serialize the first materialization of a
+                # shared persisted frame, so no work duplicates
+                phase2 = pool.submit(land, rewritten, _write_data_files)
+            for col, k in kinds.items():
+                if k["update"]:
+                    hit = frame.filter(F.col(col).isin(k["update"]))
+                    legs += [images(hit, pre_vals, "delete"), images(hit, out_vals, "insert")]
+                if k["delete"]:
+                    legs.append(images(frame.filter(F.col(col).isin(k["delete"])), pre_vals, "delete"))
+        if fresh is not None and (not fresh.is_cached or fresh.limit(1).count()):
+            if latest_meta(path, "identity", read_v):
+                ins_frame = fresh
+            else:
+                fresh_adds = land(fresh, _write_data_files)
+                legs.append(fresh.withColumn("_change_type", F.lit("insert")))
+
+        if not removes and not dv_adds and not fresh_adds and ins_frame is None:
+            return read_v
+        change_data = None
+        if removes or phase2 is not None or fresh_adds or ins_frame is not None:
+            change_data = []  # an identity insert's record lands per attempt
+            if legs:
+                change = functools.reduce(
+                    lambda a, b: a.unionByName(b, allowMissingColumns=True), legs
+                )
+                change_data = land(change, _write_change_files)
+        # the overlapped data write leads the adds, ahead of fresh rows
+        adds = (phase2.result() if phase2 is not None else []) + fresh_adds
+
+    stat_cols = bloom_cols = []
+    if adds or ins_frame is not None:
+        skip_src = removes
+        if dv_adds:
+            skip_src = [os.path.relpath(p, path) for p in visible_files(path, read_v)]
+        stat_cols, bloom_cols = _removed_skipping_cols(path, read_v, skip_src)
+    factory = None
+    if ins_frame is not None:
+        factory = _identity_insert_factory(
+            path, ins_frame, list(fields), mapping, stat_cols, bloom_cols, wrote
+        )
+    if dv_adds:
+        # irreversible-layout gate: pre-DV engine builds must refuse the
+        # table, not resurrect rows
+        meta = _with_feature(path, meta, "deletion-vectors")
+    try:
+        return _commit_serializable(
+            spark,
+            path,
+            read_v,
+            adds,
+            removes,
+            _collect_stats(path, adds, stat_cols),
+            _collect_blooms(path, adds, bloom_cols),
+            meta,
+            predicate=predicate,
+            dv_adds=dv_adds or None,
+            change_data=change_data,
+            alloc_row_bases_for=fresh_adds,
+            ins_factory=factory,
+        )
+    except CommitConflict:
+        store = logstore.for_path(path)
+        for g in wrote:
+            store.delete_tree(g)
+        raise
 
 
 def delete_where(
@@ -4507,7 +4546,7 @@ def delete_where(
        the range are never even scanned.
     2. **File-level match scan**: one pass over the surviving candidates
        tags which FILES actually contain matching rows
-       (``input_file_name``); files with zero matches stay referenced,
+       (``_metadata.file_path``); files with zero matches stay referenced,
        byte-identical — copy-on-write at file granularity, the Delta/
        Iceberg CoW contract.
     3. **Rewrite**: only matched files re-land, minus the deleted rows.
@@ -4516,37 +4555,16 @@ def delete_where(
     are deleted — rows where it is NULL survive (three-valued logic: a bare
     ``NOT(pred)`` keep-filter would silently drop NULL-predicate rows from
     rewritten files while identical rows in untouched files survived).
+    The change record is exactly the deleted rows (pre-images).
 
     Returns the new version (or the current one when nothing matched —
     no empty commit)."""
     read_v = current_version(path)
     if read_v == 0:
         raise FileNotFoundError(f"no table at {path!r} (empty log)")
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
-    matched = _matched_files(spark, path, read_v, predicate, prune_col, lo, hi)
-    if not matched:
-        return read_v
-    src = _read_files_with_dvs(spark, path, read_v, matched)
-    hit = F.coalesce(predicate, F.lit(False))
-    keep = src.filter(~hit)
-    removes = [os.path.relpath(p, path) for p in matched]
-    stat_cols, bloom_cols = _removed_skipping_cols(path, read_v, removes)
-    mapping = _column_mapping(path, read_v)
-    adds = _write_data_files(_to_physical(keep, mapping), path)
-    # the commit's row-level change record: exactly the deleted rows
-    # (pre-images), so CDC never needs a cross-file diff for this commit
-    change_data = _write_change_files(
-        _to_physical(src.filter(hit), mapping).withColumn(
-            "_change_type", F.lit("delete")
-        ),
-        path,
-    )
-    stats = _collect_stats(path, adds, stat_cols or None)
-    blooms = _collect_blooms(path, adds, bloom_cols or None)
-    return _commit_serializable(
-        spark, path, read_v, adds, removes, stats, blooms,
-        {"op": "delete"}, predicate=predicate, change_data=change_data,
+    return _mutate_where(
+        spark, path, read_v, _as_col(predicate), ("delete", None),
+        prune_col, lo, hi, False, {"op": "delete"},
     )
 
 
@@ -4564,77 +4582,23 @@ def update_where(
     layers (stats skip → file-level match scan → rewrite only matched
     files). ``assignments`` maps column → new-value expression (Column or
     SQL string); each assignment casts back to the column's existing type
-    so the table schema never drifts under an UPDATE.
+    so the table schema never drifts under an UPDATE. Assignments are
+    validated against the TABLE schema up front: a no-match UPDATE with a
+    misspelled SET column errors, and an evolved column is assignable
+    even when every matched file predates it.
 
     SQL UPDATE semantics: only rows where the predicate evaluates to TRUE
     change; NULL-predicate rows pass through byte-identical. Unmatched
     files stay referenced untouched, so rewrite cost tracks the matched
-    data, never the table. Returns the new version (current one when
-    nothing matched)."""
+    data, never the table. The change record holds each updated row as
+    its delete (pre-image) + insert (post-image) pair. Returns the new
+    version (current one when nothing matched)."""
     read_v = current_version(path)
     if read_v == 0:
         raise FileNotFoundError(f"no table at {path!r} (empty log)")
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
-    # Validate assignments against the TABLE schema up front — a no-match
-    # UPDATE with a misspelled SET column must error, not silently no-op,
-    # and an assignment to an evolved column must work even when every
-    # matched file predates it.
-    table_schema = read(spark, path, read_v, merge_schema=True).schema
-    table_fields = {f.name: f.dataType for f in table_schema.fields}
-    unknown = set(assignments) - set(table_fields)
-    if unknown:
-        raise ValueError(f"assignments reference unknown columns: {sorted(unknown)}")
-    matched = _matched_files(spark, path, read_v, predicate, prune_col, lo, hi)
-    if not matched:
-        return read_v
-    src = _read_files_with_dvs(spark, path, read_v, matched)
-    for name, dtype in table_fields.items():
-        if name not in src.columns:
-            src = src.withColumn(name, F.lit(None).cast(dtype))
-    hit = F.coalesce(predicate, F.lit(False))
-    cols = []
-    for field in src.schema.fields:
-        if field.name in assignments:
-            a = assignments[field.name]
-            a = F.expr(a) if isinstance(a, str) else a
-            cols.append(
-                F.when(hit, a.cast(field.dataType))
-                .otherwise(F.col(field.name))
-                .alias(field.name)
-            )
-        else:
-            cols.append(F.col(field.name))
-    rewritten = src.select(*cols)
-    _enforce_constraints(rewritten, path)
-    # an UPDATE that changes a generated column's inputs must keep the
-    # derivation true (assign both consistently) — fail loudly instead
-    # of baking a violated derivation into the rewritten files
-    _apply_generated(rewritten, path)
-    removes = [os.path.relpath(p, path) for p in matched]
-    stat_cols, bloom_cols = _removed_skipping_cols(path, read_v, removes)
-    mapping = _column_mapping(path, read_v)
-    adds = _write_data_files(_to_physical(rewritten, mapping), path)
-    # change record: each updated row as its delete (pre-image) + insert
-    # (post-image) pair — the documented update convention of this CDF.
-    # The post-image filter must use the PRE-update predicate value (the
-    # assignment may flip it), so select the updated columns alongside the
-    # original-row hit flag instead of re-filtering the rewritten frame.
-    post = (
-        src.select(*cols, hit.alias("__hit"))
-        .filter("__hit")
-        .drop("__hit")
-        .withColumn("_change_type", F.lit("insert"))
-    )
-    pre = src.filter(hit).withColumn("_change_type", F.lit("delete"))
-    change_data = _write_change_files(
-        _to_physical(pre.unionByName(post), mapping), path
-    )
-    stats = _collect_stats(path, adds, stat_cols or None)
-    blooms = _collect_blooms(path, adds, bloom_cols or None)
-    return _commit_serializable(
-        spark, path, read_v, adds, removes, stats, blooms,
-        {"op": "update"}, predicate=predicate, change_data=change_data,
+    return _mutate_where(
+        spark, path, read_v, _as_col(predicate), ("update", assignments),
+        prune_col, lo, hi, False, {"op": "update"},
     )
 
 
@@ -4662,6 +4626,11 @@ def overwrite_where(
     would duplicate them. NULL-predicate rows count as outside the scope on
     both sides (delete keeps them, enforcement rejects them).
 
+    Row tracking: the replacement rows are new logical rows (fresh id
+    ranges, allocated per commit attempt); band survivors keep their
+    materialized ids. The change record is the replaced band's
+    pre-images as deletes plus ``new_df`` as inserts.
+
     Returns the new version. Unlike delete_where, a no-match predicate
     still commits (the insert half must land)."""
     read_v = current_version(path)
@@ -4678,8 +4647,7 @@ def overwrite_where(
     new_df = _apply_generated(new_df, path)
     schema_meta = _validate_append_schema(path, new_df, merge_schema=False)
     _enforce_constraints(new_df, path)
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
+    predicate = _as_col(predicate)
     if enforce:
         stray = new_df.filter(~F.coalesce(predicate, F.lit(False))).limit(1).count()
         if stray:
@@ -4687,45 +4655,14 @@ def overwrite_where(
                 "overwrite_where: new_df contains rows that do not satisfy "
                 "the replace predicate (pass enforce=False to allow)"
             )
-    tracking = row_tracking_enabled(path, read_v)
-    if tracking and _ROWID in new_df.columns:
+    if row_tracking_enabled(path, read_v) and _ROWID in new_df.columns:
         raise ValueError(
             f"{_ROWID!r} is the reserved row-tracking column; replacement "
             f"frames must not carry it"
         )
-    matched = _matched_files(spark, path, read_v, predicate, prune_col, lo, hi)
-    mapping = _column_mapping(path, read_v)
-    adds = _write_data_files(_to_physical(new_df, mapping), path)
-    # row tracking: the REPLACEMENT rows are new logical rows (fresh id
-    # ranges, allocated per commit attempt); band survivors rewritten
-    # below carry their MATERIALIZED ids — untouched-row ids never move
-    new_row_files = list(adds) if tracking else None
-    # change record: the replaced band's pre-images as deletes + new_df as
-    # inserts (survivor rows pass through byte-identical — not a change)
-    change_data = _write_change_files(
-        _to_physical(new_df, mapping).withColumn("_change_type", F.lit("insert")),
-        path,
-    )
-    removes = []
-    if matched:
-        src = _read_files_with_dvs(spark, path, read_v, matched)
-        hit = F.coalesce(predicate, F.lit(False))
-        adds += _write_data_files(_to_physical(src.filter(~hit), mapping), path)
-        removes = [os.path.relpath(p, path) for p in matched]
-        change_data += _write_change_files(
-            _to_physical(src.filter(hit), mapping).withColumn(
-                "_change_type", F.lit("delete")
-            ),
-            path,
-        )
-    stat_cols, bloom_cols = _removed_skipping_cols(path, read_v, removes)
-    stats = _collect_stats(path, adds, stat_cols or None)
-    blooms = _collect_blooms(path, adds, bloom_cols or None)
-    return _commit_serializable(
-        spark, path, read_v, adds, removes, stats, blooms,
-        {"op": "replace_where", "schema": schema_meta}, predicate=predicate,
-        change_data=sorted(change_data),
-        alloc_row_bases_for=new_row_files,
+    return _mutate_where(
+        spark, path, read_v, predicate, ("delete", None), prune_col, lo, hi,
+        False, {"op": "replace_where", "schema": schema_meta}, fresh=new_df,
     )
 
 
@@ -6308,31 +6245,16 @@ def delete_where_dv(
     :func:`read` (and footer-based fast_count) see pre-delete rows by
     design — the same contract as Delta readers without DV support.
 
-    Returns the new version (current version when nothing matched)."""
+    Returns the new version (current version when nothing matched). The
+    commit stores no change record: the change feed reads its deletes
+    from the DV state."""
     read_v = current_version(path)
     if read_v == 0:
         raise FileNotFoundError(f"no table at {path!r} (empty log)")
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
-    candidates = _prune_candidates(path, read_v, prune_col, lo, hi)
-    if not candidates:
-        return read_v
-    hits = _tagged_live_frame(spark, path, read_v, candidates).filter(predicate)
-    target, dv_adds = _land_dv_positions(spark, path, read_v, hits)
-    if target is None:
-        return read_v
-    try:
-        return _commit_serializable(
-            spark, path, read_v, [], [], None, None,
-            _with_feature(path, {"op": "delete_dv"}, "deletion-vectors"),
-            predicate=predicate, dv_adds=dv_adds,
-        )
-    except CommitConflict:
-        # the sidecar group landed before the commit; a losing writer must
-        # sweep it (mirroring the no-touched-files cleanup above) or the
-        # orphan lingers until a vacuum pass happens to catch it
-        logstore.for_path(path).delete_tree(target)
-        raise
+    return _mutate_where(
+        spark, path, read_v, _as_col(predicate), ("delete", None),
+        prune_col, lo, hi, True, {"op": "delete_dv"},
+    )
 
 
 def read_mor(
@@ -6386,88 +6308,24 @@ def update_where_dv(
     Same contract surface as the CoW twin: assignments validate against
     the TABLE schema up front (a misspelled SET column errors even on a
     no-match predicate), each assignment casts back to the column's
-    existing type, CHECK constraints gate the rewritten rows, the
-    stats/bloom channels the table carries are recollected on the
+    existing type, CHECK constraints and generated-column derivations
+    gate the rewritten rows, the stats/bloom channels the table carries are recollected on the
     appended files, and the pruning ladder (stats skip → bloom skip for
     point predicates) bounds the scan. SQL three-valued semantics hold
     (NULL-predicate rows untouched), already-DV-dead positions are never
     re-updated or resurrected (anti-join against the live DV union), and
     a repeated no-match call is a commit-free no-op. Plain :func:`read`
     sees old AND new row versions by design — the same contract as
-    delete_where_dv. Returns the new version."""
+    delete_where_dv. On a row-tracking table each rewritten row keeps its
+    stable id, and the change record pairs pre- and post-image under it.
+    Returns the new version."""
     read_v = current_version(path)
     if read_v == 0:
         raise FileNotFoundError(f"no table at {path!r} (empty log)")
-    if isinstance(predicate, str):
-        predicate = F.expr(predicate)
-    table_schema = read(spark, path, read_v, merge_schema=True).schema
-    table_fields = {f.name: f.dataType for f in table_schema.fields}
-    unknown = set(assignments) - set(table_fields)
-    if unknown:
-        raise ValueError(f"assignments reference unknown columns: {sorted(unknown)}")
-    candidates = _prune_candidates(path, read_v, prune_col, lo, hi)
-    if not candidates:
-        return read_v
-    hits = _tagged_live_frame(spark, path, read_v, candidates).filter(predicate)
-    target, dv_adds = _land_dv_positions(spark, path, read_v, hits)
-    if target is None:
-        return read_v
-    # rewrite ONLY the matched rows (recomputed from the same immutable
-    # candidate files — deterministic), padded to the evolved table schema,
-    # every row predicate-TRUE so assignments apply unconditionally
-    src = hits.drop("__fn", "__ri")
-    for name, dtype in table_fields.items():
-        if name not in src.columns:
-            src = src.withColumn(name, F.lit(None).cast(dtype))
-    # on a row-tracking table each hit's stable id rides along, so the
-    # appended rewrite MATERIALIZES it — a DV UPDATE preserves identity
-    # like the CoW twin
-    row_id = [F.col(_ROWID)] if _ROWID in src.columns else []
-    cols = []
-    for field in table_schema.fields:
-        if field.name in assignments:
-            a = assignments[field.name]
-            a = F.expr(a) if isinstance(a, str) else a
-            cols.append(a.cast(field.dataType).alias(field.name))
-        else:
-            cols.append(F.col(field.name))
-    rewritten = src.select(*cols, *row_id)
-    _enforce_constraints(rewritten, path)
-    live_rels = [os.path.relpath(p, path) for p in visible_files(path, read_v)]
-    stat_cols, bloom_cols = _removed_skipping_cols(path, read_v, live_rels)
-    mapping = _column_mapping(path, read_v)
-    adds = _write_data_files(_to_physical(rewritten, mapping), path)
-    # change record, like the CoW twin: each updated row's pre-image
-    # (original values, same stable id when tracking) + post-image (the
-    # rewritten rows) — CDC over a DV-update window reads ONLY these
-    # files, and the streaming CDF drains the commit from them (the DV
-    # positions themselves must NOT be reported separately; the stored
-    # record covers them, which is why the resolution ladder checks
-    # change_data before dv state).
-    pre = src.select(*[F.col(f.name) for f in table_schema.fields], *row_id)
-    pre = pre.withColumn("_change_type", F.lit("delete"))
-    post = rewritten.withColumn("_change_type", F.lit("insert"))
-    change_data = _write_change_files(
-        _to_physical(pre.unionByName(post), mapping), path
+    return _mutate_where(
+        spark, path, read_v, _as_col(predicate), ("update", assignments),
+        prune_col, lo, hi, True, {"op": "update_dv"},
     )
-    stats_new = _collect_stats(path, adds, stat_cols or None)
-    blooms_new = _collect_blooms(path, adds, bloom_cols or None)
-    try:
-        return _commit_serializable(
-            spark, path, read_v, adds, [], stats_new, blooms_new,
-            _with_feature(path, {"op": "update_dv"}, "deletion-vectors"),
-            predicate=predicate, dv_adds=dv_adds, change_data=change_data,
-        )
-    except CommitConflict:
-        # losing writer sweeps ALL pre-landed groups (sidecar + data +
-        # change record)
-        logstore.for_path(path).delete_tree(target)
-        for group_rels in (adds, change_data):
-            if group_rels:
-                logstore.for_path(path).delete_tree(
-                    os.path.dirname(os.path.join(path, group_rels[0]))
-                )
-        raise
 
 
 def dv_metrics(spark: SparkSession, path: str, version: int | None = None):

@@ -713,11 +713,31 @@ class TestUpdateRestoreHistory:
         assert dict(df.dtypes)["v"] == "int"
         assert df.collect()[0].v == 11
 
-    def test_update_unknown_column_raises(self, spark, tmp_path):
+    @pytest.mark.parametrize("op", ["update_where", "update_where_dv", "merge_into"])
+    def test_update_unknown_column_raises(self, spark, tmp_path, op):
+        """A SET column the table lacks errors before any scan — also when
+        the mutation would match nothing (the merge source's key is absent
+        from the table) and no commit lands."""
         path = str(tmp_path / "t")
         txlog.append(spark.createDataFrame([(1,)], "id long"), path)
+        mutate = {
+            "update_where": lambda: txlog.update_where(
+                spark, path, "id = 1", {"nope": F.lit(0)}
+            ),
+            "update_where_dv": lambda: txlog.update_where_dv(
+                spark, path, "id = 1", {"nope": F.lit(0)}
+            ),
+            "merge_into": lambda: txlog.merge_into(
+                spark,
+                path,
+                spark.createDataFrame([(2,)], "id long"),
+                keys=["id"],
+                when_matched=[("update", {"nope": "s.id"})],
+            ),
+        }[op]
         with pytest.raises(ValueError, match="unknown columns"):
-            txlog.update_where(spark, path, "id = 1", {"nope": F.lit(0)})
+            mutate()
+        assert txlog.current_version(path) == 1
 
     def test_restore_flips_visibility_without_rewrite(self, spark, tmp_path):
         path = str(tmp_path / "t")
@@ -2252,8 +2272,8 @@ class TestMutationRace:
         """WriteSerializable phantom conflict: the racing append lands a row
         the DELETE's predicate MATCHES — a serial execution would have
         deleted it, so the conflict must surface and the table stays
-        exactly as the concurrent history wrote it (the delete's survivor
-        files are invisible garbage, vacuumable)."""
+        exactly as the concurrent history wrote it (the losing delete
+        sweeps the survivor and change-record groups it landed)."""
         path = str(tmp_path / "t")
         txlog.append(_df(spark, [(i, "a", 1) for i in range(10)]), path)
         self._race_append(spark, monkeypatch, [(2, "late", 1)])
@@ -2262,8 +2282,17 @@ class TestMutationRace:
         monkeypatch.undo()
         got = sorted(r.id for r in txlog.read(spark, path).collect())
         assert got == sorted(list(range(10)) + [2])  # nothing deleted
-        orphans = txlog.vacuum(path, retain_versions=10, dry_run=True)
-        assert orphans, "the aborted delete's files should be vacuumable"
+        # every file outside _txlog/ belongs to a committed group (the
+        # initial append's or the racing append's)
+        committed = {os.path.dirname(f) for f in txlog.visible_files(path)}
+        left = [
+            os.path.join(root, f)
+            for root, _, files in os.walk(path)
+            if not os.path.relpath(root, path).startswith("_txlog")
+            for f in files
+            if root not in committed
+        ]
+        assert not left, f"the aborted delete left files behind: {left}"
 
     def test_delete_resolves_disjoint_concurrent_append(
         self, spark, monkeypatch, tmp_path
@@ -2667,9 +2696,20 @@ class TestDeletionVectors:
         mor = txlog.read_mor(spark, t)
         assert mor.filter("k = 2").count() == 0  # DV survived checkpoint replay
 
-    def test_cdf_reports_dv_deletes(self, spark, table):
+    @pytest.mark.parametrize("op", ["delete_where_dv", "merge_into"])
+    def test_cdf_reports_dv_deletes(self, spark, table, op):
+        """A commit whose only change is DV positions stores no change
+        record; the feed reads its deletes from the DV state."""
         v1 = txlog.current_version(table)
-        txlog.delete_where_dv(spark, table, "k = 3")
+        if op == "delete_where_dv":
+            txlog.delete_where_dv(spark, table, "k = 3")
+        else:
+            src = spark.range(100).filter("id % 7 = 3").select("id")
+            txlog.merge_into(
+                spark, table, src, keys=["id"], when_matched=[("delete",)],
+                when_not_matched=None, use_dvs=True,
+            )
+        assert "change_data" not in txlog._load_commit(table, v1 + 1)  # noqa: SLF001
         cdf = txlog.table_changes(spark, table, v1)
         rows = cdf.collect()
         assert all(r._change_type == "delete" for r in rows)
@@ -2954,27 +2994,69 @@ class TestDeletionVectorsRound8:
         assert m.mor_join_strategy == "broadcast"
         assert m.n_dv_rows == 14
 
-    @pytest.mark.parametrize("op", ["delete_where_dv", "update_where_dv", "merge_into"])
+    @pytest.mark.parametrize(
+        "op",
+        [
+            "delete_where_dv",
+            "update_where_dv",
+            "merge_into",
+            "delete_where",
+            "update_where",
+            "overwrite_where",
+            "merge_into_cow",
+            "merge_into_identity",
+        ],
+    )
     def test_delete_dv_conflict_sweeps_sidecar(self, spark, table, monkeypatch, op):
-        """A DV mutation losing the commit race to an UNRESOLVABLE
-        concurrent commit (a snapshot-level op — a disjoint append would
-        now auto-resolve) must remove every group it pre-landed — DV
-        sidecar, data files, change record — no lingering orphan until
-        vacuum, and the snapshot reads as before."""
+        """A mutation — DV or copy-on-write — losing the commit race to an
+        UNRESOLVABLE concurrent commit (a snapshot-level op — a disjoint
+        append would now auto-resolve) must remove every group it
+        pre-landed — DV sidecar, data files, change record, an identity
+        insert's last attempt — no lingering orphan until vacuum, and the
+        snapshot reads as before."""
         import glob as _glob
 
-        mutate = {
-            "delete_where_dv": lambda: txlog.delete_where_dv(spark, table, "k = 3"),
-            "update_where_dv": lambda: txlog.update_where_dv(
-                spark, table, "k = 3", {"k": F.lit(42)}
-            ),
-            "merge_into": lambda: txlog.merge_into(
+        def merge(use_dvs):
+            return lambda: txlog.merge_into(
                 spark,
                 table,
                 spark.createDataFrame([(3, 42), (1000, 1)], "id long, k long"),
                 keys=["id"],
                 when_matched=[("update", "*")],
-                use_dvs=True,
+                use_dvs=use_dvs,
+            )
+
+        if op == "merge_into_identity":
+            # identity columns are declared on an empty table
+            table = os.path.join(os.path.dirname(table), "ident_tbl")
+            txlog.add_identity_column(table, "sk")
+            txlog.append(
+                spark.range(100).select(F.col("id"), (F.col("id") % 7).alias("k")),
+                table,
+            )
+        mutate = {
+            "delete_where_dv": lambda: txlog.delete_where_dv(spark, table, "k = 3"),
+            "update_where_dv": lambda: txlog.update_where_dv(
+                spark, table, "k = 3", {"k": F.lit(42)}
+            ),
+            "merge_into": merge(True),
+            "delete_where": lambda: txlog.delete_where(spark, table, "k = 3"),
+            "update_where": lambda: txlog.update_where(
+                spark, table, "k = 3", {"k": F.lit(42)}
+            ),
+            "overwrite_where": lambda: txlog.overwrite_where(
+                spark,
+                table,
+                spark.createDataFrame([(1000, 3)], "id long, k long"),
+                "k = 3",
+            ),
+            "merge_into_cow": merge(False),
+            "merge_into_identity": lambda: txlog.merge_into(
+                spark,
+                table,
+                spark.createDataFrame([(1000, 1)], "id long, k long"),
+                keys=["id"],
+                when_matched=None,
             ),
         }[op]
 
