@@ -37,11 +37,6 @@ def derive(df: DataFrame, name: str, expr: Column | str) -> DataFrame:
     return df.withColumn(name, col)
 
 
-def drop_columns(df: DataFrame, *names: str) -> DataFrame:
-    """P6 (reference pyspark-1.ipynb:343)."""
-    return df.drop(*names)
-
-
 def rename(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
     """P7 (reference pyspark-1.ipynb:381). ``withColumnsRenamed`` is one
     Project node regardless of how many columns move."""
@@ -172,13 +167,6 @@ def sample_stratified(
     counts are binomial around fraction × stratum size.
     """
     return df.sampleBy(strata_col, fractions=fractions, seed=seed)
-
-
-def sample_fraction(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    """Seeded uniform Bernoulli sample (reference randomSplit analogue with
-    the engine's mandatory-seed rule; reference's own unseeded split at
-    pyspark-3.ipynb:219 is the reproducibility bug we forbid)."""
-    return df.sample(withReplacement=False, fraction=fraction, seed=seed)
 
 
 def split_by_hash(
@@ -420,27 +408,6 @@ def benford_profile(
             F.round(F.abs(obs - expect), precision).alias("abs_dev"),
         )
     )
-
-
-def mixture_sample(
-    df: DataFrame,
-    source_col: str,
-    weights: dict[str, float],
-    seed: int = 42,
-) -> DataFrame:
-    """Training-mixture construction: per-source Bernoulli rates in one
-    scan-stage pass (e.g. {"web": 0.1, "code": 1.0, "books": 0.5} keeps all
-    code, half the books, a tenth of the web crawl).
-
-    Exactly ``sample_stratified`` semantics (sources absent from
-    ``weights`` drop), named for the LLM-data use case; rates compose with
-    upstream quality filters in the same scan. Epoch mixing (rate > 1.0 =
-    duplication) is out of scope — duplicate via explode of a literal
-    array when genuinely needed.
-    """
-    if any(not (0.0 <= w <= 1.0) for w in weights.values()):
-        raise ValueError("mixture weights must be sampling rates in [0, 1]")
-    return df.sampleBy(source_col, fractions=weights, seed=seed)
 
 
 def histogram(

@@ -22,6 +22,8 @@ TESTDATA has no physical nulls.
 
 from __future__ import annotations
 
+import os
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -84,6 +86,38 @@ def _register(name: str, oracle: str | None, headline: bool = False):
         return fn
 
     return deco
+
+
+class _BuildOnce(dict):
+    """Per-process memo of driver-side builds (lakehouse tables, k-means
+    codebooks, catalog tables) that concurrent query construction shares,
+    e.g. the registry-wide plan lint fanning queries across driver threads.
+    A key is built once, by its first caller, and stored ONLY after the
+    build completes — a build that throws is not poisoned into later
+    callers; the next call retries. Builds of one key serialize on a
+    per-key lock, different keys still build concurrently, and the memo
+    fast path stays lock-free."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self._locks: dict = {}
+        self._lock = threading.Lock()
+
+    def get_or_build(self, key, build):
+        if key in self:
+            return self[key]
+        with self._lock:
+            lock = self._locks.setdefault(key, threading.Lock())
+        with lock:
+            if key not in self:
+                self[key] = build()
+            return self[key]
+
+
+_LAKEHOUSE_TABLES = _BuildOnce()  # (kind, abs sf_dir) → txlog table root
+_IVF_CENTROIDS = _BuildOnce()  # abs sf_dir → IVF centroids
+_PQ_CODEBOOKS = _BuildOnce()  # abs sf_dir → PQ codebooks
+_BUCKETED_PAIRS = _BuildOnce()  # (applicationId, abs sf_dir) → table names
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -4412,35 +4446,25 @@ def knn_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_CENTROIDS: dict[str, list[list[float]]] = {}
-
-
 def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
-    import os
-
-    key = os.path.abspath(sf_dir)
-    if key not in _IVF_CENTROIDS:
-        _IVF_CENTROIDS[key] = similarity.train_ivf_centroids(
+    return _IVF_CENTROIDS.get_or_build(
+        os.path.abspath(sf_dir),
+        lambda: similarity.train_ivf_centroids(
             _t(spark, sf_dir, "embeddings"), dim=64, n_centroids=16
-        )
-    return _IVF_CENTROIDS[key]
-
-
-_PQ_CODEBOOKS: dict[str, list[list[list[float]]]] = {}
+        ),
+    )
 
 
 def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
     """Per-process PQ codebooks (m=16 × ks=32, the knn_pq sizing that
     measured 0.98-1.00 recall on this near-uniform corpus) — seeded
     driver-side k-means, trained once per sf_dir like _ivf_centroids."""
-    import os
-
-    key = os.path.abspath(sf_dir)
-    if key not in _PQ_CODEBOOKS:
-        _PQ_CODEBOOKS[key] = similarity.train_pq_codebooks(
+    return _PQ_CODEBOOKS.get_or_build(
+        os.path.abspath(sf_dir),
+        lambda: similarity.train_pq_codebooks(
             _t(spark, sf_dir, "embeddings"), dim=64, m=16, ks=32
-        )
-    return _PQ_CODEBOOKS[key]
+        ),
+    )
 
 
 @_register("knn_ivf_pq", _ANN_RECALL_ORACLE)
@@ -5612,7 +5636,6 @@ def _bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     lives in the session catalog (files alone don't carry the contract), so
     a fresh session must re-register even if the files survive."""
     import hashlib
-    import os
     import tempfile
 
     from datalake_brief_spark.sources import io as dio
@@ -5621,15 +5644,10 @@ def _bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     sfa = os.path.abspath(sf_dir)
     suffix = hashlib.md5(sfa.encode()).hexdigest()[:8]
     bo, bl = f"b_orders_{suffix}", f"b_lineitem_{suffix}"
-    key = (app, sfa)
-    if key in _BUCKETED_PAIRS:
-        return _BUCKETED_PAIRS[key]
-    # same build lock as _lakehouse_table: saveAsTable is not idempotent,
-    # so concurrent query construction (threaded plan lint) must not race
-    # the catalog registration
-    with _LAKEHOUSE_LOCK:
-        if key in _BUCKETED_PAIRS:
-            return _BUCKETED_PAIRS[key]
+
+    # saveAsTable is not idempotent, so concurrent query construction
+    # (threaded plan lint) must not race the catalog registration
+    def build() -> tuple[str, str]:
         root = tempfile.mkdtemp(prefix="dbs_bucketed_")
         o = _t(spark, sf_dir, "orders").repartition(8, "o_orderkey")
         l = _t(spark, sf_dir, "lineitem").repartition(8, "l_orderkey")
@@ -5639,11 +5657,9 @@ def _bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         dio.write_bucketed(
             l, bl, ["l_orderkey"], 8, path=os.path.join(root, "l"), sort_cols=["l_orderkey"]
         )
-        _BUCKETED_PAIRS[key] = (bo, bl)
         return bo, bl
 
-
-_BUCKETED_PAIRS: dict[tuple[str, str], tuple[str, str]] = {}
+    return _BUCKETED_PAIRS.get_or_build((app, sfa), build)
 
 
 @_register(
@@ -5925,37 +5941,18 @@ def sketch_merge_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lakehouse_table(kind: str, sf_dir: str, build) -> str:
     """Temp txlog-table root per (kind, sf_dir), built once per process by
-    ``build(path)`` and memoized ONLY after the build completes — a build
-    that throws is not poisoned into later queries sharing the table; the
-    next call retries in a fresh directory. The returned DataFrames are
-    lazy, so the files must outlive them — nothing is deleted until process
-    exit (tmpfs-sized builds only)."""
-    import os
+    ``build(path)``; a build that throws is retried by the next call in a
+    fresh directory. The returned DataFrames are lazy, so the files must
+    outlive them — nothing is deleted until process exit (tmpfs-sized
+    builds only)."""
     import tempfile
 
-    key = (kind, os.path.abspath(sf_dir))
-    if key in _LAKEHOUSE_TABLES:
-        return _LAKEHOUSE_TABLES[key]
-    # builds serialize under one lock so concurrent query construction
-    # (e.g. the registry-wide plan lint fanning 287 queries across driver
-    # threads, guide §2.6) never builds the same table twice; the memo
-    # fast path above stays lock-free
-    with _LAKEHOUSE_LOCK:
-        lock = _LAKEHOUSE_LOCKS.setdefault(key, __import__("threading").Lock())
-    # PER-KEY lock: same table never builds twice, DIFFERENT tables still
-    # build concurrently (an isolated lint run builds them all at once)
-    with lock:
-        if key in _LAKEHOUSE_TABLES:
-            return _LAKEHOUSE_TABLES[key]
+    def land() -> str:
         path = os.path.join(tempfile.mkdtemp(prefix=f"dbs_{kind}_"), "t")
         build(path)
-        _LAKEHOUSE_TABLES[key] = path
         return path
 
-
-_LAKEHOUSE_TABLES: dict[tuple[str, str], str] = {}
-_LAKEHOUSE_LOCKS: dict = {}
-_LAKEHOUSE_LOCK = __import__("threading").Lock()
+    return _LAKEHOUSE_TABLES.get_or_build((kind, os.path.abspath(sf_dir)), land)
 
 
 def _snapshot_table(spark: SparkSession, sf_dir: str) -> str:
@@ -10979,21 +10976,6 @@ def graph_kcore_designed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------------------
-# Registry order: the driver's CORRECTNESS gate checks the FIRST 50 entries
-# of this list. Two invariants (tests/test_plans.py):
-#   1. every entry absent from ALL committed CORRECTNESS_r*.json files sits
-#      in the top 50 (test_driver_window_covers_unattested_entries);
-#   2. the tail past the window is ordered by non-decreasing latest-attested
-#      round (test_rotation_tail_sorted_by_staleness) — the rotation that
-#      retires stale attestations oldest-first each round.
-# Round-8 state: 25 never-attested entries (1 new + the 24 the r6 driver
-# gap left behind) lead, then the re-attest band (behavior changed since
-# their newest row), then the window fills with the stalest r1 entries and
-# the tail continues r1->r7. Source order above stays grouped by SURVEY
-# band for readability - this list is the only ordering that matters.
-# --------------------------------------------------------------------------
-
 @_register(
     "txlog_log_retention",
     """
@@ -11558,318 +11540,44 @@ def txlog_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DRIVER_WINDOW_PRIORITY = [
-    # Round-12 rotation: the r4 band fully drained at r11, so from here
-    # the window is REGENERATED each round as (new never-attested
-    # entries) + (stalest attested entries, ascending latest-round,
-    # stable on prior order) — the <=4-round staleness bound now holds
-    # registry-wide. This round: 4 new gates (auto-compact, type
-    # widening, BM25, TBLPROPERTIES) + every remaining r5 entry + the
-    # stalest r7 slice. Tail = everything else in non-decreasing
-    # latest-attested-round order (pinned in tests/test_plans.py).
-    "filter_contains",
-    "filter_project_pipeline",
-    "agg_groupby_sum",
-    "agg_groupby_mean",
-    "agg_groupby_count",
-    "agg_global",
-    "summary_stats",
-    "count_alert",
-    "na_drop_any",
-    "na_drop_thresh",
-    "na_drop_subset",
-    "na_fill",
-    "impute_mean",
-    "impute_median",
-    "null_profile",
-    "impute_mode",
-    "join_fact_revenue",
-    "join_semi",
-    "join_anti",
-    "join_left_outer",
-    "join_full_outer",
-    "agg_statistics",
-    "window_rank_suite",
-    "topk_global",
-    "topk_per_group",
-    "window_running",
-    "sessionize",
-    "setop_union",
-    "setop_except",
-    "events_sliding",
-    "events_hourly",
-    "dedup_exact",
-    "text_tokens",
-    "join_dim_chain",
-    "dedup_minhash",
-    "dedup_simhash",
-    "explode_tokens",
-    "txlog_merge_bysource",
-    "txlog_generated_col",
-    "txlog_identity_col",
-    "dedup_simhash_recall",
-    "txlog_cdf_fold",
-    "txlog_merge_rowids",
-    "txlog_merge_upsert",
-    "txlog_checkpoint_read",
-    "knn_ivf_pq",
-    "udtf_ngrams",
-    "join_salted_skew",
-    "join_semi_reduced",
-    "emb_near_dup",
-    "events_resample_fill",
-    "asof_join",
-    "range_join_bands",
-    "window_lag_delta",
-    "text_quality",
-    "text_langid",
-    "text_tfidf_top_terms",
-    "text_chunking",
-    "text_fingerprint",
-    "text_pii_redact",
-    "text_repetition",
-    "decontaminate_ngrams",
-    "multimodal_meta",
-    "knn_bruteforce",
-    "knn_batch",
-    "knn_doc_hybrid",
-    "knn_filtered",
-    "semantic_dedup",
-    "rollup_daily",
-    "cube_status_priority",
-    "grouping_sets_custom",
-    "pivot_status",
-    "unpivot_part",
-    "having_avg",
-    "percentiles",
-    "sql_frontend",
-    "setop_intersect",
-    "array_agg_segments",
-    "describe_table",
-    "na_drop_all",
-    "distinct_count",
-    "math_funcs",
-    "string_funcs",
-    "date_funcs",
-    "json_extract",
-    "case_buckets",
-    "txlog_snapshot_read",
-    "txlog_log_retention",
-    "txlog_merge_identity",
-    "txlog_time_travel",
-    "txlog_cdf",
-    "txlog_pruned_read",
-    "txlog_point_read",
-    "txlog_update",
-    "txlog_replace_where",
-    "txlog_fast_count",
-    "txlog_null_skip",
-    "txlog_schema_evolution",
-    "incremental_mv",
-    "streaming_merge_replay",
-    "text_gopher_rules",
-    "source_mix_stats",
-    "sample_token_budget",
-    "dsir_weights",
-    "dedup_repeated_spans",
-    "dedup_strip_spans",
-    "dedup_strip_spans_keep_first",
-    "q21_waiting_suppliers",
-    "q2_min_cost_supplier",
-    "q8_market_share",
-    "q6_forecast_revenue",
-    "q18_large_orders",
-    "q4_order_priority",
-    "q7_volume_shipping",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q12_late_lines",
-    "q13_customer_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q17_small_quantity",
-    "q19_disjunctive_predicates",
-    "q20_excess_suppliers",
-    "q22_dormant_customers",
-    "profile_histogram",
-    "profile_correlations",
-    "dq_report",
-    "txlog_zorder_pruned",
-    "dedup_incremental",
-    "fuzzy_join_sources",
-    "events_rolling_stats",
-    "events_trailing_hour",
-    "dq_fk_integrity",
-    "profile_join_skew",
-    "profile_drift",
-    "csv_infer_roundtrip",
-    "txlog_auto_compact",
-    "txlog_widen_type",
-    "text_bm25",
-    "txlog_table_properties",
-    "hybrid_search_rrf",
-    "txlog_maintain",
-    "csv_quoted_roundtrip",
-    "jsonl_roundtrip",
-    "orc_roundtrip",
-    "multimodal_features",
-    "multimodal_audio",
-    "sketch_set_overlap",
-    "sketch_merge_quantiles",
-    "events_partition_pruned",
-    "q16_supplier_cnt",
-    "text_c4_rules",
-    "corpus_seeded_shuffle",
-    "corpus_shard_assignment",
-    "join_bucketed_colocated",
-    "agg_bucketed_local",
-    "txlog_history",
-    "txlog_detail",
-    "txlog_vacuum_read",
-    "txlog_optimize_advisor",
-    "txlog_constraint_gate",
-    "txlog_schema_enforce",
-    "pq_compact_read",
-    "events_funnel",
-    "events_retention",
-    "graph_pagerank_copurchase",
-    "sketch_merge_distinct",
-    "approx_distinct",
-    "text_pack_chunks",
-    "multimodal_frames",
-    "sample_stratified",
-    "ml_lr_predict",
-    "heavy_hitter_tokens",
-    "dedup_ngram_jaccard",
-    "dedup_containment",
-    "dedup_clusters",
-    "dedup_keep_best",
-    "window_distribution_suite",
-    "dedup_latest_by_key",
-    "scd2_intervals",
-    "gaps_islands",
-    "graph_degree_stats",
-    "graph_triangles",
-    "ts_zscore_anomaly",
-    "ts_interpolate_linear",
-    "ml_one_hot",
-    "txlog_drop_feature",
-    "txlog_default_column",
-    "txlog_merge_dv",
-    "ml_split_stratified",
-    "text_ttr",
-    "dedup_segments_corpus",
-    "emb_assign_cells",
-    "knn_pq",
-    "sample_group_hash",
-    "ts_rolling_median",
-    "join_interval_overlap",
-    "ml_eval_metrics",
-    "text_zipf_alpha",
-    "graph_adamic_adar",
-    "pq_metadata_profile",
-    "market_basket_rules",
-    "seq_transition_matrix",
-    "window_running_distinct",
-    "text_vocab_coverage",
-    "text_batch_padding",
-    "ml_calibration_bins",
-    "agg_decimal_exact",
-    "pipeline_curation_v3",
-    "dq_date_bounds",
-    "join_null_safe",
-    "setop_union_evolved",
-    "dedup_edit_distance",
-    "emb_dim_stats",
-    "orders_interarrival",
-    "txlog_delete_dv",
-    "events_session_stats",
-    "events_burstiness",
-    "ml_pr_at_thresholds",
-    "graph_kcore_designed",
-    "txlog_clone_read",
-    "txlog_timestamp_travel",
-    "multimodal_png",
-    "dsir_weights_hashed",
-    "csv_malformed_quarantine",
-    "txlog_update_dv",
-    "txlog_rename_column",
-    "txlog_reorg_purge",
-    "txlog_partitioned_read",
-    "text_url_canonical",
-    "asof_join_nearest",
-    "temperature_mix",
-    "jsonl_malformed_quarantine",
-    "dq_mad_outliers",
-    "dq_ks_drift",
-    "dedup_minhash_recall",
-    "semantic_dedup_recall",
-    "ml_normalize_minmax",
-    "asof_join_forward",
-    "corpus_domain_cap",
-    "sample_weighted_aes",
-    "ml_target_encode",
-    "profile_winsorized",
-    "source_token_kl",
-    "ml_quantile_bins",
-    "dq_benford",
-    "text_normalize_nfc",
-    "emb_norm_profile",
-    "emb_label_balance",
-    "ml_feature_mi",
-    "profile_group_quantiles",
-    "text_lm_perplexity",
-    "corpus_quality_cut",
-    "text_compression_ratio",
-    "graph_components_chain",
-    "events_pareto",
-    "customer_rfm",
-    "ml_auc_rank",
-    "profile_entropy",
-    "txlog_restore",
-    "txlog_dv_metrics",
-    "knn_lsh",
-    "knn_ivf",
-    "knn_ivf_indexed",
-    "leakage_safe_split",
-    "pipeline_curation",
-    "pipeline_curation_v2",
-    "emb_near_dup_srp45",
-    "emb_near_dup_exact",
-    "events_ewma",
-    "table_diff_audit",
-    "q1_pricing_summary",
-    "q5_nation_revenue",
-    "q3_shipping_priority",
-    "txlog_cdf_update",
-    "txlog_convert_in_place",
-    "txlog_symlink_manifest",
-    "txlog_row_ids",
-    "txlog_cdf_rowids",
-    "proj_select",
-    "proj_derive",
-    "proj_rename_drop",
-    "filter_sql_string",
-    "filter_column_expr",
-    "filter_conjunction",
-    "filter_negation",
-]
+def _attested_rounds(root: str) -> dict[str, int]:
+    """Latest round in which the driver attested each query: the highest
+    NN of the ``CORRECTNESS_rNN.json`` files under ``root`` that name it.
+    No files (a package installed without the repo) → an empty dict."""
+    import glob
+    import json
+    import re
+
+    latest: dict[str, int] = {}
+    for f in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(f))
+        if m:
+            with open(f) as fh:
+                for name in json.load(fh):
+                    latest[name] = max(latest.get(name, 0), int(m.group(1)))
+    return latest
 
 
-def _reorder_registry() -> None:
-    missing = [n for n in _DRIVER_WINDOW_PRIORITY if n not in QUERIES]
-    assert not missing, f"priority list references unknown queries: {missing}"
-    dupes = {n for n in _DRIVER_WINDOW_PRIORITY if _DRIVER_WINDOW_PRIORITY.count(n) > 1}
-    assert not dupes, f"priority list has duplicates (silent window waste): {dupes}"
-    ordered = {n: QUERIES[n] for n in _DRIVER_WINDOW_PRIORITY}
-    for n, q in QUERIES.items():
-        ordered.setdefault(n, q)
-    QUERIES.clear()
-    QUERIES.update(ordered)
+def _window_order(queries: dict[str, Query], latest: dict[str, int]) -> list[str]:
+    """Registry order for the driver, whose correctness gate checks only
+    the first 50 entries each round. A stable sort of ``queries`` (in its
+    given order) by (no oracle, latest attested round, 0 if never): new
+    entries lead, then the stalest attested band, then a tail in non-
+    decreasing staleness; oracle-less entries, which the gate cannot check,
+    come last. A new CORRECTNESS file rotates the window by itself."""
+    return sorted(queries, key=lambda n: (queries[n].oracle is None, latest.get(n, 0)))
 
 
-_reorder_registry()
+# the CORRECTNESS files live in the repo root, next to the package
+_ordered = {
+    n: QUERIES[n]
+    for n in _window_order(
+        QUERIES, _attested_rounds(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    )
+}
+QUERIES.clear()
+QUERIES.update(_ordered)
+del _ordered
 
 
 def queries() -> dict[str, QueryFn]:

@@ -68,8 +68,14 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULTS)
     # local mode = single JVM: driver memory is the whole memory budget.
+    # Half the machine (at most 48g) leaves the rest to the Python workers;
+    # a heap sized past the machine gets the JVM OOM-killed, not an error.
     # Must be set before JVM launch — no-op if a session already exists.
-    conf.setdefault("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    conf.setdefault(
+        "spark.driver.memory",
+        os.environ.get("SPARK_DRIVER_MEMORY", f"{min(48 * 1024, half_mb)}m"),
+    )
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)

@@ -15,7 +15,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -147,23 +147,4 @@ def alerts_to_parquet(
         .queryName(query_name)
         .foreachBatch(emit)
         .start()
-    )
-
-
-def filter_count_alert(
-    events: DataFrame, predicate: Column | str, window: str = "1 hour", threshold: int = 1
-) -> DataFrame:
-    """The reference's KQL pattern as a streaming transform: filter → windowed
-    count → fired flag. Compose with threshold_alert_stream or a sink."""
-    return (
-        events.filter(predicate)
-        .withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", window).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_matches"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "n_matches",
-            (F.col("n_matches") >= threshold).alias("fired"),
-        )
     )

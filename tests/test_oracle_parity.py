@@ -53,9 +53,9 @@ NO_ORACLE = sorted(n for n, q in QUERIES.items() if q.oracle is None)
 
 
 @pytest.fixture(scope="module")
-def prefetch(spark):
+def prefetch(request, spark):
     """Spark-side result prefetcher (r14, guide §2.6 — overlap independent
-    jobs): the parity suite is ~570 serial Spark collects at local[4],
+    jobs): the parity suite is ~290 serial Spark collects at local[4],
     each leaving the session idle during its scheduling gaps and the
     DuckDB/compare phase — it was the single largest block of the verify
     gate (~11 min). Every query is independent, the Spark scheduler
@@ -65,7 +65,9 @@ def prefetch(spark):
     started ahead by a 4-thread pool. DuckDB stays on the pytest thread
     (connections are not thread-safe). Spark results are deterministic
     regardless of concurrency — the collected rows are identical to the
-    serial run's (the whole suite is the proof)."""
+    serial run's (the whole suite is the proof). Only the tests this
+    session selected are prefetched (a ``-k`` run evaluates just its
+    matches), and each result is dropped once its test has read it."""
     from concurrent.futures import ThreadPoolExecutor
 
     pool = ThreadPoolExecutor(max_workers=4)
@@ -74,8 +76,13 @@ def prefetch(spark):
         sdf = QUERIES[name].fn(spark, SF_SMOKE)
         return sdf.collect(), sdf.columns
 
-    futures = {n: pool.submit(run, n) for n in ORACLE_QUERIES + NO_ORACLE}
-    yield lambda name: futures[name].result()
+    selected = [
+        item.callspec.params["name"]
+        for item in request.session.items
+        if item.module is request.module
+    ]
+    futures = {n: pool.submit(run, n) for n in selected}
+    yield lambda name: futures.pop(name).result()
     pool.shutdown(wait=False, cancel_futures=True)
 
 

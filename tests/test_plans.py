@@ -287,59 +287,12 @@ def test_no_query_produces_cartesian_or_row_python(spark):
         list(pool.map(lint, QUERIES.items()))
 
 
-def test_driver_window_covers_unattested_entries():
-    """The driver's CORRECTNESS gate checks only the first ~50 registry
-    entries. Hand-maintained ordering let two r5-new entries sit below the
-    window with zero driver history (VERDICT r5). Rule, automated: every
-    registry entry absent from ALL committed CORRECTNESS_r*.json files must
-    appear in the first 50 slots of _DRIVER_WINDOW_PRIORITY."""
-    import glob
-    import json
-    import os
-
-    from datalake_brief_spark.queries import _DRIVER_WINDOW_PRIORITY
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    attested = set()
-    for f in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        attested.update(json.load(open(f)))
-    window = set(_DRIVER_WINDOW_PRIORITY[:50])
-    never = [n for n in QUERIES if n not in attested and n not in window]
-    # Saturation clause: when MORE than 50 entries are never-attested (a
-    # round that adds 20+ operators before the driver has run), the window
-    # physically cannot hold them all — overflow is acceptable ONLY if
-    # every top-50 slot is itself never-attested (nothing better could
-    # occupy it) and the overflow queues immediately after the window.
-    if never:
-        assert all(n not in attested for n in _DRIVER_WINDOW_PRIORITY[:50]), (
-            f"never-attested entries sit below the window while attested "
-            f"entries occupy top-50 slots: {never}"
-        )
-        n_unattested = sum(1 for n in QUERIES if n not in attested)
-        head = _DRIVER_WINDOW_PRIORITY[:n_unattested]
-        assert all(n not in attested for n in head), (
-            "the overflow must queue contiguously after the window, ahead "
-            "of every already-attested entry"
-        )
-    # the priority list itself must stay a complete, duplicate-free ordering
-    assert len(_DRIVER_WINDOW_PRIORITY) == len(set(_DRIVER_WINDOW_PRIORITY))
-    assert set(_DRIVER_WINDOW_PRIORITY) == set(QUERIES)
-
-
-def test_rotation_tail_sorted_by_staleness():
-    """Attestation rotation (VERDICT r7 ask #10): past the ~50-entry driver
-    window, already-attested entries must queue in NON-DECREASING
-    latest-attested-round order, so each round's window fill naturally
-    takes the stalest entries first and no attestation can rot
-    indefinitely. The tail's rounds are untouched by the upcoming round's
-    driver run (it attests only the window), so this invariant — unlike
-    the window rule — survives the new CORRECTNESS file landing."""
+def _latest_attested_rounds() -> dict[str, int]:
+    """name → newest round whose committed CORRECTNESS_rNN.json names it."""
     import glob
     import json
     import os
     import re
-
-    from datalake_brief_spark.queries import _DRIVER_WINDOW_PRIORITY
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     latest: dict[str, int] = {}
@@ -347,9 +300,53 @@ def test_rotation_tail_sorted_by_staleness():
         r = int(re.search(r"r(\d+)", os.path.basename(f)).group(1))
         for name in json.load(open(f)):
             latest[name] = max(latest.get(name, 0), r)
-    tail_rounds = [
-        latest[n] for n in _DRIVER_WINDOW_PRIORITY[50:] if n in latest
-    ]
+    return latest
+
+
+def test_driver_window_covers_unattested_entries():
+    """The driver's CORRECTNESS gate checks only the first ~50 registry
+    entries. Hand-maintained ordering let two r5-new entries sit below the
+    window with zero driver history (VERDICT r5). Rule, automated: every
+    oracle-backed registry entry absent from ALL committed
+    CORRECTNESS_r*.json files must appear in the first 50 registry slots
+    (oracle-less entries queue last: the gate cannot check them)."""
+    attested = set(_latest_attested_rounds())
+    order = list(QUERIES)
+    checkable = [n for n in order if QUERIES[n].oracle is not None]
+    window = set(order[:50])
+    never = [n for n in checkable if n not in attested and n not in window]
+    # Saturation clause: when MORE than 50 entries are never-attested (a
+    # round that adds 20+ operators before the driver has run), the window
+    # physically cannot hold them all — overflow is acceptable ONLY if
+    # every top-50 slot is itself never-attested (nothing better could
+    # occupy it) and the overflow queues immediately after the window.
+    if never:
+        assert all(n not in attested for n in order[:50]), (
+            f"never-attested entries sit below the window while attested "
+            f"entries occupy top-50 slots: {never}"
+        )
+        n_unattested = sum(1 for n in checkable if n not in attested)
+        head = order[:n_unattested]
+        assert all(n not in attested for n in head), (
+            "the overflow must queue contiguously after the window, ahead "
+            "of every already-attested entry"
+        )
+    # the registry order itself must stay a complete, duplicate-free ordering
+    assert len(order) == len(set(order))
+    assert set(order) == set(QUERIES)
+
+
+def test_driver_window_holds_no_oracle_less_entry():
+    """Aim: the driver's 50-query window never holds a query it cannot
+    check. Oracle-less (hash-family / approximate) entries queue after
+    every oracle-backed one, so they never take a window slot."""
+    in_window = [n for n in list(QUERIES)[:50] if QUERIES[n].oracle is None]
+    assert not in_window, f"oracle-less entries in the driver window: {in_window}"
+
+
+def _assert_drains_stalest_first(order: list[str], latest: dict[str, int]) -> None:
+    checkable = [n for n in order if QUERIES[n].oracle is not None]
+    tail_rounds = [latest[n] for n in checkable[50:] if n in latest]
     assert tail_rounds == sorted(tail_rounds), (
         "rotation tail out of staleness order: a fresher-attested entry "
         "queues ahead of a staler one"
@@ -357,16 +354,73 @@ def test_rotation_tail_sorted_by_staleness():
     # VERDICT r12 ask #3: the window must take the GLOBALLY stalest band
     # — no attested entry inside the 50-slot window may be fresher than
     # any attested entry queued behind it (ties across the boundary are
-    # fine; the regen script's stable sort resolves them by prior order).
-    window_rounds = [
-        latest[n] for n in _DRIVER_WINDOW_PRIORITY[:50] if n in latest
-    ]
+    # fine; the stable sort resolves them by definition order).
+    window_rounds = [latest[n] for n in checkable[:50] if n in latest]
     if window_rounds and tail_rounds:
         assert max(window_rounds) <= min(tail_rounds), (
             f"window holds an entry attested at r{max(window_rounds)} "
             f"while a staler r{min(tail_rounds)} entry waits in the tail "
-            f"— the regen must drain oldest-first (tools/regen_window.py)"
+            f"— the window must drain oldest-first"
         )
+
+
+def test_rotation_tail_sorted_by_staleness():
+    """Attestation rotation (VERDICT r7 ask #10): past the ~50-entry driver
+    window, already-attested oracle-backed entries must queue in
+    NON-DECREASING latest-attested-round order, so each round's window
+    fill naturally takes the stalest entries first and no attestation can
+    rot indefinitely. The order is derived from the CORRECTNESS files at
+    import, so it holds again as soon as a new file lands."""
+    _assert_drains_stalest_first(list(QUERIES), _latest_attested_rounds())
+
+
+def test_window_rotates_on_next_round():
+    """Rotation needs no code edit: when the next round's driver run
+    attests today's whole window, the derived order puts a disjoint window
+    in front, again drained stalest-first."""
+    from datalake_brief_spark.queries import _window_order
+
+    window = list(QUERIES)[:50]
+    latest = {**_latest_attested_rounds(), **{n: 15 for n in window}}
+    nxt = _window_order(QUERIES, latest)
+    assert set(nxt[:50]).isdisjoint(window)
+    assert all(QUERIES[n].oracle is not None for n in nxt[:50])
+    _assert_drains_stalest_first(nxt, latest)
+
+
+def test_ivf_centroids_train_once_under_concurrency(monkeypatch):
+    """Driver threads constructing kNN queries at once share one k-means
+    training per sf_dir: the memo is build-once, not check-then-set."""
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from datalake_brief_spark import queries as q
+    from datalake_brief_spark.operators import similarity
+
+    calls = []
+
+    def train(*_args, **_kwargs):
+        calls.append(1)
+        time.sleep(0.2)  # long enough for the second thread to arrive
+        return [[0.0]]
+
+    monkeypatch.setattr(q, "_t", lambda *_args: None)
+    monkeypatch.setattr(similarity, "train_ivf_centroids", train)
+    key = "/nonexistent/build-once-race"
+    start = threading.Barrier(2)
+
+    def ask(_):
+        start.wait(timeout=10)
+        return q._ivf_centroids(None, key)  # noqa: SLF001
+
+    try:
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            got = [f.result(timeout=30) for f in [pool.submit(ask, i) for i in range(2)]]
+    finally:
+        q._IVF_CENTROIDS.pop(key, None)  # noqa: SLF001
+    assert got == [[[0.0]], [[0.0]]]
+    assert len(calls) == 1, f"k-means trained {len(calls)} times for one key"
 
 
 def test_repetition_ngrams_do_not_retokenize_per_position(spark):
