@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -140,6 +141,31 @@ def spread_scan(df: "DataFrame") -> "DataFrame":
         n_splits = max(len(files), -(-total // max(mpb, 1)))
     except Exception:
         n_splits = len(files)
+    if n_splits >= parallelism:  # so the JVM lookups above succeeded
+        # Bytes are not rows: a parquet split reads only the row groups whose
+        # midpoint falls in its byte range, so a file of one large row group
+        # scans in ONE non-empty task however many splits its bytes make.
+        # Cap the estimate by the footers' row-group count. Read only here,
+        # on the few-files-but-"already parallel" branch (never for the
+        # small single-split tables, which spread on the bytes alone), and
+        # through the JVM's parquet reader, so any Hadoop filesystem works;
+        # a non-parquet or unreadable file keeps the bytes estimate.
+        try:
+            row_groups = 0
+            for f in files:
+                p = jvm.org.apache.hadoop.fs.Path(f)
+                reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+                    jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                        p, hconf
+                    )
+                )
+                try:
+                    row_groups += reader.getRowGroups().size()
+                finally:
+                    reader.close()
+            n_splits = max(len(files), min(n_splits, row_groups))
+        except Py4JError:
+            pass
     if n_splits < parallelism:
         return df.repartition(parallelism)
     return df

@@ -756,7 +756,10 @@ def simhash_pairs(
     ~20 µs/row (≈0.1 s serial over this corpus, one Python worker with
     large Arrow batches), cheaper than the extra exchange barrier plus
     32 small-batch worker dispatches the spread costs. At scale the scan
-    arrives multi-split and the signature parallelizes for free."""
+    arrives multi-split and the signature parallelizes for free. This A/B
+    predates the engine's worker daemon (``worker_daemon.py``): every
+    Python task then also re-read ``pyspark.zip`` 16 times, which taxed
+    the spread side's many small tasks most, so it is due a re-run."""
     sh = with_simhash(df.select(id_col, text_col), text_col).select(id_col, "simhash")
     keys = simhash_candidate_keys(sh, id_col, max_hamming).repartition(
         "combo_idx", "combo_key"

@@ -473,7 +473,7 @@ def image_statistics(
     on_error: str = "fail",
 ) -> DataFrame:
     """REAL decode → per-image typed statistics over Arrow batches: each
-    payload is decoded (``decode_image``: BMP/PPM) and reduced to
+    payload is decoded (``decode_image``: BMP/PPM/PNG) and reduced to
     ``(id, width, height, mean_r, mean_g, mean_b, row0_mean)`` — the exact
     batch shape a GPU featurizer slots into. Channel means are sensitive
     to the BGR→RGB swap and row0_mean to the bottom-up flip, so the

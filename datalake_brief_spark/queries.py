@@ -4753,8 +4753,10 @@ def multimodal_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: spread the single-split scan (guide §2.6) — the PNG round trip
     # (deflate + all-five-filters encode, inflate + unfilter decode) is the
     # one genuinely heavy per-row codec here, and fan-out wins 2x
-    # (in-session A/B: serial 1.59 s vs spread 0.83 s at sf0.1); at scale
-    # the input arrives multi-split and the spread no-ops
+    # (in-session A/B: serial 1.59 s vs spread 0.83 s at sf0.1; measured
+    # before worker_daemon.py, while each Python task still re-read
+    # pyspark.zip 16 times); at scale the input arrives multi-split and the
+    # spread no-ops
     d = spread_scan(_t(spark, sf_dir, "documents").select("doc_id", "text"))
 
     def synth(batches):

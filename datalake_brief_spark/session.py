@@ -43,7 +43,14 @@ _DEFAULTS: dict[str, str] = {
     # own row-group skipping and txlog's stats-in-log file pruning on any
     # timestamp column.
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    # Python workers fork from the engine's daemon: pyspark's own, with the
+    # per-task zipimport re-read of pyspark.zip made lazy (worker_daemon.py)
+    "spark.python.daemon.module": "datalake_brief_spark.worker_daemon",
 }
+
+# The directory holding this package: the workers import the daemon from it
+# wherever the driver runs.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -79,6 +86,9 @@ def get_spark(
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")) if p
+    )
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -3267,7 +3267,8 @@ def _merge_candidate_files(
     read_v: int,
     source: DataFrame,
     keys: list[str],
-) -> tuple[list[str], dict]:
+    check_unique: bool = True,
+) -> tuple[list[str], dict, int, bool | None]:
     """File-level candidate pruning for MERGE: which of the snapshot's
     files COULD contain a row whose key equals some source key. Three
     layers, driver cost bounded by metadata (never table data):
@@ -3292,7 +3293,8 @@ def _merge_candidate_files(
     defaultSizeInBytes ≈ 8 EB), so the planner NEVER auto-broadcasts it
     and every merge join sort-merges the whole candidate band — measured
     4-8× of pure sort waste on a 16M-row band against a 40-row CDC
-    batch."""
+    batch. ``src_keys_unique`` is None unless ``check_unique``: only a
+    merge with matched clauses reads it."""
     aggs = [F.count(F.lit(1)).alias("__n")]
     nn = None
     for k in keys:
@@ -3306,15 +3308,19 @@ def _merge_candidate_files(
     # two source rows, so the caller skips the dup-keys guard job entirely
     # — one fewer Spark job per merge in the overwhelmingly common
     # unique-key CDC case. Null-key rows never equi-match anything, so
-    # they are excluded from both sides of the comparison.
-    aggs += [
-        F.count_if(nn).alias("__nn"),
-        F.count_distinct(*[F.col(k) for k in keys]).alias("__nd"),
-    ]
+    # they are excluded from both sides of the comparison. An insert-only
+    # merge has no guard to skip, so it never pays for the distinct count.
+    if check_unique:
+        aggs += [
+            F.count_if(nn).alias("__nn"),
+            F.count_distinct(*[F.col(k) for k in keys]).alias("__nd"),
+        ]
     row = source.agg(*aggs).collect()[0].asDict()
     envelope = {k: (row[f"__lo_{k}"], row[f"__hi_{k}"]) for k in keys}
     n_src = int(row["__n"])
-    src_keys_unique = int(row["__nd"]) == int(row["__nn"])
+    src_keys_unique = (
+        int(row["__nd"]) == int(row["__nn"]) if check_unique else None
+    )
     if any(lo is None for lo, _ in envelope.values()):
         # some key column is all-NULL in the source → no source tuple can
         # equal any target tuple (NULL never matches an equi-join)
@@ -3593,7 +3599,7 @@ def merge_into(
         source = source.persist()
         _src_persisted = True
     candidates, envelope, n_src, _src_keys_unique = _merge_candidate_files(
-        spark, path, read_v, source, keys
+        spark, path, read_v, source, keys, check_unique=bool(matched_clauses)
     )
     # Explicit broadcast decision for every source-side join below: a
     # Python/RDD-backed source has NO size statistic (the planner sees

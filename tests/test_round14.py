@@ -30,9 +30,11 @@ class TestSpreadScanBytesAware:
         parallelizes for free (the r13 estimate compared file COUNT only
         and would have round-robin-shuffled the raw payload)."""
         p = str(tmp_path / "big")
+        # small row groups (dozens of them, ≥ 2·parallelism): the split
+        # estimate is capped by the footers' row-group count
         spark.range(0, 200_000).select(
             F.col("id"), F.sha2(F.col("id").cast("string"), 256).alias("pad")
-        ).coalesce(1).write.parquet(p)
+        ).coalesce(1).write.option("parquet.block.size", 128 * 1024).parquet(p)
         df = spark.read.parquet(p)
         [f] = df.inputFiles()
         import os
@@ -52,6 +54,36 @@ class TestSpreadScanBytesAware:
             assert spread_scan(df) is not df
         finally:
             spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+    def test_single_row_group_file_spreads(self, spark, tmp_path):
+        """Bytes alone say ≥ 2·parallelism splits, but the file is ONE row
+        group, so the scan has one non-empty task: it must spread."""
+        p = str(tmp_path / "one_rg")
+        spark.range(0, 200_000).select(
+            F.col("id"), F.sha2(F.col("id").cast("string"), 256).alias("pad")
+        ).coalesce(1).write.parquet(p)
+        df = spark.read.parquet(p)
+        [f] = df.inputFiles()
+        import os
+        from urllib.parse import urlparse
+
+        import pyarrow.parquet as pq
+
+        local = urlparse(f).path
+        assert pq.ParquetFile(local).num_row_groups == 1
+        par = spark.sparkContext.defaultParallelism
+        old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+        try:
+            spark.conf.set(
+                "spark.sql.files.maxPartitionBytes",
+                str(max(os.path.getsize(local) // (2 * par), 1)),
+            )
+            out = spread_scan(df)
+        finally:
+            spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+        assert out is not df
+        plan = out._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+        assert "RoundRobinPartitioning" in plan
 
     def test_many_files_short_circuit(self, spark, tmp_path):
         """≥ parallelism files never stat sizes and never spread."""

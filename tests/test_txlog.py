@@ -15,6 +15,31 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "id long, v string, version int")
 
 
+def _executed_plans(spark, fn):
+    """The physical plans of the SQL executions ``fn()`` starts, read from
+    the SQL status store, i.e. what actually ran."""
+    jss = spark._jsparkSession  # noqa: SLF001
+    store = jss.sharedState().statusStore()
+    bus = jss.sparkContext().listenerBus()
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters  # noqa: SLF001
+
+    def newest(n):
+        # the store keeps a bounded window of executions, so its count
+        # stops growing in a long session: select by execution id
+        bus.waitUntilEmpty(30_000)
+        count = store.executionsCount()
+        if not count:
+            return []
+        runs = store.executionsList(max(0, count - n), min(n, count))
+        return list(conv.asJava(runs))
+
+    seen = max((e.executionId() for e in newest(1)), default=-1)
+    fn()
+    return [
+        e.physicalPlanDescription() for e in newest(100) if e.executionId() > seen
+    ]
+
+
 class TestTxLog:
     def test_append_and_read(self, spark, tmp_path):
         path = str(tmp_path / "t")
@@ -934,6 +959,21 @@ class TestMergeInto:
         )
         txlog.merge_into(spark, path, src2, ["id"], when_not_matched=True)
         assert txlog.read(spark, path).filter("id = 100").count() == 2
+
+    def test_insert_only_merge_skips_key_uniqueness_count(self, spark, tmp_path):
+        """Only matched clauses need the source keys' uniqueness, so an
+        insert-only merge runs no distinct count (a multi-level aggregate)
+        in any of its executions."""
+        path = self._table(spark, tmp_path, n_bands=1)
+        src = _df(spark, [(3, "dup", 1), (100, "new", 1)])
+        plans = _executed_plans(
+            spark,
+            lambda: txlog.merge_into(spark, path, src, ["id"], when_not_matched=True),
+        )
+        assert plans, "the merge ran no SQL execution"
+        assert not [p for p in plans if "Expand" in p or "count(distinct" in p]
+        got = {r.id: r.v for r in txlog.read(spark, path).collect()}
+        assert got[3] == "v3" and got[100] == "new" and len(got) == 11
 
     def test_insert_condition_and_explicit_values(self, spark, tmp_path):
         path = self._table(spark, tmp_path, n_bands=1)
@@ -2951,31 +2991,12 @@ class TestDeletionVectorsRound8:
         i.e. what actually ran."""
         txlog.delete_where_dv(spark, table, "k = 3")  # every file gets a DV
         monkeypatch.setattr(txlog, "DV_BROADCAST_MAX_ROWS", 0)
-        jss = spark._jsparkSession  # noqa: SLF001
-        store = jss.sharedState().statusStore()
-        bus = jss.sparkContext().listenerBus()
-        conv = spark._jvm.scala.jdk.javaapi.CollectionConverters  # noqa: SLF001
-
-        def newest(n):
-            # the store keeps a bounded window of executions, so its count
-            # stops growing in a long session: select by execution id
-            bus.waitUntilEmpty(30_000)
-            count = store.executionsCount()
-            if not count:
-                return []
-            runs = store.executionsList(max(0, count - n), min(n, count))
-            return list(conv.asJava(runs))
-
         saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            seen = max((e.executionId() for e in newest(1)), default=-1)
-            txlog.delete_where_dv(spark, table, "k = 5")
-            plans = [
-                e.physicalPlanDescription()
-                for e in newest(100)
-                if e.executionId() > seen
-            ]
+            plans = _executed_plans(
+                spark, lambda: txlog.delete_where_dv(spark, table, "k = 5")
+            )
         finally:
             if saved is None:
                 spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
