@@ -10283,7 +10283,7 @@ def orders_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
 def txlog_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read DELETE via deletion vectors (txlog.delete_where_dv +
     read_mor — the Delta DV / Iceberg positional-delete shape): matched
-    row POSITIONS land in a parquet sidecar keyed by (file basename,
+    row POSITIONS land in a parquet sidecar keyed by (file position key,
     _metadata.row_index) and the commit is metadata-only — NO data file
     is rewritten (pinned in pytest: the file list is byte-identical
     across the delete). Reads anti-join the broadcast DV union, so MOR

@@ -60,6 +60,7 @@ import json
 import operator
 import os
 import re
+import unicodedata
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -593,14 +594,18 @@ def _read_data(
     merge_schema: bool = False,
     version: int | None = None,
     type_overrides: dict | None = None,
-):
-    """Scan an explicit list of the table's data files — the ONE way any
-    txlog code touches data bytes. Partitioned appends keep every column
-    INLINE in the data files and encode the layout in ``__part_<col>=v``
-    directory segments (see _write_data_files), so a plain file-list
-    read is always complete: no basePath, no partition reconstruction,
-    no mixed-layout hazard when partitioned and unpartitioned file
-    groups coexist in one snapshot (rewrites land unpartitioned).
+    tags: bool = False,
+    row_bases: dict | None = None,
+) -> DataFrame:
+    """Scan an explicit list of the table's data files and return the
+    LOGICAL view at ``version`` (renames aliased, dropped columns
+    projected out) — the ONE way any txlog code touches data bytes.
+    Partitioned appends keep every column INLINE in the data files and
+    encode the layout in ``__part_<col>=v`` directory segments (see
+    _write_data_files), so a plain file-list read is always complete: no
+    basePath, no partition reconstruction, no mixed-layout hazard when
+    partitioned and unpartitioned file groups coexist in one snapshot
+    (rewrites land unpartitioned).
 
     When the log records a schema (every modern commit does), the scan
     uses it EXPLICITLY — translated to physical names at ``version``,
@@ -609,68 +614,139 @@ def _read_data(
     mixed-schema snapshots deterministic (a file-pruned MERGE/UPDATE
     leaves old-schema files live next to evolved ones; files missing a
     column read NULL, retired physical columns never leak in) and costs
-    ZERO footer reads at plan time regardless of ``merge_schema``. The
-    footer path survives only for tables that predate logged schemas."""
+    ZERO footer reads at plan time regardless of ``merge_schema``; an
+    empty ``files`` is the empty frame in that schema. The footer path
+    survives only for tables that predate logged schemas (there an empty
+    ``files`` reads the footers of the newest snapshot up to ``version``
+    that holds files, for the empty frame).
+    ``type_overrides`` ({column: type}) scans and renders those columns
+    at a covering (wider) type: a file list spanning a type widening may
+    carry physical pages wider than this version's logical type.
+
+    Initial column defaults (Iceberg v3): files that PREDATE a defaulted
+    column render the default, not NULL — the file list splits into
+    groups by which defaulted columns each file predates and the group
+    scans union (pruning/pushdown stay per group; a table without
+    initial defaults is one scan and one meta lookup).
+
+    Columns beyond the logical view, each derived per group on the raw
+    file scan (the ``_metadata`` pseudo-column resolves on a file-source
+    relation only, never through the union):
+
+    - ``tags=True`` keeps each row's position, the key of every deletion
+      vector: ``__fn``, the data file's :func:`_pos_key`, and ``__ri``,
+      the row's index in that file;
+    - ``row_bases`` (rel path → base row id) adds each row's stable id in
+      ``__row_id``: COALESCE(the file's materialized ``__row_id``, base +
+      ``__ri``) over a broadcast base map; NULL where neither exists —
+      whether that is an error is the caller's call."""
     schema = latest_meta(path, "schema", version)
+    mapping = _column_mapping(path, version)
+    position = tags or row_bases is not None
+    init, template = {}, False
     if schema:
         if type_overrides:
-            # widening-aware cross-epoch scans (_snapshot_diff): a file
-            # list spanning a type widening may carry physical pages
-            # WIDER than this version's logical type — scan at the
-            # covering (wider) type so nothing downcasts or fails
             schema = {c: type_overrides.get(c, t) for c, t in schema.items()}
-        mapping = _column_mapping(path, version)
         parts = [f"`{mapping.get(c, c)}` {t}" for c, t in schema.items()]
-        tracking = row_tracking_enabled(path, version)
-        if tracking:
+        if row_tracking_enabled(path, version):
             parts.append(f"`{_ROWID}` bigint")
-        reader_schema = ", ".join(parts)
-        # initial column defaults (Iceberg v3): files that PREDATE a
-        # defaulted column render the default, not NULL — split the file
-        # list into groups by which defaulted columns each file predates
-        # and union the group scans (pruning/pushdown stay per-group;
-        # tables without initial defaults take the single-scan path with
-        # zero extra work beyond one meta lookup)
+        reader = spark.read.schema(", ".join(parts))
         cds = latest_meta(path, "column_defaults", version) or {}
         init = {
             c: d
             for c, d in cds.items()
             if d.get("initial") is not None and c in schema
         }
-        if init and files:
-            groups = _default_file_groups(path, files, init, mapping)
-            if any(groups):
-                dfs = []
-                for predated, fl in groups.items():
-                    g = spark.read.schema(reader_schema).parquet(*fl)
-                    if predated:
-                        # the STORED evaluated value is authoritative
-                        # (Iceberg semantics: the default is evaluated
-                        # once at declaration) — batch, stream, and CDF
-                        # render bit-identical backfill
-                        sel = [
-                            (
-                                F.lit(init[c]["initial_value"])
-                                .cast(t)
-                                .alias(mapping.get(c, c))
-                                if c in predated
-                                else F.col(f"`{mapping.get(c, c)}`")
-                            )
-                            for c, t in schema.items()
-                        ]
-                        if tracking:
-                            sel.append(F.col(f"`{_ROWID}`"))
-                        g = g.select(*sel)
-                    dfs.append(g)
-                out = dfs[0]
-                for g in dfs[1:]:
-                    out = out.unionByName(g)
-                return out
-        return spark.read.schema(reader_schema).parquet(*files)
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*files)
+    else:
+        reader = spark.read
+        if merge_schema:
+            reader = reader.option("mergeSchema", "true")
+        # only footers can say what an empty scan of such a table looks
+        # like: those of the newest snapshot up to `version` holding files
+        template = not files
+        if template:
+            v = current_version(path) if version is None else version
+            while not files and v > 0:
+                files = visible_files(path, v)
+                v -= 1
+            if not files:
+                raise FileNotFoundError(
+                    f"{path!r} logs no schema and no snapshot up to version "
+                    f"{version} holds a file to type an empty scan by"
+                )
+    groups = {frozenset(): files}
+    if init and files:
+        groups = _default_file_groups(path, files, init, mapping)
+    out = None
+    for predated, fl in groups.items():
+        g = reader.parquet(*fl)
+        if predated or position:
+            # the STORED evaluated default is authoritative (Iceberg: the
+            # default is evaluated once at declaration) — batch, stream,
+            # and CDF render bit-identical backfill
+            fill = {
+                mapping.get(c, c): F.lit(init[c]["initial_value"]).cast(schema[c])
+                for c in predated
+            }
+            cols = [
+                fill[c].alias(c) if c in fill else F.col(f"`{c}`")
+                for c in g.columns
+            ]
+            if position:
+                cols += [
+                    F.substring_index(
+                        F.col("_metadata.file_path"), f"/{_DATA_DIR}/", -1
+                    ).alias("__fn"),
+                    F.col("_metadata.row_index").alias("__ri"),
+                ]
+            g = g.select(*cols)
+        out = g if out is None else out.unionByName(g)
+    passthrough = ("__fn", "__ri") if tags else ()
+    if row_bases is not None:
+        base_df = spark.createDataFrame(
+            [(_pos_key(os.path.join(path, r)), b) for r, b in row_bases.items()],
+            "__fn string, __base long",
+        )
+        mat = F.col(_ROWID) if _ROWID in out.columns else F.lit(None).cast("long")
+        out = (
+            out.join(F.broadcast(base_df), "__fn", "left")
+            .withColumn(_ROWID, F.coalesce(mat, F.col("__base") + F.col("__ri")))
+            .drop("__base")
+        )
+        passthrough += (_ROWID,)
+    out = _to_logical(out, schema, mapping, passthrough)
+    return out.limit(0) if template else out
+
+
+# java.net.URI's legal path characters: Hadoop paths, and so Spark's
+# _metadata.file_path, percent-encode (as UTF-8) every other ASCII one
+_URI_PATH_SAFE = frozenset(
+    "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789"
+    "-_.!~*'();:@&=+$,/"
+)
+
+
+def _pos_key(file: str) -> str:
+    """The ``__fn`` position tag :func:`_read_data` gives the rows of the
+    data file at ``file`` (absolute or cwd-relative), as the scan derives
+    it from the file's URI: the path after its last ``data/`` segment,
+    ``<uuid group>/[__part_<col>=v/...]part-*.parquet``, URI-encoded. It
+    is unique table-wide (basenames are not: a partitioned write names
+    the files of every partition directory alike) and the same after a
+    table moves or from a shallow clone; deletion-vector sidecars store
+    it. A file under no ``data/`` directory (a converted table's) is
+    keyed by its whole ``file:`` URI."""
+    a = os.path.abspath(file)
+    _, sep, tail = a.rpartition(f"/{_DATA_DIR}/")
+    enc = "".join(
+        c
+        if c in _URI_PATH_SAFE
+        # non-ASCII stays raw unless a space or C1 control character
+        or (c > "\x9f" and unicodedata.category(c) not in ("Zs", "Zl", "Zp"))
+        else "".join(f"%{b:02X}" for b in c.encode("utf-8", "surrogateescape"))
+        for c in (tail if sep else a)
+    )
+    return enc if sep else "file:" + enc
 
 
 def _write_data_files(df: DataFrame, path: str, partition_by=None) -> list[str]:
@@ -1584,17 +1660,6 @@ def _to_logical(df: DataFrame, schema, mapping, passthrough=()) -> DataFrame:
                 col = col.cast(schema[lc])
             cols.append(col.alias(lc))
     return df.select(*cols)
-
-
-def _logical_view(
-    df: DataFrame, path: str, version: int | None = None, passthrough=()
-) -> DataFrame:
-    return _to_logical(
-        df,
-        latest_meta(path, "schema", version),
-        _column_mapping(path, version),
-        passthrough,
-    )
 
 
 def _to_physical(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
@@ -2877,7 +2942,7 @@ def latest_meta(path: str, key: str, version: int | None = None):
     without the fold keep the full walk.
 
     Pointer-accelerated like _replay: this runs on EVERY logical-view
-    build (read → _logical_view → column mapping), so with a valid
+    build (read → _read_data → column mapping), so with a valid
     ``_last_checkpoint`` the tail walk uses probed versions and the
     marker comes straight from the pointer — zero log-directory listings
     on the hot read path."""
@@ -2957,9 +3022,7 @@ def read(
         # creation and raises PATH_NOT_FOUND itself if a file is gone —
         # only THEN do we pay the per-file existence sweep to diagnose a
         # vacuumed snapshot (never O(n_files) stat calls on every read).
-        return _logical_view(
-            _read_data(spark, path, files, merge_schema, version), path, version
-        )
+        return _read_data(spark, path, files, merge_schema, version)
     except Exception as e:
         missing = [f for f in files if not os.path.exists(f)]
         if missing:
@@ -3126,11 +3189,7 @@ def read_pruned(
         if _range_excludes(rng, c_lo, c_hi):
             continue
         keep.append(abs_p)
-    if not keep:
-        df = _read_data(spark, path, all_files, version=version).limit(0)
-    else:
-        df = _read_data(spark, path, keep, version=version)
-    df = _logical_view(df, path, version)
+    df = _read_data(spark, path, keep, version=version)
     if lo is not None:
         df = df.filter(F.col(col) >= F.lit(lo))
     if hi is not None:
@@ -3171,12 +3230,7 @@ def read_pruned_nulls(
             if not is_null and rows is not None and int(nc) == int(rows):
                 continue
         keep.append(os.path.join(path, rel))
-    if not keep:
-        all_files = [os.path.join(path, rel) for rel in sorted(live)]
-        df = _read_data(spark, path, all_files, version=version).limit(0)
-    else:
-        df = _read_data(spark, path, keep, version=version)
-    df = _logical_view(df, path, version)
+    df = _read_data(spark, path, keep, version=version)
     return df.filter(F.col(col).isNull() if is_null else F.col(col).isNotNull())
 
 
@@ -3634,7 +3688,7 @@ def merge_into(
             jj = scan.alias("t").join(_src_b(srcm1.alias("s")), on, "left_outer")
             m = F.coalesce(F.col("s.__m"), F.lit(False))
             need = (m & fires) | (~m & _or_conds(bys_clauses))
-            return jj.groupBy(F.col("t.__fp").alias("__fp")).agg(
+            return jj.groupBy(F.col("t.__fn").alias("__fn")).agg(
                 F.max(need.cast("int")).alias("__need"),
                 F.max(m.cast("int")).alias("__haskey"),
             )
@@ -3643,7 +3697,7 @@ def merge_into(
             return (
                 scan.alias("t")
                 .join(_src_b(source.alias("s")), on, "inner")
-                .groupBy(F.col("t.__fp").alias("__fp"))
+                .groupBy(F.col("t.__fn").alias("__fn"))
                 .agg(F.max(fires.cast("int")).alias("__need"))
             )
 
@@ -3933,12 +3987,7 @@ def read_pruned_multi(
                 break
         if not drop:
             keep.append(abs_p)
-    df = (
-        _read_data(spark, path, keep, version=version)
-        if keep
-        else _read_data(spark, path, all_files, version=version).limit(0)
-    )
-    df = _logical_view(df, path, version)
+    df = _read_data(spark, path, keep, version=version)
     for col, (lo, hi) in ranges.items():
         if lo is not None:
             df = df.filter(F.col(col) >= F.lit(lo))
@@ -3996,11 +4045,7 @@ def read_point(
         if b64 is not None and not _bloom_may_contain(b64, value):
             continue
         keep.append(abs_p)
-    if not keep:
-        df = _read_data(spark, path, all_files, version=version).limit(0)
-    else:
-        df = _read_data(spark, path, keep, version=version)
-    df = _logical_view(df, path, version)
+    df = _read_data(spark, path, keep, version=version)
     return df.filter(F.col(col) == F.lit(value))
 
 
@@ -4119,16 +4164,12 @@ def _commit_serializable(
                     ) from e
                 new_files.extend(c.get("adds", []))
             if new_files and predicate is not None:
-                probe = _logical_view(
-                    _read_data(
-                        spark,
-                        path,
-                        [os.path.join(path, r) for r in new_files],
-                        merge_schema=True,
-                        version=tip,
-                    ),
+                probe = _read_data(
+                    spark,
                     path,
-                    tip,
+                    [os.path.join(path, r) for r in new_files],
+                    merge_schema=True,
+                    version=tip,
                 )
                 if probe.filter(predicate).limit(1).count():
                     raise CommitConflict(
@@ -4178,31 +4219,19 @@ def _prune_candidates(
 def _tag_files(
     spark: SparkSession, path: str, read_v: int, files: list[str], per_file
 ) -> list[dict]:
-    """Phase 1's one file-tag scan: the LOGICAL view of ``files`` with
-    each row's data file in ``__fp``, reduced by ``per_file(scan)`` to one
-    row per file; returns those rows as dicts, ``__fp`` an absolute local
-    path. The tag is selected on the RAW scan and is a real column before
-    any join: ``_metadata`` resolves on the file-source relation only,
-    and a post-shuffle evaluation would return "" (wrong files matched).
+    """Phase 1's one file-tag scan: the position-tagged LOGICAL view of
+    ``files`` (see :func:`_read_data`), reduced by ``per_file(scan)`` to
+    one row per ``__fn`` file key; returns those rows as dicts with
+    ``__fn`` swapped for ``__fp``, the file's path as given in ``files``.
     mergeSchema: candidate files may span additive schema evolution."""
-    from urllib.parse import unquote, urlparse
-
-    from pyspark.errors import AnalysisException
-
-    raw = _read_data(spark, path, files, merge_schema=True, version=read_v)
-    try:
-        raw = raw.select("*", F.col("_metadata.file_path").alias("__fp"))
-    except AnalysisException:
-        # files both before and after an initial column default scan as a
-        # union, which hides _metadata; input_file_name() still reads the
-        # file of the scan partition feeding the row
-        raw = raw.select("*", F.input_file_name().alias("__fp"))
-    scan = _logical_view(raw, path, read_v, passthrough=("__fp",))
+    scan = _read_data(
+        spark, path, files, merge_schema=True, version=read_v, tags=True
+    )
+    by_key = {_pos_key(f): f for f in files}
     out = []
     for r in per_file(scan).collect():
         d = r.asDict()
-        if d["__fp"].startswith("file:"):
-            d["__fp"] = unquote(urlparse(d["__fp"]).path)
+        d["__fp"] = by_key[d.pop("__fn")]
         out.append(d)
     return out
 
@@ -4329,7 +4358,7 @@ def _mutate_where(
     elif candidates:
         tags = _tag_files(
             spark, path, read_v, candidates,
-            lambda scan: scan.filter(predicate).select("__fp").distinct(),
+            lambda scan: scan.filter(predicate).select("__fn").distinct(),
         )
         matched = [t["__fp"] for t in tags]
         if matched:
@@ -4551,10 +4580,10 @@ def delete_where(
        commits carry stats): files whose logged [min, max] cannot intersect
        the range are never even scanned.
     2. **File-level match scan**: one pass over the surviving candidates
-       tags which FILES actually contain matching rows
-       (``_metadata.file_path``); files with zero matches stay referenced,
-       byte-identical — copy-on-write at file granularity, the Delta/
-       Iceberg CoW contract.
+       tags which FILES actually contain matching rows (the scan's
+       position tags, see _read_data); files with zero matches stay
+       referenced, byte-identical — copy-on-write at file granularity,
+       the Delta/Iceberg CoW contract.
     3. **Rewrite**: only matched files re-land, minus the deleted rows.
 
     SQL DELETE semantics: only rows where the predicate evaluates to TRUE
@@ -4985,10 +5014,10 @@ def table_changes(
             # removed wide rows losslessly — casting them to the narrow
             # post-restore type would overflow exactly those rows)
             sch = latest_meta(path, "schema", to_v)
+            mapping = _column_mapping(path, to_v)
             if sch is not None:
-                mapping = _column_mapping(path, to_v)
                 dd = dict(cd.dtypes)
-                render = {
+                sch = {
                     c: (
                         dd[mapping.get(c, c)]
                         if _widens_to(t, dd.get(mapping.get(c, c), t))
@@ -4996,13 +5025,7 @@ def table_changes(
                     )
                     for c, t in sch.items()
                 }
-                cd = _to_logical(
-                    cd, render, mapping, passthrough=tuple(passthrough)
-                )
-            else:
-                cd = _logical_view(
-                    cd, path, to_v, passthrough=tuple(passthrough)
-                )
+            cd = _to_logical(cd, sch, mapping, passthrough=tuple(passthrough))
             # change files from commits BELOW a column's initial-default
             # add render the backfill, like every data-file read (the
             # commit version is the exact predates test here — all of
@@ -5053,15 +5076,7 @@ def table_changes(
                 for c, t in sch_at_v.items()
                 if c in sch_to and t != sch_to[c] and _widens_to(sch_to[c], t)
             }
-            raw = _read_data(
-                spark,
-                path,
-                [os.path.join(path, r) for r in commit["adds"]],
-                merge_schema=True,
-                version=to_v,
-                type_overrides=cdf_overrides or None,
-            )
-            passthrough = ()
+            bases = None
             if include_row_ids:
                 # the commit's OWN base allocation names each row's id; a
                 # PRE-ENABLE append's bases live in the enable commit's
@@ -5074,26 +5089,17 @@ def table_changes(
                     for r in missing:
                         if r in backfill:
                             bases[r] = backfill[r]
-                base_df = spark.createDataFrame(
-                    [(os.path.basename(rel), b) for rel, b in bases.items()],
-                    "__fn string, __base long",
-                )
-                raw = (
-                    raw.select("*", *_position_tags())
-                    .join(F.broadcast(base_df), "__fn", "left")
-                    .withColumn("row_id", F.col("__base") + F.col("__ri"))
-                    .drop("__fn", "__ri", "__base")
-                )
-                passthrough = ("row_id",)
-            if cdf_overrides:
-                rows = _to_logical(
-                    raw,
-                    {**sch_to, **cdf_overrides},
-                    _column_mapping(path, to_v),
-                    passthrough=passthrough,
-                )
-            else:
-                rows = _logical_view(raw, path, to_v, passthrough=passthrough)
+            rows = _read_data(
+                spark,
+                path,
+                [os.path.join(path, r) for r in commit["adds"]],
+                merge_schema=True,
+                version=to_v,
+                type_overrides=cdf_overrides or None,
+                row_bases=bases,
+            )
+            if include_row_ids:
+                rows = rows.withColumnRenamed(_ROWID, "row_id")
             legs.append(
                 rows.withColumn("_change_type", F.lit("insert")).withColumn(
                     "_commit_version", F.lit(v).cast("bigint")
@@ -5113,21 +5119,7 @@ def table_changes(
     if not legs:
         # data-bearing commits, zero row-level change (e.g. an OPTIMIZE-only
         # window): an EMPTY frame in the feed's schema, not an error
-        files = visible_files(path, to_v) or visible_files(path, from_version)
-        if files:
-            t = _logical_view(
-                _read_data(spark, path, files, merge_schema=True, version=to_v).limit(0),
-                path,
-                to_v,
-            )
-        elif (s_to := latest_meta(path, "schema", to_v)):
-            t = spark.createDataFrame(
-                [], ", ".join(f"`{c}` {typ}" for c, typ in s_to.items())
-            )
-        else:
-            raise ValueError(
-                f"no changes between versions {from_version} and {to_v}"
-            )
+        t = _read_data(spark, path, [], merge_schema=True, version=to_v)
         extra = (
             [F.lit(None).cast("long").alias("row_id")] if include_row_ids else []
         )
@@ -5197,21 +5189,12 @@ def _snapshot_diff(
     dvs_to = visible_dvs(path, v_to)
 
     def _read_minus_dvs(files, dv_map):
-        df = _read_data(
-            spark, path, files, version=schema_v,
-            type_overrides=type_overrides or None,
-        ).select("*", *_position_tags())
         # render at schema_v's logical names but the COVERING types (the
         # narrow logged type would downcast-overflow the wide rows this
         # record exists to report)
-        render = latest_meta(path, "schema", schema_v)
-        if render is not None and type_overrides:
-            render = {**render, **type_overrides}
-        df = _to_logical(
-            df,
-            render,
-            _column_mapping(path, schema_v),
-            passthrough=("__fn", "__ri"),
+        df = _read_data(
+            spark, path, files, version=schema_v,
+            type_overrides=type_overrides or None, tags=True,
         )
         pos = _dv_positions(spark, path, dv_map, files)
         return _anti_join_dvs(df, pos).drop("__fn", "__ri")
@@ -5228,12 +5211,7 @@ def _snapshot_diff(
     a = _read_minus_dvs(added, dvs_to) if added else None
     r = _read_minus_dvs(removed, dvs_from) if removed else None
     if a is None and r is None:
-        template = _logical_view(
-            _read_data(spark, path, sorted(f_to or f_from), version=schema_v).limit(0),
-            path,
-            schema_v,
-        )
-        a = r = template
+        a = r = _read_data(spark, path, [], version=schema_v)
     elif a is None:
         a = r.limit(0)
     elif r is None:
@@ -5249,33 +5227,13 @@ def _snapshot_diff(
     if dv_changed:
         new_pos = _dv_positions(spark, path, dvs_to, dv_changed)
         old_pos = _dv_positions(spark, path, dvs_from, dv_changed)
-        raw = _read_data(spark, path, dv_changed, version=schema_v)
-        rows = raw.select("*", *_position_tags())
-        passthrough = ["__fn", "__ri"]
+        # position-exact identity for DV-commit changes
+        rows = _read_data(
+            spark, path, dv_changed, version=schema_v, tags=True,
+            row_bases=visible_row_bases(path, v_to) if include_row_ids else None,
+        )
         if include_row_ids:
-            # position-exact identity for DV-commit changes: materialized
-            # column if the file carries one, else base + position
-            mat = (
-                F.col(_ROWID).cast("long")
-                if _ROWID in raw.columns
-                else F.lit(None).cast("long")
-            )
-            bases = visible_row_bases(path, v_to)
-            base_df = spark.createDataFrame(
-                [(os.path.basename(rel), b) for rel, b in bases.items()],
-                "__fn string, __base long",
-            )
-            rows = (
-                rows.withColumn("__mat", mat)
-                .join(F.broadcast(base_df), "__fn", "left")
-                .withColumn(
-                    "row_id",
-                    F.coalesce(F.col("__mat"), F.col("__base") + F.col("__ri")),
-                )
-                .drop("__mat", "__base")
-            )
-            passthrough.append("row_id")
-        rows = _logical_view(rows, path, schema_v, passthrough=tuple(passthrough))
+            rows = rows.withColumnRenamed(_ROWID, "row_id")
 
         def _emit(pos, change_type):
             # pos is a _dv_positions frame (capped broadcast hint) or an
@@ -6053,14 +6011,14 @@ def clustering_decay(
 # ---------------------------------------------------------------------------
 # Merge-on-read deletion vectors (the Delta DV / Iceberg positional-delete
 # shape): DELETE writes a row-position sidecar instead of rewriting data
-# files; reads anti-join the union of a file's sidecars on
-# (file, _metadata.row_index). Copy-on-write (delete_where) rewrites
-# matched files — O(matched bytes) per delete, zero read overhead; DV
-# deletes cost O(matched ROWS) metadata per delete and a bounded anti-join
-# at read — the right trade for frequent small deletes (GDPR erasure,
-# late-event retraction) on huge files. A file's DVs vanish when the file
-# is rewritten/removed (CoW mutations, overwrite, compaction), so the two
-# mutation families compose.
+# files; reads anti-join the union of a file's sidecars on (file key,
+# row index), the position tags of _read_data. Copy-on-write
+# (delete_where) rewrites matched files — O(matched bytes) per delete,
+# zero read overhead; DV deletes cost O(matched ROWS) metadata per delete
+# and a bounded anti-join at read — the right trade for frequent small
+# deletes (GDPR erasure, late-event retraction) on huge files. A file's
+# DVs vanish when the file is rewritten/removed (CoW mutations,
+# overwrite, compaction), so the two mutation families compose.
 # ---------------------------------------------------------------------------
 
 _DV_DIR = "_dv"
@@ -6075,19 +6033,6 @@ def visible_dvs(path: str, version: int | None = None) -> dict[str, list[str]]:
         for rel, e in _replay(path, version).items()
         if e.get("dvs")
     }
-
-
-def _position_tags():
-    """Each row's position, the key of every deletion vector: ``__fn``, the
-    scanned parquet file's basename (data files are uuid-grouped part
-    files, so the basename is unique table-wide and stable under table
-    relocation — absolute URIs are not), and ``__ri``, its row index in
-    that file. Select them on the RAW scan: the _metadata pseudo-column
-    resolves only on the file-source relation."""
-    return (
-        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("__fn"),
-        F.col("_metadata.row_index").alias("__ri"),
-    )
 
 
 # Past this many accumulated DV positions the MOR anti-join build side no
@@ -6139,11 +6084,27 @@ def _dv_positions(
     if not dv_paths:
         return None
     pos = spark.read.parquet(*dv_paths).select(
-        F.col("file_name").alias("__fn"), F.col("row_index").alias("__ri")
+        _sidecar_key(path, [r for r in dvs if rels is None or r in rels]).alias(
+            "__fn"
+        ),
+        F.col("row_index").alias("__ri"),
     )
     if _mor_join_strategy(_dv_rows_from_footers(dv_paths)) != "shuffle":
         return F.broadcast(pos)
     return pos
+
+
+def _sidecar_key(path: str, rels) -> F.Column:
+    """A sidecar row's ``file_name`` as the :func:`_pos_key` of its data
+    file. Sidecars landed while the key was the file's basename hold no
+    ``/``; those resolve through ``rels``, the DV-carrying files they can
+    name (a basename two of them share was ambiguous to its writer too)."""
+    fn = F.col("file_name")
+    legacy = {os.path.basename(r): _pos_key(os.path.join(path, r)) for r in rels}
+    if not legacy:
+        return fn
+    lut = F.create_map(*[F.lit(x) for kv in sorted(legacy.items()) for x in kv])
+    return F.when(fn.contains("/"), fn).otherwise(F.try_element_at(lut, fn))
 
 
 def _anti_join_dvs(df: DataFrame, pos: DataFrame | None) -> DataFrame:
@@ -6175,8 +6136,7 @@ def _read_files_with_dvs(
         visible_dvs(path, read_v)
     ):
         # nothing to tag: the plain scan
-        raw = _read_data(spark, path, files, merge_schema=True, version=read_v)
-        return _logical_view(raw, path, read_v)
+        return _read_data(spark, path, files, merge_schema=True, version=read_v)
     return _tagged_live_frame(spark, path, read_v, files).drop("__fn", "__ri")
 
 
@@ -6184,20 +6144,36 @@ def _tagged_live_frame(
     spark: SparkSession, path: str, read_v: int, files: list[str]
 ) -> DataFrame:
     """Like :func:`_read_files_with_dvs` but KEEPING the position tags
-    (``__fn`` file basename / ``__ri`` row index) — the input for
+    (``__fn`` file key / ``__ri`` row index) — the input for
     merge-on-read mutations, which land the live hit positions as
     deletion-vector sidecar rows instead of rewriting files. Existing DV
     positions of ``files`` are anti-joined out here, so a caller can
     never re-delete (or resurrect) an already-dead row. On a
     row-tracking table the stable id rides in ``__row_id`` like the CoW
     twin's frame."""
-    if row_tracking_enabled(path, read_v):
-        tagged = _rid_frame(spark, path, read_v, files)
-        tagged = tagged.withColumnRenamed("__rid", _ROWID)
-    else:
-        raw = _read_data(spark, path, files, merge_schema=True, version=read_v)
-        tagged = raw.select("*", *_position_tags())
-        tagged = _logical_view(tagged, path, read_v, passthrough=("__fn", "__ri"))
+    tracking = row_tracking_enabled(path, read_v)
+    tagged = _read_data(
+        spark, path, files, merge_schema=True, version=read_v, tags=True,
+        row_bases=visible_row_bases(path, read_v) if tracking else None,
+    )
+    if tracking:
+        # a row with NEITHER id source sits in a file written by a
+        # pre-feature writer: fail loudly, never return a wrong id
+        rid = F.col(_ROWID)
+        tagged = tagged.withColumn(
+            _ROWID,
+            F.when(
+                rid.isNull(),
+                F.raise_error(
+                    F.lit(
+                        "row tracking: a visible file carries neither a base "
+                        "row id nor materialized ids (written by a pre-feature "
+                        "writer?); re-run enable_row_tracking after an "
+                        "OPTIMIZE of the uncovered files"
+                    )
+                ).cast("long"),
+            ).otherwise(rid),
+        )
     pos = _dv_positions(spark, path, visible_dvs(path, read_v), files)
     return _anti_join_dvs(tagged, pos)
 
@@ -6223,11 +6199,10 @@ def _land_dv_positions(
     if not touched:
         logstore.for_path(path).delete_tree(target)
         return None, {}
-    by_base = {
-        os.path.basename(p): os.path.relpath(p, path)
-        for p in visible_files(path, read_v)
+    by_key = {
+        _pos_key(p): os.path.relpath(p, path) for p in visible_files(path, read_v)
     }
-    return target, {by_base[fn]: group for fn in touched if fn in by_base}
+    return target, {by_key[k]: group for k in touched if k in by_key}
 
 
 def delete_where_dv(
@@ -6271,7 +6246,7 @@ def read_mor(
 ) -> DataFrame:
     """Merge-on-read snapshot: the plain snapshot scan anti-joined against
     the union of the visible deletion-vector sidecars on
-    (file basename, _metadata.row_index). With no live DVs this IS
+    (file key, row index). With no live DVs this IS
     :func:`read` — zero overhead on pure-CoW tables. The anti-join
     build side is the DELETED-ROW COUNT, not the table size; up to
     DV_BROADCAST_MAX_ROWS positions it broadcasts and MOR read cost is
@@ -6287,9 +6262,7 @@ def read_mor(
     if not dvs:
         return read(spark, path, version, merge_schema)
     files = visible_files(path, version)
-    df = _read_data(spark, path, files, merge_schema, version=version)
-    df = df.select("*", *_position_tags())
-    df = _logical_view(df, path, version, passthrough=("__fn", "__ri"))
+    df = _read_data(spark, path, files, merge_schema, version=version, tags=True)
     return _anti_join_dvs(df, _dv_positions(spark, path, dvs)).drop("__fn", "__ri")
 
 
@@ -6357,7 +6330,7 @@ def dv_metrics(spark: SparkSession, path: str, version: int | None = None):
     strategy = _mor_join_strategy(_dv_rows_from_footers(dv_paths))
     per = (
         spark.read.parquet(*dv_paths)
-        .groupBy("file_name")
+        .groupBy(_sidecar_key(path, dvs))
         .agg(F.count(F.lit(1)).alias("__n"))
     )
     return per.agg(
@@ -6391,21 +6364,19 @@ def reorg_purge(
     if read_v == 0:
         return 0
     all_files = visible_files(path, read_v)
-    by_base = {os.path.basename(p): p for p in all_files}
+    by_key = {_pos_key(p): p for p in all_files}
     targets: set[str] = set()
     dvs = visible_dvs(path, read_v)
     dv_paths = sorted({p for ps in dvs.values() for p in ps})
     if dv_paths:
         per = (
             spark.read.parquet(*dv_paths)
-            .groupBy("file_name")
+            .groupBy(_sidecar_key(path, dvs).alias("__fn"))
             .agg(F.count(F.lit(1)).alias("__n"))
             .filter(F.col("__n") >= min_file_dv_rows)
             .collect()
         )  # driver-scale: ≤ one row per DV-carrying file
-        targets.update(
-            by_base[r.file_name] for r in per if r.file_name in by_base
-        )
+        targets.update(by_key[r["__fn"]] for r in per if r["__fn"] in by_key)
     # files still carrying retired physical column bytes (footer-only)
     schema = latest_meta(path, "schema", read_v)
     if schema is not None:
@@ -6715,39 +6686,6 @@ def enable_row_tracking(path: str) -> int:
         row_bases=bases,
     )
     return v + 1
-
-
-def _rid_frame(spark: SparkSession, path: str, version, files):
-    """Internal: logical view of ``files`` with a ``__rid`` column — each
-    row's stable id, resolved per file as COALESCE(materialized
-    ``__row_id`` column, base_row_id + ``_metadata.row_index``). The base
-    map is metadata-sized (n_files) and broadcast, mirroring the DV
-    anti-join shape. Rows with NEITHER source fail loudly (a file written
-    by a pre-feature writer), never return a wrong id. Tags ``__fn``/
-    ``__ri`` are kept for the caller's DV handling."""
-    raw = _read_data(spark, path, files, merge_schema=True, version=version)
-    mat = F.col(_ROWID) if _ROWID in raw.columns else F.lit(None).cast("long")
-    tagged = raw.select("*", *_position_tags())
-    bases = visible_row_bases(path, version)
-    base_df = spark.createDataFrame(
-        [(os.path.basename(r), b) for r, b in bases.items()],
-        "__fn string, __base long",
-    )
-    tagged = tagged.join(F.broadcast(base_df), "__fn", "left")
-    rid = F.coalesce(mat, F.col("__base") + F.col("__ri"))
-    rid = F.when(
-        rid.isNull(),
-        F.raise_error(
-            F.lit(
-                "row tracking: a visible file carries neither a base row "
-                "id nor materialized ids (written by a pre-feature "
-                "writer?); re-run enable_row_tracking after an OPTIMIZE "
-                "of the uncovered files"
-            )
-        ).cast("long"),
-    ).otherwise(rid)
-    out = tagged.withColumn("__rid", rid).drop("__base")
-    return _logical_view(out, path, version, passthrough=("__fn", "__ri", "__rid"))
 
 
 def read_with_row_ids(

@@ -742,9 +742,12 @@ def _read_cdf_batches(p: _CdfPartition):
     table = pq.read_table(p.abs_path)
     if p.dv_group is not None:
         dv = pq.read_table(p.dv_group)
-        base = os.path.basename(p.abs_path)
+        # a sidecar names its files by position key; older ones by basename
+        keys = pa.array(
+            [txlog._pos_key(p.abs_path), os.path.basename(p.abs_path)]  # noqa: SLF001
+        )
         idx = (
-            dv.filter(pc.equal(dv.column("file_name"), pa.scalar(base)))
+            dv.filter(pc.is_in(dv.column("file_name"), value_set=keys))
             .column("row_index")
             .to_pylist()
         )

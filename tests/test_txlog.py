@@ -564,16 +564,29 @@ class TestAdviceFixes:
         assert "extra" in got.columns
         assert {r.id: r.extra for r in got.collect()} == {1: None, 2: 7}
 
-    def test_delete_where_path_with_spaces(self, spark, tmp_path):
-        """input_file_name() returns percent-encoded URIs; matched-file
-        normalization must decode them or the remove-list never matches."""
+    @pytest.mark.parametrize("op", ["delete_where", "delete_where_dv", "merge_into"])
+    def test_mutation_path_with_spaces(self, spark, tmp_path, op):
+        """Scanned file paths are percent-encoded URIs; a mutation must map
+        each tagged file back to the log's path for it, or the remove-list
+        (or the DV's file) never matches."""
         path = str(tmp_path / "ta ble dir")
         txlog.append(
             spark.createDataFrame([(1, 1), (2, 2)], "id long, v long"), path
         )
-        v = txlog.delete_where(spark, path, "id = 2")
+        if op == "delete_where":
+            v = txlog.delete_where(spark, path, "id = 2")
+        elif op == "delete_where_dv":
+            v = txlog.delete_where_dv(spark, path, "id = 2")
+        else:
+            src = spark.createDataFrame([(2, 0)], "id long, v long")
+            v = txlog.merge_into(
+                spark, path, src, keys=["id"], when_matched=[("delete",)],
+                when_not_matched=None,
+            )
         assert v == 2
-        assert {r.id for r in txlog.read(spark, path).collect()} == {1}
+        assert {r.id for r in txlog.read_mor(spark, path).collect()} == {1}
+        if op != "delete_where_dv":
+            assert {r.id for r in txlog.read(spark, path).collect()} == {1}
 
     def test_temporal_and_decimal_stats_round_trip(self, spark, tmp_path):
         """stats_cols on timestamp/date/decimal columns must not crash at
@@ -2108,6 +2121,22 @@ class TestSchemaEnforcement:
         )
         assert txlog.read(spark, path, merge_schema=True).count() == 2
 
+    def test_pre_schema_change_feed_into_empty_snapshot(self, spark, tmp_path):
+        """Only footers type a scan of a table without a logged schema. A
+        window that changes no row and ends on an empty snapshot has an
+        empty change feed, typed by the footers of the last snapshot that
+        held files, and a commit that empties the table feeds its deletes."""
+        path = str(tmp_path / "t")
+        full = txlog._write_data_files(_df(spark, [(1, "a", 1)]), path)
+        empty = txlog._write_data_files(_df(spark, [(1, "a", 1)]).limit(0), path)
+        txlog._try_commit(path, 1, full, [], meta={"op": "append"})  # no schema
+        txlog._try_commit(path, 2, empty, full, meta={"op": "delete"})
+        txlog._try_commit(path, 3, [], empty, meta={"op": "delete"})
+        feed = txlog.table_changes(spark, path, 2)
+        assert feed.collect() == [] and "id" in feed.columns
+        feed = txlog.table_changes(spark, path, 1, 2).collect()
+        assert [(r.id, r._change_type) for r in feed] == [(1, "delete")]
+
     def test_overwrite_resets_schema(self, spark, tmp_path):
         path = str(tmp_path / "t")
         txlog.append(spark.createDataFrame([(1, "a")], "id long, v string"), path)
@@ -2801,6 +2830,33 @@ class TestDeletionVectors:
         # the DV is still referenced by the latest version: must survive
         assert _glob.glob(_os.path.join(table, "_dv", "*", "*.parquet"))
         assert txlog.read_mor(spark, table).filter("k = 3").count() == 0
+
+    def test_basename_keyed_sidecars_still_apply(self, spark, table):
+        """Sidecars landed while DV positions were keyed by the data file's
+        basename keep hiding their rows: in read_mor, dv_metrics, the
+        change feed and reorg_purge."""
+        import glob as _glob
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        txlog.delete_where_dv(spark, table, "k = 3")
+        metrics = txlog.dv_metrics(spark, table).first()
+        for f in _glob.glob(os.path.join(table, "_dv", "*", "*.parquet")):
+            t = pq.read_table(f)
+            i = t.schema.get_field_index("file_name")
+            names = [os.path.basename(n) for n in t.column(i).to_pylist()]
+            pq.write_table(t.set_column(i, "file_name", pa.array(names)), f)
+            crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
+        mor = txlog.read_mor(spark, table)
+        assert mor.count() == 86 and mor.filter("k = 3").count() == 0
+        assert txlog.dv_metrics(spark, table).first() == metrics
+        feed = txlog.table_changes(spark, table, 1)
+        assert feed.filter("_change_type = 'delete'").count() == 14
+        txlog.reorg_purge(spark, table)
+        assert txlog.read(spark, table).count() == 86
 
 
 class TestDeletionVectorsRound8:
@@ -3546,6 +3602,54 @@ class TestPartitionedAppend:
         got = txlog.read(spark, table)
         assert got.count() == 75 and got.filter("k = 1").count() == 0
 
+    @pytest.mark.parametrize("op", ["delete_where", "delete_where_dv", "merge_into"])
+    def test_mutation_hits_two_partitions_of_one_task(self, spark, table, op):
+        """Ids 5 (k=1) and 6 (k=2) come from one write task, so their files
+        share a basename with each other and with k=0/k=3 files: the
+        mutation must land on exactly those two rows, with no pruning."""
+        names = [os.path.basename(f) for f in txlog.visible_files(table)]
+        assert len(set(names)) < len(names), "a task names its partition files alike"
+        if op == "delete_where":
+            txlog.delete_where(spark, table, "id IN (5, 6)")
+        elif op == "delete_where_dv":
+            txlog.delete_where_dv(spark, table, "id IN (5, 6)")
+        else:
+            src = spark.createDataFrame([(5, -1.0), (6, -1.0)], "id long, v double")
+            txlog.merge_into(
+                spark, table, src, keys=["id"],
+                when_matched=[("update", {"v": "s.v"})], when_not_matched=None,
+            )
+        got = {r.id: r.v for r in txlog.read_mor(spark, table).collect()}
+        want = {i: i * 2.0 for i in range(100)}
+        if op == "merge_into":
+            want.update({5: -1.0, 6: -1.0})
+        else:
+            del want[5], want[6]
+        assert got == want
+
+    def test_position_keys_survive_exotic_partition_values(self, spark, tmp_path):
+        """Position tags come from the scan's percent-encoded file URIs;
+        _pos_key must encode the log's paths the same way for every
+        character a partition directory (or the table path) can hold."""
+        t = str(tmp_path / "t x%é+y")
+        vals = [
+            "a b", "c+d", "e%f", "gé", "h/i", "j:k", "l#m", "n?o", "p[q]", "日 本",
+            "ü\u00a0",
+        ]
+        df = spark.createDataFrame(
+            [(i, vals[i % len(vals)]) for i in range(44)], "id long, s string"
+        )
+        txlog.append(df.repartition(2), t, partition_by=["s"])
+        files = txlog.visible_files(t)
+        scan = txlog._read_data(spark, t, files, tags=True)
+        assert {r["__fn"] for r in scan.select("__fn").distinct().collect()} == {
+            txlog._pos_key(f) for f in files
+        }
+        txlog.delete_where_dv(spark, t, "id % 4 = 0")
+        txlog.delete_where(spark, t, "id % 4 = 1")
+        got = sorted(r.id for r in txlog.read_mor(spark, t).collect())
+        assert got == [i for i in range(44) if i % 4 > 1]
+
     def test_mixed_partitioned_and_plain_appends_read_together(self, spark, table):
         more = spark.range(100, 120).select(
             F.col("id"), (F.col("id") % 4).alias("k"), (F.col("id") * 2.0).alias("v")
@@ -4223,3 +4327,124 @@ class TestAdviceFixesRound10:
         m = txlog.generate_symlink_manifest(path, allow_row_ids=True)
         lines = [ln for ln in open(m).read().splitlines() if ln]
         assert len(lines) == len(txlog.visible_files(path))
+
+
+class TestStraddlingInitialDefault:
+    """A table whose live files straddle an ``add_column(..., default=)``
+    scans as one scan per file group (pre-add files render the default);
+    every position-tagged path must work across both groups."""
+
+    @pytest.fixture()
+    def straddle(self, spark, tmp_path):
+        """Build: append ids 1-3, [enable row tracking], [DV-delete id 2],
+        add ``src`` with initial default 'legacy', append ids 4-6 with
+        src 'new'. Each append is one file, so row ids are ``id - 1``."""
+
+        def build(dv=False, tracking=False):
+            path = str(tmp_path / "straddle")
+            txlog.append(
+                spark.createDataFrame(
+                    [(1, "a"), (2, "a"), (3, "a")], "id long, v string"
+                ).coalesce(1),
+                path,
+            )
+            if tracking:
+                txlog.enable_row_tracking(path)
+            if dv:
+                txlog.delete_where_dv(spark, path, "id = 2")
+            txlog.add_column(spark, path, "src", "string", default="'legacy'")
+            txlog.append(
+                spark.createDataFrame(
+                    [(4, "b", "new"), (5, "b", "new"), (6, "b", "new")],
+                    "id long, v string, src string",
+                ).coalesce(1),
+                path,
+            )
+            return path
+
+        return build
+
+    @staticmethod
+    def _rows(df):
+        return {r.id: (r.v, r.src) for r in df.collect()}
+
+    _ALL = {
+        1: ("a", "legacy"), 2: ("a", "legacy"), 3: ("a", "legacy"),
+        4: ("b", "new"), 5: ("b", "new"), 6: ("b", "new"),
+    }
+
+    def test_read_mor_with_pre_add_dv(self, spark, straddle):
+        path = straddle(dv=True)
+        want = {k: v for k, v in self._ALL.items() if k != 2}
+        assert self._rows(txlog.read_mor(spark, path)) == want
+
+    def test_delete_where_dv_across_groups(self, spark, straddle):
+        path = straddle()
+        txlog.delete_where_dv(spark, path, "id IN (1, 5)")
+        want = {k: v for k, v in self._ALL.items() if k not in (1, 5)}
+        assert self._rows(txlog.read_mor(spark, path)) == want
+
+    def test_update_where_dv_across_groups(self, spark, straddle):
+        path = straddle()
+        txlog.update_where_dv(spark, path, "id IN (2, 4)", {"v": "'u'"})
+        want = {**self._ALL, 2: ("u", "legacy"), 4: ("u", "new")}
+        assert self._rows(txlog.read_mor(spark, path)) == want
+
+    def test_dv_merge_touching_both_groups(self, spark, straddle):
+        path = straddle()
+        src = spark.createDataFrame(
+            [(1, "m", "x"), (5, "m", "x"), (7, "i", "ins")],
+            "id long, v string, src string",
+        )
+        txlog.merge_into(
+            spark, path, src, keys=["id"],
+            when_matched=[("update", {"v": "s.v"})], use_dvs=True,
+        )
+        want = {
+            **self._ALL, 1: ("m", "legacy"), 5: ("m", "new"), 7: ("i", "ins"),
+        }
+        assert self._rows(txlog.read_mor(spark, path)) == want
+
+    def test_optimize_with_pre_add_dv(self, spark, straddle):
+        path = straddle(dv=True)
+        txlog.optimize(
+            spark, path, target_file_bytes=10**9, small_file_bytes=10**9
+        )
+        assert len(txlog.visible_files(path)) == 1
+        assert not txlog.visible_dvs(path)
+        want = {k: v for k, v in self._ALL.items() if k != 2}
+        assert self._rows(txlog.read(spark, path)) == want
+
+    def test_read_with_row_ids(self, spark, straddle):
+        path = straddle(tracking=True)
+        got = {
+            r.id: (r.v, r.src, r.row_id)
+            for r in txlog.read_with_row_ids(spark, path).collect()
+        }
+        assert got == {k: (*v, k - 1) for k, v in self._ALL.items()}
+
+    def test_cow_update_keeps_row_ids(self, spark, straddle):
+        path = straddle(tracking=True)
+        txlog.update_where(spark, path, "id IN (1, 4)", {"v": "'u'"})
+        got = {
+            r.id: (r.v, r.src, r.row_id)
+            for r in txlog.read_with_row_ids(spark, path).collect()
+        }
+        want = {**self._ALL, 1: ("u", "legacy"), 4: ("u", "new")}
+        assert got == {k: (*v, k - 1) for k, v in want.items()}
+
+    def test_table_changes_row_ids_across_dv_commit(self, spark, straddle):
+        path = straddle(dv=True, tracking=True)
+        # v1 append, v2 enable row tracking, v3 DV delete, v4 add, v5 append
+        got = {
+            (r.id, r._change_type, r._commit_version): (r.v, r.src, r.row_id)
+            for r in txlog.table_changes(
+                spark, path, 2, include_row_ids=True
+            ).collect()
+        }
+        assert got == {
+            (2, "delete", 3): ("a", "legacy", 1),
+            (4, "insert", 5): ("b", "new", 3),
+            (5, "insert", 5): ("b", "new", 4),
+            (6, "insert", 5): ("b", "new", 5),
+        }
