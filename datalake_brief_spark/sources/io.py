@@ -502,6 +502,23 @@ def zorder_value(
     return df.withColumn(out_col, zval)
 
 
+def zorder_arrange(
+    df: DataFrame, cluster_cols: list[str], n_files: int, bits: int = 8
+) -> DataFrame:
+    """``df`` laid out for Z-order clustering: range-partitioned into
+    ``n_files`` partitions on the interleaved Morton key
+    (:func:`zorder_value`), sorted on it within each, the key dropped.
+    Writing one file per partition keeps every clustered column
+    range-bounded per file — the layout behind :func:`write_zorder`,
+    ``txlog.append_clustered`` and ``txlog.optimize_zorder``."""
+    z = zorder_value(df, cluster_cols, bits=bits)
+    return (
+        z.repartitionByRange(n_files, F.col("__zval"))
+        .sortWithinPartitions("__zval")
+        .drop("__zval")
+    )
+
+
 def write_zorder(
     df: DataFrame,
     path: str,
@@ -520,14 +537,7 @@ def write_zorder(
     The lakehouse table-layout standard (cf. Delta/Iceberg OPTIMIZE ZORDER
     BY); one extra shuffle at write time buys scan-fraction reads forever.
     """
-    z = zorder_value(df, cluster_cols, bits=bits)
-    (
-        z.repartitionByRange(n_files, F.col("__zval"))
-        .sortWithinPartitions("__zval")
-        .drop("__zval")
-        .write.mode(mode)
-        .parquet(path)
-    )
+    zorder_arrange(df, cluster_cols, n_files, bits=bits).write.mode(mode).parquet(path)
 
 
 def parquet_metadata_profile(spark, path: str) -> "DataFrame":

@@ -877,8 +877,8 @@ def _unify_stat_strs(a, b):
 
 def _range_excludes(rng, c_lo, c_hi) -> bool:
     """True iff a file's logged [min, max] provably cannot intersect the
-    canonicalized [c_lo, c_hi] — the ONE skip decision every pruned read
-    and pruned rewrite shares."""
+    canonicalized [c_lo, c_hi]. Called only from :func:`_prune_candidates`,
+    the one skip decision every pruned read and pruned rewrite shares."""
     if rng is None:
         return False
     fmin, fmax = rng[0], rng[1]  # entry may carry [min, max, null_count]
@@ -2237,19 +2237,10 @@ def maintain(spark: SparkSession, path: str) -> dict:
                 props.get("autoCompact.targetBytes", 128 * 1024 * 1024)
             )
             # size the rewrite from the band's bytes (metadata-only)
-            cur = current_version(path)
-            pcol0 = _phys_name(path, cur, ccols[0])
-            fstats = visible_stats(path, cur)
-            c_lo, c_hi = _canon_bound(lo), _canon_bound(hi)
-            band_bytes = sum(
-                os.path.getsize(p)
-                for p in visible_files(path, cur)
-                if not _range_excludes(
-                    fstats.get(os.path.relpath(p, path), {}).get(pcol0),
-                    c_lo,
-                    c_hi,
-                )
+            band = _prune_candidates(
+                path, current_version(path), {ccols[0]: (lo, hi)}
             )
+            band_bytes = sum(os.path.getsize(p) for p in band)
             n_files = int(
                 props.get(
                     "clustering.nFiles", max(1, -(-band_bytes // target_bytes))
@@ -2814,23 +2805,15 @@ def append_clustered(
     merge_schema: bool = False,
 ) -> int:
     """Z-order-clustered append: range-partition + sort on the interleaved
-    Morton key (io.zorder_value) so EVERY clustered column is range-bounded
+    Morton key (io.zorder_arrange) so EVERY clustered column is range-bounded
     per file, then commit with per-file stats on those columns. The write
     that makes ``read_pruned`` effective on any clustered dimension — the
     OPTIMIZE ZORDER BY + stats-in-log composition, paid once at write
     time."""
-    from pyspark.sql import functions as F
+    from datalake_brief_spark.sources.io import zorder_arrange
 
-    from datalake_brief_spark.sources.io import zorder_value
-
-    z = zorder_value(df, cluster_cols, bits=bits)
-    arranged = (
-        z.repartitionByRange(n_files, F.col("__zval"))
-        .sortWithinPartitions("__zval")
-        .drop("__zval")
-    )
     return append(
-        arranged,
+        zorder_arrange(df, cluster_cols, n_files, bits=bits),
         path,
         stats_cols=stats_cols or cluster_cols,
         bloom_cols=bloom_cols,
@@ -3151,6 +3134,27 @@ def fast_count(path: str, version: int | None = None) -> int:
     return total
 
 
+def _read_skipping(
+    spark: SparkSession, path: str, version: int | None, keep, residual: list
+) -> DataFrame:
+    """The one pruned snapshot read behind :func:`read_pruned`,
+    :func:`read_pruned_multi`, :func:`read_point` and
+    :func:`read_pruned_nulls`: resolve ``version`` once, scan only the
+    files ``keep(read_v)`` returns (:func:`_prune_candidates`, or the
+    null-count channel), then apply every ``residual`` predicate, so the
+    result always equals ``read().filter(...)``. An empty snapshot is an
+    error, as for :func:`read`."""
+    read_v = current_version(path) if version is None else version
+    _check_reader(path, read_v)
+    files = keep(read_v)
+    if not files and not _replay(path, read_v):
+        raise FileNotFoundError(f"no table at {path!r} (empty log)")
+    df = _read_data(spark, path, files, version=read_v)
+    for cond in residual:
+        df = df.filter(cond)
+    return df
+
+
 def read_pruned(
     spark: SparkSession,
     path: str,
@@ -3172,29 +3176,7 @@ def read_pruned(
     proportional to selectivity. ``col`` is the LOGICAL name; stats are
     keyed by the physical name (files never change), so a rename costs
     no skipping."""
-    _check_reader(path, version)
-    all_files = visible_files(path, version)
-    if not all_files:
-        raise FileNotFoundError(f"no table at {path!r} (empty log)")
-    stats = visible_stats(path, version)
-    pcol = _phys_name(path, version, col)
-    c_lo, c_hi = _canon_bound(lo), _canon_bound(hi)
-    keep = []
-    for abs_p in all_files:
-        rel = os.path.relpath(abs_p, path)
-        rng = stats.get(rel, {}).get(pcol)
-        if rng is None:
-            keep.append(abs_p)
-            continue
-        if _range_excludes(rng, c_lo, c_hi):
-            continue
-        keep.append(abs_p)
-    df = _read_data(spark, path, keep, version=version)
-    if lo is not None:
-        df = df.filter(F.col(col) >= F.lit(lo))
-    if hi is not None:
-        df = df.filter(F.col(col) <= F.lit(hi))
-    return df
+    return read_pruned_multi(spark, path, {col: (lo, hi)}, version)
 
 
 def read_pruned_nulls(
@@ -3213,25 +3195,26 @@ def read_pruned_nulls(
     Same conservative contract as every pruned read: files without the
     stat are kept, the residual predicate applies, results always equal
     ``read().filter(...)``."""
-    _check_reader(path, version)
-    live = _replay(path, version)
-    if not live:
-        raise FileNotFoundError(f"no table at {path!r} (empty log)")
-    pcol = _phys_name(path, version, col)
-    keep = []
-    for rel in sorted(live):
-        e = live[rel]
-        st = (e.get("stats") or {}).get(pcol)
-        nc = st[2] if st is not None and len(st) > 2 else None
-        rows = e.get("rows")
-        if nc is not None:
-            if is_null and int(nc) == 0:
-                continue
-            if not is_null and rows is not None and int(nc) == int(rows):
-                continue
-        keep.append(os.path.join(path, rel))
-    df = _read_data(spark, path, keep, version=version)
-    return df.filter(F.col(col).isNull() if is_null else F.col(col).isNotNull())
+
+    def keep(read_v: int) -> list[str]:
+        pcol = _phys_name(path, read_v, col)
+        out = []
+        for rel, e in sorted(_replay(path, read_v).items()):
+            st = (e.get("stats") or {}).get(pcol)
+            nc = st[2] if st is not None and len(st) > 2 else None
+            rows = e.get("rows")
+            if nc is not None:
+                if is_null and int(nc) == 0:
+                    continue
+                if not is_null and rows is not None and int(nc) == int(rows):
+                    continue
+            out.append(os.path.join(path, rel))
+        return out
+
+    c = F.col(col)
+    return _read_skipping(
+        spark, path, version, keep, [c.isNull() if is_null else c.isNotNull()]
+    )
 
 
 def merge(
@@ -3967,33 +3950,15 @@ def read_pruned_multi(
     allows. ``ranges`` maps column → (lo, hi), either bound None = open.
     Same conservative contract as read_pruned: statless files are kept and
     every residual predicate applies."""
-    _check_reader(path, version)
-    all_files = visible_files(path, version)
-    if not all_files:
-        raise FileNotFoundError(f"no table at {path!r} (empty log)")
-    stats = visible_stats(path, version)
-    mapping = _column_mapping(path, version)
-    canon = {
-        mapping.get(c, c): (_canon_bound(lo), _canon_bound(hi))
-        for c, (lo, hi) in ranges.items()
-    }
-    keep = []
-    for abs_p in all_files:
-        fstats = stats.get(os.path.relpath(abs_p, path), {})
-        drop = False
-        for col, (lo, hi) in canon.items():
-            if _range_excludes(fstats.get(col), lo, hi):
-                drop = True
-                break
-        if not drop:
-            keep.append(abs_p)
-    df = _read_data(spark, path, keep, version=version)
+    residual = []
     for col, (lo, hi) in ranges.items():
         if lo is not None:
-            df = df.filter(F.col(col) >= F.lit(lo))
+            residual.append(F.col(col) >= F.lit(lo))
         if hi is not None:
-            df = df.filter(F.col(col) <= F.lit(hi))
-    return df
+            residual.append(F.col(col) <= F.lit(hi))
+    return _read_skipping(
+        spark, path, version, lambda v: _prune_candidates(path, v, ranges), residual
+    )
 
 
 def visible_blooms(path: str, version: int | None = None) -> dict[str, dict[str, str]]:
@@ -4033,20 +3998,13 @@ def read_point(
     Blooms never false-skip; ~1% of files false-keep and are eliminated by
     the residual filter. Files without a logged bloom are conservatively
     read, so results always equal ``read().filter(col = value)``."""
-    _check_reader(path, version)
-    all_files = visible_files(path, version)
-    if not all_files:
-        raise FileNotFoundError(f"no table at {path!r} (empty log)")
-    blooms = visible_blooms(path, version)
-    pcol = _phys_name(path, version, col)
-    keep = []
-    for abs_p in all_files:
-        b64 = blooms.get(os.path.relpath(abs_p, path), {}).get(pcol)
-        if b64 is not None and not _bloom_may_contain(b64, value):
-            continue
-        keep.append(abs_p)
-    df = _read_data(spark, path, keep, version=version)
-    return df.filter(F.col(col) == F.lit(value))
+    return _read_skipping(
+        spark,
+        path,
+        version,
+        lambda v: _prune_candidates(path, v, {}, {col: [value]}),
+        [F.col(col) == F.lit(value)],
+    )
 
 
 # Operations that restructure the whole snapshot (or its schema layer):
@@ -4063,6 +4021,12 @@ _SNAPSHOT_OPS = {
     "drop_column",
     "reorg_purge",
     "add_constraint",
+    # file-level metadata a rewrite read before it landed: files landed
+    # past an initial default read NULL where their rows predate the
+    # column, and files landed past enable_row_tracking carry neither a
+    # row-id base nor materialized ids
+    "add_column",
+    "enable_row_tracking",
     # a mutation re-targeting past a concurrent protocol DOWNGRADE could
     # land dv_adds/widened state the new tip's protocol no longer
     # declares (its _with_feature fold was computed against the
@@ -4186,18 +4150,22 @@ def _commit_serializable(
 def _prune_candidates(
     path: str, read_v: int, ranges: dict, points: dict | None = None
 ) -> list[str]:
-    """Phase 1 of the row-level mutations, metadata only: the visible
-    files whose logged stats can meet every ``{col: (lo, hi)}`` range of
-    ``ranges``, minus those whose bloom on a ``{col: values}`` column of
-    ``points`` excludes every value (the point-predicate / bounded-key
-    case where every file's range matches). Every visible file when
-    neither is given."""
+    """The one skip decision, metadata only: the visible files whose
+    logged stats can meet every ``{col: (lo, hi)}`` range of ``ranges``
+    (LOGICAL names, either bound None = open), minus those whose bloom on
+    a ``{col: values}`` column of ``points`` excludes every value (the
+    point-predicate / bounded-key case where every file's range
+    matches). Every visible file when neither is given; a file without
+    the stat or bloom is kept. Callers: the pruned reads
+    (:func:`_read_skipping`), phase 1 of the row-level mutations, the
+    scopes of :func:`optimize` and :func:`optimize_zorder`, and the
+    band sizing in :func:`maintain`."""
     all_files = visible_files(path, read_v)
     points = points or {}
     if not ranges and not points:
         return all_files
     phys = {c: _phys_name(path, read_v, c) for c in [*ranges, *points]}
-    stats = visible_stats(path, read_v)
+    stats = visible_stats(path, read_v) if ranges else {}
     blooms = visible_blooms(path, read_v) if points else {}
     canon = {c: (_canon_bound(lo), _canon_bound(hi)) for c, (lo, hi) in ranges.items()}
     candidates = []
@@ -4241,12 +4209,21 @@ def _removed_skipping_cols(
 ) -> tuple[list[str], list[str]]:
     """Column names the removed files carried stats/blooms for — a rewrite
     commit must recollect BOTH on its replacement files, or the mutation
-    silently degrades data skipping for every later read."""
+    silently degrades data skipping for every later read. Only LIVE
+    physical columns count: a rewrite lands the logical view, so the
+    bytes of a retired physical column (dropped, or renamed away and
+    recycled), and with them its channels, are gone from the new files."""
     live_stats = visible_stats(path, read_v)
     live_blooms = visible_blooms(path, read_v)
-    stat_cols = sorted({c for rel in removes for c in live_stats.get(rel, {})})
-    bloom_cols = sorted({c for rel in removes for c in live_blooms.get(rel, {})})
-    return stat_cols, bloom_cols
+    stat_cols = {c for rel in removes for c in live_stats.get(rel, {})}
+    bloom_cols = {c for rel in removes for c in live_blooms.get(rel, {})}
+    schema = latest_meta(path, "schema", read_v)
+    if schema is not None:
+        mapping = _column_mapping(path, read_v)
+        live = {mapping.get(c, c) for c in schema}
+        stat_cols &= live
+        bloom_cols &= live
+    return sorted(stat_cols), sorted(bloom_cols)
 
 
 # ---------------------------------------------------------------------------
@@ -4258,7 +4235,10 @@ def _removed_skipping_cols(
 #      index of the first clause that fires per row (-1: none; MERGE adds
 #      ``__bact`` for its not-matched-by-source clauses);
 #   3. one clause applier and 4. one landing tail, both in _mutate.
-# Each mutation only builds its phase-1/2 inputs and calls _mutate.
+# Each mutation only builds its phase-1/2 inputs and calls _mutate. The
+# maintenance rewrites (optimize, optimize_zorder, reorg_purge) choose
+# their files, arrange the live rows and land them through _mutate too,
+# with no clauses.
 # ---------------------------------------------------------------------------
 
 
@@ -4386,9 +4366,14 @@ def _mutate(
     use_dvs: bool = False,
     fresh: DataFrame | None = None,
     mapping: dict | None = None,
+    stats_also=(),
 ) -> int:
     """Phases 3 and 4 of every row-level mutation: apply the clauses,
-    land the groups, commit.
+    land the groups, commit. Maintenance rewrites (:func:`optimize`,
+    :func:`optimize_zorder`, :func:`reorg_purge`) land through here too:
+    their ``frame`` is the arranged live rows of the ``rewrite`` files,
+    with no clauses, so every row re-lands unchanged, the change record
+    is ``[]`` and no ``predicate`` probes a concurrent append.
 
     ``frame`` (aliased ``t``; None when no row is targeted) carries per
     row ``__act``, the index into ``clauses`` of the clause that fires,
@@ -4416,9 +4401,10 @@ def _mutate(
     own single-thread pool, overlapped with the change-record and fresh
     writes (leaving the block waits it out). Skipping channels are
     recollected on the adds — the removed files' for copy-on-write, the
-    live table's when the commit adds DVs. A commit whose only change
-    is DV positions stores no change record: the change feed reads
-    those deletes from the DV state. The commit is WriteSerializable
+    live table's when the commit adds DVs, plus stats on the LOGICAL
+    ``stats_also`` columns (Z-order's cluster columns). A commit whose
+    only change is DV positions stores no change record: the change
+    feed reads those deletes from the DV state. The commit is WriteSerializable
     (:func:`_commit_serializable`, ``predicate`` the phantom probe); a
     writer losing it sweeps every group it landed. Returns the new
     version, or ``read_v`` when nothing changed (no empty commit)."""
@@ -4533,6 +4519,7 @@ def _mutate(
         if dv_adds:
             skip_src = [os.path.relpath(p, path) for p in visible_files(path, read_v)]
         stat_cols, bloom_cols = _removed_skipping_cols(path, read_v, skip_src)
+        stat_cols = sorted({*stat_cols, *(mapping.get(c, c) for c in stats_also)})
     factory = None
     if ins_frame is not None:
         factory = _identity_insert_factory(
@@ -5286,7 +5273,13 @@ def optimize(
     partition/band of a 100 TB table — the shape a streaming sink needs,
     compacting only the hot ingest partition while cold history stays
     byte-identical. Conservative like every stats consumer: statless
-    files are considered in scope. ``prune_col`` is the LOGICAL name."""
+    files are considered in scope. ``prune_col`` is the LOGICAL name.
+
+    Concurrency: the commit is WriteSerializable like every row-level
+    mutation's (see :func:`_mutate`). A blind append that lands first is
+    disjoint — compaction re-targets the new tip and commits; a racer
+    that removed or DV'd a compacted file, or a snapshot-level op,
+    raises ``CommitConflict``, and the rewritten files are swept."""
     import math
 
     if small_file_bytes is None:
@@ -5294,39 +5287,19 @@ def optimize(
     read_v = current_version(path)
     if read_v == 0:
         return 0
-    in_scope = visible_files(path, read_v)
-    if prune_col is not None:
-        pcol = _phys_name(path, read_v, prune_col)
-        stats = visible_stats(path, read_v)
-        c_lo, c_hi = _canon_bound(lo), _canon_bound(hi)
-        in_scope = [
-            p
-            for p in in_scope
-            if not _range_excludes(
-                stats.get(os.path.relpath(p, path), {}).get(pcol), c_lo, c_hi
-            )
-        ]
+    ranges = {prune_col: (lo, hi)} if prune_col is not None else {}
+    in_scope = _prune_candidates(path, read_v, ranges)
     small = [p for p in in_scope if os.path.getsize(p) < small_file_bytes]
     if len(small) < 2:
         return read_v
     total = sum(os.path.getsize(p) for p in small)
     n_out = max(1, math.ceil(total / target_file_bytes))
-    # mergeSchema: compacting across additive schema evolution must unify
-    # the footers, or the rewrite could pick the narrower schema and lose
-    # evolved columns permanently once vacuum reclaims the originals.
     compacted = _read_files_with_dvs(spark, path, read_v, small).coalesce(n_out)
-    adds = _write_data_files(
-        _to_physical(compacted, _column_mapping(path, read_v)), path
+    return _mutate(
+        spark, path, read_v, {"op": "optimize"}, None,
+        dict(compacted.drop(_ROWID).dtypes), frame=compacted.alias("t"),
+        rewrite=small,
     )
-    removes = [os.path.relpath(p, path) for p in small]
-    # Compaction must not silently degrade data skipping: recollect stats
-    # AND blooms for the rewritten files on every column the superseded
-    # files carried them for.
-    stat_cols, bloom_cols = _removed_skipping_cols(path, read_v, removes)
-    stats = _collect_stats(path, adds, stat_cols or None)
-    blooms = _collect_blooms(path, adds, bloom_cols or None)
-    _try_commit(path, read_v + 1, adds, removes, stats, blooms, meta={"op": "optimize"})
-    return read_v + 1
 
 
 def _auto_compact_after_commit(
@@ -5402,55 +5375,32 @@ def optimize_zorder(
     every out-of-band file stays referenced byte-identical. Unscoped, the
     cost is one full snapshot rewrite — schedule it like any OPTIMIZE,
     off the write path. Statless files are conservatively in scope, and
-    ``prune_col`` is the LOGICAL name, exactly like ``optimize``'s WHERE."""
-    from datalake_brief_spark.sources.io import zorder_value
+    ``prune_col`` is the LOGICAL name, exactly like ``optimize``'s WHERE.
+
+    Concurrency: as :func:`optimize` — a racing blind append is
+    disjoint and the rewrite re-targets the new tip; any other lost race
+    raises ``CommitConflict`` and sweeps the rewritten files."""
+    from datalake_brief_spark.sources.io import zorder_arrange
 
     read_v = current_version(path)
     if read_v == 0:
         return 0
-    in_scope = visible_files(path, read_v)
-    if prune_col is not None:
-        pcol = _phys_name(path, read_v, prune_col)
-        fstats = visible_stats(path, read_v)
-        c_lo, c_hi = _canon_bound(lo), _canon_bound(hi)
-        in_scope = [
-            p
-            for p in in_scope
-            if not _range_excludes(
-                fstats.get(os.path.relpath(p, path), {}).get(pcol), c_lo, c_hi
-            )
-        ]
-        if not in_scope:
-            return read_v
+    ranges = {prune_col: (lo, hi)} if prune_col is not None else {}
+    in_scope = _prune_candidates(path, read_v, ranges)
+    if not in_scope:
+        return read_v
     # MOR-aware: any rewrite must apply live deletion vectors or it would
     # resurrect DV-deleted rows. On a row-tracking table the
     # files-with-dvs read carries __row_id, so the clustered rewrite
     # MATERIALIZES every row's id (maintenance never re-keys). The scoped
     # form reads ONLY the in-band files — cost tracks the band.
     df = _read_files_with_dvs(spark, path, read_v, in_scope)
-    z = zorder_value(df, cluster_cols, bits=bits)
-    arranged = (
-        z.repartitionByRange(n_files, F.col("__zval"))
-        .sortWithinPartitions("__zval")
-        .drop("__zval")
+    arranged = zorder_arrange(df, cluster_cols, n_files, bits=bits)
+    return _mutate(
+        spark, path, read_v, {"op": "optimize_zorder"}, None,
+        dict(arranged.drop(_ROWID).dtypes), frame=arranged.alias("t"),
+        rewrite=in_scope, stats_also=stats_cols or cluster_cols,
     )
-    removes = [os.path.relpath(p, path) for p in in_scope]
-    prev_stat_cols, prev_bloom_cols = _removed_skipping_cols(path, read_v, removes)
-    mapping = _column_mapping(path, read_v)
-    adds = _write_data_files(_to_physical(arranged, mapping), path)
-    stats = _collect_stats(
-        path,
-        adds,
-        sorted(
-            {mapping.get(c, c) for c in (stats_cols or cluster_cols)}
-            | set(prev_stat_cols)
-        ),
-    )
-    blooms = _collect_blooms(path, adds, prev_bloom_cols or None)
-    _try_commit(
-        path, read_v + 1, adds, removes, stats, blooms, meta={"op": "optimize_zorder"}
-    )
-    return read_v + 1
 
 
 def clone(src_path: str, dst_path: str, version: int | None = None) -> int:
@@ -6412,25 +6362,13 @@ def reorg_purge(
                 targets.update(fl)
     if not targets:
         return read_v
-    rewritten = _read_files_with_dvs(spark, path, read_v, sorted(targets))
-    removes = [os.path.relpath(p, path) for p in sorted(targets)]
-    stat_cols, bloom_cols = _removed_skipping_cols(path, read_v, removes)
-    # retired columns are being purged — drop their stat/bloom channels
-    if schema is not None:
-        live_phys = {
-            _column_mapping(path, read_v).get(c, c) for c in schema
-        }
-        stat_cols = [c for c in stat_cols if c in live_phys]
-        bloom_cols = [c for c in bloom_cols if c in live_phys]
-    adds = _write_data_files(
-        _to_physical(rewritten, _column_mapping(path, read_v)), path
+    rewrite = sorted(targets)
+    rewritten = _read_files_with_dvs(spark, path, read_v, rewrite)
+    return _mutate(
+        spark, path, read_v, {"op": "reorg_purge"}, None,
+        dict(rewritten.drop(_ROWID).dtypes), frame=rewritten.alias("t"),
+        rewrite=rewrite,
     )
-    stats = _collect_stats(path, adds, stat_cols or None)
-    blooms = _collect_blooms(path, adds, bloom_cols or None)
-    _try_commit(
-        path, read_v + 1, adds, removes, stats, blooms, meta={"op": "reorg_purge"}
-    )
-    return read_v + 1
 
 
 def convert_to_txlog(

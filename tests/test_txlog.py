@@ -2410,6 +2410,105 @@ class TestMutationRace:
         got = sorted(r.id for r in txlog.read_mor(spark, path).collect())
         assert got == [5, 6, 7, 8, 9, 99]
 
+    @pytest.mark.parametrize("op", ["optimize", "optimize_zorder", "reorg_purge"])
+    def test_maintenance_resolves_disjoint_concurrent_append(
+        self, spark, monkeypatch, tmp_path, op
+    ):
+        """A maintenance rewrite changes no row, so a blind append landing
+        between its write and its commit is disjoint: the rewrite
+        re-targets the new tip and commits, and both effects land."""
+        path = str(tmp_path / "t")
+        txlog.append(_df(spark, [(i, "a", 1) for i in range(10)]).repartition(3), path)
+        if op == "reorg_purge":
+            txlog.delete_where_dv(spark, path, "id = 4")  # a file to purge
+        before = sorted(map(tuple, txlog.read_mor(spark, path).collect()))
+        tip = txlog.current_version(path)
+        self._race_append(spark, monkeypatch, [(99, "late", 1)])
+        v = {
+            "optimize": lambda: txlog.optimize(spark, path),
+            "optimize_zorder": lambda: txlog.optimize_zorder(
+                spark, path, ["id"], n_files=2
+            ),
+            "reorg_purge": lambda: txlog.reorg_purge(spark, path),
+        }[op]()
+        monkeypatch.undo()
+        assert v == tip + 2  # the append stole tip + 1
+        assert txlog.history(path)[0]["op"] == op
+        got = sorted(map(tuple, txlog.read_mor(spark, path).collect()))
+        assert got == sorted(before + [(99, "late", 1)])
+
+    @staticmethod
+    def _race_metadata_op(monkeypatch, racer):
+        """Arm a one-shot concurrent metadata-only commit ``racer(path)``
+        that lands after the rewrite wrote its files, before its commit."""
+        real_write = txlog._write_data_files
+
+        def racing_write(df, p):
+            out = real_write(df, p)
+            if getattr(racing_write, "armed", True):
+                racing_write.armed = False
+                racer(p)
+            return out
+
+        racing_write.armed = True
+        monkeypatch.setattr(txlog, "_write_data_files", racing_write)
+
+    @staticmethod
+    def _rewrite(spark, path, op):
+        if op == "optimize":
+            return txlog.optimize(spark, path)
+        return txlog.delete_where(spark, path, "id < 5")
+
+    @pytest.mark.parametrize("op", ["optimize", "delete_where"])
+    @pytest.mark.parametrize("racer", ["add_column_default", "enable_row_tracking"])
+    def test_rewrite_conflicts_with_concurrent_file_metadata(
+        self, spark, monkeypatch, tmp_path, op, racer
+    ):
+        """Files a rewrite lands after a racing ``add_column(default=...)``
+        would read NULL where their rows predate the column, and files it
+        lands after a racing ``enable_row_tracking`` would carry no row
+        ids. Either race must surface as a conflict and leave the table
+        readable as the racer left it."""
+        path = str(tmp_path / "t")
+        txlog.append(_df(spark, [(i, "a", 1) for i in range(10)]).repartition(3), path)
+        self._race_metadata_op(
+            monkeypatch,
+            {
+                "add_column_default": lambda p: txlog.add_column(
+                    spark, p, "d", "int", default="7"
+                ),
+                "enable_row_tracking": txlog.enable_row_tracking,
+            }[racer],
+        )
+        with pytest.raises(txlog.CommitConflict, match="snapshot-level"):
+            self._rewrite(spark, path, op)
+        monkeypatch.undo()
+        if racer == "add_column_default":
+            got = txlog.read(spark, path)
+            assert got.count() == 10 and got.filter("d = 7").count() == 10
+        else:
+            ids = [r.row_id for r in txlog.read_with_row_ids(spark, path).collect()]
+            assert sorted(ids) == list(range(10))
+
+    @pytest.mark.parametrize("op", ["optimize", "delete_where"])
+    def test_rewrite_resolves_past_concurrent_write_default(
+        self, spark, monkeypatch, tmp_path, op
+    ):
+        """A write default only fills later writes, so a racing
+        ``set_column_default`` is disjoint from a rewrite: it re-targets
+        the new tip and commits."""
+        path = str(tmp_path / "t")
+        txlog.append(_df(spark, [(i, "a", 1) for i in range(10)]).repartition(3), path)
+        tip = txlog.current_version(path)
+        self._race_metadata_op(
+            monkeypatch, lambda p: txlog.set_column_default(spark, p, "v", "'w'")
+        )
+        v = self._rewrite(spark, path, op)
+        monkeypatch.undo()
+        assert v == tip + 2  # set_column_default stole tip + 1
+        got = sorted(r.id for r in txlog.read(spark, path).collect())
+        assert got == (list(range(10)) if op == "optimize" else list(range(5, 10)))
+
     def test_update_conflicts_with_concurrent_snapshot_op(
         self, spark, monkeypatch, tmp_path
     ):
@@ -3082,15 +3181,18 @@ class TestDeletionVectorsRound8:
             "overwrite_where",
             "merge_into_cow",
             "merge_into_identity",
+            "optimize",
+            "optimize_zorder",
+            "reorg_purge",
         ],
     )
     def test_delete_dv_conflict_sweeps_sidecar(self, spark, table, monkeypatch, op):
-        """A mutation — DV or copy-on-write — losing the commit race to an
-        UNRESOLVABLE concurrent commit (a snapshot-level op — a disjoint
-        append would now auto-resolve) must remove every group it
-        pre-landed — DV sidecar, data files, change record, an identity
-        insert's last attempt — no lingering orphan until vacuum, and the
-        snapshot reads as before."""
+        """A mutation — DV or copy-on-write — or a maintenance rewrite
+        losing the commit race to an UNRESOLVABLE concurrent commit (a
+        snapshot-level op — a disjoint append would now auto-resolve)
+        must remove every group it pre-landed — DV sidecar, data files,
+        change record, an identity insert's last attempt — no lingering
+        orphan until vacuum, and the snapshot reads as before."""
         import glob as _glob
 
         def merge(use_dvs):
@@ -3111,6 +3213,8 @@ class TestDeletionVectorsRound8:
                 spark.range(100).select(F.col("id"), (F.col("id") % 7).alias("k")),
                 table,
             )
+        if op == "reorg_purge":
+            txlog.delete_where_dv(spark, table, "k = 3")  # a file to purge
         mutate = {
             "delete_where_dv": lambda: txlog.delete_where_dv(spark, table, "k = 3"),
             "update_where_dv": lambda: txlog.update_where_dv(
@@ -3135,6 +3239,11 @@ class TestDeletionVectorsRound8:
                 keys=["id"],
                 when_matched=None,
             ),
+            "optimize": lambda: txlog.optimize(spark, table),
+            "optimize_zorder": lambda: txlog.optimize_zorder(
+                spark, table, ["id"], n_files=2
+            ),
+            "reorg_purge": lambda: txlog.reorg_purge(spark, table),
         }[op]
 
         def landed():  # every file outside the log
@@ -3146,6 +3255,7 @@ class TestDeletionVectorsRound8:
             )
 
         before_files = landed()
+        before_dvs = _glob.glob(os.path.join(table, "_dv", "*"))
         before_rows = sorted(map(tuple, txlog.read_mor(spark, table).collect()))
         real_try = txlog._try_commit
 
@@ -3160,7 +3270,7 @@ class TestDeletionVectorsRound8:
         with pytest.raises(txlog.CommitConflict):
             mutate()
         monkeypatch.undo()
-        assert not _glob.glob(os.path.join(table, "_dv", "*")), "orphan sidecar"
+        assert _glob.glob(os.path.join(table, "_dv", "*")) == before_dvs, "orphan sidecar"
         assert landed() == before_files, "orphan data or change-file group"
         after_rows = sorted(map(tuple, txlog.read_mor(spark, table).collect()))
         assert after_rows == before_rows
@@ -3428,6 +3538,68 @@ class TestColumnMapping:
 
         with pytest.raises(ValueError, match="column mapping"):
             _table_ddl(table)
+
+    @pytest.mark.parametrize(
+        "op",
+        [
+            "optimize",
+            "optimize_zorder",
+            "delete_where",
+            "update_where",
+            "update_where_dv",
+            "merge_into_cow",
+        ],
+    )
+    def test_rewrite_after_dropping_bloom_column(self, spark, tmp_path, op):
+        """A rewrite lands the logical view, so a dropped column's bytes
+        are gone from its new files: it must recollect the stats and
+        blooms of live columns only, not fail on the dropped one."""
+        t = str(tmp_path / "drop_bloom")
+        df = spark.range(60).select(
+            F.col("id"), (F.col("id") % 7).alias("k"), (F.col("id") * 10).alias("b")
+        )
+        txlog.append(df.repartition(3), t, stats_cols=["id", "b"], bloom_cols=["b"])
+        v0 = txlog.drop_column(t, "b")
+        rows = {i: i % 7 for i in range(60)}
+        set42 = {"k": F.lit(42)}
+        run, want = {
+            "optimize": (lambda: txlog.optimize(spark, t), rows),
+            "optimize_zorder": (
+                lambda: txlog.optimize_zorder(spark, t, ["id"], n_files=2),
+                rows,
+            ),
+            "delete_where": (
+                lambda: txlog.delete_where(spark, t, "k = 3"),
+                {i: k for i, k in rows.items() if k != 3},
+            ),
+            "update_where": (
+                lambda: txlog.update_where(spark, t, "k = 3", set42),
+                {i: 42 if k == 3 else k for i, k in rows.items()},
+            ),
+            "update_where_dv": (
+                lambda: txlog.update_where_dv(spark, t, "k = 3", set42),
+                {i: 42 if k == 3 else k for i, k in rows.items()},
+            ),
+            "merge_into_cow": (
+                lambda: txlog.merge_into(
+                    spark,
+                    t,
+                    spark.createDataFrame([(3, 42)], "id long, k long"),
+                    keys=["id"],
+                    when_matched=[("update", "*")],
+                ),
+                {**rows, 3: 42},
+            ),
+        }[op]
+        v = run()
+        assert v == v0 + 1
+        assert {r.id: r.k for r in txlog.read_mor(spark, t).collect()} == want
+        c = txlog._load_commit(t, v)  # noqa: SLF001
+        assert c["adds"]
+        for rel in c["adds"]:
+            assert "id" in c["stats"][rel], "live stats must be recollected"
+            assert "b" not in c["stats"][rel]
+            assert "b" not in c.get("blooms", {}).get(rel, {})
 
 
 class TestReorgPurge:
