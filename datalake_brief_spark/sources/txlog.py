@@ -4890,15 +4890,41 @@ def describe_detail(path: str, version: int | None = None) -> dict:
     }
 
 
-#: maintenance ops that rewrite bytes without changing table content —
-#: skipped wholesale by CDC (Delta's dataChange=false)
-_CDC_NO_CHANGE_OPS = {
+#: maintenance ops that rewrite bytes without changing table content
+#: (Delta's dataChange=false); reorg_purge materializes ALREADY-committed
+#: DV deletes / column drops — the change was the DV/DDL commit
+_NO_DATA_CHANGE_OPS = {
     "optimize",
     "optimize_zorder",
     "reorg_purge",
     "add_constraint",
     "drop_constraint",
 }
+
+
+def _row_change(commit: dict) -> str:
+    """How one commit changed the table's rows — the one dataChange
+    decision :func:`table_changes` and the streaming source branch on:
+
+    - ``"none"``: a dataChange=false maintenance op (its adds re-land
+      rows already delivered);
+    - ``"meta"``: no adds, removes or DV state (metadata only);
+    - ``"append"``: adds only — the added files ARE the change;
+    - ``"dv"``: deletion-vector positions (plus an update_dv's adds), no
+      removes — position-exact deletes;
+    - ``"rewrite"``: removes, a ``dv_set`` replacement, or a restore's
+      visibility flip.
+
+    Whether a commit also stores a change record is ``"change_data" in
+    commit``, checked by the change-feed readers on their own."""
+    op = commit.get("meta", {}).get("op", "write")
+    if op in _NO_DATA_CHANGE_OPS:
+        return "none"
+    if op == "restore" or commit.get("removes") or commit.get("dv_set"):
+        return "rewrite"
+    if commit.get("dv_adds"):
+        return "dv"
+    return "append" if commit.get("adds") else "meta"
 
 
 def table_changes(
@@ -4975,8 +5001,8 @@ def table_changes(
     saw_data_commit = False
     for v in range(from_version + 1, to_v + 1):
         commit = _load_commit(path, v)
-        op = commit.get("meta", {}).get("op", "write")
-        if op in _CDC_NO_CHANGE_OPS:
+        kind = _row_change(commit)
+        if kind == "none":
             saw_data_commit = True  # data-bearing, provably zero row change
             continue
         if "change_data" in commit:
@@ -5033,23 +5059,10 @@ def table_changes(
                 cd.withColumn("_commit_version", F.lit(v).cast("bigint"))
             )
             continue
-        has_state = (
-            commit.get("adds")
-            or commit.get("removes")
-            or commit.get("dv_adds")
-            or commit.get("dv_set")
-            or op == "restore"
-        )
-        if not has_state:
-            continue  # metadata-only commit (no rows involved)
+        if kind == "meta":
+            continue  # no rows involved
         saw_data_commit = True
-        if (
-            commit.get("adds")
-            and not commit.get("removes")
-            and not commit.get("dv_adds")
-            and not commit.get("dv_set")
-            and op != "restore"
-        ):
+        if kind == "append":
             # pure append: its added files ARE the change record. The
             # files carry the types at THIS commit's version — when a
             # column was WIDER at v than at to_v (a restore below a type

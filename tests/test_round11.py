@@ -1,8 +1,9 @@
 """Round-11 additions (VERDICT r10 asks): log retention + the
 ``_last_checkpoint`` pointer (ask #1), identity-column MERGE INSERT via
 per-attempt watermark reservation (ask #3), the persisted merge rewrite
-frame (ask #4), scoped ``OPTIMIZE ZORDER ... WHERE`` (ask #5), and the
-streaming ``schemaTrackingLocation`` restart (ask #6)."""
+frame (ask #4) and scoped ``OPTIMIZE ZORDER ... WHERE`` (ask #5). The
+streaming ``schemaTrackingLocation`` restart (ask #6) is tested with the
+rest of the data source in test_txlog_source.py."""
 
 from __future__ import annotations
 
@@ -499,145 +500,6 @@ class TestScopedZorderWhere:
         assert sorted(txlog.read(spark, path).collect()) == expect
 
 
-class TestSchemaTrackingRestart:
-    """VERDICT r10 ask #6: the Delta ``schemaTrackingLocation`` analog —
-    a mid-stream rename/drop fails the stream (correct default), but a
-    plain RESTART with the option resumes from the failure offset
-    rendering the backlog under the new logical schema."""
-
-    #: foreachBatch sink store — the memory sink cannot RECOVER from a
-    #: checkpoint, and recovery is exactly what these tests exercise
-    _SINK: dict = {}
-
-    def _drain(self, spark, path, loc, ck, name, cdf=False):
-        rows = self._SINK.setdefault(name, [])
-        reader = (
-            spark.readStream.format("txlog")
-            .option("path", path)
-            .option("schemaTrackingLocation", loc)
-        )
-        if cdf:
-            reader = reader.option("readChangeFeed", "true")
-        got = reader.load()
-        q = (
-            got.writeStream.foreachBatch(
-                lambda df, _eid: rows.extend(df.collect())
-            )
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        # contention-proof drain (VERDICT r12 ask #5): poll until the
-        # availableNow trigger terminates instead of a single wall-time
-        # budget — a loadavg-8 box can stretch micro-batches well past a
-        # fixed 180 s, and the old silent timeout returned a PARTIAL sink
-        # that failed the assertions downstream. A still-active query
-        # after the (generous) ceiling fails LOUDLY here instead.
-        import time as _time
-
-        deadline = _time.monotonic() + 600
-        while q.isActive and _time.monotonic() < deadline:
-            try:
-                q.awaitTermination(5)
-            except Exception:
-                break  # stream failed: exception() below reports it
-        if q.isActive:
-            q.stop()
-            raise AssertionError(
-                "availableNow stream did not drain within the 600 s ceiling"
-            )
-        exc = q.exception()
-        q.stop()
-        return exc
-
-    def test_restart_resumes_under_new_schema(self, spark):
-        from datalake_brief_spark.streaming.source import register_txlog_source
-
-        register_txlog_source(spark)
-        path = _fresh("r11st_")
-        loc = tempfile.mkdtemp(prefix="r11stloc_")
-        ck = tempfile.mkdtemp(prefix="r11stck_")
-        txlog.append(
-            spark.createDataFrame([(1, "a"), (2, "b")], "k int, val string"), path
-        )
-        # run 1: drains the backlog at the original schema
-        assert self._drain(spark, path, loc, ck, "r11_track1") is None
-        pre = self._SINK["r11_track1"]
-        assert {(r.k, r.val) for r in pre} == {(1, "a"), (2, "b")}
-        # mid-stream (stream stopped, offset checkpointed): rename + more data
-        txlog.rename_column(path, "val", "v2")
-        txlog.append(
-            spark.createDataFrame([(3, "c")], "k int, v2 string"), path
-        )
-        # run 2: FAILS at the mapping commit, records the new schema
-        exc = self._drain(spark, path, loc, ck, "r11_track2")
-        assert exc is not None and "schemaTrackingLocation" in str(exc)
-        assert self._SINK["r11_track2"] == []  # the failed batch emitted nothing
-        # run 3: plain restart, same checkpoint — drains the backlog at
-        # the NEW logical schema; nothing re-emitted, nothing lost
-        assert self._drain(spark, path, loc, ck, "r11_track3") is None
-        post = self._SINK["r11_track3"]
-        assert {(r.k, r.v2) for r in post} == {(3, "c")}
-
-    def test_without_tracking_still_fails_unconditionally(self, spark):
-        from datalake_brief_spark.streaming.source import register_txlog_source
-
-        register_txlog_source(spark)
-        path = _fresh("r11st0_")
-        txlog.append(
-            spark.createDataFrame([(1, "a")], "k int, val string"), path
-        )
-        txlog.rename_column(path, "val", "v2")
-        with pytest.raises(Exception, match="column mapping"):
-            (
-                spark.readStream.format("txlog")
-                .option("path", path)
-                .load()
-            )
-
-    def test_drop_column_tracks_and_resumes(self, spark):
-        from datalake_brief_spark.streaming.source import register_txlog_source
-
-        register_txlog_source(spark)
-        path = _fresh("r11st2_")
-        loc = tempfile.mkdtemp(prefix="r11st2loc_")
-        ck = tempfile.mkdtemp(prefix="r11st2ck_")
-        txlog.append(
-            spark.createDataFrame([(1, "a", 5)], "k int, val string, n int"), path
-        )
-        assert self._drain(spark, path, loc, ck, "r11_drop1") is None
-        txlog.drop_column(path, "n")
-        txlog.append(
-            spark.createDataFrame([(2, "b")], "k int, val string"), path
-        )
-        exc = self._drain(spark, path, loc, ck, "r11_drop2")
-        assert exc is not None
-        assert self._drain(spark, path, loc, ck, "r11_drop3") is None
-        post = self._SINK["r11_drop3"]
-        assert {tuple(r) for r in post} == {(2, "b")}
-        assert "n" not in post[0].asDict()
-
-    def test_cdf_stream_tracks_and_resumes(self, spark):
-        from datalake_brief_spark.streaming.source import register_txlog_source
-
-        register_txlog_source(spark)
-        path = _fresh("r11st3_")
-        loc = tempfile.mkdtemp(prefix="r11st3loc_")
-        ck = tempfile.mkdtemp(prefix="r11st3ck_")
-        txlog.append(
-            spark.createDataFrame([(1, "a"), (2, "b")], "k int, val string"), path
-        )
-
-        assert self._drain(spark, path, loc, ck, "r11_cdf1", cdf=True) is None
-        txlog.rename_column(path, "val", "v2")
-        txlog.delete_where(spark, path, F.col("k") == 1)
-        assert self._drain(spark, path, loc, ck, "r11_cdf2", cdf=True) is not None
-        assert self._drain(spark, path, loc, ck, "r11_cdf3", cdf=True) is None
-        rows = self._SINK["r11_cdf3"]
-        # the CoW delete renders under the NEW schema: pre-image of k=1
-        assert {(r.k, r.v2, r._change_type) for r in rows} == {(1, "a", "delete")}
-
-
 class TestPointerHotPath:
     def test_latest_meta_rides_pointer_without_listing(self, spark):
         """latest_meta runs on every logical-view build; with a valid
@@ -668,78 +530,6 @@ class TestPointerHotPath:
         d2 = txlog.describe_detail(path)
         assert d2["log_earliest_version"] == 10
         assert d2["num_rows"] == d["num_rows"]
-
-
-class TestStreamBelowHorizon:
-    def test_stream_offset_below_expiry_horizon_names_floor(self, spark):
-        """A consumer down longer than the log retention: its checkpointed
-        offset points below the expire_log horizon — the stream must fail
-        with the named floor + recovery guidance, never a raw missing-file
-        error."""
-        from datalake_brief_spark.streaming.source import register_txlog_source
-
-        register_txlog_source(spark)
-        path = _fresh("r11sbh_")
-        for i in range(25):
-            txlog.append(_batch(spark, tag=i), path)
-        txlog.expire_log(path, retain_versions=10)
-        got = (
-            spark.readStream.format("txlog")
-            .option("path", path)
-            .option("startingVersion", 3)  # below the horizon (floor=10)
-            .load()
-        )
-        q = (
-            got.writeStream.format("memory")
-            .queryName("r11_below_horizon")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(120)
-        except Exception:
-            pass
-        exc = q.exception()
-        q.stop()
-        assert exc is not None
-        assert "earliest readable version is 10" in str(exc)
-        assert "startingVersion" in str(exc)
-
-
-class TestMaxFilesPerTrigger:
-    def test_backlog_drains_in_file_bounded_batches(self, spark):
-        """maxFilesPerTrigger (the Delta knob): a backlog of 6 commits x 3
-        files drains in batches of at most ~4 files (>= 1 commit per batch
-        for progress) — bounding DATA per trigger, not just commit count."""
-        from datalake_brief_spark.streaming.source import register_txlog_source
-
-        register_txlog_source(spark)
-        path = _fresh("r11mft_")
-        ck = tempfile.mkdtemp(prefix="r11mftck_")
-        for i in range(6):
-            txlog.append(_batch(spark, n=9, tag=i).repartition(3), path)
-        stream = (
-            spark.readStream.format("txlog")
-            .options(path=path, maxFilesPerTrigger="4")
-            .load()
-        )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName("r11_mft")
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            got = spark.sql("SELECT count(*) c FROM r11_mft").collect()[0]["c"]
-            assert got == 54  # nothing lost
-            batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-            # 6 commits / 2-commit cap (3 files + next commit reaches 4)
-            assert len(batches) >= 3
-            assert max(p["numInputRows"] for p in batches) <= 18  # <= 2 commits
-        finally:
-            q.stop()
 
 
 class TestIdentityMergeCrossFeatures:

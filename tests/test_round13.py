@@ -469,149 +469,6 @@ class TestClusteringMaintenance:
         assert d["n_decayed"] >= 4 and d["recommended"]
 
 
-class TestMaxBytesPerTrigger:
-    """The third Delta rate knob (VERDICT r12 stretch): micro-batches
-    bounded by the BYTES their commits' files carry — the knob that maps
-    to executor memory when commit sizes vary 1000x. >=1 commit per batch
-    for progress; composes with restart recovery and the expired-log
-    floor error."""
-
-    def _setup(self, spark, prefix, n_commits=6):
-        from datalake_brief_spark.streaming.source import register_txlog_source
-
-        register_txlog_source(spark)
-        path = _fresh(prefix)
-        for i in range(n_commits):
-            txlog.append(
-                spark.range(i * 10, (i + 1) * 10)
-                .select(F.col("id").alias("k"), F.lit(i).cast("int").alias("b"))
-                .coalesce(1),
-                path,
-            )
-        return path
-
-    def test_byte_capped_drain(self, spark):
-        path = self._setup(spark, "r13mbt_")
-        ck = tempfile.mkdtemp(prefix="r13mbtck_")
-        one = os.path.getsize(txlog.visible_files(path)[0])
-        stream = (
-            spark.readStream.format("txlog")
-            .options(path=path, maxBytesPerTrigger=str(int(one * 1.5)))
-            .load()
-        )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName("r13_mbt")
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            assert (
-                spark.sql("SELECT count(*) c FROM r13_mbt").collect()[0]["c"]
-                == 60
-            )
-            batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-            assert len(batches) >= 3  # capped: never one giant batch
-            assert max(p["numInputRows"] for p in batches) <= 20  # <= 2 commits
-        finally:
-            q.stop()
-
-    def test_oversized_commit_still_progresses(self, spark):
-        path = self._setup(spark, "r13mbt1_", n_commits=3)
-        ck = tempfile.mkdtemp(prefix="r13mbt1ck_")
-        stream = (
-            spark.readStream.format("txlog")
-            .options(path=path, maxBytesPerTrigger="1")  # every commit exceeds it
-            .load()
-        )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName("r13_mbt1")
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            assert (
-                spark.sql("SELECT count(*) c FROM r13_mbt1").collect()[0]["c"]
-                == 30
-            )
-            batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-            assert len(batches) == 3  # exactly one commit per batch
-            assert max(p["numInputRows"] for p in batches) == 10
-        finally:
-            q.stop()
-
-    def _drain(self, spark, path, ck, rows, cap):
-        # processAllAvailable, not availableNow: the rate cap bounds each
-        # TRIGGER, and processAllAvailable keeps triggering until the
-        # backlog is gone (availableNow through the Python DataSource API
-        # stops at the first capped offer)
-        q = (
-            spark.readStream.format("txlog")
-            .options(path=path, maxBytesPerTrigger=str(cap))
-            .load()
-            .writeStream.foreachBatch(lambda df, _eid: rows.extend(df.collect()))
-            .option("checkpointLocation", ck)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        except Exception:
-            pass
-        exc = q.exception()
-        q.stop()
-        return exc
-
-    def test_restart_resyncs_cursor_no_loss_no_dup(self, spark):
-        path = self._setup(spark, "r13mbtr_", n_commits=4)
-        ck = tempfile.mkdtemp(prefix="r13mbtrck_")
-        one = os.path.getsize(txlog.visible_files(path)[0])
-        rows: list = []
-        assert self._drain(spark, path, ck, rows, int(one * 1.2)) is None
-        assert len(rows) == 40
-        # new commits after the stop: the restarted reader re-seeds its
-        # rate-limit cursor from the CHECKPOINT offset, so the backlog
-        # resumes exactly where it left off — nothing lost, nothing twice
-        for i in (4, 5):
-            txlog.append(
-                spark.range(i * 10, (i + 1) * 10)
-                .select(F.col("id").alias("k"), F.lit(i).cast("int").alias("b"))
-                .coalesce(1),
-                path,
-            )
-        rows2: list = []
-        assert self._drain(spark, path, ck, rows2, int(one * 1.2)) is None
-        assert sorted(r.k for r in rows2) == list(range(40, 60))
-
-    def test_floor_error_composes_with_expire_log(self, spark):
-        path = self._setup(spark, "r13mbtf_", n_commits=4)
-        ck = tempfile.mkdtemp(prefix="r13mbtfck_")
-        rows: list = []
-        assert self._drain(spark, path, ck, rows, 1) is None
-        assert len(rows) == 40  # checkpoint offset now 4
-        for i in (4, 5, 6):
-            txlog.append(
-                spark.range(i * 10, (i + 1) * 10)
-                .select(F.col("id").alias("k"), F.lit(i).cast("int").alias("b"))
-                .coalesce(1),
-                path,
-            )
-        txlog.checkpoint_now(path)
-        assert txlog.expire_log(path, retain_versions=1)
-        # the checkpointed offset (4) is below the reclaimed horizon: the
-        # byte-cap walk hits the reclaimed commit and must surface the
-        # NAMED floor error, never a silent skip
-        rows3: list = []
-        exc = self._drain(spark, path, ck, rows3, 1)
-        assert exc is not None
-        assert "expired-log horizon" in str(exc) or "earliest readable" in str(exc)
-        assert rows3 == []
-
-
 class TestDropFeature:
     """drop_feature — the protocol ladder DOWN (Delta's ALTER TABLE ...
     DROP FEATURE): verified non-use, one metadata-only downgrade commit,
