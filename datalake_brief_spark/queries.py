@@ -10553,9 +10553,10 @@ def txlog_reorg_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REORG ... APPLY (PURGE) (txlog.reorg_purge): after a DV delete,
     rewrite EXACTLY the files carrying dead positions — large files the
     small-file OPTIMIZE criterion never touches — so the table returns
-    to the zero-read-overhead pure state. Attested end-to-end: the
-    PLAIN read (not read_mor) must equal the NOT(pred) oracle — only a
-    correct purge makes the raw bytes match the logical table — and
+    to the zero-read-overhead pure state. Attested end-to-end: a raw
+    parquet scan of the visible files (which applies no deletion
+    vector) must equal the NOT(pred) oracle — only a correct purge
+    makes the raw bytes match the logical table — and
     no_dvs_left pins that the sidecar state is actually empty, not just
     masked by the MOR anti-join. The advisor channel
     (needs_optimize.reorg_recommended) and the retired-column purge are
@@ -10579,7 +10580,7 @@ def txlog_reorg_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _lakehouse_table("reorg_purge", sf_dir, build)
     no_dvs = not txlog.visible_dvs(path)
     return aggregate(
-        txlog.read(spark, path),
+        spark.read.parquet(*txlog.visible_files(path)),
         ["o_orderstatus"],
         [
             F.count(F.lit(1)).alias("n_rows"),
@@ -10888,7 +10889,7 @@ def customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
 def txlog_dv_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DV read-amplification gate (txlog.dv_metrics): sidecar-counted
     deleted rows must equal BOTH the SQL count of the deleted predicate
-    AND the plain-read−MOR-read row gap — three independent derivations
+    AND the raw-scan−read row gap — three independent derivations
     of the same number (sidecar metadata, source relation, scan
     difference) pinned to agree. The metrics themselves are metadata +
     sidecar reads only; this is the signal that schedules OPTIMIZE on a
@@ -10910,7 +10911,9 @@ def txlog_dv_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _lakehouse_table("delete_dv", sf_dir, build)
     met = txlog.dv_metrics(spark, path)
-    plain = txlog.read(spark, path).agg(F.count(F.lit(1)).alias("__p"))
+    plain = spark.read.parquet(*txlog.visible_files(path)).agg(
+        F.count(F.lit(1)).alias("__p")
+    )
     mor = txlog.read_mor(spark, path).agg(F.count(F.lit(1)).alias("__m"))
     return (
         met.crossJoin(F.broadcast(plain))

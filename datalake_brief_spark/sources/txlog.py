@@ -596,10 +596,17 @@ def _read_data(
     type_overrides: dict | None = None,
     tags: bool = False,
     row_bases: dict | None = None,
+    dvs: dict | None = None,
 ) -> DataFrame:
     """Scan an explicit list of the table's data files and return the
     LOGICAL view at ``version`` (renames aliased, dropped columns
-    projected out) — the ONE way any txlog code touches data bytes.
+    projected out) — the ONE way any txlog code touches data bytes, and
+    so the one live-row scan: with ``dvs`` (a :func:`visible_dvs` map)
+    the rows its deletion vectors delete are anti-joined out on their
+    positions; ``dvs=None`` reads the raw bytes (change records, the
+    position diffs of :func:`_snapshot_diff`, conflict probes). A file
+    list no sidecar of ``dvs`` covers stays the plain scan: no position
+    tags, no join.
     Partitioned appends keep every column INLINE in the data files and
     encode the layout in ``__part_<col>=v`` directory segments (see
     _write_data_files), so a plain file-list read is always complete: no
@@ -642,7 +649,8 @@ def _read_data(
       whether that is an error is the caller's call."""
     schema = latest_meta(path, "schema", version)
     mapping = _column_mapping(path, version)
-    position = tags or row_bases is not None
+    dead = _dv_positions(spark, path, dvs, files) if dvs else None
+    position = tags or row_bases is not None or dead is not None
     init, template = {}, False
     if schema:
         if type_overrides:
@@ -701,6 +709,7 @@ def _read_data(
                 ]
             g = g.select(*cols)
         out = g if out is None else out.unionByName(g)
+    out = _anti_join_dvs(out, dead)
     passthrough = ("__fn", "__ri") if tags else ()
     if row_bases is not None:
         base_df = spark.createDataFrame(
@@ -714,6 +723,8 @@ def _read_data(
             .drop("__base")
         )
         passthrough += (_ROWID,)
+    if position and not tags:
+        out = out.drop("__fn", "__ri")
     out = _to_logical(out, schema, mapping, passthrough)
     return out.limit(0) if template else out
 
@@ -2984,7 +2995,11 @@ def read(
 ) -> DataFrame:
     """Snapshot read (time travel with ``version=``): the plan scans exactly
     the log-resolved file list — uncommitted or vacuumed-away files can
-    never leak in.
+    never leak in — and shows live rows only: :func:`_read_data`
+    anti-joins out the positions the snapshot's deletion vectors delete,
+    broadcasting up to DV_BROADCAST_MAX_ROWS of them (a shuffle join
+    past it; dv_metrics reports which). Files no deletion vector covers
+    are the plain scan.
 
     ``merge_schema=True`` enables additive schema evolution: commits may
     carry new columns, and the snapshot unifies all visible footers (older
@@ -3005,7 +3020,10 @@ def read(
         # creation and raises PATH_NOT_FOUND itself if a file is gone —
         # only THEN do we pay the per-file existence sweep to diagnose a
         # vacuumed snapshot (never O(n_files) stat calls on every read).
-        return _read_data(spark, path, files, merge_schema, version)
+        return _read_data(
+            spark, path, files, merge_schema, version,
+            dvs=visible_dvs(path, version),
+        )
     except Exception as e:
         missing = [f for f in files if not os.path.exists(f)]
         if missing:
@@ -3122,7 +3140,9 @@ def fast_count(path: str, version: int | None = None) -> int:
     log resolution — O(live files) metadata, independent of table bytes,
     the same trick Delta/Iceberg use to answer bare counts from the
     transaction log. Files from commits that predate row-count recording
-    fall back to ONE parquet footer read each (still no data pages)."""
+    fall back to ONE parquet footer read each (still no data pages), and
+    the rows deletion vectors delete come off through
+    :func:`_dv_row_counts` (sidecar ``file_name`` columns only)."""
     _check_reader(path, version)
     live = _replay(path, version)
     if not live:
@@ -3131,7 +3151,7 @@ def fast_count(path: str, version: int | None = None) -> int:
     for rel, e in live.items():
         n = e.get("rows")
         total += _file_rows(os.path.join(path, rel)) if n is None else int(n)
-    return total
+    return total - sum(_dv_row_counts(path, visible_dvs(path, version)).values())
 
 
 def _read_skipping(
@@ -3149,7 +3169,9 @@ def _read_skipping(
     files = keep(read_v)
     if not files and not _replay(path, read_v):
         raise FileNotFoundError(f"no table at {path!r} (empty log)")
-    df = _read_data(spark, path, files, version=read_v)
+    df = _read_data(
+        spark, path, files, version=read_v, dvs=visible_dvs(path, read_v)
+    )
     for cond in residual:
         df = df.filter(cond)
     return df
@@ -3496,10 +3518,10 @@ def merge_into(
     semantics, same CDF delete+insert pairs sharing stable row ids, same
     WriteSerializable conflicts (a delete-only DV merge stores no change
     record: its deletes come from the DV state, as delete_where_dv's
-    do); readers must use :func:`read_mor` (plain
-    :func:`read` sees pre-merge rows — the delete_where_dv contract),
-    and OPTIMIZE/REORG PURGE materialize later. Default (``None``)
-    consults the table property and falls back to copy-on-write."""
+    do); every reader applies the sidecar (:func:`read`, the pruned
+    reads, ``format("txlog")``), and OPTIMIZE/REORG PURGE materialize
+    later. Default (``None``) consults the table property and falls back
+    to copy-on-write."""
     read_v = current_version(path)
     if read_v == 0:
         raise FileNotFoundError(f"no table at {path!r} (empty log)")
@@ -4290,8 +4312,7 @@ def _target_rows(
     for every ``fields`` column the files predate (an assignment to an
     evolved column must work even when every matched file predates it).
     ``tagged`` keeps the ``__fn``/``__ri`` positions a DV mutation lands."""
-    read_live = _tagged_live_frame if tagged else _read_files_with_dvs
-    df = read_live(spark, path, read_v, files)
+    df = _read_files_with_dvs(spark, path, read_v, files, tags=tagged)
     for name, dtype in fields.items():
         if name not in df.columns:
             df = df.withColumn(name, F.lit(None).cast(dtype))
@@ -5188,16 +5209,14 @@ def _snapshot_diff(
     dvs_from = visible_dvs(path, v_from)
     dvs_to = visible_dvs(path, v_to)
 
-    def _read_minus_dvs(files, dv_map):
+    def _live(files, dv_map):
         # render at schema_v's logical names but the COVERING types (the
         # narrow logged type would downcast-overflow the wide rows this
         # record exists to report)
-        df = _read_data(
+        return _read_data(
             spark, path, files, version=schema_v,
-            type_overrides=type_overrides or None, tags=True,
+            type_overrides=type_overrides or None, dvs=dv_map,
         )
-        pos = _dv_positions(spark, path, dv_map, files)
-        return _anti_join_dvs(df, pos).drop("__fn", "__ri")
 
     common = sorted(f_from & f_to)
     dv_changed = [
@@ -5208,8 +5227,8 @@ def _snapshot_diff(
     ]
     if not added and not removed and not dv_changed:
         return None
-    a = _read_minus_dvs(added, dvs_to) if added else None
-    r = _read_minus_dvs(removed, dvs_from) if removed else None
+    a = _live(added, dvs_to) if added else None
+    r = _live(removed, dvs_from) if removed else None
     if a is None and r is None:
         a = r = _read_data(spark, path, [], version=schema_v)
     elif a is None:
@@ -6022,6 +6041,38 @@ def _dv_rows_from_footers(paths: list[str]) -> int:
     return total
 
 
+def _sidecar_names(file: str) -> tuple[str, str]:
+    """What a sidecar row names the data ``file`` by: its :func:`_pos_key`,
+    or its basename in sidecars landed while that was the key."""
+    return _pos_key(file), os.path.basename(file)
+
+
+def _dv_row_counts(path: str, dvs: dict) -> dict[str, int]:
+    """Deleted rows per DV-carrying file of ``dvs`` (a :func:`visible_dvs`
+    map, rel path → sidecar groups), counted on the driver from the
+    ``file_name`` column of the groups alone — no data pages, each group
+    read once. Unlike the footer total of :func:`_dv_rows_from_footers`
+    (the upper bound that picks the anti-join strategy), a group shared
+    with a file a later rewrite removed counts only the rows of the
+    files in ``dvs``."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    tallies: dict[str, dict] = {}
+    out = {}
+    for rel, groups in dvs.items():
+        names = _sidecar_names(os.path.join(path, rel))
+        for g in groups:
+            if g not in tallies:
+                names_col = pq.read_table(g, columns=["file_name"])["file_name"]
+                vc = pc.value_counts(names_col)
+                tallies[g] = dict(
+                    zip(vc.field("values").to_pylist(), vc.field("counts").to_pylist())
+                )
+        out[rel] = sum(tallies[g].get(k, 0) for g in groups for k in names)
+    return out
+
+
 def _mor_join_strategy(n_dv_rows: int) -> str:
     """``none`` / ``broadcast`` / ``shuffle``: how a merge-on-read
     anti-join builds ``n_dv_rows`` DV positions (DV_BROADCAST_MAX_ROWS)."""
@@ -6031,26 +6082,20 @@ def _mor_join_strategy(n_dv_rows: int) -> str:
 
 
 def _dv_positions(
-    spark: SparkSession, path: str, dvs: dict, files: list[str] | None = None
+    spark: SparkSession, path: str, dvs: dict, files: list[str]
 ) -> DataFrame | None:
     """The ``(__fn, __ri)`` positions of the sidecars in ``dvs`` (a
-    :func:`visible_dvs` map) that cover ``files`` (absolute; all files
-    when None), or None when no sidecar does. The ONE reader of DV
-    positions for an anti-join: the frame comes broadcast-hinted while
-    the footer row total is within DV_BROADCAST_MAX_ROWS and unhinted
-    past it, so every MOR read and mutation picks its build side the
-    same, metadata-only way."""
-    rels = None if files is None else {os.path.relpath(f, path) for f in files}
-    dv_paths = sorted(
-        {p for rel, ps in dvs.items() if rels is None or rel in rels for p in ps}
-    )
+    :func:`visible_dvs` map) that cover ``files`` (absolute), or None
+    when no sidecar does. The ONE reader of DV positions for an
+    anti-join: the frame comes broadcast-hinted while the footer row
+    total is within DV_BROADCAST_MAX_ROWS and unhinted past it, so every
+    read and mutation picks its build side the same, metadata-only way."""
+    rels = {os.path.relpath(f, path) for f in files} & set(dvs)
+    dv_paths = sorted({p for rel in rels for p in dvs[rel]})
     if not dv_paths:
         return None
     pos = spark.read.parquet(*dv_paths).select(
-        _sidecar_key(path, [r for r in dvs if rels is None or r in rels]).alias(
-            "__fn"
-        ),
-        F.col("row_index").alias("__ri"),
+        _sidecar_key(path, rels).alias("__fn"), F.col("row_index").alias("__ri")
     )
     if _mor_join_strategy(_dv_rows_from_footers(dv_paths)) != "shuffle":
         return F.broadcast(pos)
@@ -6077,7 +6122,11 @@ def _anti_join_dvs(df: DataFrame, pos: DataFrame | None) -> DataFrame:
 
 
 def _read_files_with_dvs(
-    spark: SparkSession, path: str, read_v: int, files: list[str]
+    spark: SparkSession,
+    path: str,
+    read_v: int,
+    files: list[str],
+    tags: bool = False,
 ) -> DataFrame:
     """Read specific live data files with their deletion vectors applied —
     the ONLY correct input for any rewrite (CoW DELETE/UPDATE,
@@ -6087,43 +6136,27 @@ def _read_files_with_dvs(
     evolution reason. Returns the LOGICAL view (rewriters re-translate
     with _to_physical before landing files) — which also means any
     rewrite lazily PURGES dropped-column bytes from the files it
-    touches, the REORG PURGE effect.
+    touches, the REORG PURGE effect. ``tags=True`` keeps the
+    ``__fn``/``__ri`` positions, the input of merge-on-read mutations,
+    which land live hit positions as sidecar rows: an already-dead row
+    can never be re-deleted (or resurrected).
 
     On a row-tracking table the view additionally carries each row's
     stable id in the reserved ``__row_id`` PHYSICAL column, so every
     rewrite that lands this frame MATERIALIZES the ids into its new
     files — preservation happens by construction, no rewrite path can
     forget it."""
-    rels = {os.path.relpath(f, path) for f in files}
-    if not row_tracking_enabled(path, read_v) and rels.isdisjoint(
-        visible_dvs(path, read_v)
-    ):
-        # nothing to tag: the plain scan
-        return _read_data(spark, path, files, merge_schema=True, version=read_v)
-    return _tagged_live_frame(spark, path, read_v, files).drop("__fn", "__ri")
-
-
-def _tagged_live_frame(
-    spark: SparkSession, path: str, read_v: int, files: list[str]
-) -> DataFrame:
-    """Like :func:`_read_files_with_dvs` but KEEPING the position tags
-    (``__fn`` file key / ``__ri`` row index) — the input for
-    merge-on-read mutations, which land the live hit positions as
-    deletion-vector sidecar rows instead of rewriting files. Existing DV
-    positions of ``files`` are anti-joined out here, so a caller can
-    never re-delete (or resurrect) an already-dead row. On a
-    row-tracking table the stable id rides in ``__row_id`` like the CoW
-    twin's frame."""
     tracking = row_tracking_enabled(path, read_v)
-    tagged = _read_data(
-        spark, path, files, merge_schema=True, version=read_v, tags=True,
+    df = _read_data(
+        spark, path, files, merge_schema=True, version=read_v, tags=tags,
         row_bases=visible_row_bases(path, read_v) if tracking else None,
+        dvs=visible_dvs(path, read_v),
     )
     if tracking:
         # a row with NEITHER id source sits in a file written by a
         # pre-feature writer: fail loudly, never return a wrong id
         rid = F.col(_ROWID)
-        tagged = tagged.withColumn(
+        df = df.withColumn(
             _ROWID,
             F.when(
                 rid.isNull(),
@@ -6137,8 +6170,7 @@ def _tagged_live_frame(
                 ).cast("long"),
             ).otherwise(rid),
         )
-    pos = _dv_positions(spark, path, visible_dvs(path, read_v), files)
-    return _anti_join_dvs(tagged, pos)
+    return df
 
 
 def _land_dv_positions(
@@ -6185,9 +6217,10 @@ def delete_where_dv(
     so a repeated delete is a no-op commit-wise, and SQL three-valued
     semantics hold (NULL-predicate rows are never matched). The sidecar
     write is distributed (never a driver collect of row ids); the commit
-    is metadata-only. Readers must use :func:`read_mor`; plain
-    :func:`read` (and footer-based fast_count) see pre-delete rows by
-    design — the same contract as Delta readers without DV support.
+    is metadata-only. Every reader applies the sidecar: :func:`read`,
+    the pruned reads and ``format("txlog")`` drop the deleted rows
+    inside :func:`_read_data` or the source's partition read, and
+    :func:`fast_count` subtracts them (:func:`_dv_row_counts`).
 
     Returns the new version (current version when nothing matched). The
     commit stores no change record: the change feed reads its deletes
@@ -6201,32 +6234,9 @@ def delete_where_dv(
     )
 
 
-def read_mor(
-    spark: SparkSession,
-    path: str,
-    version: int | None = None,
-    merge_schema: bool = False,
-) -> DataFrame:
-    """Merge-on-read snapshot: the plain snapshot scan anti-joined against
-    the union of the visible deletion-vector sidecars on
-    (file key, row index). With no live DVs this IS
-    :func:`read` — zero overhead on pure-CoW tables. The anti-join
-    build side is the DELETED-ROW COUNT, not the table size; up to
-    DV_BROADCAST_MAX_ROWS positions it broadcasts and MOR read cost is
-    scan + a broadcast hash anti-join at any table size; above it the
-    build switches to a shuffle anti-join — a table that has accumulated
-    hundreds of MB of positions must not materialize them whole on every
-    executor (dv_metrics surfaces the chosen strategy and is the
-    OPTIMIZE trigger). The row total comes from sidecar parquet footers,
-    so strategy choice is metadata-only. Time travel works unchanged: a
-    version below the delete resolves no DVs."""
-    _check_reader(path, version)
-    dvs = visible_dvs(path, version)
-    if not dvs:
-        return read(spark, path, version, merge_schema)
-    files = visible_files(path, version)
-    df = _read_data(spark, path, files, merge_schema, version=version, tags=True)
-    return _anti_join_dvs(df, _dv_positions(spark, path, dvs)).drop("__fn", "__ri")
+#: the merge-on-read snapshot is the snapshot: :func:`read` applies the
+#: deletion vectors (the name stays for existing callers)
+read_mor = read
 
 
 def update_where_dv(
@@ -6241,7 +6251,7 @@ def update_where_dv(
     """Merge-on-read ``UPDATE ... SET`` — the mutation that makes a
     1%-row update cost 1% of the data instead of every touched file: in
     ONE atomic commit, the matched rows' POSITIONS land in a deletion-
-    vector sidecar (hiding the old versions from :func:`read_mor`) and
+    vector sidecar (hiding the old versions from every reader) and
     ONLY the rewritten rows append as a new file group. This is the
     Delta/Iceberg DV-backed UPDATE shape (delete-vector old row + append
     new row); :func:`update_where` remains the copy-on-write
@@ -6256,10 +6266,11 @@ def update_where_dv(
     point predicates) bounds the scan. SQL three-valued semantics hold
     (NULL-predicate rows untouched), already-DV-dead positions are never
     re-updated or resurrected (anti-join against the live DV union), and
-    a repeated no-match call is a commit-free no-op. Plain :func:`read`
-    sees old AND new row versions by design — the same contract as
-    delete_where_dv. On a row-tracking table each rewritten row keeps its
-    stable id, and the change record pairs pre- and post-image under it.
+    a repeated no-match call is a commit-free no-op. Readers see only
+    the new row versions, as after delete_where_dv (the raw bytes hold
+    both until OPTIMIZE/REORG PURGE). On a row-tracking table each
+    rewritten row keeps its stable id, and the change record pairs pre-
+    and post-image under it.
     Returns the new version."""
     read_v = current_version(path)
     if read_v == 0:
@@ -6272,10 +6283,12 @@ def update_where_dv(
 
 def dv_metrics(spark: SparkSession, path: str, version: int | None = None):
     """Deletion-vector health at a snapshot (metadata + sidecars only, no
-    data pages): total DV'd rows, files carrying DVs, the worst
-    single-file DV count, and the MOR anti-join strategy those numbers
-    select (``broadcast`` up to DV_BROADCAST_MAX_ROWS positions,
-    ``shuffle`` past it) — the read-amplification signals that say when
+    data pages): deleted rows of the visible files, the visible files
+    carrying them, the worst single-file count (all from
+    :func:`_dv_row_counts`), and the anti-join strategy a read picks
+    from the sidecar footers' row total (``broadcast`` up to
+    DV_BROADCAST_MAX_ROWS positions, ``shuffle`` past it) — the
+    read-amplification signals that say when
     to OPTIMIZE a merge-on-read table (every MOR read anti-joins
     n_dv_rows; a file with a huge DV share is mostly-dead bytes; a
     shuffle-regime table is overdue). Returns a 1-row DataFrame
@@ -6283,25 +6296,13 @@ def dv_metrics(spark: SparkSession, path: str, version: int | None = None):
     mor_join_strategy)."""
     n_files = len(visible_files(path, version))
     dvs = visible_dvs(path, version)
-    dv_paths = sorted({p for ps in dvs.values() for p in ps})
-    if not dv_paths:
-        return spark.createDataFrame(
-            [(n_files, 0, 0, 0, "none")],
-            "n_files long, n_files_with_dv long, n_dv_rows long, "
-            "max_file_dv_rows long, mor_join_strategy string",
-        )
-    strategy = _mor_join_strategy(_dv_rows_from_footers(dv_paths))
-    per = (
-        spark.read.parquet(*dv_paths)
-        .groupBy(_sidecar_key(path, dvs))
-        .agg(F.count(F.lit(1)).alias("__n"))
-    )
-    return per.agg(
-        F.lit(n_files).cast("long").alias("n_files"),
-        F.count(F.lit(1)).cast("long").alias("n_files_with_dv"),
-        F.sum("__n").cast("long").alias("n_dv_rows"),
-        F.max("__n").cast("long").alias("max_file_dv_rows"),
-        F.lit(strategy).alias("mor_join_strategy"),
+    per = [n for n in _dv_row_counts(path, dvs).values() if n]
+    n_bound = _dv_rows_from_footers(sorted({p for ps in dvs.values() for p in ps}))
+    return spark.createDataFrame(
+        [(n_files, len(per), sum(per), max(per, default=0),
+          _mor_join_strategy(n_bound))],
+        "n_files long, n_files_with_dv long, n_dv_rows long, "
+        "max_file_dv_rows long, mor_join_strategy string",
     )
 
 
@@ -6317,29 +6318,20 @@ def reorg_purge(
     criterion never touches a LARGE file that accumulated a big DV, yet
     every merge-on-read scan pays its dead positions forever;
     ``needs_optimize.reorg_recommended`` trips when the accumulated DVs
-    would push :func:`read_mor` into the shuffle regime. Candidate
+    would push a read's anti-join into the shuffle regime. Candidate
     selection is metadata-only (sidecar per-file counts + parquet footer
-    schemas). After the purge a plain :func:`read` equals
-    :func:`read_mor` for the rewritten span and the dead column bytes
-    are gone. Returns the new version (current one when nothing needs
+    schemas). After the purge the raw bytes of the rewritten span equal
+    what :func:`read` shows, and the dead column bytes are gone. Returns the new version (current one when nothing needs
     purging)."""
     read_v = current_version(path)
     if read_v == 0:
         return 0
     all_files = visible_files(path, read_v)
-    by_key = {_pos_key(p): p for p in all_files}
-    targets: set[str] = set()
-    dvs = visible_dvs(path, read_v)
-    dv_paths = sorted({p for ps in dvs.values() for p in ps})
-    if dv_paths:
-        per = (
-            spark.read.parquet(*dv_paths)
-            .groupBy(_sidecar_key(path, dvs).alias("__fn"))
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") >= min_file_dv_rows)
-            .collect()
-        )  # driver-scale: ≤ one row per DV-carrying file
-        targets.update(by_key[r["__fn"]] for r in per if r["__fn"] in by_key)
+    targets = {
+        os.path.join(path, rel)
+        for rel, n in _dv_row_counts(path, visible_dvs(path, read_v)).items()
+        if n >= min_file_dv_rows
+    }
     # files still carrying retired physical column bytes (footer-only)
     schema = latest_meta(path, "schema", read_v)
     if schema is not None:
@@ -6643,7 +6635,7 @@ def read_with_row_ids(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
     """Snapshot read with the stable ``row_id`` column (merge-on-read:
-    deletion vectors applied, like :func:`read_mor`). The id is unique
+    deletion vectors applied, like :func:`read`). The id is unique
     across the table's whole history — deleted rows' ids are never
     recycled (the watermark only grows) — which is what makes it usable
     as a join key for external enrichment, incremental ML feature

@@ -3,8 +3,10 @@
 API — the Delta-streaming-source story for the commit-log table.
 
 Batch read plans over the log-resolved snapshot at ``option("version")``
-(the tip by default): schema, column-mapping check and initial defaults
-all resolve at that version, the same contract as ``txlog.read``.
+(the tip by default): schema, column-mapping check, initial defaults and
+deletion vectors all resolve at that version, the same contract as
+``txlog.read`` — each file's partition carries its sidecar groups and
+drops the rows they delete, so the format shows live rows only.
 
 The STREAMING read is ONE reader (:class:`_TxlogStreamReader`) that
 treats the log as the offset axis: each micro-batch covers the commits in
@@ -385,7 +387,7 @@ class _FilePartition(InputPartition):
         ddl_types=None,
         defaults=None,
         row_base=None,
-        dv_group=None,
+        dv_groups=None,
         change_type=None,
         version=None,
     ):
@@ -403,9 +405,10 @@ class _FilePartition(InputPartition):
         #: base row id for this file (row-tracking streams): executor-side
         #: row_id = base + position, no lookup table shipped per row
         self.row_base = row_base
-        #: deletion-vector sidecar group (change feed): read only the
-        #: positions it names for this file — the deleted rows
-        self.dv_group = dv_group
+        #: deletion-vector sidecar groups naming positions of this file:
+        #: a change-feed delete partition reads only those rows (the
+        #: deleted ones), any other partition drops them
+        self.dv_groups = dv_groups
         #: change-feed partitions only: the commit version, and the
         #: ``_change_type`` of every row (None → a stored change file,
         #: whose rows carry their own)
@@ -417,8 +420,9 @@ def _read_partition(p: _FilePartition):
     """Executor-side read of one partition → Arrow RecordBatches in the
     source's column order, in four steps:
 
-    1. a DV delete partition TAKEs the row positions its sidecar group
-       names for the file — position-exact, no diffing;
+    1. ``dv_groups`` name row positions of the file: a change-feed delete
+       partition keeps those rows (position-exact, no diffing), any other
+       partition the rest;
     2. every column selects file bytes by PHYSICAL name, emits under the
        logical name and casts to its DECLARED type (widened tables' mixed
        physical types render uniformly); a column the file predates
@@ -434,18 +438,17 @@ def _read_partition(p: _FilePartition):
     import pyarrow.parquet as pq
 
     table = pq.read_table(p.abs_path)
-    if p.dv_group is not None:
-        dv = pq.read_table(p.dv_group)
-        # a sidecar names its files by position key; older ones by basename
-        keys = pa.array(
-            [txlog._pos_key(p.abs_path), os.path.basename(p.abs_path)]  # noqa: SLF001
+    if p.dv_groups:
+        names = pa.array(txlog._sidecar_names(p.abs_path))  # noqa: SLF001
+        hit = [
+            dv.filter(pc.is_in(dv["file_name"], value_set=names))["row_index"]
+            for dv in map(pq.read_table, p.dv_groups)
+        ]
+        dead = pc.is_in(
+            pa.array(range(table.num_rows), pa.int64()),
+            value_set=pa.chunked_array(hit, pa.int64()).combine_chunks(),
         )
-        idx = (
-            dv.filter(pc.is_in(dv.column("file_name"), value_set=keys))
-            .column("row_index")
-            .to_pylist()
-        )
-        table = table.take(sorted(idx))
+        table = table.filter(dead if p.change_type == "delete" else pc.invert(dead))
     n = table.num_rows
     phys = p.physical or p.columns
     types = p.ddl_types or [None] * len(phys)
@@ -488,9 +491,11 @@ class _TxlogBatchReader(DataSourceReader):
 
     def partitions(self):
         files = txlog.visible_files(self.path, self.version)
+        dvs = txlog.visible_dvs(self.path, self.version)
         return [
             _FilePartition(
-                f, self.columns, ddl_types=self.ddl_types, defaults=self.defaults
+                f, self.columns, ddl_types=self.ddl_types, defaults=self.defaults,
+                dv_groups=dvs.get(os.path.relpath(f, self.path)),
             )
             for f in files
         ] or [_FilePartition("", self.columns)]
@@ -710,7 +715,7 @@ class _TxlogStreamReader(DataSourceStreamReader):
         return [
             self._part(
                 rel,
-                dv_group=os.path.join(self.path, group),
+                dv_groups=[os.path.join(self.path, group)],
                 change_type="delete",
                 version=v,
             )

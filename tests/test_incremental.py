@@ -77,6 +77,20 @@ class TestIncrementalAggregate:
         }
         assert got == {"a": (2, 3.0)}
 
+    def test_first_refresh_of_dv_source_skips_deleted_rows(self, spark, tmp_path):
+        src, mv = str(tmp_path / "src"), str(tmp_path / "mv")
+        rows = spark.range(10).select(
+            "id", (F.col("id") % 2).alias("k"), F.lit(4.0).alias("v")
+        )
+        txlog.append(rows, src)
+        txlog.delete_where_dv(spark, src, "id = 0")
+        incremental.refresh(spark, src, mv, ["k"], ["v"])
+        got = {
+            r.k: (r.n, r.v)
+            for r in incremental.read_aggregate(spark, mv, ["v"]).collect()
+        }
+        assert got == {0: (4, 16.0), 1: (5, 20.0)}
+
 
 class TestStreamingMergeSink:
     @pytest.fixture()

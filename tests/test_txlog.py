@@ -2805,8 +2805,8 @@ class TestDeletionVectors:
         mor = txlog.read_mor(spark, table)
         assert mor.filter("k = 3").count() == 0
         assert mor.count() == 100 - 14
-        # plain read still sees raw bytes — the documented non-DV-reader view
-        assert txlog.read(spark, table).count() == 100
+        # the raw bytes still hold the deleted rows: nothing was rewritten
+        assert txlog._read_data(spark, table, txlog.visible_files(table)).count() == 100
 
     def test_time_travel_below_delete(self, spark, table):
         txlog.delete_where_dv(spark, table, "k = 3")
@@ -2849,9 +2849,10 @@ class TestDeletionVectors:
         mor = txlog.read_mor(spark, table)
         assert mor.filter("k = 3").count() == 0
         assert mor.filter("k = 99").count() == 15
-        # optimize materializes the DVs away: plain read == MOR afterwards
+        # optimize materializes the DVs away: raw bytes == MOR afterwards
         txlog.optimize(spark, table, target_file_bytes=10**9, small_file_bytes=10**9)
-        assert txlog.read(spark, table).count() == txlog.read_mor(spark, table).count() == 86
+        raw = txlog._read_data(spark, table, txlog.visible_files(table))
+        assert raw.count() == txlog.read_mor(spark, table).count() == 86
 
     def test_checkpoint_carries_dvs(self, spark, tmp_path):
         t = str(tmp_path / "dv_ckpt")
@@ -2917,8 +2918,9 @@ class TestDeletionVectors:
         removed = txlog.vacuum(table, retain_versions=1)
         assert any(r.startswith("_dv/") for r in removed)
         assert not _glob.glob(_os.path.join(table, "_dv", "*", "*.parquet"))
-        # live table still reads fine (MOR == plain, no DVs left)
-        assert txlog.read_mor(spark, table).count() == txlog.read(spark, table).count()
+        # live table still reads fine (MOR == raw bytes, no DVs left)
+        raw = txlog._read_data(spark, table, txlog.visible_files(table))
+        assert txlog.read_mor(spark, table).count() == raw.count()
 
     def test_vacuum_keeps_referenced_dv_sidecars(self, spark, table):
         import glob as _glob
@@ -2955,7 +2957,7 @@ class TestDeletionVectors:
         feed = txlog.table_changes(spark, table, 1)
         assert feed.filter("_change_type = 'delete'").count() == 14
         txlog.reorg_purge(spark, table)
-        assert txlog.read(spark, table).count() == 86
+        assert txlog._read_data(spark, table, txlog.visible_files(table)).count() == 86
 
 
 class TestDeletionVectorsRound8:
@@ -3055,8 +3057,8 @@ class TestDeletionVectorsRound8:
         after = set(txlog.visible_files(table))
         assert before <= after, "update_dv must not remove any file"
         assert len(after) > len(before), "rewritten rows must append"
-        # plain read sees BOTH row versions (MOR contract)
-        assert txlog.read(spark, table).count() == 100 + 14
+        # the raw bytes hold BOTH row versions (MOR contract)
+        assert txlog._read_data(spark, table, txlog.visible_files(table)).count() == 100 + 14
         # MOR view equals the CoW twin's result on an identical table
         twin = str(tmp_path / "dv8_twin")
         df = spark.range(100).select(F.col("id"), (F.col("id") % 7).alias("k"))
@@ -3274,6 +3276,134 @@ class TestDeletionVectorsRound8:
         assert landed() == before_files, "orphan data or change-file group"
         after_rows = sorted(map(tuple, txlog.read_mor(spark, table).collect()))
         assert after_rows == before_rows
+
+
+_DV_EDITS = {
+    # name → (DV edit, its copy-on-write twin, partition_by)
+    "delete": (
+        lambda spark, t: txlog.delete_where_dv(spark, t, "id IN (5, 6, 13)"),
+        lambda spark, t: txlog.delete_where(spark, t, "id IN (5, 6, 13)"),
+        None,
+    ),
+    "update": (
+        lambda spark, t: txlog.update_where_dv(
+            spark, t, "id IN (5, 6, 13)", {"v": F.col("v") + 100}
+        ),
+        lambda spark, t: txlog.update_where(
+            spark, t, "id IN (5, 6, 13)", {"v": F.col("v") + 100}
+        ),
+        None,
+    ),
+    "merge": (
+        lambda spark, t: _live_merge(spark, t, use_dvs=True),
+        lambda spark, t: _live_merge(spark, t, use_dvs=False),
+        None,
+    ),
+    "partitioned_delete": (
+        lambda spark, t: txlog.delete_where_dv(spark, t, "id IN (5, 6, 13)"),
+        lambda spark, t: txlog.delete_where(spark, t, "id IN (5, 6, 13)"),
+        ["k"],
+    ),
+}
+
+
+def _live_merge(spark, t, use_dvs):
+    src = spark.createDataFrame(
+        [(6, 2, 106.0, 6), (13, 1, 113.0, 13), (100, 0, 100.0, 100)],
+        "id long, k long, v double, n long",
+    )
+    return txlog.merge_into(
+        spark, t, src, ["id"], when_matched=[("update", "*")], use_dvs=use_dvs
+    )
+
+
+_LIVE_READERS = {
+    "read": lambda spark, t, v: txlog.read(spark, t),
+    "read_version": lambda spark, t, v: txlog.read(spark, t, version=v),
+    "read_at_timestamp": lambda spark, t, v: txlog.read_at_timestamp(
+        spark, t, txlog._commit_ts(t, v)
+    ),
+    "read_pruned": lambda spark, t, v: txlog.read_pruned(spark, t, "id", 0, 20),
+    "read_pruned_multi": lambda spark, t, v: txlog.read_pruned_multi(
+        spark, t, {"id": (0, 20), "n": (0, 30)}
+    ),
+    "read_point": lambda spark, t, v: txlog.read_point(spark, t, "id", 6),
+    "read_pruned_nulls": lambda spark, t, v: txlog.read_pruned_nulls(
+        spark, t, "n", is_null=False
+    ),
+    "format": lambda spark, t, v: spark.read.format("txlog").option("path", t).load(),
+}
+
+
+class TestLiveRowReaders:
+    """Every txlog reader shows live rows only: on a table a deletion
+    vector edited, each returns what it returns on the same table edited
+    copy-on-write, where no deletion vector exists."""
+
+    @pytest.fixture(scope="class")
+    def tables(self, spark, tmp_path_factory):
+        from datalake_brief_spark.streaming.source import register_txlog_source
+
+        register_txlog_source(spark)
+        base = spark.range(40).select(
+            "id",
+            (F.col("id") % 3).alias("k"),
+            F.col("id").cast("double").alias("v"),
+            F.when(F.col("id") % 5 != 0, F.col("id")).alias("n"),
+        ).repartitionByRange(4, "id")
+        out = {}
+        for name, (dv_edit, cow_edit, part) in _DV_EDITS.items():
+            pair = []
+            for edit in (dv_edit, cow_edit):
+                t = str(tmp_path_factory.mktemp(f"live_{name}") / "t")
+                txlog.append(
+                    base, t, stats_cols=["id", "n"], bloom_cols=["id"],
+                    partition_by=part,
+                )
+                pair.append((t, edit(spark, t)))
+            assert txlog.visible_dvs(pair[0][0]) and not txlog.visible_dvs(pair[1][0])
+            out[name] = pair
+        return out
+
+    @pytest.mark.parametrize("table", list(_DV_EDITS))
+    @pytest.mark.parametrize("reader", list(_LIVE_READERS))
+    def test_reader_equals_cow_twin(self, spark, tables, table, reader):
+        (dv, dv_v), (cow, cow_v) = tables[table]
+        rows = [
+            sorted(map(tuple, _LIVE_READERS[reader](spark, t, v).collect()), key=repr)
+            for t, v in ((dv, dv_v), (cow, cow_v))
+        ]
+        assert rows[0] == rows[1]
+
+    @pytest.mark.parametrize("table", list(_DV_EDITS))
+    def test_pruned_read_of_dv_free_files_plans_no_join(self, spark, tables, table):
+        (dv, dv_v), _ = tables[table]
+        scanned = txlog._prune_candidates(dv, dv_v, {"id": (30, 39)})
+        assert scanned and not {os.path.relpath(f, dv) for f in scanned} & set(
+            txlog.visible_dvs(dv)
+        )
+        df = txlog.read_pruned(spark, dv, "id", 30, 39)
+        assert "Join" not in df._jdf.queryExecution().optimizedPlan().toString()
+        assert sorted(r.id for r in df.collect()) == list(range(30, 40))
+
+    def test_counts_skip_dv_deleted_rows(self, spark, tmp_path):
+        t = str(tmp_path / "dv_count")
+        txlog.append(spark.range(1, 7).coalesce(1), t)
+        txlog.delete_where_dv(spark, t, "id = 2")
+        assert txlog.fast_count(t) == txlog.describe_detail(t)["num_rows"] == 5
+        assert txlog.fast_count(t, version=1) == 6
+
+    def test_dv_metrics_count_visible_files_only(self, spark, tmp_path):
+        """Two files share one sidecar group; a copy-on-write rewrite of
+        one of them leaves the group in the log, but only the surviving
+        file's positions still delete anything."""
+        t = str(tmp_path / "dv_metrics_cow")
+        txlog.append(spark.range(100).repartitionByRange(2, "id"), t)
+        txlog.delete_where_dv(spark, t, "id % 10 = 5")
+        txlog.delete_where(spark, t, "id = 0")
+        m = txlog.dv_metrics(spark, t).first()
+        assert (m.n_files_with_dv, m.n_dv_rows, m.max_file_dv_rows) == (1, 5, 5)
+        assert txlog.fast_count(t) == txlog.read(spark, t).count() == 89
 
 
 class TestColumnMapping:
