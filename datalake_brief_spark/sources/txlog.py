@@ -230,36 +230,43 @@ def _expired_read_error(path: str, version: int) -> "FileNotFoundError":
     )
 
 
-def _replay(path: str, version: int | None = None) -> dict:
-    """Resolve the live-file state at ``version`` (None → latest): rel path
-    → {"stats": ..., "blooms": ...}. Starts from the newest checkpoint at
-    or below the target and replays only the commits AFTER it — O(tail),
-    not O(versions); without a checkpoint it replays the full log. The
-    single resolution primitive behind visible_files/visible_stats/
-    visible_blooms, so every reader benefits identically.
+def _log_segment(
+    path: str, version: int | None = None
+) -> tuple[int, dict | None, list[dict]]:
+    """The one log walk: which checkpoint marker and which commits make up
+    ``version`` (None → latest). Returns ``(cp_v, marker, tail)`` — the
+    newest checkpoint at or below the target (0 and None when none
+    anchors it; the marker is its parsed JSON, multi-part parquet parts
+    are NOT loaded) and the commit records ``cp_v+1..version`` in order.
+    Every "what is version v" question — the live files
+    (:func:`_replay`) and the table metadata (:func:`_meta_at`) — is
+    answered from one segment, as Delta builds one snapshot from the
+    newest checkpoint plus the commits after it.
 
     Resolution never lists the log directory when the ``_last_checkpoint``
-    pointer applies (pointer checkpoint + probed dense tail — the Delta
-    design; see ``_LAST_CP``); a pointer that is absent, torn, above the
-    requested time-travel version, or pointing at a reclaimed checkpoint
-    falls back to the listing path. Versions below an ``expire_log``
+    pointer applies (pointer checkpoint + the dense tail read until the
+    first miss — the Delta design; see ``_LAST_CP``); a pointer that is
+    absent, torn, above the requested time-travel version, or pointing at
+    a reclaimed checkpoint falls back to the listing path, which checks
+    the commits it applies are dense. Versions below an ``expire_log``
     horizon fail deterministically, naming the earliest readable one."""
+    store = logstore.for_path(path)
     ptr = _pointer_version(path)
     if ptr is not None and (version is None or ptr <= version):
         try:
-            live = _load_checkpoint(path, ptr)
-        except (FileNotFoundError, ValueError, KeyError):
-            live = None  # stale/torn pointer → listing path
-        if live is not None:
+            marker = json.loads(store.read_text(_checkpoint_path(path, ptr)))
+        except (FileNotFoundError, ValueError):
+            marker = None  # stale/torn pointer → listing path
+        if isinstance(marker, dict) and ("files" in marker or "parts" in marker):
             # read-until-miss instead of exists-probe + read: halves the
             # per-tail-commit IO on the hottest path in the engine
+            tail = []
             v = ptr + 1
             while version is None or v <= version:
                 try:
-                    commit = _load_commit(path, v)
+                    tail.append(_load_commit(path, v))
                 except FileNotFoundError:
                     break
-                _apply_commit(live, commit)
                 v += 1
             if version is not None and v <= version:
                 # the tail above the pointer is dense by construction
@@ -270,13 +277,13 @@ def _replay(path: str, version: int | None = None) -> dict:
                     f"version {version} is beyond the latest commit "
                     f"({v - 1}) of table at {path!r}"
                 )
-            return live
-    live = {}
+            return ptr, marker, tail
+    marker, tail = None, []
     start_after = 0
     cps = [v for v in _checkpoint_versions(path) if version is None or v <= version]
     if cps:
         start_after = max(cps)
-        live = _load_checkpoint(path, start_after)
+        marker = json.loads(store.read_text(_checkpoint_path(path, start_after)))
     vs = _versions(path)
     if start_after == 0 and vs and vs[0] > 1:
         # No checkpoint anchors this resolution and the commit sequence
@@ -307,7 +314,7 @@ def _replay(path: str, version: int | None = None) -> dict:
         elif v != expect:
             raise _expired_read_error(path, version if version is not None else v)
         expect = v + 1
-        _apply_commit(live, _load_commit(path, v))
+        tail.append(_load_commit(path, v))
     if version is not None and version > start_after:
         # Completeness check for ANCHORED reads: the loop must have
         # applied the dense run start_after+1..version. A crash-mid-
@@ -324,7 +331,46 @@ def _replay(path: str, version: int | None = None) -> dict:
                     f"({vs[-1]}) of table at {path!r}"
                 )
             raise _expired_read_error(path, version)
+    return start_after, marker, tail
+
+
+def _replay(path: str, version: int | None = None) -> dict:
+    """The live-file state at ``version`` (None → latest): rel path →
+    {"stats", "blooms", "rows", "dvs", "base"} — the segment's checkpoint
+    files (see :func:`_log_segment`) with its tail commits applied, so
+    O(tail), not O(versions). The one file-list resolution behind
+    visible_files/visible_stats/visible_blooms/visible_dvs."""
+    return _segment_files(path, *_log_segment(path, version))
+
+
+def _segment_files(path: str, cp_v: int, marker: dict | None, tail: list) -> dict:
+    live = _load_checkpoint(path, cp_v, marker) if marker is not None else {}
+    for commit in tail:
+        _apply_commit(live, commit)
     return live
+
+
+def _meta_at(path: str, version: int | None = None) -> dict:
+    """Every commit-meta key in force at ``version`` (None → latest),
+    latest-wins, from the same segment as the file list: the marker's
+    ``meta_latest`` fold with the tail commits' ``meta`` applied in
+    order. Reads only the marker JSON, never multi-part parquet parts.
+    A legacy marker without the fold folds the log from version 1."""
+    return _segment_meta(path, *_log_segment(path, version))
+
+
+def _segment_meta(path: str, cp_v: int, marker: dict | None, tail: list) -> dict:
+    meta: dict = {}
+    if marker is not None and "meta_latest" in marker:
+        meta = dict(marker["meta_latest"])
+    elif marker is not None:
+        try:
+            tail = [_load_commit(path, v) for v in range(1, cp_v + 1)] + tail
+        except FileNotFoundError:
+            raise _expired_read_error(path, cp_v) from None
+    for commit in tail:
+        meta.update(commit.get("meta", {}))
+    return meta
 
 
 # Past this many live files a checkpoint spills from one JSON blob to
@@ -377,12 +423,14 @@ def _checkpoint_part_tables(live: dict):
         )
 
 
-def _load_checkpoint(path: str, version: int) -> dict:
-    """Resolve a checkpoint's live-state dict: inline JSON for small
-    tables, else the marker names its parquet part count and the parts
-    are read columnar (never one giant JSON parse)."""
+def _load_checkpoint(path: str, version: int, cp: dict | None = None) -> dict:
+    """Resolve a checkpoint's live-state dict from its marker ``cp`` (read
+    when not given): inline JSON for small tables, else the marker names
+    its parquet part count and the parts are read columnar (never one
+    giant JSON parse)."""
     store = logstore.for_path(path)
-    cp = json.loads(store.read_text(_checkpoint_path(path, version)))
+    if cp is None:
+        cp = json.loads(store.read_text(_checkpoint_path(path, version)))
     if "parts" not in cp:
         return {
             rel: {
@@ -457,29 +505,15 @@ def checkpoint_now(path: str) -> int:
 
 
 def _write_checkpoint(path: str, version: int) -> None:
+    """Consolidate version ``version`` into a checkpoint: from one log
+    walk, its live files (as :func:`_replay`) and, as ``meta_latest``, its
+    commit meta (as :func:`_meta_at` — the Delta checkpoints-carry-
+    metadata design), so that both resolve in O(tail) from here on. See
+    :func:`_maybe_checkpoint` for the single-JSON / multi-part layouts."""
     store = logstore.for_path(path)
-    live = _replay(path, version)
-    # Fold the commit-meta state in too (the Delta checkpoints-carry-
-    # metadata design): latest_meta otherwise walks commit JSONs
-    # newest-first until a commit records the key — O(versions) on a
-    # table whose recent commits are all mutations that re-record no
-    # schema/mapping. With meta_latest in the marker, resolution is
-    # O(tail) like the file list. Folding starts from the previous
-    # checkpoint's fold when one exists (same O(tail) write cost).
-    meta_latest: dict = {}
-    prior = [v for v in _checkpoint_versions(path) if v < version]
-    start_after = 0
-    if prior:
-        start_after = max(prior)
-        cp = json.loads(store.read_text(_checkpoint_path(path, start_after)))
-        meta_latest = dict(cp.get("meta_latest") or {})
-        if "meta_latest" not in cp:
-            start_after = 0  # legacy checkpoint: fold the whole log once
-            meta_latest = {}
-    for v in _versions(path):
-        if v <= start_after or v > version:
-            continue
-        meta_latest.update(_load_commit(path, v).get("meta", {}))
+    segment = _log_segment(path, version)
+    live = _segment_files(path, *segment)
+    meta_latest = _segment_meta(path, *segment)
     if len(live) < _CHECKPOINT_MULTIPART_MIN_FILES:
         payload = json.dumps(
             {"version": version, "files": live, "meta_latest": meta_latest}
@@ -647,8 +681,9 @@ def _read_data(
       ``__row_id``: COALESCE(the file's materialized ``__row_id``, base +
       ``__ri``) over a broadcast base map; NULL where neither exists —
       whether that is an error is the caller's call."""
-    schema = latest_meta(path, "schema", version)
-    mapping = _column_mapping(path, version)
+    meta = _meta_at(path, version)
+    schema = meta.get("schema")
+    mapping = meta.get("column_mapping") or {}
     dead = _dv_positions(spark, path, dvs, files) if dvs else None
     position = tags or row_bases is not None or dead is not None
     init, template = {}, False
@@ -656,10 +691,10 @@ def _read_data(
         if type_overrides:
             schema = {c: type_overrides.get(c, t) for c, t in schema.items()}
         parts = [f"`{mapping.get(c, c)}` {t}" for c, t in schema.items()]
-        if row_tracking_enabled(path, version):
+        if meta.get("row_tracking"):
             parts.append(f"`{_ROWID}` bigint")
         reader = spark.read.schema(", ".join(parts))
-        cds = latest_meta(path, "column_defaults", version) or {}
+        cds = meta.get("column_defaults") or {}
         init = {
             c: d
             for c, d in cds.items()
@@ -1297,11 +1332,12 @@ def _widens_to(frm: str, to: str) -> bool:
 
 
 def _validate_append_schema(
-    path: str, df: DataFrame, merge_schema: bool, system_cols=frozenset()
+    logged: dict | None, df: DataFrame, merge_schema: bool, system_cols=frozenset()
 ) -> dict[str, str]:
     """Writer-side schema enforcement (the Delta contract): compare the
-    incoming frame against the schema recorded in the log and return the
-    schema dict this commit should record.
+    incoming frame against the schema recorded in the log (``logged``,
+    None when the log records none) and return the schema dict this
+    commit should record.
 
     - A TYPE CHANGE on an existing column is always rejected — two files
       disagreeing on a column's type poison every later read, and no read
@@ -1317,7 +1353,6 @@ def _validate_append_schema(
 
     Tables created before schemas were logged have no entry — enforcement
     starts at their next schema-recording commit (backward compatible)."""
-    logged = latest_meta(path, "schema")
     cur = dict(df.dtypes)
     if logged is None:
         return cur
@@ -1378,6 +1413,11 @@ def table_protocol(path: str, version: int | None = None) -> dict:
     return latest_meta(path, "protocol", version) or {}
 
 
+def _features(meta: dict) -> set[str]:
+    """The reader features a table meta (see :func:`_meta_at`) declares."""
+    return set((meta.get("protocol") or {}).get("reader_features", []))
+
+
 def _check_reader(path: str, version: int | None = None) -> None:
     required = set(table_protocol(path, version).get("reader_features", []))
     unknown = required - _READER_FEATURES
@@ -1389,17 +1429,39 @@ def _check_reader(path: str, version: int | None = None) -> None:
         )
 
 
-def _with_feature(path: str, meta: dict, feature: str) -> dict:
+def _with_feature(pinned: dict, meta: dict, feature: str) -> dict:
     """Fold ``feature`` into the commit meta's protocol declaration if the
-    table has not declared it yet (idempotent — later commits carry no
-    protocol key, so latest_meta resolution stays O(first declaration))."""
-    cur = set(table_protocol(path).get("reader_features", []))
+    table meta ``pinned`` — read at the writer's read version — has not
+    declared it yet (idempotent: later commits carry no protocol key)."""
+    cur = _features(pinned)
     if feature not in cur:
         meta = {
             **meta,
             "protocol": {"reader_features": sorted(cur | {feature})},
         }
     return meta
+
+
+def _ddl_read(path: str, need_table: bool = True) -> tuple[int, dict]:
+    """A metadata-only DDL's read: its read version and the table meta at
+    that version. Every input the DDL checks and rewrites comes from this
+    one snapshot and :func:`_commit_ddl` lands at ``read_v + 1``, so a
+    racing commit either is in what the DDL read or makes it conflict —
+    never lost under it. ``need_table`` rejects an empty log."""
+    read_v = current_version(path)
+    if need_table and read_v == 0:
+        raise FileNotFoundError(f"no table at {path!r} (empty log)")
+    return read_v, _meta_at(path, read_v)
+
+
+def _commit_ddl(
+    path: str, read_v: int, meta: dict, row_bases: dict | None = None
+) -> int:
+    """The one landing of the metadata-only DDLs: a commit at ``read_v + 1``
+    that moves no file (a lost race raises :class:`CommitConflict`; the
+    caller re-runs). Returns the new version."""
+    _try_commit(path, read_v + 1, [], [], meta=meta, row_bases=row_bases)
+    return read_v + 1
 
 
 def _arrow_spark_type(t) -> str:
@@ -1480,19 +1542,19 @@ def drop_feature(path: str, feature: str) -> int:
         raise ValueError(
             f"unknown feature {feature!r} (supported: {sorted(_READER_FEATURES)})"
         )
-    cur = set(table_protocol(path).get("reader_features", []))
+    read_v, pinned = _ddl_read(path, need_table=False)
+    cur = _features(pinned)
     if feature not in cur:
         raise ValueError(
             f"feature {feature!r} is not declared on {path!r} "
             f"(declared: {sorted(cur)})"
         )
-    read_v = current_version(path)
     live = _replay(path, read_v)
+    schema = pinned.get("schema") or {}
+    mapping = pinned.get("column_mapping") or {}
     if feature == "deletion-vectors":
-        if (
-            table_properties(path, read_v).get("deletionVectors", "").lower()
-            == "true"
-        ):
+        props = pinned.get("properties") or {}
+        if props.get("deletionVectors", "").lower() == "true":
             raise ValueError(
                 "cannot drop 'deletion-vectors': the deletionVectors "
                 "TBLPROPERTY is 'true', so the next merge would re-declare "
@@ -1508,8 +1570,6 @@ def drop_feature(path: str, feature: str) -> int:
     elif feature == "type-widening":
         import pyarrow.parquet as _pq
 
-        schema = latest_meta(path, "schema", read_v) or {}
-        mapping = _column_mapping(path, read_v)
         phys_type = {mapping.get(c, c): t for c, t in schema.items()}
         narrow = []
         for rel in sorted(live):
@@ -1532,8 +1592,6 @@ def drop_feature(path: str, feature: str) -> int:
     elif feature == "column-mapping":
         import pyarrow.parquet as _pq
 
-        schema = latest_meta(path, "schema", read_v) or {}
-        mapping = _column_mapping(path, read_v)
         renamed = {c: p for c, p in mapping.items() if c != p}
         if renamed:
             raise ValueError(
@@ -1568,7 +1626,7 @@ def drop_feature(path: str, feature: str) -> int:
                 "feature gates are load-bearing forever"
             )
     elif feature == "column-defaults":
-        cds = latest_meta(path, "column_defaults", read_v) or {}
+        cds = pinned.get("column_defaults") or {}
         init = {
             c: d for c, d in cds.items() if d.get("initial") is not None
         }
@@ -1588,18 +1646,15 @@ def drop_feature(path: str, feature: str) -> int:
                     f"run reorg_purge() to migrate the backfill into "
                     f"the files first"
                 )
-    _try_commit(
+    return _commit_ddl(
         path,
-        read_v + 1,
-        [],
-        [],
-        meta={
+        read_v,
+        {
             "op": "drop_feature",
             "feature": feature,
             "protocol": {"reader_features": sorted(cur - {feature})},
         },
     )
-    return read_v + 1
 
 
 # ---------------------------------------------------------------------------
@@ -1620,16 +1675,16 @@ def _column_mapping(path: str, version: int | None = None) -> dict[str, str]:
     return latest_meta(path, "column_mapping", version) or {}
 
 
-def _physical_reserved(path: str, version: int | None = None) -> set[str]:
+def _physical_reserved(meta: dict) -> set[str]:
     """Every physical column name any live-or-historical data file may
-    carry: the logged reservation list plus the current schema's physical
-    names. Renames/drops are metadata-only, so a renamed-away or dropped
-    physical name stays in files until a rewrite purges it — it may never
-    be handed to a NEW logical column."""
-    reserved = set(latest_meta(path, "physical_reserved", version) or [])
-    schema = latest_meta(path, "schema", version) or {}
-    mapping = _column_mapping(path, version)
-    reserved.update(mapping.get(c, c) for c in schema)
+    carry, per the table meta ``meta`` (see :func:`_meta_at`): the logged
+    reservation list plus the schema's physical names. Renames/drops are
+    metadata-only, so a renamed-away or dropped physical name stays in
+    files until a rewrite purges it — it may never be handed to a NEW
+    logical column."""
+    reserved = set(meta.get("physical_reserved") or [])
+    mapping = meta.get("column_mapping") or {}
+    reserved.update(mapping.get(c, c) for c in meta.get("schema") or {})
     return reserved
 
 
@@ -1686,10 +1741,10 @@ def _phys_name(path: str, version: int | None, col: str) -> str:
     return _column_mapping(path, version).get(col, col)
 
 
-def _guard_constraint_refs(path: str, col: str, action: str) -> None:
+def _guard_constraint_refs(meta: dict, col: str, action: str) -> None:
     import re as _re
 
-    cons = latest_meta(path, "constraints") or {}
+    cons = meta.get("constraints") or {}
     hits = sorted(
         n for n, sql in cons.items() if _re.search(rf"\b{_re.escape(col)}\b", sql)
     )
@@ -1702,7 +1757,7 @@ def _guard_constraint_refs(path: str, col: str, action: str) -> None:
     # generated column (or an input its expression names) would break
     # every later write's compute-or-validate; an identity column's
     # allocation is keyed by name
-    gens = latest_meta(path, "generated") or {}
+    gens = meta.get("generated") or {}
     ghits = sorted(
         n
         for n, g in gens.items()
@@ -1713,7 +1768,7 @@ def _guard_constraint_refs(path: str, col: str, action: str) -> None:
             f"cannot {action} column {col!r}: it is (or is referenced by) "
             f"generated column(s) {ghits}"
         )
-    if col in (latest_meta(path, "identity") or {}):
+    if col in (meta.get("identity") or {}):
         raise ValueError(
             f"cannot {action} column {col!r}: it is an identity column"
         )
@@ -1730,10 +1785,8 @@ def rename_column(path: str, old: str, new: str) -> int:
     the new name collides with a RESERVED physical name still present in
     data files (old bytes would resurrect under it). Renaming back to a
     column's own original name is always legal."""
-    read_v = current_version(path)
-    if read_v == 0:
-        raise FileNotFoundError(f"no table at {path!r} (empty log)")
-    schema = latest_meta(path, "schema")
+    read_v, pinned = _ddl_read(path)
+    schema = pinned.get("schema")
     if schema is None:
         raise ValueError(
             "table has no logged schema; rename requires schema-recording "
@@ -1743,10 +1796,10 @@ def rename_column(path: str, old: str, new: str) -> int:
         raise ValueError(f"no column {old!r} (have {sorted(schema)})")
     if new in schema:
         raise ValueError(f"column {new!r} already exists")
-    _guard_constraint_refs(path, old, "rename")
-    mapping = dict(_column_mapping(path))
+    _guard_constraint_refs(pinned, old, "rename")
+    mapping = dict(pinned.get("column_mapping") or {})
     phys = mapping.pop(old, old)
-    reserved = _physical_reserved(path)
+    reserved = _physical_reserved(pinned)
     if new in reserved - {phys}:
         raise ValueError(
             f"cannot rename {old!r} to {new!r}: {new!r} is a reserved "
@@ -1756,27 +1809,20 @@ def rename_column(path: str, old: str, new: str) -> int:
         mapping[new] = phys
     new_schema = {(new if k == old else k): t for k, t in schema.items()}
     extra = {}
-    cds = latest_meta(path, "column_defaults") or {}
+    cds = pinned.get("column_defaults") or {}
     if old in cds:
         # defaults are keyed by LOGICAL name — they follow the rename
         extra["column_defaults"] = {
             (new if k == old else k): d for k, d in cds.items()
         }
-    _try_commit(
-        path,
-        read_v + 1,
-        [],
-        [],
-        meta=_with_feature(path, {
-            "op": "rename_column",
-            "renamed": [old, new],
-            **extra,
-            "schema": new_schema,
-            "column_mapping": mapping,
-            "physical_reserved": sorted(reserved | {phys}),
-        }, "column-mapping"),
-    )
-    return read_v + 1
+    return _commit_ddl(path, read_v, _with_feature(pinned, {
+        "op": "rename_column",
+        "renamed": [old, new],
+        **extra,
+        "schema": new_schema,
+        "column_mapping": mapping,
+        "physical_reserved": sorted(reserved | {phys}),
+    }, "column-mapping"))
 
 
 def drop_column(path: str, name: str) -> int:
@@ -1788,41 +1834,32 @@ def drop_column(path: str, name: str) -> int:
     append re-introducing the same logical name gets a fresh generated
     physical name, so the old bytes can never resurrect. Time travel
     below the drop still reads the column."""
-    read_v = current_version(path)
-    if read_v == 0:
-        raise FileNotFoundError(f"no table at {path!r} (empty log)")
-    schema = latest_meta(path, "schema")
+    read_v, pinned = _ddl_read(path)
+    schema = pinned.get("schema")
     if schema is None or name not in schema:
         raise ValueError(f"no column {name!r} (have {sorted(schema or {})})")
     if len(schema) == 1:
         raise ValueError("cannot drop the last column")
-    _guard_constraint_refs(path, name, "drop")
-    mapping = dict(_column_mapping(path))
+    _guard_constraint_refs(pinned, name, "drop")
+    mapping = dict(pinned.get("column_mapping") or {})
     phys = mapping.pop(name, name)
-    reserved = _physical_reserved(path) | {phys}
+    reserved = _physical_reserved(pinned) | {phys}
     new_schema = {k: t for k, t in schema.items() if k != name}
     extra = {}
-    cds = latest_meta(path, "column_defaults") or {}
+    cds = pinned.get("column_defaults") or {}
     if name in cds:
         # the column's defaults die with it (a later re-add starts fresh)
         extra["column_defaults"] = {
             k: d for k, d in cds.items() if k != name
         }
-    _try_commit(
-        path,
-        read_v + 1,
-        [],
-        [],
-        meta=_with_feature(path, {
-            "op": "drop_column",
-            "dropped": name,
-            "schema": new_schema,
-            **extra,
-            "column_mapping": mapping,
-            "physical_reserved": sorted(reserved),
-        }, "column-mapping"),
-    )
-    return read_v + 1
+    return _commit_ddl(path, read_v, _with_feature(pinned, {
+        "op": "drop_column",
+        "dropped": name,
+        "schema": new_schema,
+        **extra,
+        "column_mapping": mapping,
+        "physical_reserved": sorted(reserved),
+    }, "column-mapping"))
 
 
 def widen_column_type(path: str, col: str, to_type: str) -> int:
@@ -1856,10 +1893,8 @@ def widen_column_type(path: str, col: str, to_type: str) -> int:
 
     Cites: Delta Lake type widening (public docs/protocol); the
     reference has no ALTER surface (SURVEY §2.13)."""
-    read_v = current_version(path)
-    if read_v == 0:
-        raise FileNotFoundError(f"no table at {path!r} (empty log)")
-    schema = latest_meta(path, "schema")
+    read_v, pinned = _ddl_read(path)
+    schema = pinned.get("schema")
     if schema is None:
         raise ValueError(
             "table has no logged schema; widening requires schema-"
@@ -1894,18 +1929,11 @@ def widen_column_type(path: str, col: str, to_type: str) -> int:
         # RETIRES the column's blooms (visible_blooms stops serving
         # them), trading its point-skipping for correctness. Stats-range
         # pruning is numeric and unaffected.
-        pcol = _phys_name(path, read_v, col)
+        pcol = (pinned.get("column_mapping") or {}).get(col, col)
         if any(pcol in bl for bl in visible_blooms(path, read_v).values()):
-            retired = set(latest_meta(path, "bloom_retired") or [])
+            retired = set(pinned.get("bloom_retired") or [])
             meta["bloom_retired"] = sorted(retired | {pcol})
-    _try_commit(
-        path,
-        read_v + 1,
-        [],
-        [],
-        meta=_with_feature(path, meta, "type-widening"),
-    )
-    return read_v + 1
+    return _commit_ddl(path, read_v, _with_feature(pinned, meta, "type-widening"))
 
 
 def _eval_default(spark: SparkSession, expr_sql: str, dtype: str):
@@ -1978,10 +2006,8 @@ def add_column(
     ``default``. A re-introduced name that is still physically RESERVED
     (dropped earlier) maps to a fresh physical name, exactly like the
     append path. Returns the new version."""
-    read_v = current_version(path)
-    if read_v == 0:
-        raise FileNotFoundError(f"no table at {path!r} (empty log)")
-    schema = latest_meta(path, "schema", read_v)
+    read_v, pinned = _ddl_read(path)
+    schema = pinned.get("schema")
     if schema is None:
         raise ValueError(
             "add_column needs a table with a logged schema (any append "
@@ -1999,17 +2025,17 @@ def add_column(
         "added": [name, dtype],
         "schema": {**schema, name: dtype},
     }
-    reserved = _physical_reserved(path, read_v)
-    mapping = dict(_column_mapping(path, read_v))
+    reserved = _physical_reserved(pinned)
+    mapping = dict(pinned.get("column_mapping") or {})
     if name in reserved:
         phys = f"{name}__c{uuid.uuid4().hex[:8]}"
         mapping[name] = phys
         meta["column_mapping"] = mapping
         meta["physical_reserved"] = sorted(reserved | {phys})
-        meta = _with_feature(path, meta, "column-mapping")
+        meta = _with_feature(pinned, meta, "column-mapping")
     if default is not None:
         value = _eval_default(spark, default, dtype)
-        cds = dict(latest_meta(path, "column_defaults", read_v) or {})
+        cds = dict(pinned.get("column_defaults") or {})
         cds[name] = {
             "initial": default,
             "initial_value": value,
@@ -2017,9 +2043,8 @@ def add_column(
             "v_add": read_v + 1,
         }
         meta["column_defaults"] = cds
-        meta = _with_feature(path, meta, "column-defaults")
-    _try_commit(path, read_v + 1, [], [], meta=meta)
-    return read_v + 1
+        meta = _with_feature(pinned, meta, "column-defaults")
+    return _commit_ddl(path, read_v, meta)
 
 
 def set_column_default(
@@ -2032,11 +2057,11 @@ def set_column_default(
     :func:`add_column`'s invariant). Setting a first-ever write default
     on an existing column is allowed and needs no reader feature (write
     defaults are writer-side — the files carry real values)."""
-    read_v = current_version(path)
-    schema = latest_meta(path, "schema", read_v) or {}
+    read_v, pinned = _ddl_read(path, need_table=False)
+    schema = pinned.get("schema") or {}
     if name not in schema:
         raise ValueError(f"no column {name!r} (have {sorted(schema)})")
-    cds = dict(latest_meta(path, "column_defaults", read_v) or {})
+    cds = dict(pinned.get("column_defaults") or {})
     cur = dict(cds.get(name, {}))
     if write_default is None:
         if cur.get("initial") is not None:
@@ -2055,18 +2080,11 @@ def set_column_default(
         cur.setdefault("v_add", read_v + 1)
         cur["write"] = write_default
         cds[name] = cur
-    _try_commit(
+    return _commit_ddl(
         path,
-        read_v + 1,
-        [],
-        [],
-        meta={
-            "op": "set_column_default",
-            "column": name,
-            "column_defaults": cds,
-        },
+        read_v,
+        {"op": "set_column_default", "column": name, "column_defaults": cds},
     )
-    return read_v + 1
 
 
 def _apply_write_defaults(df: DataFrame, path: str) -> DataFrame:
@@ -2169,19 +2187,12 @@ def set_table_properties(path: str, props: dict) -> int:
     Racing writers: the merge base is the CURRENT map, so two concurrent
     sets of DIFFERENT keys serialize via the commit race (the loser's
     retry is the caller's re-run, same contract as the other DDL)."""
-    read_v = current_version(path)
-    if read_v == 0:
-        raise FileNotFoundError(f"no table at {path!r} (empty log)")
-    cur = dict(table_properties(path))
+    read_v, pinned = _ddl_read(path)
+    cur = dict(pinned.get("properties") or {})
     cur.update({str(k): str(v) for k, v in props.items()})
-    _try_commit(
-        path,
-        read_v + 1,
-        [],
-        [],
-        meta={"op": "set_properties", "properties": cur},
+    return _commit_ddl(
+        path, read_v, {"op": "set_properties", "properties": cur}
     )
-    return read_v + 1
 
 
 def maintain(spark: SparkSession, path: str) -> dict:
@@ -2298,20 +2309,13 @@ def unset_table_properties(path: str, keys: list[str]) -> int:
     """``ALTER TABLE ... UNSET TBLPROPERTIES`` — metadata-only commit
     removing ``keys`` (missing keys are ignored, like Delta's
     IF EXISTS)."""
-    read_v = current_version(path)
-    if read_v == 0:
-        raise FileNotFoundError(f"no table at {path!r} (empty log)")
-    cur = dict(table_properties(path))
+    read_v, pinned = _ddl_read(path)
+    cur = dict(pinned.get("properties") or {})
     for k in keys:
         cur.pop(str(k), None)
-    _try_commit(
-        path,
-        read_v + 1,
-        [],
-        [],
-        meta={"op": "unset_properties", "properties": cur},
+    return _commit_ddl(
+        path, read_v, {"op": "unset_properties", "properties": cur}
     )
-    return read_v + 1
 
 
 def add_constraint(
@@ -2325,12 +2329,10 @@ def add_constraint(
     SQL CHECK semantics: only rows where the expression is FALSE violate —
     NULL passes, as in every SQL engine. Returns the new version (a
     metadata-only commit: no files move)."""
-    cur = dict(latest_meta(path, "constraints") or {})
+    read_v, pinned = _ddl_read(path)
+    cur = dict(pinned.get("constraints") or {})
     if name in cur:
         raise ValueError(f"constraint {name!r} already exists: {cur[name]!r}")
-    read_v = current_version(path)
-    if read_v == 0:
-        raise FileNotFoundError(f"no table at {path!r} (empty log)")
     existing_bad = (
         read(spark, path, read_v, merge_schema=True)
         .filter(F.expr(check_sql) == F.lit(False))
@@ -2342,32 +2344,26 @@ def add_constraint(
             f"cannot add constraint {name!r}: existing rows violate {check_sql!r}"
         )
     cur[name] = check_sql
-    _try_commit(
+    return _commit_ddl(
         path,
-        read_v + 1,
-        [],
-        [],
-        meta={"op": "add_constraint", "constraints": cur, "constraint": name},
+        read_v,
+        {"op": "add_constraint", "constraints": cur, "constraint": name},
     )
-    return read_v + 1
 
 
 def drop_constraint(path: str, name: str) -> int:
     """``ALTER TABLE DROP CONSTRAINT``: metadata-only commit removing the
     named constraint from enforcement."""
-    cur = dict(latest_meta(path, "constraints") or {})
+    read_v, pinned = _ddl_read(path, need_table=False)
+    cur = dict(pinned.get("constraints") or {})
     if name not in cur:
         raise ValueError(f"no constraint {name!r} (have {sorted(cur)})")
     del cur[name]
-    v = current_version(path)
-    _try_commit(
+    return _commit_ddl(
         path,
-        v + 1,
-        [],
-        [],
-        meta={"op": "drop_constraint", "constraints": cur, "constraint": name},
+        read_v,
+        {"op": "drop_constraint", "constraints": cur, "constraint": name},
     )
-    return v + 1
 
 
 def _enforce_constraints(df: DataFrame, path: str) -> None:
@@ -2410,14 +2406,12 @@ def add_generated_column(
     exist and every existing row is validated against the expression
     first (one scan, fail-closed), so the invariant is true from the
     declaring commit onward — never retroactively assumed."""
-    v = current_version(path)
-    if v == 0:
-        raise FileNotFoundError(f"no table at {path!r} (empty log)")
-    gens = dict(latest_meta(path, "generated") or {})
+    read_v, pinned = _ddl_read(path)
+    gens = dict(pinned.get("generated") or {})
     if name in gens:
         raise ValueError(f"column {name!r} already has a generation expression")
-    schema = latest_meta(path, "schema") or {}
-    if _replay(path, v):
+    schema = pinned.get("schema") or {}
+    if _replay(path, read_v):
         if name not in schema:
             raise ValueError(
                 f"cannot add a generation expression for absent column "
@@ -2430,7 +2424,7 @@ def add_generated_column(
                 "validates every existing row first; pass spark="
             )
         bad = (
-            read(spark, path, v, merge_schema=True)
+            read(spark, path, read_v, merge_schema=True)
             .filter(~F.col(name).eqNullSafe(F.expr(expr).cast(schema[name])))
             .limit(1)
             .count()
@@ -2441,11 +2435,9 @@ def add_generated_column(
                 f"{name!r}; fix the data before declaring it generated"
             )
     gens[name] = {"expr": expr, "type": dtype}
-    _try_commit(
-        path, v + 1, [], [],
-        meta={"op": "add_generated_column", "generated": gens},
+    return _commit_ddl(
+        path, read_v, {"op": "add_generated_column", "generated": gens}
     )
-    return v + 1
 
 
 def add_identity_column(path: str, name: str, start: int = 1, step: int = 1) -> int:
@@ -2461,22 +2453,19 @@ def add_identity_column(path: str, name: str, start: int = 1, step: int = 1) -> 
     files and the name unused."""
     if step == 0:
         raise ValueError("identity step must be non-zero")
-    v = current_version(path)
-    if v and _replay(path, v):
+    read_v, pinned = _ddl_read(path, need_table=False)
+    if read_v and _replay(path, read_v):
         raise ValueError(
             "identity columns are declared at table creation (Delta "
             "contract); this table already has visible data files"
         )
-    schema = latest_meta(path, "schema") or {}
-    idents = dict(latest_meta(path, "identity") or {})
-    if name in schema or name in idents:
+    idents = dict(pinned.get("identity") or {})
+    if name in (pinned.get("schema") or {}) or name in idents:
         raise ValueError(f"column {name!r} already exists")
     idents[name] = {"start": start, "step": step, "next": start}
-    _try_commit(
-        path, v + 1, [], [],
-        meta={"op": "add_identity_column", "identity": idents},
+    return _commit_ddl(
+        path, read_v, {"op": "add_identity_column", "identity": idents}
     )
-    return v + 1
 
 
 def _apply_generated(df: DataFrame, path: str) -> DataFrame:
@@ -2622,8 +2611,9 @@ def append(
     df, idents_meta = _apply_identity(df, path)
     df = _apply_generated(df, path)
     ident_cols = frozenset(idents_meta.get("identity", {}))
+    tip = _meta_at(path)
     _validate_append_schema(  # fail BEFORE data lands
-        path, df, merge_schema, system_cols=ident_cols
+        tip.get("schema"), df, merge_schema, system_cols=ident_cols
     )
     _enforce_constraints(df, path)
     if partition_by:
@@ -2635,15 +2625,15 @@ def append(
     # renamed-away or dropped column still present in old files) — it gets
     # a fresh generated physical name, or the old bytes would resurrect
     # under the new column.
-    if _ROWID in df.columns and row_tracking_enabled(path):
+    if _ROWID in df.columns and tip.get("row_tracking"):
         raise ValueError(
             f"{_ROWID!r} is the reserved row-tracking column; appended "
             f"frames must not carry it"
         )
-    base_mapping = _column_mapping(path)
+    base_mapping = tip.get("column_mapping") or {}
     mapping = dict(base_mapping)
-    logged = latest_meta(path, "schema")
-    reserved = _physical_reserved(path)
+    logged = tip.get("schema")
+    reserved = _physical_reserved(tip)
     generated: set[str] = set()
     for c in df.columns:
         if logged is not None and c not in logged and c in reserved:
@@ -2668,10 +2658,13 @@ def append(
             stats.setdefault(rel, {}).update(s)
     ident_advance = _advance_identity(path, adds, idents_meta)
     for _ in range(max_retries):
-        # re-resolve against the tip each attempt: a racing writer may have
-        # evolved the schema between our validation and our commit
+        # re-resolve each attempt at the version it commits after: a racing
+        # writer may have evolved the schema between our validation and
+        # our commit (and one landing after this read makes it conflict)
+        read_v = current_version(path)
+        cur = _meta_at(path, read_v)
         schema_meta = _validate_append_schema(
-            path, df, merge_schema, system_cols=ident_cols
+            cur.get("schema"), df, merge_schema, system_cols=ident_cols
         )
         # identity values are BAKED into the landed files from the
         # watermark read above — if a concurrent identity append advanced
@@ -2679,7 +2672,7 @@ def append(
         # Surface the conflict (the caller re-runs; an explicit error
         # beats silently duplicated ids).
         if idents_meta:
-            cur_id = latest_meta(path, "identity") or {}
+            cur_id = cur.get("identity") or {}
             if any(
                 cur_id.get(k, {}).get("next") != idents_meta["identity"][k]["next"]
                 for k in idents_meta["identity"]
@@ -2697,12 +2690,12 @@ def append(
         # logical name — fail the whole transaction instead (ADVICE r8).
         # Benign races stay benign: plain appends and ADDITIVE schema
         # evolution by a racer never trip this (race-safe by design).
-        cur_mapping = _column_mapping(path)
+        cur_mapping = cur.get("column_mapping") or {}
         drift = bool(generated) and cur_mapping != base_mapping
         if not drift:
-            cur_logged = latest_meta(path, "schema")
+            cur_logged = cur.get("schema")
             if cur_logged is not None:
-                cur_reserved = _physical_reserved(path)
+                cur_reserved = _physical_reserved(cur)
                 for c in df.columns:
                     p = mapping.get(c, c)
                     if c in cur_logged:
@@ -2725,16 +2718,18 @@ def append(
         # allocated (the landed files carry no ids of their own, so a
         # stale tracking=False would commit permanently uncovered files)
         rt_meta, row_bases = {}, None
-        if row_tracking_enabled(path):
+        if cur.get("row_tracking"):
             if _ROWID in df.columns:
                 raise CommitConflict(
                     f"append lost a metadata race: row tracking was enabled "
                     f"concurrently and the frame carries the reserved "
                     f"{_ROWID!r} column"
                 )
-            row_bases, wm = _alloc_row_bases(path, adds)
+            row_bases, wm = _alloc_row_bases(
+                path, adds, int(cur.get("row_id_watermark") or 0)
+            )
             rt_meta = {"row_id_watermark": wm}
-        v = current_version(path) + 1
+        v = read_v + 1
         commit_meta = {
             "op": "append",
             "schema": schema_meta,
@@ -2762,7 +2757,7 @@ def append(
         # without it would surface the generated physical name
         if generated:
             need.add("column-mapping")
-        cur_feats = set(table_protocol(path).get("reader_features", []))
+        cur_feats = _features(cur)
         if need - cur_feats:
             commit_meta = {
                 **commit_meta,
@@ -2849,7 +2844,8 @@ def overwrite(
     with the data it describes — the Delta ``txn``-action pattern. Read it
     back with :func:`latest_meta`."""
     read_v = current_version(path)
-    if row_tracking_enabled(path, read_v) and _ROWID in df.columns:
+    pinned = _meta_at(path, read_v)
+    if pinned.get("row_tracking") and _ROWID in df.columns:
         raise ValueError(
             f"{_ROWID!r} is the reserved row-tracking column; overwritten "
             f"frames must not carry it"
@@ -2866,21 +2862,21 @@ def overwrite(
     # identity; the reservation list persists (old files stay on disk for
     # time travel, so their physical names are never reusable).
     map_meta = {}
-    if _column_mapping(path, read_v):
+    if pinned.get("column_mapping"):
         map_meta = {
             "column_mapping": {},
             "physical_reserved": sorted(
-                _physical_reserved(path, read_v) | set(dict(df.dtypes))
+                _physical_reserved(pinned) | set(dict(df.dtypes))
             ),
         }
-    if latest_meta(path, "bloom_retired", read_v):
+    if pinned.get("bloom_retired"):
         # a full overwrite removes every file whose blooms a chain-leaving
         # widen retired (they hashed the old integer representation); the
         # replacement files' blooms hash the CURRENT schema's values, so
         # keeping the retirement would silently filter fresh, valid blooms
         # out of visible_blooms forever — clear it with the mapping reset
         map_meta["bloom_retired"] = []
-    cds = latest_meta(path, "column_defaults", read_v) or {}
+    cds = pinned.get("column_defaults") or {}
     if cds:
         # no pre-add file survives a full replacement: INITIAL defaults
         # clear (the read path stops grouping); WRITE defaults survive
@@ -2896,8 +2892,10 @@ def overwrite(
     # row tracking: full overwrite replaces every row — fresh id ranges
     # for the new files (single-attempt commit, race → conflict)
     rt_meta, row_bases = {}, None
-    if row_tracking_enabled(path, read_v):
-        row_bases, wm = _alloc_row_bases(path, adds)
+    if pinned.get("row_tracking"):
+        row_bases, wm = _alloc_row_bases(
+            path, adds, int(pinned.get("row_id_watermark") or 0)
+        )
         rt_meta = {"row_id_watermark": wm}
     _try_commit(
         path,
@@ -2925,66 +2923,12 @@ def latest_meta(path: str, key: str, version: int | None = None):
     (None if no commit carries it). Because the meta landed in the same
     O_EXCL commit file as the adds/removes it describes, a reader can never
     observe data from a commit without that commit's meta — no torn
-    state/meta window exists.
-
-    Checkpoint-accelerated like the file list (the Delta checkpoints-
-    carry-metadata design): markers store the per-key latest-wins fold
-    (``meta_latest``), so resolution walks only the post-checkpoint tail
-    instead of the log back to whichever commit last recorded the key —
-    O(versions) otherwise, on every logical-view build, for a table
-    whose recent commits are all schema-silent mutations. Legacy markers
-    without the fold keep the full walk.
-
-    Pointer-accelerated like _replay: this runs on EVERY logical-view
-    build (read → _read_data → column mapping), so with a valid
-    ``_last_checkpoint`` the tail walk uses probed versions and the
-    marker comes straight from the pointer — zero log-directory listings
-    on the hot read path."""
-    ptr = _pointer_version(path)
-    if ptr is not None and (version is None or ptr <= version):
-        store = logstore.for_path(path)
-        try:
-            cp = json.loads(store.read_text(_checkpoint_path(path, ptr)))
-        except (FileNotFoundError, ValueError):
-            cp = None  # stale/torn pointer → listing path below
-        if cp is not None:
-            for v in reversed(_probe_tail(path, ptr, version)):
-                m = _load_commit(path, v).get("meta", {})
-                if key in m:
-                    return m[key]
-            if "meta_latest" in cp:
-                return cp["meta_latest"].get(key)
-            for v in reversed(_versions(path)):  # legacy marker: full walk
-                if v > ptr:
-                    continue
-                m = _load_commit(path, v).get("meta", {})
-                if key in m:
-                    return m[key]
-            return None
-    cps = [v for v in _checkpoint_versions(path) if version is None or v <= version]
-    cp_v = max(cps) if cps else 0
-    stop_at = 0 if not cp_v else cp_v
-    for v in reversed(_versions(path)):
-        if version is not None and v > version:
-            continue
-        if v <= stop_at:
-            break
-        m = _load_commit(path, v).get("meta", {})
-        if key in m:
-            return m[key]
-    if cp_v:
-        cp = json.loads(
-            logstore.for_path(path).read_text(_checkpoint_path(path, cp_v))
-        )
-        if "meta_latest" in cp:
-            return cp["meta_latest"].get(key)
-        for v in reversed(_versions(path)):
-            if v > cp_v:
-                continue
-            m = _load_commit(path, v).get("meta", {})
-            if key in m:
-                return m[key]
-    return None
+    state/meta window exists. Resolved by :func:`_meta_at` over the same
+    log walk as the file list (checkpoint ``meta_latest`` plus the tail),
+    so a version below an ``expire_log`` horizon fails like a read of it.
+    Callers needing several keys of one version should take one
+    :func:`_meta_at` instead."""
+    return _meta_at(path, version).get(key)
 
 
 def read(
@@ -3012,7 +2956,12 @@ def read(
     columns projected out) — identity on every table that never
     renamed/dropped."""
     _check_reader(path, version)
-    files = visible_files(path, version)
+    # files and deletion vectors from ONE snapshot: a commit landing
+    # between two tip resolutions could pair this version's files with
+    # the next one's DV state (after a compaction, none — the deleted
+    # rows of the old files would come back)
+    live = _replay(path, version)
+    files = [os.path.join(path, rel) for rel in sorted(live)]
     if not files:
         raise FileNotFoundError(f"no table at {path!r} (empty log)")
     try:
@@ -3021,8 +2970,7 @@ def read(
         # only THEN do we pay the per-file existence sweep to diagnose a
         # vacuumed snapshot (never O(n_files) stat calls on every read).
         return _read_data(
-            spark, path, files, merge_schema, version,
-            dvs=visible_dvs(path, version),
+            spark, path, files, merge_schema, version, dvs=_live_dvs(path, live)
         )
     except Exception as e:
         missing = [f for f in files if not os.path.exists(f)]
@@ -3527,11 +3475,10 @@ def merge_into(
         raise FileNotFoundError(f"no table at {path!r} (empty log)")
     if not keys:
         raise ValueError("merge_into needs at least one key column")
+    pinned = _meta_at(path, read_v)
     if use_dvs is None:
-        use_dvs = (
-            table_properties(path, read_v).get("deletionVectors", "").lower()
-            == "true"
-        )
+        props = pinned.get("properties") or {}
+        use_dvs = props.get("deletionVectors", "").lower() == "true"
     # --- normalize clauses -------------------------------------------------
     matched_clauses = _merge_clauses(when_matched, "when_matched")
     bys_clauses = _merge_clauses(
@@ -3603,7 +3550,7 @@ def merge_into(
     # bases), so a lost race re-lands the insert files with fresh ids off
     # the winner's advanced watermark instead of refusing — the core
     # hands the insert rows to _identity_insert_factory.
-    idents = latest_meta(path, "identity", read_v) or {}
+    idents = pinned.get("identity") or {}
     if idents:
         bad_src = [c for c in idents if c in source.columns]
         if bad_src and (
@@ -3737,10 +3684,10 @@ def merge_into(
     # column. Generate a fresh physical name, same scheme as append.
     # (Concurrent mapping DDL is fenced: rename/drop are _SNAPSHOT_OPS,
     # so the commit retry below surfaces any race instead of drifting.)
-    mapping = dict(_column_mapping(path, read_v))
+    mapping = dict(pinned.get("column_mapping") or {})
     merge_meta = {"op": "merge", "schema": post_types}
     if extra:
-        reserved = _physical_reserved(path, read_v)
+        reserved = _physical_reserved(pinned)
         for c in extra:
             if c in reserved:
                 mapping[c] = f"{c}__c{uuid.uuid4().hex[:8]}"
@@ -3840,8 +3787,8 @@ def merge_into(
                 nm = nm.filter(F.coalesce(_as_col(ins_cond), F.lit(False)))
             if ins_values is None:
                 ins_values = verbatim
-            gens = latest_meta(path, "generated", read_v) or {}
-            defaults = latest_meta(path, "column_defaults", read_v) or {}
+            gens = pinned.get("generated") or {}
+            defaults = pinned.get("column_defaults") or {}
             ins_cols, computed_later = [], []
             for c in post_cols:
                 if c in idents:
@@ -3991,9 +3938,15 @@ def visible_blooms(path: str, version: int | None = None) -> dict[str, dict[str,
     hashes use the old integer representation) are filtered out, so
     point reads conservatively keep those files instead of false-
     skipping on a representation-mismatched probe."""
-    retired = set(latest_meta(path, "bloom_retired", version) or [])
+    return _live_blooms(_replay(path, version), _meta_at(path, version))
+
+
+def _live_blooms(live: dict, meta: dict) -> dict[str, dict[str, str]]:
+    """:func:`visible_blooms` of a resolved :func:`_replay` state and the
+    table meta of the same version."""
+    retired = set(meta.get("bloom_retired") or [])
     out = {}
-    for rel, e in _replay(path, version).items():
+    for rel, e in live.items():
         bl = e.get("blooms")
         if not bl:
             continue
@@ -4182,18 +4135,18 @@ def _prune_candidates(
     (:func:`_read_skipping`), phase 1 of the row-level mutations, the
     scopes of :func:`optimize` and :func:`optimize_zorder`, and the
     band sizing in :func:`maintain`."""
-    all_files = visible_files(path, read_v)
+    live = _replay(path, read_v)
     points = points or {}
     if not ranges and not points:
-        return all_files
-    phys = {c: _phys_name(path, read_v, c) for c in [*ranges, *points]}
-    stats = visible_stats(path, read_v) if ranges else {}
-    blooms = visible_blooms(path, read_v) if points else {}
+        return [os.path.join(path, rel) for rel in sorted(live)]
+    meta = _meta_at(path, read_v)
+    mapping = meta.get("column_mapping") or {}
+    phys = {c: mapping.get(c, c) for c in [*ranges, *points]}
+    blooms = _live_blooms(live, meta) if points else {}
     canon = {c: (_canon_bound(lo), _canon_bound(hi)) for c, (lo, hi) in ranges.items()}
     candidates = []
-    for abs_p in all_files:
-        rel = os.path.relpath(abs_p, path)
-        fstats, fblooms = stats.get(rel, {}), blooms.get(rel, {})
+    for rel in sorted(live):
+        fstats, fblooms = live[rel].get("stats") or {}, blooms.get(rel, {})
         if any(_range_excludes(fstats.get(phys[c]), *canon[c]) for c in ranges):
             continue
         if any(
@@ -4202,20 +4155,22 @@ def _prune_candidates(
             for c, vals in points.items()
         ):
             continue
-        candidates.append(abs_p)
+        candidates.append(os.path.join(path, rel))
     return candidates
 
 
 def _tag_files(
     spark: SparkSession, path: str, read_v: int, files: list[str], per_file
 ) -> list[dict]:
-    """Phase 1's one file-tag scan: the position-tagged LOGICAL view of
-    ``files`` (see :func:`_read_data`), reduced by ``per_file(scan)`` to
+    """Phase 1's one file-tag scan: the position-tagged LIVE rows of
+    ``files`` at ``read_v`` (see :func:`_read_data`; a row a deletion
+    vector already deleted tags nothing), reduced by ``per_file(scan)`` to
     one row per ``__fn`` file key; returns those rows as dicts with
     ``__fn`` swapped for ``__fp``, the file's path as given in ``files``.
     mergeSchema: candidate files may span additive schema evolution."""
     scan = _read_data(
-        spark, path, files, merge_schema=True, version=read_v, tags=True
+        spark, path, files, merge_schema=True, version=read_v, tags=True,
+        dvs=visible_dvs(path, read_v),
     )
     by_key = {_pos_key(f): f for f in files}
     out = []
@@ -4235,16 +4190,18 @@ def _removed_skipping_cols(
     physical columns count: a rewrite lands the logical view, so the
     bytes of a retired physical column (dropped, or renamed away and
     recycled), and with them its channels, are gone from the new files."""
-    live_stats = visible_stats(path, read_v)
-    live_blooms = visible_blooms(path, read_v)
-    stat_cols = {c for rel in removes for c in live_stats.get(rel, {})}
-    bloom_cols = {c for rel in removes for c in live_blooms.get(rel, {})}
-    schema = latest_meta(path, "schema", read_v)
+    live, meta = _replay(path, read_v), _meta_at(path, read_v)
+    blooms = _live_blooms(live, meta)
+    stat_cols = {
+        c for rel in removes for c in (live.get(rel, {}).get("stats") or {})
+    }
+    bloom_cols = {c for rel in removes for c in blooms.get(rel, {})}
+    schema = meta.get("schema")
     if schema is not None:
-        mapping = _column_mapping(path, read_v)
-        live = {mapping.get(c, c) for c in schema}
-        stat_cols &= live
-        bloom_cols &= live
+        mapping = meta.get("column_mapping") or {}
+        phys = {mapping.get(c, c) for c in schema}
+        stat_cols &= phys
+        bloom_cols &= phys
     return sorted(stat_cols), sorted(bloom_cols)
 
 
@@ -4549,7 +4506,7 @@ def _mutate(
     if dv_adds:
         # irreversible-layout gate: pre-DV engine builds must refuse the
         # table, not resurrect rows
-        meta = _with_feature(path, meta, "deletion-vectors")
+        meta = _with_feature(_meta_at(path, read_v), meta, "deletion-vectors")
     try:
         return _commit_serializable(
             spark,
@@ -4679,7 +4636,8 @@ def overwrite_where(
     read_v = current_version(path)
     if read_v == 0:
         raise FileNotFoundError(f"no table at {path!r} (empty log)")
-    if latest_meta(path, "identity", read_v) or {}:
+    pinned = _meta_at(path, read_v)
+    if pinned.get("identity"):
         raise ValueError(
             "overwrite_where cannot land replacement rows into a table "
             "with identity columns yet (baked watermark values under the "
@@ -4688,7 +4646,9 @@ def overwrite_where(
         )
     new_df = _apply_write_defaults(new_df, path)
     new_df = _apply_generated(new_df, path)
-    schema_meta = _validate_append_schema(path, new_df, merge_schema=False)
+    schema_meta = _validate_append_schema(
+        pinned.get("schema"), new_df, merge_schema=False
+    )
     _enforce_constraints(new_df, path)
     predicate = _as_col(predicate)
     if enforce:
@@ -4698,7 +4658,7 @@ def overwrite_where(
                 "overwrite_where: new_df contains rows that do not satisfy "
                 "the replace predicate (pass enforce=False to allow)"
             )
-    if row_tracking_enabled(path, read_v) and _ROWID in new_df.columns:
+    if pinned.get("row_tracking") and _ROWID in new_df.columns:
         raise ValueError(
             f"{_ROWID!r} is the reserved row-tracking column; replacement "
             f"frames must not carry it"
@@ -4776,18 +4736,18 @@ def restore(path: str, version: int, spark: SparkSession | None = None) -> int:
     # its mapping would mis-resolve renamed columns. The reservation list
     # only ever grows (files from both epochs remain on disk).
     meta = {"op": "restore", "restored_version": version}
+    cur, tgt = _meta_at(path, cur_v), _meta_at(path, version)
     # a feature dropped AFTER the target may be load-bearing in the
     # restored state (live DVs, pre-widen files, a mapping) — re-declare
     # by unioning the target version's protocol back in (conservative:
     # the target's protocol provably sufficed to read the target state;
     # a user who still wants the feature gone re-runs drop_feature, whose
     # verification pass then judges the RESTORED state)
-    cur_feats = set(table_protocol(path).get("reader_features", []))
-    tgt_feats = set(table_protocol(path, version).get("reader_features", []))
+    cur_feats, tgt_feats = _features(cur), _features(tgt)
     if tgt_feats - cur_feats:
         meta["protocol"] = {"reader_features": sorted(cur_feats | tgt_feats)}
-    tgt_schema = latest_meta(path, "schema", version)
-    if tgt_schema is not None and tgt_schema != latest_meta(path, "schema"):
+    tgt_schema = tgt.get("schema")
+    if tgt_schema is not None and tgt_schema != cur.get("schema"):
         meta["schema"] = tgt_schema
         # a generation expression declared AFTER the target may derive a
         # column the restored schema no longer has — keeping it would make
@@ -4795,22 +4755,21 @@ def restore(path: str, version: int, spark: SparkSession | None = None) -> int:
         # column. Identity metadata is deliberately NOT reverted (the
         # watermark never rolls back — ids stay history-unique, same rule
         # as row tracking below).
-        gens = latest_meta(path, "generated") or {}
+        gens = cur.get("generated") or {}
         kept = {n: g for n, g in gens.items() if n in tgt_schema}
         if kept != gens:
             meta["generated"] = kept
-    cur_map = _column_mapping(path)
-    tgt_map = _column_mapping(path, version)
-    if tgt_map != cur_map:
+    tgt_map = tgt.get("column_mapping") or {}
+    if tgt_map != (cur.get("column_mapping") or {}):
         meta["column_mapping"] = tgt_map
         meta["physical_reserved"] = sorted(
-            _physical_reserved(path) | _physical_reserved(path, version)
+            _physical_reserved(cur) | _physical_reserved(tgt)
         )
     # column defaults revert WITH the schema (a restore below an
     # add_column must stop rendering the default; one above a later
     # set_column_default must restore the write default then in force)
-    tgt_cds = latest_meta(path, "column_defaults", version) or {}
-    if tgt_cds != (latest_meta(path, "column_defaults") or {}):
+    tgt_cds = tgt.get("column_defaults") or {}
+    if tgt_cds != (cur.get("column_defaults") or {}):
         meta["column_defaults"] = tgt_cds
     change_data = None
     if spark is not None:
@@ -4882,6 +4841,7 @@ def describe_detail(path: str, version: int | None = None) -> dict:
     live = _replay(path, version)
     if not live:
         raise FileNotFoundError(f"no table at {path!r} (empty log)")
+    meta = _meta_at(path, version)
     stat_cols = sorted({c for e in live.values() for c in (e.get("stats") or {})})
     bloom_cols = sorted({c for e in live.values() for c in (e.get("blooms") or {})})
     return {
@@ -4891,22 +4851,23 @@ def describe_detail(path: str, version: int | None = None) -> dict:
             os.path.getsize(os.path.join(path, rel)) for rel in live
         ),
         "num_rows": fast_count(path, version),
-        "schema": latest_meta(path, "schema", version),
-        "constraints": latest_meta(path, "constraints", version) or {},
-        "properties": table_properties(path, version),
-        "column_mapping": _column_mapping(path, version),
-        "protocol": table_protocol(path, version),
+        "schema": meta.get("schema"),
+        "constraints": meta.get("constraints") or {},
+        "properties": meta.get("properties") or {},
+        "column_mapping": meta.get("column_mapping") or {},
+        "protocol": meta.get("protocol") or {},
         "stats_cols": stat_cols,
         "bloom_cols": bloom_cols,
         "vacuum_retention_floor": vacuum_retention_floor(path),
         # write-contract features a consumer must know before writing
-        "row_tracking": bool(latest_meta(path, "row_tracking", version)),
-        "generated_columns": latest_meta(path, "generated", version) or {},
-        "identity_columns": latest_meta(path, "identity", version) or {},
-        # log lifecycle facts (retention planning): the pointer's target
-        # and the oldest version whose commit record still exists — the
-        # time-travel floor expire_log has moved
-        "last_checkpoint_version": _pointer_version(path),
+        "row_tracking": bool(meta.get("row_tracking")),
+        "generated_columns": meta.get("generated") or {},
+        "identity_columns": meta.get("identity") or {},
+        # log lifecycle facts (retention planning): the newest checkpoint
+        # (what the _last_checkpoint pointer names) and the oldest version
+        # whose commit record still exists — the time-travel floor
+        # expire_log has moved
+        "last_checkpoint_version": _log_segment(path)[0] or None,
         "log_earliest_version": (_versions(path) or [0])[0],
     }
 
@@ -5768,7 +5729,9 @@ def expire_log(
                     [],
                     [],
                     meta=_with_feature(
-                        path, {"op": "expire_log"}, "log-retention"
+                        _meta_at(path, declare - 1),
+                        {"op": "expire_log"},
+                        "log-retention",
                     ),
                 )
                 break
@@ -6010,9 +5973,14 @@ def visible_dvs(path: str, version: int | None = None) -> dict[str, list[str]]:
     """Live deletion-vector sidecars at ``version``: data-file rel path →
     list of sidecar parquet groups (absolute), in commit order. Resolved
     by the same checkpoint-accelerated replay as visible_files."""
+    return _live_dvs(path, _replay(path, version))
+
+
+def _live_dvs(path: str, live: dict) -> dict[str, list[str]]:
+    """:func:`visible_dvs` of an already-resolved :func:`_replay` state."""
     return {
-        rel: [os.path.join(path, d) for d in (e.get("dvs") or [])]
-        for rel, e in _replay(path, version).items()
+        rel: [os.path.join(path, d) for d in e["dvs"]]
+        for rel, e in live.items()
         if e.get("dvs")
     }
 
@@ -6333,12 +6301,13 @@ def reorg_purge(
         if n >= min_file_dv_rows
     }
     # files still carrying retired physical column bytes (footer-only)
-    schema = latest_meta(path, "schema", read_v)
+    meta = _meta_at(path, read_v)
+    schema = meta.get("schema")
     if schema is not None:
-        mapping = _column_mapping(path, read_v)
+        mapping = meta.get("column_mapping") or {}
         live_phys = {mapping.get(c, c) for c in schema}
-        retired = _physical_reserved(path, read_v) - live_phys
-        if row_tracking_enabled(path, read_v):
+        retired = _physical_reserved(meta) - live_phys
+        if meta.get("row_tracking"):
             # __row_id is reserved so no logical column can ever recycle
             # its physical name, but on a tracking table it is a LIVE
             # internal column — treating it as retired would make every
@@ -6359,7 +6328,7 @@ def reorg_purge(
     # through the logical view (defaults materialized) and migrates it
     # into the bytes, which is what lets drop_feature('column-defaults')
     # verify non-use afterwards
-    cds = latest_meta(path, "column_defaults", read_v) or {}
+    cds = meta.get("column_defaults") or {}
     init = {c: d for c, d in cds.items() if d.get("initial") is not None}
     if init:
         for key, fl in _default_file_groups(path, all_files, init).items():
@@ -6598,37 +6567,32 @@ def enable_row_tracking(path: str) -> int:
     Writers predating the feature do not allocate — their appends make
     :func:`read_with_row_ids` fail fast on the uncovered file (never a
     silent wrong id)."""
-    v = current_version(path)
-    if v == 0:
-        raise FileNotFoundError(f"no table at {path!r} (empty log)")
-    if row_tracking_enabled(path):
+    read_v, pinned = _ddl_read(path)
+    if pinned.get("row_tracking"):
         raise ValueError(f"row tracking already enabled on {path!r}")
-    schema = latest_meta(path, "schema")
+    schema = pinned.get("schema")
     if schema is None:
         raise ValueError(
             "row tracking needs a logged schema; write once with a "
             "schema-recording commit (any append/overwrite) first"
         )
-    if _ROWID in schema or _ROWID in _physical_reserved(path):
+    reserved = _physical_reserved(pinned)
+    if _ROWID in schema or _ROWID in reserved:
         raise ValueError(
             f"table has a column or reserved physical name {_ROWID!r}"
         )
-    rels = [os.path.relpath(p, path) for p in visible_files(path, v)]
-    bases, wm = _alloc_row_bases(path, rels, wm=0)
-    _try_commit(
+    bases, wm = _alloc_row_bases(path, sorted(_replay(path, read_v)), wm=0)
+    return _commit_ddl(
         path,
-        v + 1,
-        [],
-        [],
-        meta={
+        read_v,
+        {
             "op": "enable_row_tracking",
             "row_tracking": True,
             "row_id_watermark": wm,
-            "physical_reserved": sorted(_physical_reserved(path) | {_ROWID}),
+            "physical_reserved": sorted(reserved | {_ROWID}),
         },
         row_bases=bases,
     )
-    return v + 1
 
 
 def read_with_row_ids(

@@ -196,6 +196,51 @@ class TestProtocolThroughSeam:
         ]
 
 
+class _MarkerCountingStore(LocalLogStore):
+    """Local store counting reads of checkpoint markers (each one parses
+    the whole live-file JSON) and commit existence probes."""
+
+    def __init__(self):
+        self.markers = 0
+        self.probes = 0
+
+    def read_text(self, p):
+        self.markers += p.endswith(".checkpoint.json")
+        return super().read_text(p)
+
+    def exists(self, p):
+        self.probes += 1
+        return super().exists(p)
+
+
+class TestLogTraffic:
+    def test_one_walk_per_snapshot_question(self, spark, tmp_path):
+        """Pin the log traffic of the one log walk on a table whose tip sits
+        four commits above a checkpoint (23 appends, then a DV delete):
+        planning a read resolves the protocol, the snapshot (files and
+        DVs together) and the scan's meta once each; a metadata-only DDL
+        reads its inputs from one meta resolution at its read version."""
+        path = str(tmp_path / "t")
+        for i in range(23):
+            txlog.append(
+                spark.createDataFrame([(i, i * 10)], "id long, v long").coalesce(1),
+                path,
+                stats_cols=["id"],
+            )
+        txlog.delete_where_dv(spark, path, "id = 2")
+        store = _MarkerCountingStore()
+        logstore.set_log_store("", store)
+        try:
+            txlog.read(spark, path)
+            assert (store.markers, store.probes) == (3, 0)
+            store.markers = store.probes = 0
+            txlog.rename_column(path, "v", "w")
+            assert store.markers == 1
+        finally:
+            logstore.set_log_store("", LocalLogStore())
+        assert txlog.latest_meta(path, "column_mapping") == {"w": "v"}
+
+
 class TestS3ConditionalContract:
     """The shipped object-store LogStore (round-13 VERDICT ask #2):
     mutual exclusion rides the server-side conditional write (S3

@@ -1,5 +1,5 @@
-"""Round-11 additions (VERDICT r10 asks): log retention + the
-``_last_checkpoint`` pointer (ask #1), identity-column MERGE INSERT via
+"""Round-11 additions (VERDICT r10 asks): log retention (ask #1; the
+``_last_checkpoint`` pointer tests live in test_txlog.py), identity-column MERGE INSERT via
 per-attempt watermark reservation (ask #3), the persisted merge rewrite
 frame (ask #4) and scoped ``OPTIMIZE ZORDER ... WHERE`` (ask #5). The
 streaming ``schemaTrackingLocation`` restart (ask #6) is tested with the
@@ -8,14 +8,13 @@ rest of the data source in test_txlog_source.py."""
 from __future__ import annotations
 
 import datetime as dt
-import json
 import os
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
-from datalake_brief_spark.sources import logstore, txlog
+from datalake_brief_spark.sources import txlog
 
 
 def _fresh(prefix="r11_"):
@@ -28,57 +27,6 @@ def _batch(spark, n=10, tag=0):
         .withColumnRenamed("id", "k")
         .withColumn("batch", F.lit(tag).cast("int"))
     )
-
-
-class TestLastCheckpointPointer:
-    def test_pointer_written_with_each_checkpoint_and_monotonic(self, spark):
-        path = _fresh()
-        for i in range(25):
-            txlog.append(_batch(spark, tag=i), path)
-        assert txlog._pointer_version(path) == 20
-        # pointer resolves the tip without listing: poison list_dir and
-        # verify current_version still answers through probe-only reads
-        store = logstore.for_path(path)
-        real_list = store.list_dir
-        calls = []
-
-        def spy(d):
-            calls.append(d)
-            return real_list(d)
-
-        store.list_dir = spy
-        try:
-            assert txlog.current_version(path) == 25
-            assert txlog.visible_files(path)  # _replay pointer path
-            assert calls == [], "pointer-accelerated resolution listed the log dir"
-        finally:
-            store.list_dir = real_list
-
-    def test_torn_pointer_falls_back_to_listing(self, spark):
-        path = _fresh()
-        for i in range(12):
-            txlog.append(_batch(spark, tag=i), path)
-        with open(txlog._last_checkpoint_path(path), "w") as f:
-            f.write("{not json")
-        assert txlog.current_version(path) == 12
-        assert txlog.read(spark, path).count() == 120
-
-    def test_stale_pointer_to_reclaimed_checkpoint_falls_back(self, spark):
-        path = _fresh()
-        for i in range(25):
-            txlog.append(_batch(spark, tag=i), path)
-        # hand-regress the pointer to a checkpoint, then delete that
-        # checkpoint marker (simulates a crashed expire + stale pointer)
-        with open(txlog._last_checkpoint_path(path), "w") as f:
-            json.dump({"version": 10}, f)
-        os.remove(txlog._checkpoint_path(path, 10))
-        assert txlog.read(spark, path).count() == 250
-
-    def test_time_travel_below_pointer_uses_older_checkpoint(self, spark):
-        path = _fresh()
-        for i in range(25):
-            txlog.append(_batch(spark, tag=i), path)
-        assert txlog.read(spark, path, version=15).count() == 150
 
 
 class TestExpireLog:
@@ -500,38 +448,6 @@ class TestScopedZorderWhere:
         assert sorted(txlog.read(spark, path).collect()) == expect
 
 
-class TestPointerHotPath:
-    def test_latest_meta_rides_pointer_without_listing(self, spark):
-        """latest_meta runs on every logical-view build; with a valid
-        pointer it must resolve meta (tail walk + marker fold) with ZERO
-        log-directory listings."""
-        path = _fresh("r11lm_")
-        for i in range(23):
-            txlog.append(_batch(spark, tag=i), path)
-        store = logstore.for_path(path)
-        real_list = store.list_dir
-        calls = []
-        store.list_dir = lambda d: (calls.append(d), real_list(d))[1]
-        try:
-            schema = txlog.latest_meta(path, "schema")
-            assert schema and "k" in schema
-            assert calls == [], "latest_meta listed the log dir under a pointer"
-        finally:
-            store.list_dir = real_list
-
-    def test_describe_detail_reports_log_lifecycle(self, spark):
-        path = _fresh("r11dd_")
-        for i in range(25):
-            txlog.append(_batch(spark, tag=i), path)
-        d = txlog.describe_detail(path)
-        assert d["last_checkpoint_version"] == 20
-        assert d["log_earliest_version"] == 1
-        txlog.expire_log(path, retain_versions=10)
-        d2 = txlog.describe_detail(path)
-        assert d2["log_earliest_version"] == 10
-        assert d2["num_rows"] == d["num_rows"]
-
-
 class TestIdentityMergeCrossFeatures:
     def test_identity_insert_on_row_tracking_table(self, spark):
         """ins_factory + row tracking: the factory's per-attempt insert
@@ -577,43 +493,3 @@ class TestIdentityMergeCrossFeatures:
         v = txlog.restore(path, 12, spark)
         assert v == 27
         assert txlog.read(spark, path).count() == 120
-
-
-class TestCheckpointNow:
-    def test_manual_checkpoint_enables_expiry_anywhere(self, spark):
-        """checkpoint_now: the retention horizon can only be a checkpoint;
-        a forced one at the tip lets expire_log reclaim a long
-        un-checkpointed tail on demand."""
-        path = _fresh("r11cn_")
-        for i in range(17):  # cadence checkpoint at 10 only
-            txlog.append(_batch(spark, tag=i), path)
-        assert txlog.checkpoint_now(path) == 17
-        assert txlog._pointer_version(path) == 17
-        assert txlog.checkpoint_now(path) == 17  # idempotent
-        txlog.expire_log(path, retain_versions=1)
-        assert txlog._versions(path)[0] == 17
-        assert txlog.read(spark, path).count() == 170
-        assert txlog.checkpoint_now(_fresh("r11cn0_")) == 0  # empty log
-
-    def test_pointer_resolves_multipart_checkpoint(self, spark):
-        """The pointer fast path must load a MULTI-PART checkpoint (marker
-        + parquet parts) exactly like the listing path."""
-        path = _fresh("r11mp_")
-        for i in range(3):
-            txlog.append(_batch(spark, n=50, tag=i).repartition(2), path)
-        old = txlog._CHECKPOINT_MULTIPART_MIN_FILES
-        txlog._CHECKPOINT_MULTIPART_MIN_FILES = 1  # force parts
-        try:
-            assert txlog.checkpoint_now(path) == 3
-        finally:
-            txlog._CHECKPOINT_MULTIPART_MIN_FILES = old
-        store = logstore.for_path(path)
-        real_list = store.list_dir
-        calls = []
-        store.list_dir = lambda d: (calls.append(d), real_list(d))[1]
-        try:
-            assert txlog.read(spark, path).count() == 150
-            assert txlog.fast_count(path) == 150
-            assert calls == []
-        finally:
-            store.list_dir = real_list

@@ -3,16 +3,26 @@ travel, optimistic concurrency, merge, vacuum (sources/txlog.py)."""
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
-from datalake_brief_spark.sources import txlog
+from datalake_brief_spark.sources import logstore, txlog
 
 
 def _df(spark, rows):
     return spark.createDataFrame(rows, "id long, v string, version int")
+
+
+def _batch(spark, n=10, tag=0):
+    return (
+        spark.range(n)
+        .withColumnRenamed("id", "k")
+        .withColumn("batch", F.lit(tag).cast("int"))
+    )
 
 
 def _executed_plans(spark, fn):
@@ -1624,6 +1634,239 @@ class TestLogCheckpoints:
         assert got == set(range(3, 9))
 
 
+class TestLastCheckpointPointer:
+    def test_pointer_written_with_each_checkpoint_and_monotonic(self, spark, tmp_path):
+        path = str(tmp_path / "t")
+        for i in range(25):
+            txlog.append(_batch(spark, tag=i), path)
+        assert txlog._pointer_version(path) == 20
+        # pointer resolves the tip without listing: poison list_dir and
+        # verify current_version still answers through probe-only reads
+        store = logstore.for_path(path)
+        real_list = store.list_dir
+        calls = []
+
+        def spy(d):
+            calls.append(d)
+            return real_list(d)
+
+        store.list_dir = spy
+        try:
+            assert txlog.current_version(path) == 25
+            assert txlog.visible_files(path)  # _replay pointer path
+            assert calls == [], "pointer-accelerated resolution listed the log dir"
+        finally:
+            store.list_dir = real_list
+
+    def test_torn_pointer_falls_back_to_listing(self, spark, tmp_path):
+        path = str(tmp_path / "t")
+        for i in range(12):
+            txlog.append(_batch(spark, tag=i), path)
+        with open(txlog._last_checkpoint_path(path), "w") as f:
+            f.write("{not json")
+        assert txlog.current_version(path) == 12
+        assert txlog.read(spark, path).count() == 120
+
+    def test_stale_pointer_to_reclaimed_checkpoint_falls_back(self, spark, tmp_path):
+        path = str(tmp_path / "t")
+        for i in range(25):
+            txlog.append(_batch(spark, tag=i), path)
+        # hand-regress the pointer to a checkpoint, then delete that
+        # checkpoint marker (simulates a crashed expire + stale pointer)
+        with open(txlog._last_checkpoint_path(path), "w") as f:
+            json.dump({"version": 10}, f)
+        os.remove(txlog._checkpoint_path(path, 10))
+        assert txlog.read(spark, path).count() == 250
+
+    def test_time_travel_below_pointer_uses_older_checkpoint(self, spark, tmp_path):
+        path = str(tmp_path / "t")
+        for i in range(25):
+            txlog.append(_batch(spark, tag=i), path)
+        assert txlog.read(spark, path, version=15).count() == 150
+
+
+class TestPointerHotPath:
+    def test_latest_meta_rides_pointer_without_listing(self, spark, tmp_path):
+        """latest_meta runs on every logical-view build; with a valid
+        pointer it must resolve meta (tail walk + marker fold) with ZERO
+        log-directory listings."""
+        path = str(tmp_path / "t")
+        for i in range(23):
+            txlog.append(_batch(spark, tag=i), path)
+        store = logstore.for_path(path)
+        real_list = store.list_dir
+        calls = []
+        store.list_dir = lambda d: (calls.append(d), real_list(d))[1]
+        try:
+            schema = txlog.latest_meta(path, "schema")
+            assert schema and "k" in schema
+            assert calls == [], "latest_meta listed the log dir under a pointer"
+        finally:
+            store.list_dir = real_list
+
+    def test_describe_detail_reports_log_lifecycle(self, spark, tmp_path):
+        path = str(tmp_path / "t")
+        for i in range(25):
+            txlog.append(_batch(spark, tag=i), path)
+        d = txlog.describe_detail(path)
+        assert d["last_checkpoint_version"] == 20
+        assert d["log_earliest_version"] == 1
+        txlog.expire_log(path, retain_versions=10)
+        d2 = txlog.describe_detail(path)
+        assert d2["log_earliest_version"] == 10
+        assert d2["num_rows"] == d["num_rows"]
+
+
+class TestCheckpointNow:
+    def test_manual_checkpoint_enables_expiry_anywhere(self, spark, tmp_path):
+        """checkpoint_now: the retention horizon can only be a checkpoint;
+        a forced one at the tip lets expire_log reclaim a long
+        un-checkpointed tail on demand."""
+        path = str(tmp_path / "t")
+        for i in range(17):  # cadence checkpoint at 10 only
+            txlog.append(_batch(spark, tag=i), path)
+        assert txlog.checkpoint_now(path) == 17
+        assert txlog._pointer_version(path) == 17
+        assert txlog.checkpoint_now(path) == 17  # idempotent
+        txlog.expire_log(path, retain_versions=1)
+        assert txlog._versions(path)[0] == 17
+        assert txlog.read(spark, path).count() == 170
+        assert txlog.checkpoint_now(str(tmp_path / "empty")) == 0  # empty log
+
+    def test_pointer_resolves_multipart_checkpoint(self, spark, tmp_path):
+        """The pointer fast path must load a MULTI-PART checkpoint (marker
+        + parquet parts) exactly like the listing path."""
+        path = str(tmp_path / "t")
+        for i in range(3):
+            txlog.append(_batch(spark, n=50, tag=i).repartition(2), path)
+        old = txlog._CHECKPOINT_MULTIPART_MIN_FILES
+        txlog._CHECKPOINT_MULTIPART_MIN_FILES = 1  # force parts
+        try:
+            assert txlog.checkpoint_now(path) == 3
+        finally:
+            txlog._CHECKPOINT_MULTIPART_MIN_FILES = old
+        store = logstore.for_path(path)
+        real_list = store.list_dir
+        calls = []
+        store.list_dir = lambda d: (calls.append(d), real_list(d))[1]
+        try:
+            assert txlog.read(spark, path).count() == 150
+            assert txlog.fast_count(path) == 150
+            assert calls == []
+        finally:
+            store.list_dir = real_list
+
+
+def _walked_meta(path, key, version):
+    """``meta[key]`` at ``version`` by hand: the commit JSONs newest-first."""
+    for v in range(version, 0, -1):
+        with open(txlog._commit_path(path, v)) as f:
+            meta = json.load(f).get("meta", {})
+        if key in meta:
+            return meta[key]
+    return None
+
+
+class TestMetaParity:
+    """latest_meta resolves through the same log walk as the file list
+    (checkpoint meta_latest + tail). Over every log shape it must equal a
+    newest-first walk of the commit JSONs, for every key at every version
+    — across two checkpoints, renames, a widen, properties, constraints
+    and txn: keys."""
+
+    @pytest.fixture(scope="class")
+    def table(self, spark, tmp_path_factory):
+        path = str(tmp_path_factory.mktemp("meta_parity") / "t")
+
+        def put(col, txn):
+            def step(i):
+                df = spark.createDataFrame(
+                    [(i, i * 10, f"k{i}")], f"id int, {col} long, k string"
+                )
+                return txlog.append(df.coalesce(1), path, meta={txn: i})
+            return step
+
+        steps = [
+            put("v", "txn:a"),
+            put("v", "txn:a"),
+            lambda i: txlog.set_table_properties(path, {"p": "1"}),
+            lambda i: txlog.add_constraint(spark, path, "pos", "id >= 0"),
+            *[put("v", "txn:b")] * 5,
+            lambda i: txlog.rename_column(path, "v", "w"),  # checkpoint 10
+            lambda i: txlog.widen_column_type(path, "id", "bigint"),
+            *[put("w", "txn:a")] * 4,
+            lambda i: txlog.set_table_properties(path, {"p": "2", "q": "x"}),
+            lambda i: txlog.drop_constraint(path, "pos"),
+            *[put("w", "txn:b")] * 3,  # checkpoint 20
+            lambda i: txlog.unset_table_properties(path, ["q"]),
+            put("w", "txn:a"),
+            lambda i: txlog.add_constraint(spark, path, "small", "id < 1000"),
+        ]
+        for i, step in enumerate(steps, start=1):
+            assert step(i) == i
+        return path
+
+    def _shaped(self, table, dst, shape, monkeypatch):
+        shutil.copytree(table, dst)
+        log = os.path.join(dst, "_txlog")
+        if shape == "no_checkpoint":
+            for f in os.listdir(log):
+                if ".checkpoint." in f or f == "_last_checkpoint":
+                    os.remove(os.path.join(log, f))
+        elif shape == "torn_pointer":
+            with open(txlog._last_checkpoint_path(dst), "w") as f:
+                f.write("{not json")
+        elif shape == "multipart":
+            monkeypatch.setattr(txlog, "_CHECKPOINT_MULTIPART_MIN_FILES", 1)
+            for v in (10, 20):
+                os.remove(txlog._checkpoint_path(dst, v))
+            for v in (10, 20):
+                txlog._write_checkpoint(dst, v)
+                with open(txlog._checkpoint_path(dst, v)) as f:
+                    assert "parts" in json.load(f)
+        elif shape == "legacy":
+            for v in (10, 20):
+                with open(txlog._checkpoint_path(dst, v)) as f:
+                    cp = json.load(f)
+                del cp["meta_latest"]
+                with open(txlog._checkpoint_path(dst, v), "w") as f:
+                    json.dump(cp, f)
+        return dst
+
+    @pytest.mark.parametrize(
+        "shape", ["no_checkpoint", "pointer", "torn_pointer", "multipart", "legacy"]
+    )
+    def test_latest_meta_equals_commit_walk(self, table, tmp_path, monkeypatch, shape):
+        path = self._shaped(table, str(tmp_path / "t"), shape, monkeypatch)
+        tip = txlog.current_version(path)
+        assert tip == 23
+        keys = set()
+        for v in range(1, tip + 1):
+            with open(txlog._commit_path(path, v)) as f:
+                keys |= set(json.load(f).get("meta", {}))
+        assert {"schema", "column_mapping", "properties", "constraints"} <= keys
+        assert {"txn:a", "txn:b", "protocol"} <= keys
+        # meta never loads the parts of a multi-part checkpoint
+        store = logstore.for_path(path)
+        monkeypatch.setattr(
+            store, "read_bytes", lambda p: pytest.fail(f"meta read {p}")
+        )
+        for v in [*range(1, tip + 1), None]:
+            want = {k: _walked_meta(path, k, v or tip) for k in sorted(keys)}
+            got = {k: txlog.latest_meta(path, k, v) for k in sorted(keys)}
+            assert got == want, (shape, v)
+
+    def test_below_expiry_horizon_raises_floor_error(self, table, tmp_path):
+        path = str(tmp_path / "t")
+        shutil.copytree(table, path)
+        assert txlog.expire_log(path, retain_versions=4)  # horizon: 20
+        with pytest.raises(FileNotFoundError, match="earliest readable version is 20"):
+            txlog.latest_meta(path, "schema", 15)
+        assert txlog.latest_meta(path, "properties", 20) == {"p": "2", "q": "x"}
+        assert txlog.latest_meta(path, "properties") == {"p": "2"}
+        assert set(txlog.latest_meta(path, "constraints")) == {"small"}
+
+
 class TestMultipartCheckpoints:
     """Past _CHECKPOINT_MULTIPART_MIN_FILES live files a checkpoint spills
     to parquet parts with the JSON reduced to a completion marker — the
@@ -3022,7 +3265,9 @@ class TestDeletionVectorsRound8:
         import shutil as _shutil
 
         v2 = txlog.delete_where_dv(spark, table, "k = 3")
-        txlog.delete_where(spark, table, "k = 3")  # orphan the DV via CoW
+        # orphan the DV via a CoW rewrite of the files carrying it (the
+        # k = 3 rows are DV-dead, so only the live k = 4 rows match)
+        txlog.delete_where(spark, table, "k = 3 OR k = 4")
         for g in _glob.glob(os.path.join(table, "_dv", "*")):
             _shutil.rmtree(g)
         with pytest.raises(FileNotFoundError, match="deletion-?\\s?vector"):
@@ -4750,3 +4995,112 @@ class TestStraddlingInitialDefault:
             (5, "insert", 5): ("b", "new", 4),
             (6, "insert", 5): ("b", "new", 5),
         }
+
+
+class TestCowSkipsDvDeadRows:
+    """A copy-on-write mutation whose predicate matches only rows a
+    deletion vector already deleted changes nothing: the file tag scan
+    sees live rows only, so no file is rewritten and no version lands."""
+
+    def _table(self, spark, tmp_path):
+        path = str(tmp_path / "t")
+        txlog.append(
+            spark.createDataFrame(
+                [(i, i * 10) for i in range(1, 7)], "id long, v long"
+            ).coalesce(1),
+            path,
+        )
+        txlog.delete_where_dv(spark, path, "id = 2")
+        return path, txlog.visible_files(path)
+
+    def _assert_untouched(self, spark, path, files):
+        assert txlog.current_version(path) == 2
+        assert txlog.visible_files(path) == files
+        assert sorted(r.id for r in txlog.read(spark, path).collect()) == [1, 3, 4, 5, 6]
+
+    def test_delete_where(self, spark, tmp_path):
+        path, files = self._table(spark, tmp_path)
+        txlog.delete_where(spark, path, "id = 2")
+        self._assert_untouched(spark, path, files)
+
+    def test_update_where(self, spark, tmp_path):
+        path, files = self._table(spark, tmp_path)
+        txlog.update_where(spark, path, "id = 2", {"v": F.col("v") + 1})
+        self._assert_untouched(spark, path, files)
+
+    def test_merge_update_only(self, spark, tmp_path):
+        path, files = self._table(spark, tmp_path)
+        src = spark.createDataFrame([(2, 99)], "id long, v long")
+        txlog.merge_into(
+            spark, path, src, ["id"],
+            when_matched=[("update", "*")], when_not_matched=False,
+        )
+        self._assert_untouched(spark, path, files)
+
+
+def _race_inside(monkeypatch, fn_name, racer, after=False):
+    """Run ``racer`` once inside the next call of ``txlog.<fn_name>``:
+    before the real function answers, or just after with ``after``."""
+    real = getattr(txlog, fn_name)
+    pending = [racer]
+
+    def raced(*args, **kwargs):
+        if pending and not after:
+            pending.pop()()
+        out = real(*args, **kwargs)
+        if pending:
+            pending.pop()()
+        return out
+
+    monkeypatch.setattr(txlog, fn_name, raced)
+
+
+class TestDdlPinnedToReadVersion:
+    """A metadata-only DDL reads its inputs at the version it commits
+    after: a commit racing in before that read is folded in, never
+    overwritten by a stale copy of the same meta key."""
+
+    def test_add_constraint_keeps_racing_add(self, spark, tmp_path, monkeypatch):
+        path = str(tmp_path / "t")
+        txlog.append(_df(spark, [(1, "a", 1)]), path)
+        _race_inside(
+            monkeypatch, "current_version",
+            lambda: txlog.add_constraint(spark, path, "theirs", "id > 0"),
+        )
+        assert txlog.add_constraint(spark, path, "mine", "id < 100") == 3
+        assert set(txlog.latest_meta(path, "constraints")) == {"theirs", "mine"}
+
+    def test_drop_constraint_keeps_racing_drop(self, spark, tmp_path, monkeypatch):
+        path = str(tmp_path / "t")
+        txlog.append(_df(spark, [(1, "a", 1)]), path)
+        txlog.add_constraint(spark, path, "a", "id > 0")
+        txlog.add_constraint(spark, path, "b", "id < 100")
+        _race_inside(
+            monkeypatch, "current_version", lambda: txlog.drop_constraint(path, "b")
+        )
+        assert txlog.drop_constraint(path, "a") == 5
+        assert txlog.latest_meta(path, "constraints") == {}
+
+
+class TestReadPinsOneSnapshot:
+    def test_files_and_dvs_from_one_version(self, spark, tmp_path, monkeypatch):
+        """read at the tip resolves the file list and the deletion vectors
+        from one snapshot: a compaction landing between two resolutions
+        must not pair the old files with the new (DV-less) state, which
+        would resurrect deleted rows."""
+        path = str(tmp_path / "t")
+        for i in range(2):
+            txlog.append(
+                spark.createDataFrame(
+                    [(3 * i + j,) for j in range(3)], "id long"
+                ).coalesce(1),
+                path,
+            )
+        txlog.delete_where_dv(spark, path, "id = 1")
+        _race_inside(
+            monkeypatch, "_replay",
+            lambda: txlog.optimize(spark, path, target_file_bytes=1 << 30),
+            after=True,
+        )
+        got = sorted(r.id for r in txlog.read(spark, path).collect())
+        assert got == [0, 2, 3, 4, 5]
