@@ -1129,18 +1129,17 @@ _BLOOM_OK_TYPES = {"tinyint", "smallint", "int", "bigint", "string", "boolean"}
 
 
 def _check_bloom_cols(
-    df: DataFrame, bloom_cols: list[str] | None, path: str | None = None
+    df: DataFrame, bloom_cols: list[str] | None, meta: dict
 ) -> None:
     if not bloom_cols:
         return
-    types = dict(df.dtypes)
-    if path is not None:
-        # validate against the LOGGED type where one exists: after a
-        # chain-leaving widen (int→double) a narrow producer's frame is
-        # still int, but probes against the now-double LOGICAL column
-        # hash the repr — a bloom built from this frame would false-skip
-        logged = latest_meta(path, "schema") or {}
-        types = {c: logged.get(c, t) for c, t in types.items()}
+    # validate against the LOGGED type (``meta``: the writer's pinned
+    # table meta) where one exists: after a chain-leaving widen
+    # (int→double) a narrow producer's frame is still int, but probes
+    # against the now-double LOGICAL column hash the repr — a bloom built
+    # from this frame would false-skip
+    logged = meta.get("schema") or {}
+    types = {c: logged.get(c, t) for c, t in df.dtypes}
     bad = {c: types[c] for c in bloom_cols if types.get(c) not in _BLOOM_OK_TYPES}
     if bad:
         raise TypeError(
@@ -1418,9 +1417,11 @@ def _features(meta: dict) -> set[str]:
     return set((meta.get("protocol") or {}).get("reader_features", []))
 
 
-def _check_reader(path: str, version: int | None = None) -> None:
-    required = set(table_protocol(path, version).get("reader_features", []))
-    unknown = required - _READER_FEATURES
+def _check_reader(
+    path: str, version: int | None = None, meta: dict | None = None
+) -> None:
+    # ``meta``: the table meta at ``version``, when the caller holds it
+    unknown = _features(meta or _meta_at(path, version)) - _READER_FEATURES
     if unknown:
         raise ValueError(
             f"table at {path!r} requires reader feature(s) this build does "
@@ -1429,25 +1430,28 @@ def _check_reader(path: str, version: int | None = None) -> None:
         )
 
 
-def _with_feature(pinned: dict, meta: dict, feature: str) -> dict:
-    """Fold ``feature`` into the commit meta's protocol declaration if the
+def _with_feature(pinned: dict, meta: dict, *features: str) -> dict:
+    """Fold ``features`` into the commit meta's protocol declaration if the
     table meta ``pinned`` — read at the writer's read version — has not
-    declared it yet (idempotent: later commits carry no protocol key)."""
+    declared them all yet (idempotent: later commits carry no protocol
+    key)."""
     cur = _features(pinned)
-    if feature not in cur:
+    if set(features) - cur:
         meta = {
             **meta,
-            "protocol": {"reader_features": sorted(cur | {feature})},
+            "protocol": {"reader_features": sorted(cur.union(features))},
         }
     return meta
 
 
-def _ddl_read(path: str, need_table: bool = True) -> tuple[int, dict]:
-    """A metadata-only DDL's read: its read version and the table meta at
-    that version. Every input the DDL checks and rewrites comes from this
-    one snapshot and :func:`_commit_ddl` lands at ``read_v + 1``, so a
-    racing commit either is in what the DDL read or makes it conflict —
-    never lost under it. ``need_table`` rejects an empty log."""
+def _pinned_read(path: str, need_table: bool = True) -> tuple[int, dict]:
+    """A writer's read: its read version and the table meta at that
+    version, the PINNED meta. Every input a metadata-only DDL or a
+    row-level mutation checks and rewrites comes from this one snapshot,
+    and the commit lands after ``read_v`` (a DDL's :func:`_commit_ddl` at
+    ``read_v + 1``), so a racing commit either is in what the writer read
+    or is examined at commit — never lost under it. ``need_table``
+    rejects an empty log."""
     read_v = current_version(path)
     if need_table and read_v == 0:
         raise FileNotFoundError(f"no table at {path!r} (empty log)")
@@ -1542,7 +1546,7 @@ def drop_feature(path: str, feature: str) -> int:
         raise ValueError(
             f"unknown feature {feature!r} (supported: {sorted(_READER_FEATURES)})"
         )
-    read_v, pinned = _ddl_read(path, need_table=False)
+    read_v, pinned = _pinned_read(path, need_table=False)
     cur = _features(pinned)
     if feature not in cur:
         raise ValueError(
@@ -1785,7 +1789,7 @@ def rename_column(path: str, old: str, new: str) -> int:
     the new name collides with a RESERVED physical name still present in
     data files (old bytes would resurrect under it). Renaming back to a
     column's own original name is always legal."""
-    read_v, pinned = _ddl_read(path)
+    read_v, pinned = _pinned_read(path)
     schema = pinned.get("schema")
     if schema is None:
         raise ValueError(
@@ -1834,7 +1838,7 @@ def drop_column(path: str, name: str) -> int:
     append re-introducing the same logical name gets a fresh generated
     physical name, so the old bytes can never resurrect. Time travel
     below the drop still reads the column."""
-    read_v, pinned = _ddl_read(path)
+    read_v, pinned = _pinned_read(path)
     schema = pinned.get("schema")
     if schema is None or name not in schema:
         raise ValueError(f"no column {name!r} (have {sorted(schema or {})})")
@@ -1893,7 +1897,7 @@ def widen_column_type(path: str, col: str, to_type: str) -> int:
 
     Cites: Delta Lake type widening (public docs/protocol); the
     reference has no ALTER surface (SURVEY §2.13)."""
-    read_v, pinned = _ddl_read(path)
+    read_v, pinned = _pinned_read(path)
     schema = pinned.get("schema")
     if schema is None:
         raise ValueError(
@@ -2006,7 +2010,7 @@ def add_column(
     ``default``. A re-introduced name that is still physically RESERVED
     (dropped earlier) maps to a fresh physical name, exactly like the
     append path. Returns the new version."""
-    read_v, pinned = _ddl_read(path)
+    read_v, pinned = _pinned_read(path)
     schema = pinned.get("schema")
     if schema is None:
         raise ValueError(
@@ -2027,12 +2031,13 @@ def add_column(
     }
     reserved = _physical_reserved(pinned)
     mapping = dict(pinned.get("column_mapping") or {})
+    feats = []
     if name in reserved:
         phys = f"{name}__c{uuid.uuid4().hex[:8]}"
         mapping[name] = phys
         meta["column_mapping"] = mapping
         meta["physical_reserved"] = sorted(reserved | {phys})
-        meta = _with_feature(pinned, meta, "column-mapping")
+        feats.append("column-mapping")
     if default is not None:
         value = _eval_default(spark, default, dtype)
         cds = dict(pinned.get("column_defaults") or {})
@@ -2043,8 +2048,8 @@ def add_column(
             "v_add": read_v + 1,
         }
         meta["column_defaults"] = cds
-        meta = _with_feature(pinned, meta, "column-defaults")
-    return _commit_ddl(path, read_v, meta)
+        feats.append("column-defaults")
+    return _commit_ddl(path, read_v, _with_feature(pinned, meta, *feats))
 
 
 def set_column_default(
@@ -2057,7 +2062,7 @@ def set_column_default(
     :func:`add_column`'s invariant). Setting a first-ever write default
     on an existing column is allowed and needs no reader feature (write
     defaults are writer-side — the files carry real values)."""
-    read_v, pinned = _ddl_read(path, need_table=False)
+    read_v, pinned = _pinned_read(path, need_table=False)
     schema = pinned.get("schema") or {}
     if name not in schema:
         raise ValueError(f"no column {name!r} (have {sorted(schema)})")
@@ -2085,25 +2090,6 @@ def set_column_default(
         read_v,
         {"op": "set_column_default", "column": name, "column_defaults": cds},
     )
-
-
-def _apply_write_defaults(df: DataFrame, path: str) -> DataFrame:
-    """Fill every column the batch OMITS that carries a write default
-    (the Iceberg write-default contract) — before identity/generated/
-    constraint processing, so a generated expression or CHECK referencing
-    a defaulted column sees the filled value."""
-    cds = latest_meta(path, "column_defaults") or {}
-    if not cds:
-        return df
-    schema = latest_meta(path, "schema") or {}
-    for c, d in cds.items():
-        if (
-            d.get("write") is not None
-            and c in schema
-            and c not in df.columns
-        ):
-            df = df.withColumn(c, F.expr(d["write"]).cast(schema[c]))
-    return df
 
 
 def _default_file_groups(
@@ -2187,7 +2173,7 @@ def set_table_properties(path: str, props: dict) -> int:
     Racing writers: the merge base is the CURRENT map, so two concurrent
     sets of DIFFERENT keys serialize via the commit race (the loser's
     retry is the caller's re-run, same contract as the other DDL)."""
-    read_v, pinned = _ddl_read(path)
+    read_v, pinned = _pinned_read(path)
     cur = dict(pinned.get("properties") or {})
     cur.update({str(k): str(v) for k, v in props.items()})
     return _commit_ddl(
@@ -2309,7 +2295,7 @@ def unset_table_properties(path: str, keys: list[str]) -> int:
     """``ALTER TABLE ... UNSET TBLPROPERTIES`` — metadata-only commit
     removing ``keys`` (missing keys are ignored, like Delta's
     IF EXISTS)."""
-    read_v, pinned = _ddl_read(path)
+    read_v, pinned = _pinned_read(path)
     cur = dict(pinned.get("properties") or {})
     for k in keys:
         cur.pop(str(k), None)
@@ -2329,7 +2315,7 @@ def add_constraint(
     SQL CHECK semantics: only rows where the expression is FALSE violate —
     NULL passes, as in every SQL engine. Returns the new version (a
     metadata-only commit: no files move)."""
-    read_v, pinned = _ddl_read(path)
+    read_v, pinned = _pinned_read(path)
     cur = dict(pinned.get("constraints") or {})
     if name in cur:
         raise ValueError(f"constraint {name!r} already exists: {cur[name]!r}")
@@ -2354,7 +2340,7 @@ def add_constraint(
 def drop_constraint(path: str, name: str) -> int:
     """``ALTER TABLE DROP CONSTRAINT``: metadata-only commit removing the
     named constraint from enforcement."""
-    read_v, pinned = _ddl_read(path, need_table=False)
+    read_v, pinned = _pinned_read(path, need_table=False)
     cur = dict(pinned.get("constraints") or {})
     if name not in cur:
         raise ValueError(f"no constraint {name!r} (have {sorted(cur)})")
@@ -2364,26 +2350,6 @@ def drop_constraint(path: str, name: str) -> int:
         read_v,
         {"op": "drop_constraint", "constraints": cur, "constraint": name},
     )
-
-
-def _enforce_constraints(df: DataFrame, path: str) -> None:
-    """Reject a write whose rows violate any logged CHECK constraint (one
-    combined pass over the incoming batch; the per-constraint re-check runs
-    only on the error path to name the offenders)."""
-    cons = latest_meta(path, "constraints") or {}
-    if not cons:
-        return
-    viol = None
-    for sql in cons.values():
-        c = F.expr(sql) == F.lit(False)
-        viol = c if viol is None else viol | c
-    if df.filter(viol).limit(1).count():
-        bad = sorted(
-            n
-            for n, sql in cons.items()
-            if df.filter(F.expr(sql) == F.lit(False)).limit(1).count()
-        )
-        raise ValueError(f"CHECK constraint(s) violated by the write: {bad}")
 
 
 def add_generated_column(
@@ -2406,7 +2372,7 @@ def add_generated_column(
     exist and every existing row is validated against the expression
     first (one scan, fail-closed), so the invariant is true from the
     declaring commit onward — never retroactively assumed."""
-    read_v, pinned = _ddl_read(path)
+    read_v, pinned = _pinned_read(path)
     gens = dict(pinned.get("generated") or {})
     if name in gens:
         raise ValueError(f"column {name!r} already has a generation expression")
@@ -2453,7 +2419,7 @@ def add_identity_column(path: str, name: str, start: int = 1, step: int = 1) -> 
     files and the name unused."""
     if step == 0:
         raise ValueError("identity step must be non-zero")
-    read_v, pinned = _ddl_read(path, need_table=False)
+    read_v, pinned = _pinned_read(path, need_table=False)
     if read_v and _replay(path, read_v):
         raise ValueError(
             "identity columns are declared at table creation (Delta "
@@ -2468,62 +2434,89 @@ def add_identity_column(path: str, name: str, start: int = 1, step: int = 1) -> 
     )
 
 
-def _apply_generated(df: DataFrame, path: str) -> DataFrame:
-    """Compute-or-validate every logged generation expression on a write
-    batch: absent columns are computed; supplied ones must match the
-    expression on EVERY row (NULL-safe compare, fail-closed) — the Delta
-    generated-column write contract, enforced on append/overwrite, the
-    MERGE insert leg, and every rewritten-row frame (so a mutation that
-    breaks the derivation fails loudly instead of poisoning the table)."""
-    gens = latest_meta(path, "generated") or {}
-    for name, g in gens.items():
+def _contract_of(meta: dict) -> tuple[dict, dict]:
+    """The rules of :func:`_write_contract` a racing DDL can change under
+    a writer (write defaults stay out: a racing one only fills later
+    writes)."""
+    return meta.get("constraints") or {}, meta.get("generated") or {}
+
+
+def _write_contract(
+    df: DataFrame, meta: dict, new: str | None = None, fill: bool = True
+) -> DataFrame:
+    """The one writer-side table contract (Delta's writer features), on
+    ``meta`` — the table meta at the writer's PINNED read version, never
+    re-resolved here; a commit past a racing change to
+    :func:`_contract_of` conflicts instead. In one fixed order:
+
+    1. fill the write default of every column the batch omits;
+    2. assign identity values from ``meta``'s watermark (ALWAYS mode:
+       a batch supplying the column is rejected);
+    3. compute every generated column the batch omits and validate the
+       supplied ones on EVERY row (NULL-safe compare, fail-closed);
+    4. reject the write if any row makes a CHECK constraint FALSE (NULL
+       passes; the per-constraint re-check only names the offenders).
+
+    ``new`` names NEW rows ("appended", ...), which must not carry the
+    reserved ``__row_id`` on a row-tracking table; ``None`` marks rows
+    already in the table's shape (update outputs, MERGE's batch): they
+    skip steps 1-2 and only validate in step 3. ``fill=False`` skips
+    step 1. Returns the completed frame."""
+    if new is not None:
+        if meta.get("row_tracking") and _ROWID in df.columns:
+            raise ValueError(
+                f"{_ROWID!r} is the reserved row-tracking column; {new} "
+                f"frames must not carry it"
+            )
+        schema = meta.get("schema") or {}
+        for c, d in (meta.get("column_defaults") or {}).items() if fill else ():
+            if d.get("write") is not None and c in schema and c not in df.columns:
+                df = df.withColumn(c, F.expr(d["write"]).cast(schema[c]))
+        for name, spec in (meta.get("identity") or {}).items():
+            if name in df.columns:
+                raise ValueError(
+                    f"{name!r} is GENERATED ALWAYS AS IDENTITY; batches "
+                    f"must not supply it"
+                )
+            base, step = int(spec["next"]), int(spec["step"])
+            df = df.withColumn(
+                name,
+                (F.lit(base) + F.lit(step) * F.monotonically_increasing_id())
+                .cast("bigint"),
+            )
+    for name, g in (meta.get("generated") or {}).items():
         expr = F.expr(g["expr"]).cast(g["type"])
         if name not in df.columns:
-            df = df.withColumn(name, expr)
-        elif (
-            df.filter(~F.col(name).eqNullSafe(expr)).limit(1).count()
-        ):
+            if new is not None:
+                df = df.withColumn(name, expr)
+        elif df.filter(~F.col(name).eqNullSafe(expr)).limit(1).count():
             raise ValueError(
                 f"supplied values for generated column {name!r} do not "
                 f"match its generation expression {g['expr']!r}"
             )
+    cons = meta.get("constraints") or {}
+    if cons:
+        viol = functools.reduce(
+            operator.or_, [F.expr(sql) == F.lit(False) for sql in cons.values()]
+        )
+        if df.filter(viol).limit(1).count():
+            bad = sorted(
+                n
+                for n, sql in cons.items()
+                if df.filter(F.expr(sql) == F.lit(False)).limit(1).count()
+            )
+            raise ValueError(f"CHECK constraint(s) violated by the write: {bad}")
     return df
 
 
-def _apply_identity(df: DataFrame, path: str) -> tuple[DataFrame, dict]:
-    """Assign identity values for an append batch from the logged
-    watermark. Returns (frame with the columns, meta watermark update) —
-    the commit loop re-invokes per attempt so a lost race re-reads the
-    winner's watermark. Values bake into the data files; see append's
-    identity re-land note for the conflict path."""
-    idents = latest_meta(path, "identity") or {}
+def _advance_identity(path: str, adds: list[str], idents: dict | None) -> dict:
+    """Post-land watermark advance of the identity columns ``idents`` (the
+    meta :func:`_write_contract` assigned from): the landed files' footer
+    min/max (no data pages read) move ``next`` one step past the batch's
+    extreme. Returns the commit meta update."""
     if not idents:
-        return df, {}
-    for name in idents:
-        if name in df.columns:
-            raise ValueError(
-                f"{name!r} is GENERATED ALWAYS AS IDENTITY; batches must "
-                f"not supply it"
-            )
-    out = df
-    for name, spec in idents.items():
-        base, step = int(spec["next"]), int(spec["step"])
-        out = out.withColumn(
-            name,
-            (F.lit(base) + F.lit(step) * F.monotonically_increasing_id()).cast(
-                "bigint"
-            ),
-        )
-    return out, {"identity": idents}
-
-
-def _advance_identity(path: str, adds: list[str], idents_meta: dict) -> dict:
-    """Post-land watermark advance: the landed files' footer min/max of
-    each identity column (no data pages read) move ``next`` one step past
-    the batch's extreme — the same footer-stats trick fast_count uses."""
-    if not idents_meta:
         return {}
-    idents = {k: dict(v) for k, v in idents_meta["identity"].items()}
+    idents = {k: dict(v) for k, v in idents.items()}
     for name, spec in idents.items():
         step = int(spec["step"])
         extreme = None
@@ -2592,6 +2585,12 @@ def append(
     ``merge_schema=True`` (additive evolution — pair with
     ``read(merge_schema=True)``); see :func:`_validate_append_schema`.
 
+    The write contract (:func:`_write_contract`) and the schema check
+    run against ONE table meta resolved before any file lands; each
+    commit attempt re-resolves the tip once, and a racing change to what
+    those checks or the landed files assumed raises
+    :class:`CommitConflict` and sweeps the landed group.
+
     ``auto_compact=True`` runs a best-effort post-commit compaction when
     at least ``auto_compact_min_files`` visible files are under half
     ``auto_compact_target_bytes`` — the Delta autoCompact shape that keeps
@@ -2602,20 +2601,16 @@ def append(
     every writer inherits the table's policy; an explicit ``False`` opts
     this call out. The returned version is the APPEND's commit; a
     compaction that fires lands one more."""
-    _check_bloom_cols(df, bloom_cols, path)
-    # write defaults, then identity + generated columns join the batch
-    # BEFORE any validation (they are part of the schema the validations
-    # speak about; defaults first so generated/CHECK expressions see the
-    # filled values)
-    df = _apply_write_defaults(df, path)
-    df, idents_meta = _apply_identity(df, path)
-    df = _apply_generated(df, path)
-    ident_cols = frozenset(idents_meta.get("identity", {}))
-    tip = _meta_at(path)
+    # one pinned meta for every check before landing: the write contract
+    # (defaults, identity, generated, CHECK) completes and validates the
+    # batch, then the schema contract speaks about the completed frame
+    pinned = _meta_at(path)
+    _check_bloom_cols(df, bloom_cols, pinned)
+    df = _write_contract(df, pinned, new="appended")
+    idents = pinned.get("identity") or {}
     _validate_append_schema(  # fail BEFORE data lands
-        tip.get("schema"), df, merge_schema, system_cols=ident_cols
+        pinned.get("schema"), df, merge_schema, system_cols=frozenset(idents)
     )
-    _enforce_constraints(df, path)
     if partition_by:
         missing_p = [c for c in partition_by if c not in df.columns]
         if missing_p:
@@ -2625,15 +2620,10 @@ def append(
     # renamed-away or dropped column still present in old files) — it gets
     # a fresh generated physical name, or the old bytes would resurrect
     # under the new column.
-    if _ROWID in df.columns and tip.get("row_tracking"):
-        raise ValueError(
-            f"{_ROWID!r} is the reserved row-tracking column; appended "
-            f"frames must not carry it"
-        )
-    base_mapping = tip.get("column_mapping") or {}
+    base_mapping = pinned.get("column_mapping") or {}
     mapping = dict(base_mapping)
-    logged = tip.get("schema")
-    reserved = _physical_reserved(tip)
+    logged = pinned.get("schema")
+    reserved = _physical_reserved(pinned)
     generated: set[str] = set()
     for c in df.columns:
         if logged is not None and c not in logged and c in reserved:
@@ -2656,148 +2646,142 @@ def append(
         pstats = _partition_stats(path, adds, phys_types)
         for rel, s in pstats.items():
             stats.setdefault(rel, {}).update(s)
-    ident_advance = _advance_identity(path, adds, idents_meta)
-    for _ in range(max_retries):
-        # re-resolve each attempt at the version it commits after: a racing
-        # writer may have evolved the schema between our validation and
-        # our commit (and one landing after this read makes it conflict)
-        read_v = current_version(path)
-        cur = _meta_at(path, read_v)
-        schema_meta = _validate_append_schema(
-            cur.get("schema"), df, merge_schema, system_cols=ident_cols
-        )
-        # identity values are BAKED into the landed files from the
-        # watermark read above — if a concurrent identity append advanced
-        # it since, our values would collide with the winner's range.
-        # Surface the conflict (the caller re-runs; an explicit error
-        # beats silently duplicated ids).
-        if idents_meta:
-            cur_id = cur.get("identity") or {}
-            if any(
-                cur_id.get(k, {}).get("next") != idents_meta["identity"][k]["next"]
-                for k in idents_meta["identity"]
+    ident_advance = _advance_identity(path, adds, idents)
+    try:
+        for _ in range(max_retries):
+            # re-resolve each attempt at the version it commits after: a racing
+            # writer may have evolved the schema between our validation and
+            # our commit (and one landing after this read makes it conflict)
+            read_v = current_version(path)
+            cur = _meta_at(path, read_v)
+            schema_meta = _validate_append_schema(
+                cur.get("schema"), df, merge_schema, system_cols=frozenset(idents)
+            )
+            # the batch passed the write contract of the PINNED meta: a
+            # racing add/drop of a CHECK constraint or a generation
+            # expression would land rows the new contract never saw, and
+            # a racing identity append would collide with the values
+            # BAKED into the landed files from the pinned watermark
+            if (_contract_of(cur), cur.get("identity") or {}) != (
+                _contract_of(pinned), idents
             ):
                 raise CommitConflict(
-                    "append lost an identity race: the identity watermark "
-                    "moved after this append's values were assigned; "
-                    "re-run the append"
+                    "append lost a contract race: the table's CHECK "
+                    "constraints, generated columns or identity watermark "
+                    "changed after this append was checked; re-run it"
                 )
-        # The data files above landed under the column mapping / reserved
-        # set read BEFORE this loop. A concurrent rename_column/drop_column
-        # that touches THIS append's columns (or any mapping drift while we
-        # carry a stale full-mapping map_meta) would silently undo the DDL
-        # or resurrect reserved physical bytes under a re-introduced
-        # logical name — fail the whole transaction instead (ADVICE r8).
-        # Benign races stay benign: plain appends and ADDITIVE schema
-        # evolution by a racer never trip this (race-safe by design).
-        cur_mapping = cur.get("column_mapping") or {}
-        drift = bool(generated) and cur_mapping != base_mapping
-        if not drift:
-            cur_logged = cur.get("schema")
-            if cur_logged is not None:
-                cur_reserved = _physical_reserved(cur)
-                for c in df.columns:
-                    p = mapping.get(c, c)
-                    if c in cur_logged:
-                        if cur_mapping.get(c, c) != p:
-                            drift = True  # rename raced onto our column
+            # The data files above landed under the column mapping / reserved
+            # set of the pinned meta. A concurrent rename_column/drop_column
+            # that touches THIS append's columns (or any mapping drift while we
+            # carry a stale full-mapping map_meta) would silently undo the DDL
+            # or resurrect reserved physical bytes under a re-introduced
+            # logical name — fail the whole transaction instead (ADVICE r8).
+            # Benign races stay benign: plain appends and ADDITIVE schema
+            # evolution by a racer never trip this (race-safe by design).
+            cur_mapping = cur.get("column_mapping") or {}
+            drift = bool(generated) and cur_mapping != base_mapping
+            if not drift:
+                cur_logged = cur.get("schema")
+                if cur_logged is not None:
+                    cur_reserved = _physical_reserved(cur)
+                    for c in df.columns:
+                        p = mapping.get(c, c)
+                        if c in cur_logged:
+                            if cur_mapping.get(c, c) != p:
+                                drift = True  # rename raced onto our column
+                                break
+                        elif c not in generated and p in cur_reserved:
+                            drift = True  # drop/rename made our layout stale
                             break
-                    elif c not in generated and p in cur_reserved:
-                        drift = True  # drop/rename made our layout stale
-                        break
-        if drift:
-            raise CommitConflict(
-                "append lost a metadata race: the table's column mapping "
-                "changed (concurrent rename/drop) after this append's data "
-                "files landed; re-run the append against the new schema"
-            )
-        # row tracking: RE-RESOLVE the flag and allocate fresh id ranges
-        # PER ATTEMPT — a lost race re-reads the watermark the winner
-        # advanced (ranges never overlap), and an enable_row_tracking that
-        # landed since this append's files were written still gets bases
-        # allocated (the landed files carry no ids of their own, so a
-        # stale tracking=False would commit permanently uncovered files)
-        rt_meta, row_bases = {}, None
-        if cur.get("row_tracking"):
-            if _ROWID in df.columns:
+            if drift:
                 raise CommitConflict(
-                    f"append lost a metadata race: row tracking was enabled "
-                    f"concurrently and the frame carries the reserved "
-                    f"{_ROWID!r} column"
+                    "append lost a metadata race: the table's column mapping "
+                    "changed (concurrent rename/drop) after this append's data "
+                    "files landed; re-run the append against the new schema"
                 )
-            row_bases, wm = _alloc_row_bases(
-                path, adds, int(cur.get("row_id_watermark") or 0)
-            )
-            rt_meta = {"row_id_watermark": wm}
-        v = read_v + 1
-        commit_meta = {
-            "op": "append",
-            "schema": schema_meta,
-            **map_meta,
-            **rt_meta,
-            **ident_advance,
-            **(meta or {}),
-        }
-        # a NARROW producer on a widened column lands files the scan must
-        # upcast — normally the widen declared 'type-widening' already,
-        # but after drop_feature the protocol no longer carries it: fold
-        # it back in (re-checked per attempt, so a concurrent drop is
-        # also healed on retry)
-        need = set()
-        if any(
-            schema_meta.get(c) != t
-            and c in schema_meta
-            and _widens_to(t, schema_meta[c])
-            for c, t in df.dtypes
-        ):
-            need.add("type-widening")
-        # same ladder rule for a freshly GENERATED physical mapping (a
-        # reserved name re-introduced after drop_column): post-drop_feature
-        # the protocol may no longer declare column-mapping, and a reader
-        # without it would surface the generated physical name
-        if generated:
-            need.add("column-mapping")
-        cur_feats = _features(cur)
-        if need - cur_feats:
-            commit_meta = {
-                **commit_meta,
-                "protocol": {"reader_features": sorted(cur_feats | need)},
-            }
-        try:
-            _try_commit(
-                path,
-                v,
-                adds,
-                [],
-                stats,
-                blooms,
-                meta=commit_meta,
-                row_bases=row_bases,
-            )
-            ac = auto_compact
-            ac_min, ac_target = auto_compact_min_files, auto_compact_target_bytes
-            if ac is None:
-                # table-level policy (TBLPROPERTIES): None defers to the
-                # autoCompact property so every writer of the table
-                # inherits the setting; an explicit True/False overrides
-                props = table_properties(path)
-                ac = props.get("autoCompact", "").lower() == "true"
-                if ac:
-                    ac_min = int(props.get("autoCompact.minFiles", ac_min))
-                    ac_target = int(
-                        props.get("autoCompact.targetBytes", ac_target)
+            # row tracking: RE-RESOLVE the flag and allocate fresh id ranges
+            # PER ATTEMPT — a lost race re-reads the watermark the winner
+            # advanced (ranges never overlap), and an enable_row_tracking that
+            # landed since this append's files were written still gets bases
+            # allocated (the landed files carry no ids of their own, so a
+            # stale tracking=False would commit permanently uncovered files)
+            rt_meta, row_bases = {}, None
+            if cur.get("row_tracking"):
+                if _ROWID in df.columns:
+                    raise CommitConflict(
+                        f"append lost a metadata race: row tracking was enabled "
+                        f"concurrently and the frame carries the reserved "
+                        f"{_ROWID!r} column"
                     )
-            if ac:
-                # post-commit, best-effort (the Delta autoCompact shape):
-                # the append above is already durable at version v; the
-                # compaction lands as its own commit or not at all
-                _auto_compact_after_commit(
-                    df.sparkSession, path, ac_min, ac_target
+                row_bases, wm = _alloc_row_bases(
+                    path, adds, int(cur.get("row_id_watermark") or 0)
                 )
-            return v
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"append lost {max_retries} commit races")
+                rt_meta = {"row_id_watermark": wm}
+            commit_meta = {
+                "op": "append",
+                "schema": schema_meta,
+                **map_meta,
+                **rt_meta,
+                **ident_advance,
+                **(meta or {}),
+            }
+            # a NARROW producer on a widened column lands files the scan must
+            # upcast — normally the widen declared 'type-widening' already,
+            # but after drop_feature the protocol no longer carries it: fold
+            # it back in (re-checked per attempt, so a concurrent drop is
+            # also healed on retry)
+            need = []
+            if any(
+                schema_meta.get(c) != t
+                and c in schema_meta
+                and _widens_to(t, schema_meta[c])
+                for c, t in df.dtypes
+            ):
+                need.append("type-widening")
+            # same ladder rule for a freshly GENERATED physical mapping (a
+            # reserved name re-introduced after drop_column): post-drop_feature
+            # the protocol may no longer declare column-mapping, and a reader
+            # without it would surface the generated physical name
+            if generated:
+                need.append("column-mapping")
+            commit_meta = _with_feature(cur, commit_meta, *need)
+            try:
+                _try_commit(
+                    path, read_v + 1, adds, [], stats, blooms,
+                    meta=commit_meta, row_bases=row_bases,
+                )
+                break
+            except CommitConflict:
+                continue
+        else:
+            raise CommitConflict(f"append lost {max_retries} commit races")
+    except CommitConflict:
+        _sweep_group(path, adds)  # no commit references the landed group
+        raise
+    ac = auto_compact
+    ac_min, ac_target = auto_compact_min_files, auto_compact_target_bytes
+    if ac is None:
+        # table-level policy (TBLPROPERTIES): None defers to the
+        # autoCompact property so every writer of the table inherits the
+        # setting; an explicit True/False overrides
+        props = cur.get("properties") or {}
+        ac = props.get("autoCompact", "").lower() == "true"
+        if ac:
+            ac_min = int(props.get("autoCompact.minFiles", ac_min))
+            ac_target = int(props.get("autoCompact.targetBytes", ac_target))
+    if ac:
+        # post-commit, best-effort (the Delta autoCompact shape): the
+        # append above is already durable at version v; the compaction
+        # lands as its own commit or not at all
+        _auto_compact_after_commit(df.sparkSession, path, ac_min, ac_target)
+    return read_v + 1
+
+
+def _sweep_group(path: str, adds: list[str]) -> None:
+    """Delete the data-file group ``adds`` landed in (a lost writer's)."""
+    if adds:
+        group = adds[0].split(os.sep)[:2]  # <_DATA_DIR>/<group id>
+        logstore.for_path(path).delete_tree(os.path.join(path, *group))
 
 
 def append_clustered(
@@ -2842,20 +2826,18 @@ def overwrite(
     ``meta`` rides INSIDE the commit file, so application state (e.g. an
     incremental MV's reflected source version) becomes visible atomically
     with the data it describes — the Delta ``txn``-action pattern. Read it
-    back with :func:`latest_meta`."""
-    read_v = current_version(path)
-    pinned = _meta_at(path, read_v)
-    if pinned.get("row_tracking") and _ROWID in df.columns:
-        raise ValueError(
-            f"{_ROWID!r} is the reserved row-tracking column; overwritten "
-            f"frames must not carry it"
-        )
-    # identity continues from the logged watermark (an overwrite replaces
-    # ROWS, it never recycles identities); generated columns compute-or-
-    # validate exactly as on append
-    df, idents_meta = _apply_identity(df, path)
-    df = _apply_generated(df, path)
-    _enforce_constraints(df, path)
+    back with :func:`latest_meta`.
+
+    The frame is checked against the table meta at the read version
+    (:func:`_write_contract`, without write defaults); the single commit
+    attempt lands at ``read_v + 1`` or raises :class:`CommitConflict`
+    and sweeps the landed group."""
+    read_v, pinned = _pinned_read(path, need_table=False)
+    # the write contract of the read version, minus write defaults (the
+    # frame's columns become the schema): identity continues from the
+    # logged watermark (an overwrite replaces ROWS, it never recycles
+    # identities), generated columns and CHECKs as on append
+    df = _write_contract(df, pinned, new="overwritten", fill=False)
     removes = [os.path.relpath(p, path) for p in visible_files(path, read_v)]
     # overwrite replaces the WHOLE table: the new files carry the frame's
     # own (logical == physical) names, so any column mapping RESETS to
@@ -2888,7 +2870,7 @@ def overwrite(
         }
     adds = _write_data_files(df, path)
     stats = _collect_stats(path, adds, stats_cols)
-    ident_advance = _advance_identity(path, adds, idents_meta)
+    ident_advance = _advance_identity(path, adds, pinned.get("identity"))
     # row tracking: full overwrite replaces every row — fresh id ranges
     # for the new files (single-attempt commit, race → conflict)
     rt_meta, row_bases = {}, None
@@ -2897,24 +2879,28 @@ def overwrite(
             path, adds, int(pinned.get("row_id_watermark") or 0)
         )
         rt_meta = {"row_id_watermark": wm}
-    _try_commit(
-        path,
-        read_v + 1,
-        adds,
-        removes,
-        stats,
-        # overwrite replaces the WHOLE table, so its schema simply becomes
-        # the table schema (Delta's overwriteSchema shape)
-        meta={
-            "op": "overwrite",
-            "schema": dict(df.dtypes),
-            **map_meta,
-            **rt_meta,
-            **ident_advance,
-            **(meta or {}),
-        },
-        row_bases=row_bases,
-    )
+    try:
+        _try_commit(
+            path,
+            read_v + 1,
+            adds,
+            removes,
+            stats,
+            # overwrite replaces the WHOLE table, so its schema simply
+            # becomes the table schema (Delta's overwriteSchema shape)
+            meta={
+                "op": "overwrite",
+                "schema": dict(df.dtypes),
+                **map_meta,
+                **rt_meta,
+                **ident_advance,
+                **(meta or {}),
+            },
+            row_bases=row_bases,
+        )
+    except CommitConflict:
+        _sweep_group(path, adds)  # the lost version references nothing
+        raise
     return read_v + 1
 
 
@@ -3220,8 +3206,10 @@ def merge(
     kept). Key and order columns must exist in the updates batch; a table
     that predates ``order_col`` treats every existing row as older than
     any update."""
-    read_v = current_version(path)
-    _enforce_constraints(updates, path)
+    read_v, pinned = _pinned_read(path, need_table=False)
+    # the incoming batch meets the CHECK constraints (and any generated
+    # values it supplies) of the read version before the merge starts
+    _write_contract(updates, pinned)
     w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
     latest = (
         updates.withColumn("__rn", F.row_number().over(w))
@@ -3233,7 +3221,7 @@ def merge(
         # verbatim append of a possibly multi-row-per-key updates batch.
         return append(latest, path)
     table_cols = list(
-        (latest_meta(path, "schema", read_v) or dict(read(spark, path, read_v).dtypes))
+        pinned.get("schema") or dict(read(spark, path, read_v).dtypes)
     )
     upd_cols = set(latest.columns)
     post_cols = table_cols + [c for c in latest.columns if c not in set(table_cols)]
@@ -3454,6 +3442,13 @@ def merge_into(
     replaceWhere. A writer losing the commit race sweeps every group it
     landed, in both modes.
 
+    The write contract (:func:`_write_contract`) checks the INSERT rows
+    and the rewritten UPDATE rows against the table meta at the read
+    version; into an identity table the insert rows complete against
+    the tip meta of each commit attempt instead (the identity factory).
+    A commit attempt past a racing change to the constraints or
+    generation expressions conflicts.
+
     ``use_dvs=True`` (or the ``deletionVectors`` = 'true' TBLPROPERTY,
     overridable per call) switches the matched UPDATE/DELETE clauses to
     MERGE-ON-READ: clause-hit rows' pre-image POSITIONS land in a
@@ -3470,12 +3465,9 @@ def merge_into(
     reads, ``format("txlog")``), and OPTIMIZE/REORG PURGE materialize
     later. Default (``None``) consults the table property and falls back
     to copy-on-write."""
-    read_v = current_version(path)
-    if read_v == 0:
-        raise FileNotFoundError(f"no table at {path!r} (empty log)")
+    read_v, pinned = _pinned_read(path)
     if not keys:
         raise ValueError("merge_into needs at least one key column")
-    pinned = _meta_at(path, read_v)
     if use_dvs is None:
         props = pinned.get("properties") or {}
         use_dvs = props.get("deletionVectors", "").lower() == "true"
@@ -3506,7 +3498,7 @@ def merge_into(
         raise ValueError("merge_into with no clauses is a no-op by construction")
 
     # --- post-merge schema -------------------------------------------------
-    table_fields = _table_fields(spark, path, read_v)
+    table_fields = _table_fields(spark, path, read_v, pinned)
     src_fields = dict(source.dtypes)
     missing_keys = [k for k in keys if k not in table_fields or k not in src_fields]
     if missing_keys:
@@ -3787,46 +3779,37 @@ def merge_into(
                 nm = nm.filter(F.coalesce(_as_col(ins_cond), F.lit(False)))
             if ins_values is None:
                 ins_values = verbatim
-            gens = pinned.get("generated") or {}
-            defaults = pinned.get("column_defaults") or {}
-            ins_cols, computed_later = [], []
+            # omitted columns the write contract completes — identity
+            # (per commit ATTEMPT, in the identity factory), generated,
+            # write-defaulted — stay absent; the others read NULL
+            cds = pinned.get("column_defaults") or {}
+            left = {*idents, *(pinned.get("generated") or {})} | {
+                c for c, d in cds.items() if d.get("write") is not None
+            }
+            ins_cols = []
             for c in post_cols:
-                if c in idents:
-                    # GENERATED ALWAYS AS IDENTITY: assigned per commit
-                    # ATTEMPT from the tip watermark (the identity factory)
-                    continue
                 iv = _as_col(ins_values.get(c))
-                if iv is None:
-                    if c in gens:
-                        # generated column the source does not supply: compute
-                        # from the inserted row (the write contract), never NULL
-                        computed_later.append(c)
-                        continue
-                    # a write-defaulted column the source omits fills the
-                    # default (the Iceberg write-default contract), same
-                    # as the append path
-                    wd = defaults.get(c, {}).get("write")
-                    iv = F.expr(wd) if wd is not None else F.lit(None)
+                if iv is None and c in left:
+                    continue
+                iv = F.lit(None) if iv is None else iv
                 ins_cols.append(iv.cast(post_types[c]).alias(c))
             inserts = nm.select(*ins_cols)
-            if computed_later and not idents:
-                inserts = _apply_generated(inserts, path).select(*post_cols)
+            if not idents:
+                # completed and validated here, before any group lands;
+                # identity inserts complete per commit attempt instead
+                inserts = _write_contract(inserts, pinned, new="inserted")
+                inserts = inserts.select(*post_cols)
             # persist: the anti-join frame otherwise re-scans the matched
-            # files for the non-empty probe, the data write, the change leg,
-            # and every constraint/generated validation (VERDICT r10 ask #4)
+            # files for the non-empty probe, the data write and the change
+            # leg (VERDICT r10 ask #4)
             inserts = inserts.persist()
             release.callback(inserts.unpersist)
-            if not idents:
-                # validated here, before any group lands; identity inserts
-                # complete and validate per commit attempt instead
-                if not computed_later:
-                    _apply_generated(inserts, path)  # validate supplied values
-                _enforce_constraints(inserts, path)
 
         return _mutate(
             spark,
             path,
             read_v,
+            pinned,
             merge_meta,
             phantom,
             post_types,
@@ -3851,16 +3834,15 @@ def _identity_insert_factory(
 ):
     """MERGE INSERT into an identity table — the per-attempt reservation
     protocol (VERDICT r10 ask #3, mirroring append's loop): the returned
-    closure runs inside ``_commit_serializable``'s retry body and, on
-    each attempt whose identity watermark differs from the last, (1)
-    deletes the lost attempt's unreferenced groups, (2) re-derives the
-    insert frame with fresh identity values from the CURRENT tip
-    watermark (``_apply_identity``), (3) computes/validates generated
-    columns and constraints on the completed rows, (4) lands fresh data +
-    change groups, recording them in ``wrote`` (the core sweeps the last
-    attempt's if the commit finally loses), and (5) folds the
-    footer-stats watermark advance (``_advance_identity``) into the
-    commit meta. put_if_absent then
+    closure runs inside ``_commit_serializable``'s retry body, resolves
+    the tip meta ONCE per attempt and, on each attempt whose identity
+    watermark differs from the last, (1) deletes the lost attempt's
+    unreferenced groups, (2) completes the insert frame through the write
+    contract of that tip meta (:func:`_write_contract`; fresh identity
+    values from its watermark), (3) lands fresh data + change groups, recording
+    them in ``wrote`` (the core sweeps the last attempt's if the commit
+    finally loses), and (4) folds the footer-stats watermark advance
+    (``_advance_identity``) into the commit meta. put_if_absent then
     serializes the watermark read against every concurrent writer: our
     commit wins → no one else advanced it since the read; our commit
     loses → the next attempt re-reads the winner's advance. A concurrent
@@ -3870,16 +3852,15 @@ def _identity_insert_factory(
     state: dict = {"wm": None, "groups": [], "adds": [], "change": [], "stats": {}, "blooms": {}, "meta": {}}
 
     def factory() -> dict:
-        cur = latest_meta(path, "identity") or {}
-        wm = {k: (v.get("next"), v.get("step")) for k, v in cur.items()}
+        tip = _meta_at(path)
+        idents = tip.get("identity") or {}
+        wm = {k: (v.get("next"), v.get("step")) for k, v in idents.items()}
         if state["wm"] == wm:
             return state  # watermark unmoved — the landed files stay valid
         store = logstore.for_path(path)
         for g in state["groups"]:
             store.delete_tree(g)  # lost-race cleanup
-        frame, idents_meta = _apply_identity(inserts, path)
-        frame = _apply_generated(frame, path).select(*post_cols)
-        _enforce_constraints(frame, path)
+        frame = _write_contract(inserts, tip, new="inserted").select(*post_cols)
         adds = _write_data_files(_to_physical(frame, mapping), path)
         change = _write_change_files(
             _to_physical(
@@ -3899,7 +3880,7 @@ def _identity_insert_factory(
             # carried stats/blooms for
             stats=_collect_stats(path, adds, stat_cols),
             blooms=_collect_blooms(path, adds, bloom_cols),
-            meta=_advance_identity(path, adds, idents_meta),
+            meta=_advance_identity(path, adds, idents),
         )
         return state
 
@@ -3995,7 +3976,6 @@ _SNAPSHOT_OPS = {
     "rename_column",
     "drop_column",
     "reorg_purge",
-    "add_constraint",
     # file-level metadata a rewrite read before it landed: files landed
     # past an initial default read NULL where their rows predate the
     # column, and files landed past enable_row_tracking carry neither a
@@ -4014,6 +3994,7 @@ def _commit_serializable(
     spark: SparkSession,
     path: str,
     read_v: int,
+    pinned: dict,
     adds: list[str],
     removes: list[str],
     stats,
@@ -4034,6 +4015,10 @@ def _commit_serializable(
 
     - a snapshot-restructuring op (_SNAPSHOT_OPS) or any dv_set commit →
       surface the conflict (no disjointness argument exists);
+    - a concurrent commit sets CHECK constraints or generation
+      expressions other than those of ``pinned`` (the table meta at
+      ``read_v``, which the mutation's rows were checked against) →
+      conflict: its rows never met the new contract;
     - the concurrent commit REMOVED or DV'd a file we mutate →
       ConcurrentDelete conflict (write-write on the same rows);
     - the concurrent commit APPENDED files → evaluate OUR predicate over
@@ -4051,8 +4036,11 @@ def _commit_serializable(
     files with fresh values whenever the watermark moved since the last
     attempt (see :func:`_identity_insert_factory`).
     ``alloc_row_bases_for`` and the factory's adds are fresh-row files:
-    on a row-tracking table each attempt allocates their row-id bases."""
-    tracking = row_tracking_enabled(path, read_v)
+    on a row-tracking table each attempt allocates their row-id bases.
+    Nothing here resolves a meta: the flags come from ``pinned``, and a
+    racing commit's changes are read from its own commit file."""
+    tracking = pinned.get("row_tracking")
+    contract = _contract_of(pinned)
     target = read_v + 1
     for _ in range(max_retries + 1):
         # row tracking: fresh-id allocation re-derives PER ATTEMPT from the
@@ -4090,6 +4078,12 @@ def _commit_serializable(
                     raise CommitConflict(
                         f"concurrent snapshot-level operation {op!r} at "
                         f"version {v}; cannot prove serializability"
+                    ) from e
+                if _contract_of({**pinned, **c.get("meta", {})}) != contract:
+                    raise CommitConflict(
+                        f"concurrent commit {v} changed the CHECK constraints "
+                        f"or generated columns this mutation's rows were "
+                        f"checked against"
                     ) from e
                 if set(c.get("removes", [])) & ours:
                     raise CommitConflict(
@@ -4182,15 +4176,16 @@ def _tag_files(
 
 
 def _removed_skipping_cols(
-    path: str, read_v: int, removes: list[str]
+    path: str, read_v: int, meta: dict, removes: list[str]
 ) -> tuple[list[str], list[str]]:
     """Column names the removed files carried stats/blooms for — a rewrite
     commit must recollect BOTH on its replacement files, or the mutation
     silently degrades data skipping for every later read. Only LIVE
     physical columns count: a rewrite lands the logical view, so the
     bytes of a retired physical column (dropped, or renamed away and
-    recycled), and with them its channels, are gone from the new files."""
-    live, meta = _replay(path, read_v), _meta_at(path, read_v)
+    recycled), and with them its channels, are gone from the new files.
+    ``meta`` is the table meta at ``read_v``."""
+    live = _replay(path, read_v)
     blooms = _live_blooms(live, meta)
     stat_cols = {
         c for rel in removes for c in (live.get(rel, {}).get("stats") or {})
@@ -4248,11 +4243,14 @@ def _check_assignments(assignments, cols) -> None:
         raise ValueError(f"assignments reference unknown columns: {sorted(unknown)}")
 
 
-def _table_fields(spark: SparkSession, path: str, read_v: int) -> dict[str, str]:
-    """Logical column → type of the snapshot: the logged schema, or the
-    footer union for a table that predates logged schemas."""
-    _check_reader(path, read_v)
-    return latest_meta(path, "schema", read_v) or dict(
+def _table_fields(
+    spark: SparkSession, path: str, read_v: int, meta: dict
+) -> dict[str, str]:
+    """Logical column → type of the snapshot (``meta`` is the table meta
+    at ``read_v``): the logged schema, or the footer union for a table
+    that predates logged schemas."""
+    _check_reader(path, meta=meta)
+    return meta.get("schema") or dict(
         read(spark, path, read_v, merge_schema=True).dtypes
     )
 
@@ -4280,6 +4278,7 @@ def _mutate_where(
     spark: SparkSession,
     path: str,
     read_v: int,
+    pinned: dict,
     predicate,
     clause: tuple,
     prune_col: str | None,
@@ -4290,8 +4289,9 @@ def _mutate_where(
     fresh: DataFrame | None = None,
 ) -> int:
     """Phases 1 and 2 of the predicate mutations (DELETE, UPDATE,
-    replaceWhere; copy-on-write or DV): ``predicate`` becomes the
-    condition of the one ``(kind, assignments)`` clause.
+    replaceWhere; copy-on-write or DV) at ``read_v`` and its table meta
+    ``pinned``: ``predicate`` becomes the condition of the one
+    ``(kind, assignments)`` clause.
 
     1. **Stats skip** over ``prune_col``'s [lo, hi] (plus the bloom skip
        when lo == hi); every file when ``prune_col`` is None.
@@ -4303,7 +4303,7 @@ def _mutate_where(
        pushes down); already-DV-dead positions never re-match.
 
     SQL three-valued logic: a NULL predicate fires nothing."""
-    fields = _table_fields(spark, path, read_v)
+    fields = _table_fields(spark, path, read_v, pinned)
     _check_assignments([clause[1]], fields)
     ranges = {prune_col: (lo, hi)} if prune_col is not None else {}
     points = {prune_col: [lo]} if ranges and lo is not None and lo == hi else None
@@ -4324,7 +4324,7 @@ def _mutate_where(
     if frame is not None:
         frame = frame.withColumn("__act", _act_chain(clauses, F.lit(True))).alias("t")
     return _mutate(
-        spark, path, read_v, meta, predicate, fields,
+        spark, path, read_v, pinned, meta, predicate, fields,
         frame=frame, clauses=clauses, rewrite=matched, use_dvs=use_dvs, fresh=fresh,
     )
 
@@ -4333,6 +4333,7 @@ def _mutate(
     spark: SparkSession,
     path: str,
     read_v: int,
+    pinned: dict,
     meta: dict,
     predicate,
     fields: dict[str, str],
@@ -4352,6 +4353,11 @@ def _mutate(
     their ``frame`` is the arranged live rows of the ``rewrite`` files,
     with no clauses, so every row re-lands unchanged, the change record
     is ``[]`` and no ``predicate`` probes a concurrent append.
+
+    ``pinned`` is the table meta at ``read_v``; this core resolves no
+    meta of its own. The column mapping, the identity and row-tracking
+    flags, the deletion-vector feature fold and the write contract of
+    the update outputs (:func:`_write_contract`) all come from it.
 
     ``frame`` (aliased ``t``; None when no row is targeted) carries per
     row ``__act``, the index into ``clauses`` of the clause that fires,
@@ -4388,7 +4394,7 @@ def _mutate(
     version, or ``read_v`` when nothing changed (no empty commit)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    mapping = _column_mapping(path, read_v) if mapping is None else mapping
+    mapping = pinned.get("column_mapping") or {} if mapping is None else mapping
     wrote: list[str] = []  # group dirs this call landed
 
     def land(df: DataFrame, writer) -> list[str]:
@@ -4458,8 +4464,7 @@ def _mutate(
                     # an update must keep CHECK constraints and generated
                     # derivations true — fail loudly, never bake a
                     # violation into the files
-                    _enforce_constraints(rewritten, path)
-                    _apply_generated(rewritten, path)
+                    rewritten = _write_contract(rewritten, pinned)
                 # the change-record and fresh-row jobs are independent of
                 # this write and back-fill its straggler tail; Spark's
                 # cache locks serialize the first materialization of a
@@ -4472,7 +4477,7 @@ def _mutate(
                 if k["delete"]:
                     legs.append(images(frame.filter(F.col(col).isin(k["delete"])), pre_vals, "delete"))
         if fresh is not None and (not fresh.is_cached or fresh.limit(1).count()):
-            if latest_meta(path, "identity", read_v):
+            if pinned.get("identity"):
                 ins_frame = fresh
             else:
                 fresh_adds = land(fresh, _write_data_files)
@@ -4496,7 +4501,9 @@ def _mutate(
         skip_src = removes
         if dv_adds:
             skip_src = [os.path.relpath(p, path) for p in visible_files(path, read_v)]
-        stat_cols, bloom_cols = _removed_skipping_cols(path, read_v, skip_src)
+        stat_cols, bloom_cols = _removed_skipping_cols(
+            path, read_v, pinned, skip_src
+        )
         stat_cols = sorted({*stat_cols, *(mapping.get(c, c) for c in stats_also)})
     factory = None
     if ins_frame is not None:
@@ -4506,12 +4513,13 @@ def _mutate(
     if dv_adds:
         # irreversible-layout gate: pre-DV engine builds must refuse the
         # table, not resurrect rows
-        meta = _with_feature(_meta_at(path, read_v), meta, "deletion-vectors")
+        meta = _with_feature(pinned, meta, "deletion-vectors")
     try:
         return _commit_serializable(
             spark,
             path,
             read_v,
+            pinned,
             adds,
             removes,
             _collect_stats(path, adds, stat_cols),
@@ -4559,11 +4567,9 @@ def delete_where(
 
     Returns the new version (or the current one when nothing matched —
     no empty commit)."""
-    read_v = current_version(path)
-    if read_v == 0:
-        raise FileNotFoundError(f"no table at {path!r} (empty log)")
+    read_v, pinned = _pinned_read(path)
     return _mutate_where(
-        spark, path, read_v, _as_col(predicate), ("delete", None),
+        spark, path, read_v, pinned, _as_col(predicate), ("delete", None),
         prune_col, lo, hi, False, {"op": "delete"},
     )
 
@@ -4593,11 +4599,9 @@ def update_where(
     data, never the table. The change record holds each updated row as
     its delete (pre-image) + insert (post-image) pair. Returns the new
     version (current one when nothing matched)."""
-    read_v = current_version(path)
-    if read_v == 0:
-        raise FileNotFoundError(f"no table at {path!r} (empty log)")
+    read_v, pinned = _pinned_read(path)
     return _mutate_where(
-        spark, path, read_v, _as_col(predicate), ("update", assignments),
+        spark, path, read_v, pinned, _as_col(predicate), ("update", assignments),
         prune_col, lo, hi, False, {"op": "update"},
     )
 
@@ -4631,12 +4635,14 @@ def overwrite_where(
     materialized ids. The change record is the replaced band's
     pre-images as deletes plus ``new_df`` as inserts.
 
+    ``new_df`` meets the write contract (:func:`_write_contract`) and
+    the schema of the table meta at the read version, and so do the
+    band survivors; a racing change to the constraints or generation
+    expressions makes the commit conflict.
+
     Returns the new version. Unlike delete_where, a no-match predicate
     still commits (the insert half must land)."""
-    read_v = current_version(path)
-    if read_v == 0:
-        raise FileNotFoundError(f"no table at {path!r} (empty log)")
-    pinned = _meta_at(path, read_v)
+    read_v, pinned = _pinned_read(path)
     if pinned.get("identity"):
         raise ValueError(
             "overwrite_where cannot land replacement rows into a table "
@@ -4644,12 +4650,10 @@ def overwrite_where(
             "WriteSerializable retry loop need a reservation protocol); "
             "delete_where + append instead"
         )
-    new_df = _apply_write_defaults(new_df, path)
-    new_df = _apply_generated(new_df, path)
+    new_df = _write_contract(new_df, pinned, new="replacement")
     schema_meta = _validate_append_schema(
         pinned.get("schema"), new_df, merge_schema=False
     )
-    _enforce_constraints(new_df, path)
     predicate = _as_col(predicate)
     if enforce:
         stray = new_df.filter(~F.coalesce(predicate, F.lit(False))).limit(1).count()
@@ -4658,14 +4662,10 @@ def overwrite_where(
                 "overwrite_where: new_df contains rows that do not satisfy "
                 "the replace predicate (pass enforce=False to allow)"
             )
-    if pinned.get("row_tracking") and _ROWID in new_df.columns:
-        raise ValueError(
-            f"{_ROWID!r} is the reserved row-tracking column; replacement "
-            f"frames must not carry it"
-        )
     return _mutate_where(
-        spark, path, read_v, predicate, ("delete", None), prune_col, lo, hi,
-        False, {"op": "replace_where", "schema": schema_meta}, fresh=new_df,
+        spark, path, read_v, pinned, predicate, ("delete", None), prune_col,
+        lo, hi, False, {"op": "replace_where", "schema": schema_meta},
+        fresh=new_df,
     )
 
 
@@ -5289,7 +5289,7 @@ def optimize(
     n_out = max(1, math.ceil(total / target_file_bytes))
     compacted = _read_files_with_dvs(spark, path, read_v, small).coalesce(n_out)
     return _mutate(
-        spark, path, read_v, {"op": "optimize"}, None,
+        spark, path, read_v, _meta_at(path, read_v), {"op": "optimize"}, None,
         dict(compacted.drop(_ROWID).dtypes), frame=compacted.alias("t"),
         rewrite=small,
     )
@@ -5390,7 +5390,7 @@ def optimize_zorder(
     df = _read_files_with_dvs(spark, path, read_v, in_scope)
     arranged = zorder_arrange(df, cluster_cols, n_files, bits=bits)
     return _mutate(
-        spark, path, read_v, {"op": "optimize_zorder"}, None,
+        spark, path, read_v, _meta_at(path, read_v), {"op": "optimize_zorder"}, None,
         dict(arranged.drop(_ROWID).dtypes), frame=arranged.alias("t"),
         rewrite=in_scope, stats_also=stats_cols or cluster_cols,
     )
@@ -6193,11 +6193,9 @@ def delete_where_dv(
     Returns the new version (current version when nothing matched). The
     commit stores no change record: the change feed reads its deletes
     from the DV state."""
-    read_v = current_version(path)
-    if read_v == 0:
-        raise FileNotFoundError(f"no table at {path!r} (empty log)")
+    read_v, pinned = _pinned_read(path)
     return _mutate_where(
-        spark, path, read_v, _as_col(predicate), ("delete", None),
+        spark, path, read_v, pinned, _as_col(predicate), ("delete", None),
         prune_col, lo, hi, True, {"op": "delete_dv"},
     )
 
@@ -6240,11 +6238,9 @@ def update_where_dv(
     rewritten row keeps its stable id, and the change record pairs pre-
     and post-image under it.
     Returns the new version."""
-    read_v = current_version(path)
-    if read_v == 0:
-        raise FileNotFoundError(f"no table at {path!r} (empty log)")
+    read_v, pinned = _pinned_read(path)
     return _mutate_where(
-        spark, path, read_v, _as_col(predicate), ("update", assignments),
+        spark, path, read_v, pinned, _as_col(predicate), ("update", assignments),
         prune_col, lo, hi, True, {"op": "update_dv"},
     )
 
@@ -6339,7 +6335,7 @@ def reorg_purge(
     rewrite = sorted(targets)
     rewritten = _read_files_with_dvs(spark, path, read_v, rewrite)
     return _mutate(
-        spark, path, read_v, {"op": "reorg_purge"}, None,
+        spark, path, read_v, meta, {"op": "reorg_purge"}, None,
         dict(rewritten.drop(_ROWID).dtypes), frame=rewritten.alias("t"),
         rewrite=rewrite,
     )
@@ -6567,7 +6563,7 @@ def enable_row_tracking(path: str) -> int:
     Writers predating the feature do not allocate — their appends make
     :func:`read_with_row_ids` fail fast on the uncovered file (never a
     silent wrong id)."""
-    read_v, pinned = _ddl_read(path)
+    read_v, pinned = _pinned_read(path)
     if pinned.get("row_tracking"):
         raise ValueError(f"row tracking already enabled on {path!r}")
     schema = pinned.get("schema")

@@ -3,6 +3,7 @@ travel, optimistic concurrency, merge, vacuum (sources/txlog.py)."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import shutil
@@ -23,6 +24,19 @@ def _batch(spark, n=10, tag=0):
         .withColumnRenamed("id", "k")
         .withColumn("batch", F.lit(tag).cast("int"))
     )
+
+
+def _orphans(path):
+    """Files outside the log in no group a visible file belongs to: what
+    a writer that lost its commit failed to sweep."""
+    committed = {os.path.dirname(f) for f in txlog.visible_files(path)}
+    return [
+        os.path.join(root, f)
+        for root, _, files in os.walk(path)
+        if not os.path.relpath(root, path).startswith("_txlog")
+        and root not in committed
+        for f in files
+    ]
 
 
 def _executed_plans(spark, fn):
@@ -1471,6 +1485,195 @@ class TestGeneratedAndIdentityColumns:
         assert len(set(rows.values())) == len(rows)
 
 
+class TestIdentityMergeInsert:
+    """VERDICT r10 ask #3: MERGE INSERT into identity tables via the
+    per-attempt watermark reservation inside _commit_serializable."""
+
+    def _table(self, spark, tmp_path, start=100, step=3):
+        path = str(tmp_path / "t")
+        txlog.add_identity_column(path, "rid", start=start, step=step)
+        txlog.append(
+            spark.createDataFrame(
+                [(1, "a"), (2, "b"), (3, "c")], "k int, val string"
+            ).repartition(2),
+            path,
+            stats_cols=["k"],
+        )
+        return path
+
+    def test_insert_allocates_unique_on_lattice_fresh_ids(self, spark, tmp_path):
+        path = self._table(spark, tmp_path)
+        wm_pre = txlog.latest_meta(path, "identity")["rid"]["next"]
+        pre = {r.k: r.rid for r in txlog.read(spark, path).collect()}
+        src = spark.createDataFrame(
+            [(2, "B"), (4, "d"), (5, "e")], "k int, val string"
+        )
+        v = txlog.merge_into(
+            spark,
+            path,
+            src,
+            keys=["k"],
+            when_matched=[("update", {"val": "s.val"})],
+            when_not_matched=True,
+        )
+        rows = {r.k: (r.val, r.rid) for r in txlog.read(spark, path).collect()}
+        assert rows[2] == ("B", pre[2])  # matched row KEEPS its id
+        ids = [rid for _, rid in rows.values()]
+        assert len(set(ids)) == 5
+        for k in (4, 5):
+            rid = rows[k][1]
+            assert rid >= wm_pre  # fresh above the pre-merge watermark
+            assert (rid - 100) % 3 == 0  # on the start/step lattice
+        assert txlog.latest_meta(path, "identity")["rid"]["next"] > max(ids)
+        # the merge commit's change feed carries the inserted ids
+        ch = {(r.k, r._change_type): r.rid for r in txlog.table_changes(spark, path, v - 1, v).collect()}
+        assert ch[(4, "insert")] == rows[4][1]
+
+    def test_two_writer_race_relands_with_fresh_ids(self, spark, tmp_path):
+        """A concurrent identity append between the merge's file land and
+        its commit must advance the watermark; the merge's retry re-lands
+        the insert files with fresh ids — never duplicates, never refusal."""
+        path = self._table(spark, tmp_path)
+        orig = txlog._try_commit
+        state = {"raced": False}
+
+        def racing(path_, version, *a, **kw):
+            if not state["raced"] and kw.get("meta", {}).get("op") == "merge":
+                state["raced"] = True
+                txlog._try_commit = orig
+                try:
+                    txlog.append(
+                        spark.createDataFrame([(9, "z")], "k int, val string"),
+                        path,
+                    )
+                finally:
+                    txlog._try_commit = racing
+            return orig(path_, version, *a, **kw)
+
+        txlog._try_commit = racing
+        try:
+            txlog.merge_into(
+                spark,
+                path,
+                spark.createDataFrame([(7, "g"), (8, "h")], "k int, val string"),
+                keys=["k"],
+                when_not_matched=True,
+            )
+        finally:
+            txlog._try_commit = orig
+        assert state["raced"]
+        rows = {r.k: r.rid for r in txlog.read(spark, path).collect()}
+        assert len(rows) == 6 and len(set(rows.values())) == 6
+        assert all((rid - 100) % 3 == 0 for rid in rows.values())
+
+    def test_always_mode_rejections(self, spark, tmp_path):
+        path = self._table(spark, tmp_path)
+        with_id = txlog.read(spark, path).limit(1)
+        with pytest.raises(ValueError, match="ALWAYS AS IDENTITY"):
+            txlog.merge_into(spark, path, with_id, keys=["k"], when_not_matched=True)
+        src = spark.createDataFrame([(2, "B")], "k int, val string")
+        with pytest.raises(ValueError, match="must not assign"):
+            txlog.merge_into(
+                spark, path, src, keys=["k"],
+                when_matched=[("update", {"rid": "t.rid + 1"})],
+            )
+        with pytest.raises(ValueError, match="must not supply"):
+            txlog.merge_into(
+                spark, path, src, keys=["k"],
+                when_not_matched=("insert", {"k": "s.k", "rid": "s.k"}),
+            )
+
+    def test_insert_only_merge_and_replay_noop(self, spark, tmp_path):
+        path = self._table(spark, tmp_path)
+        src = spark.createDataFrame([(6, "f")], "k int, val string")
+        txlog.merge_into(spark, path, src, keys=["k"], when_not_matched=True)
+        v0 = txlog.current_version(path)
+        # re-delivered batch: all keys present, conditioned update fires
+        # nowhere -> provably-empty merge commits NOTHING (replay no-op)
+        v1 = txlog.merge_into(
+            spark,
+            path,
+            src,
+            keys=["k"],
+            when_matched=[("update", {"val": "s.val"}, "t.val <> s.val")],
+            when_not_matched=True,
+        )
+        assert v1 == v0
+        rows = {r.k: r.rid for r in txlog.read(spark, path).collect()}
+        assert len(set(rows.values())) == 4
+
+    def test_identity_with_generated_column_insert(self, spark, tmp_path):
+        """A generated column whose expression references the identity
+        column must compute AFTER the per-attempt assignment (the factory
+        orders identity → generated → constraints)."""
+        path = str(tmp_path / "t")
+        txlog.add_identity_column(path, "rid", start=10, step=1)
+        txlog.add_generated_column(
+            path, "rid2", "rid * CAST(2 AS BIGINT)", "bigint"
+        )
+        txlog.append(
+            spark.createDataFrame([(1, "a")], "k int, val string"), path
+        )
+        txlog.merge_into(
+            spark,
+            path,
+            spark.createDataFrame([(5, "e")], "k int, val string"),
+            keys=["k"],
+            when_not_matched=True,
+        )
+        rows = {r.k: r for r in txlog.read(spark, path).collect()}
+        assert rows[5].rid2 == rows[5].rid * 2
+        assert rows[1].rid2 == rows[1].rid * 2
+        assert rows[1].rid != rows[5].rid
+
+
+class TestIdentityMergeCrossFeatures:
+    def test_identity_insert_on_row_tracking_table(self, spark, tmp_path):
+        """ins_factory + row tracking: the factory's per-attempt insert
+        files must get row-base allocations (fresh stable ids) alongside
+        their identity values, and matched rows keep BOTH identities."""
+        path = str(tmp_path / "t")
+        txlog.add_identity_column(path, "rid", start=5, step=2)
+        txlog.append(
+            spark.createDataFrame([(1, "a"), (2, "b")], "k int, val string"), path
+        )
+        txlog.enable_row_tracking(path)
+        pre = {
+            r.k: (r.rid, r.row_id)
+            for r in txlog.read_with_row_ids(spark, path).collect()
+        }
+        txlog.merge_into(
+            spark,
+            path,
+            spark.createDataFrame([(2, "B"), (3, "c")], "k int, val string"),
+            keys=["k"],
+            when_matched=[("update", {"val": "s.val"})],
+            when_not_matched=True,
+        )
+        post = {
+            r.k: (r.rid, r.row_id, r.val)
+            for r in txlog.read_with_row_ids(spark, path).collect()
+        }
+        assert post[2][:2] == pre[2][:2] and post[2][2] == "B"  # both ids stable
+        assert post[1][:2] == pre[1][:2]
+        rids = [v[0] for v in post.values()]
+        rowids = [v[1] for v in post.values()]
+        assert len(set(rids)) == 3 and len(set(rowids)) == 3
+        assert post[3][0] not in {v[0] for v in pre.values()}
+        assert post[3][1] not in {v[1] for v in pre.values()}
+        assert (post[3][0] - 5) % 2 == 0  # identity lattice holds
+
+    def test_restore_above_expiry_floor_still_works(self, spark, tmp_path):
+        path = str(tmp_path / "t")
+        for i in range(25):
+            txlog.append(_batch(spark, tag=i), path)
+        txlog.expire_log(path, retain_versions=10)
+        # 25 appends + the feature-declaring commit (26) + restore (27)
+        v = txlog.restore(path, 12, spark)
+        assert v == 27
+        assert txlog.read(spark, path).count() == 120
+
+
 class TestMergeSchemaEvolution:
     def test_merge_accepts_updates_with_new_columns(self, spark, tmp_path):
         """Additive evolution on MERGE: the updates batch carries a column
@@ -1632,6 +1835,187 @@ class TestLogCheckpoints:
         assert glob.glob(_os.path.join(path, "_txlog", "*.checkpoint.json"))
         got = {r.id for r in txlog.read(spark, path).collect()}
         assert got == set(range(3, 9))
+
+
+class TestExpireLog:
+    def _table(self, spark, tmp_path, n_commits=25):
+        path = str(tmp_path / "t")
+        for i in range(n_commits):
+            txlog.append(_batch(spark, tag=i), path, stats_cols=["k"])
+        return path
+
+    def test_expire_reclaims_below_horizon_and_reads_unaffected(self, spark, tmp_path):
+        path = self._table(spark, tmp_path)
+        pre = txlog.read(spark, path).count()
+        dry = txlog.expire_log(path, retain_versions=10, dry_run=True)
+        assert dry  # preview names the reclaimable files
+        assert all(os.path.exists(os.path.join(path, "_txlog", b)) for b in dry)
+        rec = txlog.expire_log(path, retain_versions=10)
+        assert rec == dry
+        assert txlog._versions(path)[0] == 10  # horizon = checkpoint ≤ tip-9
+        assert txlog.read(spark, path).count() == pre
+        assert txlog.fast_count(path) == pre
+        assert txlog.read(spark, path, version=10).count() == 100
+        assert txlog.table_changes(spark, path, 10, 12).count() == 20
+        assert min(h["version"] for h in txlog.history(path)) == 10
+
+    def test_below_horizon_fails_with_named_floor(self, spark, tmp_path):
+        path = self._table(spark, tmp_path)
+        txlog.expire_log(path, retain_versions=10)
+        with pytest.raises(FileNotFoundError, match="earliest readable version is 10"):
+            txlog.read(spark, path, version=3)
+        with pytest.raises(FileNotFoundError, match="earliest readable"):
+            txlog.fast_count(path, version=9)
+        with pytest.raises(FileNotFoundError, match="earliest readable"):
+            txlog.table_changes(spark, path, 2, 5)
+        with pytest.raises(FileNotFoundError, match="earliest readable"):
+            txlog.restore(path, 3, spark)
+
+    def test_expire_is_idempotent_and_age_constraint_holds(self, spark, tmp_path):
+        path = self._table(spark, tmp_path)
+        assert txlog.expire_log(path, retain_versions=10)
+        assert txlog.expire_log(path, retain_versions=10) == []
+        # everything is seconds old: an age floor of 1h expires nothing
+        assert (
+            txlog.expire_log(path, retain_versions=1, retain_age=dt.timedelta(hours=1))
+            == []
+        )
+        # age 0 + retain 1: horizon advances to the newest checkpoint
+        assert txlog.expire_log(path, retain_versions=1, retain_age=dt.timedelta(0))
+        assert txlog._versions(path)[0] == 20
+
+    def test_expire_and_vacuum_compose(self, spark, tmp_path):
+        path = str(tmp_path / "t")
+        for i in range(25):
+            txlog.append(_batch(spark, tag=i), path, stats_cols=["k"])
+        txlog.delete_where(spark, path, F.col("batch") < 3)
+        txlog.optimize(spark, path, target_file_bytes=1 << 30)
+        expect = txlog.read(spark, path).count()
+        txlog.expire_log(path, retain_versions=5)
+        txlog.vacuum(path, retain_versions=1)
+        assert txlog.read(spark, path).count() == expect
+        # and the other order on a fresh table
+        path2 = str(tmp_path / "t2")
+        for i in range(25):
+            txlog.append(_batch(spark, tag=i), path2, stats_cols=["k"])
+        txlog.vacuum(path2, retain_versions=1)
+        txlog.expire_log(path2, retain_versions=5)
+        assert txlog.read(spark, path2).count() == 250
+
+    def test_first_expiry_declares_log_retention_reader_feature(
+        self, spark, monkeypatch, tmp_path
+    ):
+        """ADVICE r11: expiry is an irreversible layout change — gate it
+        with a reader feature like DVs/column-mapping so pre-floor-check
+        builds refuse the table instead of replaying a partial prefix."""
+        path = self._table(spark, tmp_path)
+        assert "log-retention" not in set(
+            txlog.table_protocol(path).get("reader_features", [])
+        )
+        tip = txlog.current_version(path)
+        assert txlog.expire_log(path, retain_versions=10)
+        feats = set(txlog.table_protocol(path).get("reader_features", []))
+        assert "log-retention" in feats
+        assert txlog.current_version(path) == tip + 1  # one declaring commit
+        # idempotent: a second effective expiry adds no protocol commit
+        assert txlog.expire_log(path, retain_versions=5)
+        assert txlog.current_version(path) == tip + 1
+        assert txlog.read(spark, path).count() == 250
+        # an "old build" (feature absent from its supported set) refuses
+        # the whole table rather than mis-reading the reclaimed log
+        monkeypatch.setattr(
+            txlog,
+            "_READER_FEATURES",
+            txlog._READER_FEATURES - {"log-retention"},
+        )
+        with pytest.raises(ValueError, match="log-retention"):
+            txlog.read(spark, path)
+
+    def test_dry_run_and_noop_expiry_declare_nothing(self, spark, tmp_path):
+        path = self._table(spark, tmp_path)
+        tip = txlog.current_version(path)
+        txlog.expire_log(path, retain_versions=10, dry_run=True)
+        assert txlog.expire_log(path, retain_versions=25) == []  # no-op
+        assert txlog.current_version(path) == tip
+        assert "log-retention" not in set(
+            txlog.table_protocol(path).get("reader_features", [])
+        )
+
+    def test_young_table_without_checkpoint_is_noop(self, spark, tmp_path):
+        path = str(tmp_path / "t")
+        for i in range(4):
+            txlog.append(_batch(spark, tag=i), path)
+        assert txlog.expire_log(path, retain_versions=1) == []
+        assert txlog.read(spark, path).count() == 40
+
+    def test_needs_constraint(self, spark, tmp_path):
+        path = str(tmp_path / "t")
+        txlog.append(_batch(spark), path)
+        with pytest.raises(ValueError, match="retain_versions and/or retain_age"):
+            txlog.expire_log(path)
+        with pytest.raises(ValueError, match=">= 1"):
+            txlog.expire_log(path, retain_versions=0)
+
+    def test_crash_mid_expire_fails_loudly_not_stale(self, spark, tmp_path):
+        """A crashed expire_log leaves an ascending PREFIX of deleted
+        commits (it reclaims commits in ascending order). A read inside
+        the surviving un-anchored band — above the first surviving
+        commit but below every surviving checkpoint — must raise the
+        floor error, never silently replay from empty state at vs[0]
+        (the round-11 advisor reproduced exactly that partial snapshot:
+        commits 1-5 gone, checkpoint at 10, read(version=8) returned 3
+        files instead of 8)."""
+        path = self._table(spark, tmp_path, n_commits=15)
+        for v in range(1, 6):
+            os.remove(txlog._commit_path(path, v))
+        # un-anchored band: no checkpoint at-or-below 6..9
+        with pytest.raises(FileNotFoundError, match="expired-log horizon"):
+            txlog.read(spark, path, version=8)
+        with pytest.raises(FileNotFoundError, match="expired-log horizon"):
+            txlog.read(spark, path, version=6)
+        # anchored reads are unaffected: checkpoint 10 covers >= 10
+        assert txlog.read(spark, path, version=10).count() == 100
+        assert txlog.read(spark, path).count() == 150
+        # crash even earlier — before any checkpoint anchor survives:
+        # a LATEST read must also fail loudly, not return 10 commits of
+        # state as if they were the whole table
+        os.remove(txlog._last_checkpoint_path(path))
+        os.remove(txlog._checkpoint_path(path, 10))
+        with pytest.raises(FileNotFoundError, match="expired-log horizon"):
+            txlog.read(spark, path)
+
+    def test_interior_hole_still_fails_loudly(self, spark, tmp_path):
+        """Defense in depth: an interior hole (not a shape expire_log
+        produces, but e.g. manual tampering) keeps raising too."""
+        path = self._table(spark, tmp_path, n_commits=15)
+        os.remove(txlog._commit_path(path, 3))
+        os.remove(txlog._last_checkpoint_path(path))
+        os.remove(txlog._checkpoint_path(path, 10))
+        with pytest.raises(FileNotFoundError, match="expired-log horizon"):
+            txlog.read(spark, path, version=7)
+
+    def test_streaming_source_unaffected_above_horizon(self, spark, tmp_path):
+        from datalake_brief_spark.streaming.source import register_txlog_source
+
+        path = self._table(spark, tmp_path)
+        txlog.expire_log(path, retain_versions=10)
+        register_txlog_source(spark)
+        got = (
+            spark.readStream.format("txlog")
+            .option("path", path)
+            .option("startingVersion", 10)
+            .load()
+        )
+        q = (
+            got.writeStream.format("memory")
+            .queryName("r11_exp_stream")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        n = spark.sql("SELECT count(*) c FROM r11_exp_stream").collect()[0]["c"]
+        # versions 10..25 inclusive = 16 commits x 10 rows
+        assert n == 160
 
 
 class TestLastCheckpointPointer:
@@ -2080,6 +2464,102 @@ class TestOptimizeZorder:
         assert txlog.read(spark, path).count() == 256
         assert txlog.read(spark, path, version=4).count() == 256
         assert txlog.history(path)[0]["op"] == "optimize_zorder"
+
+
+class TestScopedZorderWhere:
+    """VERDICT r10 ask #5: OPTIMIZE ZORDER ... WHERE — re-cluster one hot
+    band without rewriting cold history."""
+
+    def _table(self, spark, tmp_path):
+        path = str(tmp_path / "t")
+        import random
+
+        rng = random.Random(11)
+        for band in range(4):
+            rows = [
+                (band * 1000 + rng.randrange(1000), rng.randrange(1000), i)
+                for i in range(400)
+            ]
+            txlog.append(
+                spark.createDataFrame(rows, "x long, y long, i long").repartition(3),
+                path,
+                stats_cols=["x", "y"],
+            )
+        return path
+
+    def test_band_rewritten_cold_files_byte_identical(self, spark, tmp_path):
+        path = self._table(spark, tmp_path)
+        pre = {
+            p: os.path.getmtime(p) for p in txlog.visible_files(path)
+        }
+        expect = sorted(txlog.read(spark, path).collect())
+        v = txlog.optimize_zorder(
+            spark, path, ["x", "y"], n_files=4, prune_col="x", lo=3000, hi=3999
+        )
+        assert v == txlog.current_version(path)
+        post = txlog.visible_files(path)
+        survivors = [p for p in post if p in pre]
+        fresh = [p for p in post if p not in pre]
+        # three cold bands' files survive untouched (same paths, same mtime)
+        assert len(survivors) == 9
+        assert all(os.path.getmtime(p) == pre[p] for p in survivors)
+        assert len(fresh) == 4
+        # content identical
+        assert sorted(txlog.read(spark, path).collect()) == expect
+
+    def test_scoped_rewrite_improves_pruning_on_both_dims_in_band(self, spark, tmp_path):
+        path = self._table(spark, tmp_path)
+        n_all = len(txlog.visible_files(path))
+        txlog.optimize_zorder(
+            spark, path, ["x", "y"], n_files=4, prune_col="x", lo=3000, hi=3999
+        )
+        # point-ish reads inside the band prune on BOTH clustered dims
+        stats = txlog.visible_stats(path)
+        in_band = [
+            rel for rel, s in stats.items() if s.get("x") and s["x"][0] >= 3000
+        ]
+        assert len(in_band) == 4
+        # y-stats exist on the fresh band files -> a y-range scopes to a
+        # strict subset of the band (Morton clustering makes y selective)
+        import datalake_brief_spark.sources.txlog as t
+
+        kept = [
+            rel
+            for rel in in_band
+            if not t._range_excludes(stats[rel].get("y"), 0, 99)
+        ]
+        assert 0 < len(kept) < 4
+        got = txlog.read_pruned_multi(
+            spark, path, {"x": (3000, 3999), "y": (0, 99)}
+        )
+        expect = [
+            r
+            for r in txlog.read(spark, path).collect()
+            if 3000 <= r.x <= 3999 and 0 <= r.y <= 99
+        ]
+        assert sorted(
+            (r.x, r.y, r.i)
+            for r in got.filter("x >= 3000 and x <= 3999 and y <= 99").collect()
+        ) == sorted((r.x, r.y, r.i) for r in expect)
+
+    def test_empty_band_is_noop(self, spark, tmp_path):
+        path = self._table(spark, tmp_path)
+        v0 = txlog.current_version(path)
+        assert (
+            txlog.optimize_zorder(
+                spark, path, ["x", "y"], n_files=2, prune_col="x", lo=99000, hi=99999
+            )
+            == v0
+        )
+
+    def test_scoped_zorder_applies_deletion_vectors(self, spark, tmp_path):
+        path = self._table(spark, tmp_path)
+        txlog.delete_where_dv(spark, path, F.col("x").between(3000, 3099))
+        expect = sorted(txlog.read_mor(spark, path).collect())
+        txlog.optimize_zorder(
+            spark, path, ["x", "y"], n_files=4, prune_col="x", lo=3000, hi=3999
+        )
+        assert sorted(txlog.read(spark, path).collect()) == expect
 
 
 class TestReviewFixes:
@@ -2596,14 +3076,7 @@ class TestMutationRace:
         assert got == sorted(list(range(10)) + [2])  # nothing deleted
         # every file outside _txlog/ belongs to a committed group (the
         # initial append's or the racing append's)
-        committed = {os.path.dirname(f) for f in txlog.visible_files(path)}
-        left = [
-            os.path.join(root, f)
-            for root, _, files in os.walk(path)
-            if not os.path.relpath(root, path).startswith("_txlog")
-            for f in files
-            if root not in committed
-        ]
+        left = _orphans(path)
         assert not left, f"the aborted delete left files behind: {left}"
 
     def test_delete_resolves_disjoint_concurrent_append(
@@ -2751,6 +3224,61 @@ class TestMutationRace:
         assert v == tip + 2  # set_column_default stole tip + 1
         got = sorted(r.id for r in txlog.read(spark, path).collect())
         assert got == (list(range(10)) if op == "optimize" else list(range(5, 10)))
+
+    @pytest.mark.parametrize("racer", ["add_constraint", "add_generated_column"])
+    @pytest.mark.parametrize("op", ["append", "update_where", "merge_into"])
+    def test_write_conflicts_with_concurrent_contract_ddl(
+        self, spark, monkeypatch, tmp_path, op, racer
+    ):
+        """A CHECK constraint or generation expression declared after a
+        writer checked its rows against its pinned meta, but before it
+        commits, makes the commit conflict: every row the write lands (the
+        appended row, the update output, the merge's update and insert)
+        violates the racing rule. The table keeps its rows and the
+        racer's rule, and the loser sweeps every group it landed."""
+        path = str(tmp_path / "t")
+        schema = "id long, v long, g long"
+        txlog.append(spark.createDataFrame([(1, 1, 2), (3, 3, 6)], schema), path)
+        write = {
+            "append": lambda: txlog.append(
+                spark.createDataFrame([(2, 50, 0)], schema), path
+            ),
+            "update_where": lambda: txlog.update_where(
+                spark, path, "id = 1", {"v": F.col("v") + 50}
+            ),
+            "merge_into": lambda: txlog.merge_into(
+                spark,
+                path,
+                spark.createDataFrame([(1, 51, 2), (2, 50, 0)], schema),
+                ["id"],
+                when_matched=[("update", "*")],
+            ),
+        }[op]
+        ddl = {
+            "add_constraint": lambda p: txlog.add_constraint(
+                spark, p, "small", "v < 10"
+            ),
+            "add_generated_column": lambda p: txlog.add_generated_column(
+                p, "g", "v * 2", "bigint", spark=spark
+            ),
+        }[racer]
+        real_try = txlog._try_commit
+
+        def racing_try(p, version, *a, **kw):
+            if racing_try.armed:  # the writer's first attempt: checks done
+                racing_try.armed = False
+                ddl(p)  # lands ``version`` first
+            return real_try(p, version, *a, **kw)
+
+        racing_try.armed = True
+        monkeypatch.setattr(txlog, "_try_commit", racing_try)
+        with pytest.raises(txlog.CommitConflict, match="CHECK constraints"):
+            write()
+        monkeypatch.undo()
+        assert txlog.history(path)[0]["op"] == racer
+        got = sorted(map(tuple, txlog.read(spark, path).collect()))
+        assert got == [(1, 1, 2), (3, 3, 6)]
+        assert not _orphans(path)
 
     def test_update_conflicts_with_concurrent_snapshot_op(
         self, spark, monkeypatch, tmp_path
@@ -3428,6 +3956,7 @@ class TestDeletionVectorsRound8:
             "overwrite_where",
             "merge_into_cow",
             "merge_into_identity",
+            "overwrite",
             "optimize",
             "optimize_zorder",
             "reorg_purge",
@@ -3486,6 +4015,9 @@ class TestDeletionVectorsRound8:
                 keys=["id"],
                 when_matched=None,
             ),
+            "overwrite": lambda: txlog.overwrite(
+                spark.createDataFrame([(1000, 3)], "id long, k long"), table
+            ),
             "optimize": lambda: txlog.optimize(spark, table),
             "optimize_zorder": lambda: txlog.optimize_zorder(
                 spark, table, ["id"], n_files=2
@@ -3521,6 +4053,44 @@ class TestDeletionVectorsRound8:
         assert landed() == before_files, "orphan data or change-file group"
         after_rows = sorted(map(tuple, txlog.read_mor(spark, table).collect()))
         assert after_rows == before_rows
+
+    @pytest.mark.parametrize("race", ["mapping_drift", "identity_watermark"])
+    def test_append_conflict_sweeps_group(self, spark, table, monkeypatch, race):
+        """An append whose landed files a racing commit made invalid — a
+        rename that drifts its column mapping, an identity append that
+        moves the watermark its values were assigned from — raises
+        CommitConflict and sweeps the data group it landed."""
+        if race == "identity_watermark":
+            table = os.path.join(os.path.dirname(table), "ident_tbl")
+            txlog.add_identity_column(table, "sk")
+            txlog.append(
+                spark.range(100).select(F.col("id"), (F.col("id") % 7).alias("k")),
+                table,
+            )
+        racer = {
+            "mapping_drift": lambda: txlog.rename_column(table, "k", "bucket"),
+            "identity_watermark": lambda: txlog.append(
+                spark.createDataFrame([(1000, 1)], "id long, k long"), table
+            ),
+        }[race]
+        real = txlog._validate_append_schema
+        calls = {"n": 0}
+
+        def hook(logged, df, merge_schema, **kw):
+            calls["n"] += 1
+            if calls["n"] == 2:  # first in-loop call: the group has landed
+                racer()
+            return real(logged, df, merge_schema, **kw)
+
+        monkeypatch.setattr(txlog, "_validate_append_schema", hook)
+        with pytest.raises(txlog.CommitConflict, match="race"):
+            txlog.append(
+                spark.createDataFrame([(2000, 2)], "id long, k long"),
+                table,
+                merge_schema=True,
+            )
+        monkeypatch.undo()
+        assert not _orphans(table)
 
 
 _DV_EDITS = {
@@ -4072,6 +4642,25 @@ class TestProtocolFeatures:
             assert "protocol" not in _json.load(f).get("meta", {})
         # version-resolved: below the first declaration nothing is required
         assert txlog.table_protocol(t, version=1) == {}
+
+    def test_add_column_declares_mapping_and_defaults_together(
+        self, spark, tmp_path
+    ):
+        """Re-adding a dropped (still reserved) name with a default, after
+        column-mapping was dropped, declares BOTH reader features in its
+        one commit: the generated physical name and the backfill each
+        need one."""
+        t = str(tmp_path / "proto")
+        txlog.append(spark.range(10).selectExpr("id", "id % 3 AS k"), t)
+        txlog.drop_column(t, "k")
+        txlog.reorg_purge(spark, t)
+        txlog.drop_feature(t, "column-mapping")
+        txlog.add_column(spark, t, "k", "int", default="5")
+        assert txlog.table_protocol(t)["reader_features"] == [
+            "column-defaults",
+            "column-mapping",
+        ]
+        assert txlog.read(spark, t).filter("k = 5").count() == 10
 
     def test_unknown_feature_refuses_reads_with_name(self, spark, tmp_path):
         t = str(tmp_path / "proto2")
