@@ -23,8 +23,9 @@ Guarantees (and their mechanism):
   next commit file with O_EXCL. Readers only see files the log names, so a
   writer that dies mid-write leaves invisible garbage, never a torn table.
 - **Optimistic concurrency** — two writers racing to version N+1 collide on
-  the O_EXCL create; the loser re-reads the log and retries against the new
-  tip (blind appends always merge cleanly; overwrites re-validate).
+  the O_EXCL create; the loser examines the commits that won and retries
+  after them, carrying their metadata forward, when the result equals a
+  serial order (one loop, ``_commit_serializable``); overwrites conflict.
 - **Snapshot isolation / time travel** — ``read(version=...)`` resolves the
   file list for any retained version; concurrent commits never disturb an
   in-flight read because its files are immutable.
@@ -359,6 +360,13 @@ def _meta_at(path: str, version: int | None = None) -> dict:
     return _segment_meta(path, *_log_segment(path, version))
 
 
+def _snapshot(path: str, version: int | None = None) -> tuple[dict, dict]:
+    """``(live files, table meta)`` at ``version`` — :func:`_replay` and
+    :func:`_meta_at` from one log walk."""
+    segment = _log_segment(path, version)
+    return _segment_files(path, *segment), _segment_meta(path, *segment)
+
+
 def _segment_meta(path: str, cp_v: int, marker: dict | None, tail: list) -> dict:
     meta: dict = {}
     if marker is not None and "meta_latest" in marker:
@@ -511,9 +519,7 @@ def _write_checkpoint(path: str, version: int) -> None:
     metadata design), so that both resolve in O(tail) from here on. See
     :func:`_maybe_checkpoint` for the single-JSON / multi-part layouts."""
     store = logstore.for_path(path)
-    segment = _log_segment(path, version)
-    live = _segment_files(path, *segment)
-    meta_latest = _segment_meta(path, *segment)
+    live, meta_latest = _snapshot(path, version)
     if len(live) < _CHECKPOINT_MULTIPART_MIN_FILES:
         payload = json.dumps(
             {"version": version, "files": live, "meta_latest": meta_latest}
@@ -631,10 +637,12 @@ def _read_data(
     tags: bool = False,
     row_bases: dict | None = None,
     dvs: dict | None = None,
+    meta: dict | None = None,
 ) -> DataFrame:
     """Scan an explicit list of the table's data files and return the
     LOGICAL view at ``version`` (renames aliased, dropped columns
-    projected out) — the ONE way any txlog code touches data bytes, and
+    projected out; ``meta`` is the table meta at ``version`` when the
+    caller holds it) — the ONE way any txlog code touches data bytes, and
     so the one live-row scan: with ``dvs`` (a :func:`visible_dvs` map)
     the rows its deletion vectors delete are anti-joined out on their
     positions; ``dvs=None`` reads the raw bytes (change records, the
@@ -681,7 +689,8 @@ def _read_data(
       ``__row_id``: COALESCE(the file's materialized ``__row_id``, base +
       ``__ri``) over a broadcast base map; NULL where neither exists —
       whether that is an error is the caller's call."""
-    meta = _meta_at(path, version)
+    if meta is None:
+        meta = _meta_at(path, version)
     schema = meta.get("schema")
     mapping = meta.get("column_mapping") or {}
     dead = _dv_positions(spark, path, dvs, files) if dvs else None
@@ -1331,12 +1340,12 @@ def _widens_to(frm: str, to: str) -> bool:
 
 
 def _validate_append_schema(
-    logged: dict | None, df: DataFrame, merge_schema: bool, system_cols=frozenset()
+    logged: dict | None, types: dict, merge_schema: bool, system_cols=frozenset()
 ) -> dict[str, str]:
     """Writer-side schema enforcement (the Delta contract): compare the
-    incoming frame against the schema recorded in the log (``logged``,
-    None when the log records none) and return the schema dict this
-    commit should record.
+    column types a write lands (``types``, logical name → type) against
+    the schema recorded in the log (``logged``, None when the log records
+    none) and return the schema dict this commit should record.
 
     - A TYPE CHANGE on an existing column is always rejected — two files
       disagreeing on a column's type poison every later read, and no read
@@ -1352,7 +1361,7 @@ def _validate_append_schema(
 
     Tables created before schemas were logged have no entry — enforcement
     starts at their next schema-recording commit (backward compatible)."""
-    cur = dict(df.dtypes)
+    cur = dict(types)
     if logged is None:
         return cur
     conflicts = {}
@@ -1430,12 +1439,13 @@ def _check_reader(
         )
 
 
-def _with_feature(pinned: dict, meta: dict, *features: str) -> dict:
+def _with_feature(base: dict, meta: dict, *features: str) -> dict:
     """Fold ``features`` into the commit meta's protocol declaration if the
-    table meta ``pinned`` — read at the writer's read version — has not
-    declared them all yet (idempotent: later commits carry no protocol
-    key)."""
-    cur = _features(pinned)
+    table meta ``base`` — the one the commit lands after: a DDL's read
+    version, or the tip of a :func:`_commit_serializable` attempt — has
+    not declared them all yet (idempotent: later commits carry no
+    protocol key)."""
+    cur = _features(base)
     if set(features) - cur:
         meta = {
             **meta,
@@ -1690,6 +1700,36 @@ def _physical_reserved(meta: dict) -> set[str]:
     mapping = meta.get("column_mapping") or {}
     reserved.update(mapping.get(c, c) for c in meta.get("schema") or {})
     return reserved
+
+
+def _fresh_physical(meta: dict, cols) -> dict[str, str]:
+    """The one fresh-physical-name rule: each of ``cols`` new to the
+    table meta ``meta``'s logged schema whose name is physically
+    RESERVED (a dropped or renamed-away column still in old files) gets
+    a generated ``<name>__c<uuid8>`` physical name, so the old bytes
+    never resurrect under the new column. Returns logical → fresh
+    physical (empty on a table without a logged schema)."""
+    schema = meta.get("schema")
+    if schema is None:
+        return {}
+    reserved = _physical_reserved(meta)
+    return {
+        c: f"{c}__c{uuid.uuid4().hex[:8]}"
+        for c in cols
+        if c not in schema and c in reserved
+    }
+
+
+def _mapping_meta(meta: dict, fresh: dict[str, str]) -> dict:
+    """The commit-meta keys that record the ``fresh`` physical names of
+    :func:`_fresh_physical` on top of the table meta ``meta`` (``{}``
+    when there are none)."""
+    if not fresh:
+        return {}
+    return {
+        "column_mapping": {**(meta.get("column_mapping") or {}), **fresh},
+        "physical_reserved": sorted(_physical_reserved(meta) | set(fresh.values())),
+    }
 
 
 def _to_logical(df: DataFrame, schema, mapping, passthrough=()) -> DataFrame:
@@ -2029,14 +2069,10 @@ def add_column(
         "added": [name, dtype],
         "schema": {**schema, name: dtype},
     }
-    reserved = _physical_reserved(pinned)
-    mapping = dict(pinned.get("column_mapping") or {})
     feats = []
-    if name in reserved:
-        phys = f"{name}__c{uuid.uuid4().hex[:8]}"
-        mapping[name] = phys
-        meta["column_mapping"] = mapping
-        meta["physical_reserved"] = sorted(reserved | {phys})
+    fresh = _fresh_physical(pinned, [name])
+    if fresh:
+        meta.update(_mapping_meta(pinned, fresh))
         feats.append("column-mapping")
     if default is not None:
         value = _eval_default(spark, default, dtype)
@@ -2545,8 +2581,9 @@ def append(
     auto_compact_min_files: int = 16,
     auto_compact_target_bytes: int = 128 * 1024 * 1024,
 ) -> int:
-    """Blind append: always merges cleanly under races (adds only — no
-    read-set to validate), so a conflict just re-targets the new tip.
+    """Blind append: it reads no rows, so a lost commit race re-targets
+    the new tip unless the winner changed the layout its files landed
+    under (the layout rules of :func:`_commit_serializable`).
 
     ``partition_by`` lands this batch hive-partitioned
     (``__part_<col>=value`` directories; the real columns stay INLINE in
@@ -2586,10 +2623,14 @@ def append(
     ``read(merge_schema=True)``); see :func:`_validate_append_schema`.
 
     The write contract (:func:`_write_contract`) and the schema check
-    run against ONE table meta resolved before any file lands; each
-    commit attempt re-resolves the tip once, and a racing change to what
-    those checks or the landed files assumed raises
-    :class:`CommitConflict` and sweeps the landed group.
+    run against the table meta at the read version, resolved once before
+    any file lands. The commit goes through the one commit loop,
+    :func:`_commit_serializable`, with no read-set: each attempt records
+    the schema, mapping, protocol and row-id bases of the tip it lands
+    after, and a racing change to the CHECK constraints, generated
+    columns, identity watermark, column mapping or initial defaults the
+    landed files assumed raises :class:`CommitConflict` and sweeps the
+    landed group.
 
     ``auto_compact=True`` runs a best-effort post-commit compaction when
     at least ``auto_compact_min_files`` visible files are under half
@@ -2604,37 +2645,22 @@ def append(
     # one pinned meta for every check before landing: the write contract
     # (defaults, identity, generated, CHECK) completes and validates the
     # batch, then the schema contract speaks about the completed frame
-    pinned = _meta_at(path)
+    read_v, pinned = _pinned_read(path, need_table=False)
     _check_bloom_cols(df, bloom_cols, pinned)
     df = _write_contract(df, pinned, new="appended")
     idents = pinned.get("identity") or {}
+    types = dict(df.dtypes)
     _validate_append_schema(  # fail BEFORE data lands
-        pinned.get("schema"), df, merge_schema, system_cols=frozenset(idents)
+        pinned.get("schema"), types, merge_schema, system_cols=frozenset(idents)
     )
     if partition_by:
         missing_p = [c for c in partition_by if c not in df.columns]
         if missing_p:
             raise ValueError(f"partition_by references unknown columns: {missing_p}")
-    # Column mapping: land PHYSICAL column names. A merge_schema append may
-    # re-introduce a logical name whose physical form is RESERVED (a
-    # renamed-away or dropped column still present in old files) — it gets
-    # a fresh generated physical name, or the old bytes would resurrect
-    # under the new column.
-    base_mapping = pinned.get("column_mapping") or {}
-    mapping = dict(base_mapping)
-    logged = pinned.get("schema")
-    reserved = _physical_reserved(pinned)
-    generated: set[str] = set()
-    for c in df.columns:
-        if logged is not None and c not in logged and c in reserved:
-            mapping[c] = f"{c}__c{uuid.uuid4().hex[:8]}"
-            reserved.add(mapping[c])
-            generated.add(c)
-    map_meta = (
-        {"column_mapping": mapping, "physical_reserved": sorted(reserved)}
-        if generated
-        else {}
-    )
+    # land PHYSICAL column names: a merge_schema append re-introducing a
+    # reserved name lands it under a fresh physical name
+    fresh_names = _fresh_physical(pinned, df.columns)
+    mapping = {**(pinned.get("column_mapping") or {}), **fresh_names}
     phys_parts = [mapping.get(c, c) for c in partition_by] if partition_by else None
     adds = _write_data_files(_to_physical(df, mapping), path, phys_parts)
     p_stats = [mapping.get(c, c) for c in stats_cols] if stats_cols else stats_cols
@@ -2646,115 +2672,17 @@ def append(
         pstats = _partition_stats(path, adds, phys_types)
         for rel, s in pstats.items():
             stats.setdefault(rel, {}).update(s)
-    ident_advance = _advance_identity(path, adds, idents)
     try:
-        for _ in range(max_retries):
-            # re-resolve each attempt at the version it commits after: a racing
-            # writer may have evolved the schema between our validation and
-            # our commit (and one landing after this read makes it conflict)
-            read_v = current_version(path)
-            cur = _meta_at(path, read_v)
-            schema_meta = _validate_append_schema(
-                cur.get("schema"), df, merge_schema, system_cols=frozenset(idents)
-            )
-            # the batch passed the write contract of the PINNED meta: a
-            # racing add/drop of a CHECK constraint or a generation
-            # expression would land rows the new contract never saw, and
-            # a racing identity append would collide with the values
-            # BAKED into the landed files from the pinned watermark
-            if (_contract_of(cur), cur.get("identity") or {}) != (
-                _contract_of(pinned), idents
-            ):
-                raise CommitConflict(
-                    "append lost a contract race: the table's CHECK "
-                    "constraints, generated columns or identity watermark "
-                    "changed after this append was checked; re-run it"
-                )
-            # The data files above landed under the column mapping / reserved
-            # set of the pinned meta. A concurrent rename_column/drop_column
-            # that touches THIS append's columns (or any mapping drift while we
-            # carry a stale full-mapping map_meta) would silently undo the DDL
-            # or resurrect reserved physical bytes under a re-introduced
-            # logical name — fail the whole transaction instead (ADVICE r8).
-            # Benign races stay benign: plain appends and ADDITIVE schema
-            # evolution by a racer never trip this (race-safe by design).
-            cur_mapping = cur.get("column_mapping") or {}
-            drift = bool(generated) and cur_mapping != base_mapping
-            if not drift:
-                cur_logged = cur.get("schema")
-                if cur_logged is not None:
-                    cur_reserved = _physical_reserved(cur)
-                    for c in df.columns:
-                        p = mapping.get(c, c)
-                        if c in cur_logged:
-                            if cur_mapping.get(c, c) != p:
-                                drift = True  # rename raced onto our column
-                                break
-                        elif c not in generated and p in cur_reserved:
-                            drift = True  # drop/rename made our layout stale
-                            break
-            if drift:
-                raise CommitConflict(
-                    "append lost a metadata race: the table's column mapping "
-                    "changed (concurrent rename/drop) after this append's data "
-                    "files landed; re-run the append against the new schema"
-                )
-            # row tracking: RE-RESOLVE the flag and allocate fresh id ranges
-            # PER ATTEMPT — a lost race re-reads the watermark the winner
-            # advanced (ranges never overlap), and an enable_row_tracking that
-            # landed since this append's files were written still gets bases
-            # allocated (the landed files carry no ids of their own, so a
-            # stale tracking=False would commit permanently uncovered files)
-            rt_meta, row_bases = {}, None
-            if cur.get("row_tracking"):
-                if _ROWID in df.columns:
-                    raise CommitConflict(
-                        f"append lost a metadata race: row tracking was enabled "
-                        f"concurrently and the frame carries the reserved "
-                        f"{_ROWID!r} column"
-                    )
-                row_bases, wm = _alloc_row_bases(
-                    path, adds, int(cur.get("row_id_watermark") or 0)
-                )
-                rt_meta = {"row_id_watermark": wm}
-            commit_meta = {
-                "op": "append",
-                "schema": schema_meta,
-                **map_meta,
-                **rt_meta,
-                **ident_advance,
-                **(meta or {}),
-            }
-            # a NARROW producer on a widened column lands files the scan must
-            # upcast — normally the widen declared 'type-widening' already,
-            # but after drop_feature the protocol no longer carries it: fold
-            # it back in (re-checked per attempt, so a concurrent drop is
-            # also healed on retry)
-            need = []
-            if any(
-                schema_meta.get(c) != t
-                and c in schema_meta
-                and _widens_to(t, schema_meta[c])
-                for c, t in df.dtypes
-            ):
-                need.append("type-widening")
-            # same ladder rule for a freshly GENERATED physical mapping (a
-            # reserved name re-introduced after drop_column): post-drop_feature
-            # the protocol may no longer declare column-mapping, and a reader
-            # without it would surface the generated physical name
-            if generated:
-                need.append("column-mapping")
-            commit_meta = _with_feature(cur, commit_meta, *need)
-            try:
-                _try_commit(
-                    path, read_v + 1, adds, [], stats, blooms,
-                    meta=commit_meta, row_bases=row_bases,
-                )
-                break
-            except CommitConflict:
-                continue
-        else:
-            raise CommitConflict(f"append lost {max_retries} commit races")
+        v = _commit_serializable(
+            df.sparkSession, path, read_v, pinned, adds, [], stats, blooms,
+            {"op": "append", **_advance_identity(path, adds, idents), **(meta or {})},
+            fresh_rows=adds,
+            types=types,
+            merge_schema=merge_schema,
+            landed=list(df.columns),
+            fresh_names=fresh_names,
+            max_retries=max_retries,
+        )
     except CommitConflict:
         _sweep_group(path, adds)  # no commit references the landed group
         raise
@@ -2764,7 +2692,7 @@ def append(
         # table-level policy (TBLPROPERTIES): None defers to the
         # autoCompact property so every writer of the table inherits the
         # setting; an explicit True/False overrides
-        props = cur.get("properties") or {}
+        props = pinned.get("properties") or {}
         ac = props.get("autoCompact", "").lower() == "true"
         if ac:
             ac_min = int(props.get("autoCompact.minFiles", ac_min))
@@ -2774,7 +2702,7 @@ def append(
         # append above is already durable at version v; the compaction
         # lands as its own commit or not at all
         _auto_compact_after_commit(df.sparkSession, path, ac_min, ac_target)
-    return read_v + 1
+    return v
 
 
 def _sweep_group(path: str, adds: list[str]) -> None:
@@ -3262,6 +3190,7 @@ def _merge_candidate_files(
     read_v: int,
     source: DataFrame,
     keys: list[str],
+    mapping: dict[str, str],
     check_unique: bool = True,
 ) -> tuple[list[str], dict, int, bool | None]:
     """File-level candidate pruning for MERGE: which of the snapshot's
@@ -3289,7 +3218,8 @@ def _merge_candidate_files(
     and every merge join sort-merges the whole candidate band — measured
     4-8× of pure sort waste on a 16M-row band against a 40-row CDC
     batch. ``src_keys_unique`` is None unless ``check_unique``: only a
-    merge with matched clauses reads it."""
+    merge with matched clauses reads it. ``mapping`` is the column
+    mapping at ``read_v`` (blooms are keyed by physical name)."""
     aggs = [F.count(F.lit(1)).alias("__n")]
     nn = None
     for k in keys:
@@ -3328,7 +3258,7 @@ def _merge_candidate_files(
     blooms = visible_blooms(path, read_v) if candidates else {}
     points = {}
     for k in keys:
-        phys = _phys_name(path, read_v, k)
+        phys = mapping.get(k, k)
         if not any(
             phys in blooms.get(os.path.relpath(p, path), {}) for p in candidates
         ):
@@ -3536,12 +3466,10 @@ def merge_into(
         )
     # GENERATED ALWAYS AS IDENTITY under MERGE: the table's identity
     # columns are assigned by the engine — ALWAYS mode rejects any clause
-    # that would write them. INSERT *is* supported (VERDICT r10 ask #3):
-    # values are reserved per commit ATTEMPT inside _commit_serializable's
-    # retry body (the same per-attempt re-read append's loop does for row
-    # bases), so a lost race re-lands the insert files with fresh ids off
-    # the winner's advanced watermark instead of refusing — the core
-    # hands the insert rows to _identity_insert_factory.
+    # that would write them. INSERT *is* supported: values are reserved
+    # per commit ATTEMPT from the tip's watermark (_identity_insert_factory
+    # inside _commit_serializable), so a lost race re-lands the insert
+    # files with fresh ids instead of refusing.
     idents = pinned.get("identity") or {}
     if idents:
         bad_src = [c for c in idents if c in source.columns]
@@ -3597,7 +3525,8 @@ def merge_into(
         source = source.persist()
         _src_persisted = True
     candidates, envelope, n_src, _src_keys_unique = _merge_candidate_files(
-        spark, path, read_v, source, keys, check_unique=bool(matched_clauses)
+        spark, path, read_v, source, keys, pinned.get("column_mapping") or {},
+        check_unique=bool(matched_clauses),
     )
     # Explicit broadcast decision for every source-side join below: a
     # Python/RDD-backed source has NO size statistic (the planner sees
@@ -3614,26 +3543,21 @@ def merge_into(
         leg = F.col(f"t.`{k}`") == F.col(f"s.`{k}`")
         on = leg if on is None else (on & leg)
 
-    def _or_conds(clauses):
-        fires = F.lit(False)
-        for _kind, _a, cond in clauses:
-            leg = (
-                F.lit(True)
-                if cond is None
-                else F.coalesce(_as_col(cond), F.lit(False))
-            )
-            fires = fires | leg
-        return fires
+    def need(m):
+        # a row needs its file rewritten when some clause fires on it:
+        # the same chains phase 2 writes to __act / __bact
+        return (
+            (_act_chain(matched_clauses, m) >= 0)
+            | (_act_chain(bys_clauses, ~m) >= 0)
+        ).cast("int")
 
-    fires = _or_conds(matched_clauses)
     if bys_clauses:
         def per_file(scan):
             srcm1 = source.withColumn("__m", F.lit(True))
             jj = scan.alias("t").join(_src_b(srcm1.alias("s")), on, "left_outer")
             m = F.coalesce(F.col("s.__m"), F.lit(False))
-            need = (m & fires) | (~m & _or_conds(bys_clauses))
             return jj.groupBy(F.col("t.__fn").alias("__fn")).agg(
-                F.max(need.cast("int")).alias("__need"),
+                F.max(need(m)).alias("__need"),
                 F.max(m.cast("int")).alias("__haskey"),
             )
     else:
@@ -3642,7 +3566,7 @@ def merge_into(
                 scan.alias("t")
                 .join(_src_b(source.alias("s")), on, "inner")
                 .groupBy(F.col("t.__fn").alias("__fn"))
-                .agg(F.max(fires.cast("int")).alias("__need"))
+                .agg(F.max(need(F.lit(True))).alias("__need"))
             )
 
     # by-source clauses act on rows with NO source match — any file may
@@ -3669,25 +3593,10 @@ def merge_into(
         # inside the window conflicts (conservative and correct)
         phantom = F.lit(True)
 
-    # Column mapping for the landed files. Evolution may re-introduce a
-    # logical name whose physical form is RESERVED (dropped earlier, or
-    # renamed away) — exactly append's hazard: identity-mapping it would
-    # let the retired bytes in UNTOUCHED files resurrect under the new
-    # column. Generate a fresh physical name, same scheme as append.
-    # (Concurrent mapping DDL is fenced: rename/drop are _SNAPSHOT_OPS,
-    # so the commit retry below surfaces any race instead of drifting.)
-    mapping = dict(pinned.get("column_mapping") or {})
-    merge_meta = {"op": "merge", "schema": post_types}
-    if extra:
-        reserved = _physical_reserved(pinned)
-        for c in extra:
-            if c in reserved:
-                mapping[c] = f"{c}__c{uuid.uuid4().hex[:8]}"
-        reserved |= {mapping.get(c, c) for c in extra}
-        if mapping:
-            merge_meta.update(
-                column_mapping=mapping, physical_reserved=sorted(reserved)
-            )
+    # Evolution may re-introduce a logical name whose physical form is
+    # RESERVED (dropped earlier, or renamed away) — exactly append's
+    # hazard, and the same fresh physical name fixes it.
+    fresh_names = _fresh_physical(pinned, extra)
 
     # Frames re-evaluated by several actions of the core are persisted
     # until the merge returns (the joined rewrite frame feeds the
@@ -3810,7 +3719,7 @@ def merge_into(
             path,
             read_v,
             pinned,
-            merge_meta,
+            {"op": "merge"},
             phantom,
             post_types,
             frame=j,
@@ -3819,7 +3728,9 @@ def merge_into(
             rewrite=rewrite,
             use_dvs=use_dvs,
             fresh=inserts,
-            mapping=mapping,
+            types=post_types,
+            merge_schema=merge_schema,
+            fresh_names=fresh_names,
         )
 
 
@@ -3833,10 +3744,10 @@ def _identity_insert_factory(
     wrote: list[str],
 ):
     """MERGE INSERT into an identity table — the per-attempt reservation
-    protocol (VERDICT r10 ask #3, mirroring append's loop): the returned
-    closure runs inside ``_commit_serializable``'s retry body, resolves
-    the tip meta ONCE per attempt and, on each attempt whose identity
-    watermark differs from the last, (1) deletes the lost attempt's
+    protocol: the returned closure runs inside ``_commit_serializable``'s
+    retry body, takes the attempt's tip meta (the loop's fold, never a
+    log read here) and, on each attempt whose identity watermark differs
+    from the last, (1) deletes the lost attempt's
     unreferenced groups, (2) completes the insert frame through the write
     contract of that tip meta (:func:`_write_contract`; fresh identity
     values from its watermark), (3) lands fresh data + change groups, recording
@@ -3851,8 +3762,7 @@ def _identity_insert_factory(
     coordination beyond the log itself."""
     state: dict = {"wm": None, "groups": [], "adds": [], "change": [], "stats": {}, "blooms": {}, "meta": {}}
 
-    def factory() -> dict:
-        tip = _meta_at(path)
+    def factory(tip: dict) -> dict:
         idents = tip.get("identity") or {}
         wm = {k: (v.get("next"), v.get("step")) for k, v in idents.items()}
         if state["wm"] == wm:
@@ -3982,10 +3892,9 @@ _SNAPSHOT_OPS = {
     # row-id base nor materialized ids
     "add_column",
     "enable_row_tracking",
-    # a mutation re-targeting past a concurrent protocol DOWNGRADE could
-    # land dv_adds/widened state the new tip's protocol no longer
-    # declares (its _with_feature fold was computed against the
-    # pre-drop protocol) — surface the conflict; the re-run re-folds
+    # a protocol DOWNGRADE verified non-use at its own read version; a
+    # mutation re-targeting past it would re-declare what the drop just
+    # verified away — surface the conflict; the re-run re-folds
     "drop_feature",
 }
 
@@ -4000,120 +3909,179 @@ def _commit_serializable(
     stats,
     blooms,
     meta: dict,
+    *,
     predicate=None,
     dv_adds: dict[str, str] | None = None,
-    max_retries: int = 3,
     change_data: list[str] | None = None,
-    alloc_row_bases_for: list[str] | None = None,
+    fresh_rows: list[str] = (),
+    types: dict[str, str] | None = None,
+    merge_schema: bool = False,
+    landed=(),
+    fresh_names: dict[str, str] | None = None,
     ins_factory=None,
+    max_retries: int = 3,
 ) -> int:
-    """WriteSerializable commit for the row-level mutations — the Delta
-    conflict-RESOLUTION rules instead of fail-on-any-race: when another
-    writer stole our target version, examine what actually landed and
-    retry against the new tip iff the result is provably the same as a
-    serial execution:
+    """The one commit loop of every writer that lands data (append, the
+    row-level mutations, MERGE, the maintenance rewrites), WriteSerializable
+    by the Delta conflict-RESOLUTION rules: a writer that lost its target
+    version examines the commits that won and retries after them iff it
+    can carry their metadata forward and the result equals a serial
+    execution. Returns the committed version.
 
-    - a snapshot-restructuring op (_SNAPSHOT_OPS) or any dv_set commit →
-      surface the conflict (no disjointness argument exists);
-    - a concurrent commit sets CHECK constraints or generation
-      expressions other than those of ``pinned`` (the table meta at
-      ``read_v``, which the mutation's rows were checked against) →
-      conflict: its rows never met the new contract;
-    - the concurrent commit REMOVED or DV'd a file we mutate →
-      ConcurrentDelete conflict (write-write on the same rows);
-    - the concurrent commit APPENDED files → evaluate OUR predicate over
-      exactly those files (one bounded scan of the new data, logical
-      view): a match is a phantom row the serial order would have
-      mutated → conflict; no match → the append is disjoint, re-target.
+    Each attempt builds its commit meta from the table meta of the tip
+    it lands after: ``pinned`` (the meta at ``read_v``) first, with no
+    log read; on a retry, ``pinned`` with the racing commits' ``meta``
+    folded on in order (what :func:`_segment_meta` folds). The writer
+    hands over only what it adds: ``types``, the logical types of the
+    columns it lands (None: the table's own, no schema recorded), which
+    :func:`_validate_append_schema` merges into the tip schema; the
+    features it needs, which :func:`_with_feature` folds into the tip
+    protocol (``deletion-vectors`` for ``dv_adds``, ``type-widening`` for
+    a landed type narrower than the recorded one, ``column-mapping`` for
+    ``fresh_names``, the :func:`_fresh_physical` names joining the tip's
+    mapping); fresh-row files, whose row-id bases start at the tip's
+    watermark (``fresh_rows``, whose identity values came from
+    ``pinned``'s watermark, and the adds of ``ins_factory(tip)``, the
+    identity MERGE INSERT of :func:`_identity_insert_factory`).
 
-    Blind appends keep their own simpler retry (append never conflicts).
-    Returns the committed version; raises CommitConflict with the named
-    reason when resolution is impossible.
+    A retry first checks the racing commits:
 
-    ``ins_factory`` (identity-table MERGE INSERT) is invoked once per
-    attempt: it returns the attempt's extra adds/stats/blooms/change
-    files and the identity-watermark meta advance, re-landing the insert
-    files with fresh values whenever the watermark moved since the last
-    attempt (see :func:`_identity_insert_factory`).
-    ``alloc_row_bases_for`` and the factory's adds are fresh-row files:
-    on a row-tracking table each attempt allocates their row-id bases.
-    Nothing here resolves a meta: the flags come from ``pinned``, and a
-    racing commit's changes are read from its own commit file."""
-    tracking = pinned.get("row_tracking")
-    contract = _contract_of(pinned)
-    target = read_v + 1
+    - **read-set rules**, for a writer that read (it has ``removes``,
+      ``dv_adds`` or a ``predicate``; a blind append has none): a
+      ``_SNAPSHOT_OPS`` racer or any ``dv_set``; a racer that removed
+      or DV'd a file this writer removes or DVs; the phantom probe,
+      ``predicate`` over the racers' added files (logical view at the
+      tip) matching a row the serial order would have touched;
+    - **layout rules** (:func:`_layout_conflict`), for a writer that
+      lands files: the contract changed, a landed column was re-mapped,
+      pre-assigned identity values went stale, or a racer gave a column
+      the landed files omit an initial default."""
+    reads = bool(removes or dv_adds or predicate is not None)
+    lands = bool(adds or ins_factory)
+    fresh_names = fresh_names or {}
+    idents = pinned.get("identity") or {}
+    ours = set(removes) | set(dv_adds or {})
+    tip, target = pinned, read_v + 1
     for _ in range(max_retries + 1):
-        # row tracking: fresh-id allocation re-derives PER ATTEMPT from the
-        # tip watermark (same serialization argument as append's loop)
-        meta_rt, row_bases = dict(meta), None
-        adds_t, stats_t, blooms_t = adds, stats, blooms
-        change_t = change_data
-        alloc = list(alloc_row_bases_for or [])
+        commit_meta = dict(meta)
+        # a pre-DV reader must refuse the table, not resurrect rows
+        need = ["deletion-vectors"] if dv_adds else []
+        if types is not None:
+            try:
+                schema = _validate_append_schema(
+                    tip.get("schema"), types, merge_schema,
+                    system_cols=frozenset(idents),
+                )
+            except (TypeError, ValueError) as e:
+                raise CommitConflict(
+                    f"a concurrent commit changed the schema this write "
+                    f"lands into: {e}"
+                ) from e
+            commit_meta["schema"] = schema
+            if any(
+                c in schema and t != schema[c] and _widens_to(t, schema[c])
+                for c, t in types.items()
+            ):
+                need.append("type-widening")
+        if fresh_names:
+            commit_meta.update(_mapping_meta(tip, fresh_names))
+            need.append("column-mapping")
+        adds_t, stats_t, blooms_t, change_t = adds, stats, blooms, change_data
+        fresh = list(fresh_rows)
         if ins_factory is not None:
-            ins = ins_factory()
+            ins = ins_factory(tip)
             adds_t = list(adds) + ins["adds"]
             stats_t = {**(stats or {}), **ins["stats"]}
             blooms_t = {**(blooms or {}), **ins["blooms"]}
             change_t = list(change_data or []) + ins["change"]
-            meta_rt.update(ins["meta"])
-            alloc += ins["adds"]
-        if alloc and tracking:
-            row_bases, wm = _alloc_row_bases(path, alloc)
-            meta_rt["row_id_watermark"] = wm
+            commit_meta.update(ins["meta"])
+            fresh += ins["adds"]
+        row_bases = None
+        if fresh and tip.get("row_tracking"):
+            row_bases, commit_meta["row_id_watermark"] = _alloc_row_bases(
+                path, fresh, int(tip.get("row_id_watermark") or 0)
+            )
         try:
             _try_commit(
                 path, target, adds_t, removes, stats_t, blooms_t,
-                meta=meta_rt, dv_adds=dv_adds, change_data=change_t,
-                row_bases=row_bases,
+                meta=_with_feature(tip, commit_meta, *need), dv_adds=dv_adds,
+                change_data=change_t, row_bases=row_bases,
             )
             return target
         except CommitConflict as e:
-            tip = current_version(path)
-            ours = set(removes) | set(dv_adds or {})
-            new_files: list[str] = []
-            for v in range(target, tip + 1):
+            tip_v, tip, new_files = current_version(path), dict(tip), []
+            for v in range(target, tip_v + 1):
                 c = _load_commit(path, v)
                 op = c.get("meta", {}).get("op", "write")
-                if op in _SNAPSHOT_OPS or c.get("dv_set"):
+                if reads and (op in _SNAPSHOT_OPS or c.get("dv_set")):
                     raise CommitConflict(
                         f"concurrent snapshot-level operation {op!r} at "
                         f"version {v}; cannot prove serializability"
                     ) from e
-                if _contract_of({**pinned, **c.get("meta", {})}) != contract:
+                if reads and ours & {*c.get("removes", []), *c.get("dv_adds", {})}:
                     raise CommitConflict(
-                        f"concurrent commit {v} changed the CHECK constraints "
-                        f"or generated columns this mutation's rows were "
-                        f"checked against"
+                        f"concurrent commit {v} removed or added deletion "
+                        f"vectors on file(s) this write rewrites (write-write "
+                        f"conflict)"
                     ) from e
-                if set(c.get("removes", [])) & ours:
-                    raise CommitConflict(
-                        f"concurrent commit {v} removed file(s) this "
-                        f"mutation rewrites (write-write conflict)"
-                    ) from e
-                if set(c.get("dv_adds", {})) & ours:
-                    raise CommitConflict(
-                        f"concurrent commit {v} added deletion vectors on "
-                        f"file(s) this mutation touches"
-                    ) from e
-                new_files.extend(c.get("adds", []))
-            if new_files and predicate is not None:
+                tip.update(c.get("meta", {}))
+                new_files += c.get("adds", [])
+            why = lands and _layout_conflict(
+                pinned, tip, landed, fresh_names, idents if fresh_rows else None
+            )
+            if not why and new_files and predicate is not None:
                 probe = _read_data(
-                    spark,
-                    path,
-                    [os.path.join(path, r) for r in new_files],
-                    merge_schema=True,
-                    version=tip,
+                    spark, path, [os.path.join(path, r) for r in new_files],
+                    merge_schema=True, version=tip_v, meta=tip,
                 )
                 if probe.filter(predicate).limit(1).count():
-                    raise CommitConflict(
-                        "concurrent append added rows matching this "
-                        "mutation's predicate (phantom conflict under "
-                        "WriteSerializable)"
-                    ) from e
-            target = tip + 1
-    raise CommitConflict(
-        f"mutation lost {max_retries} serializability retries"
-    )
+                    why = (
+                        "added rows matching this write's predicate (phantom "
+                        "conflict under WriteSerializable)"
+                    )
+            if why:
+                raise CommitConflict(
+                    f"a concurrent commit up to version {tip_v} {why}"
+                ) from e
+            target = tip_v + 1
+    raise CommitConflict(f"write lost {max_retries + 1} commit races")
+
+
+def _layout_conflict(
+    pinned: dict, tip: dict, landed, fresh_names: dict, idents: dict | None
+) -> str | None:
+    """Why files landed under the table meta ``pinned`` cannot commit
+    after the table meta ``tip`` (None: they can) — the layout rules of
+    :func:`_commit_serializable`, in order: the CHECK constraints or
+    generation expressions changed (:func:`_contract_of`); the mapping
+    of a ``landed`` logical column drifted from the physical name its
+    files carry (``pinned``'s, or its ``fresh_names`` entry); the
+    identity spec ``idents`` the landed values were assigned from moved;
+    a racer gave an initial default to a column the landed files omit
+    (their rows would read NULL there, which no serial order reads)."""
+    if _contract_of(tip) != _contract_of(pinned):
+        return "changed the CHECK constraints or generated columns"
+    schema = tip.get("schema")
+    phys = {**(pinned.get("column_mapping") or {}), **fresh_names}
+    if schema is not None:
+        mapping, reserved = tip.get("column_mapping") or {}, _physical_reserved(tip)
+        for c in landed:
+            p = phys.get(c, c)
+            if c in schema and mapping.get(c, c) != p or (
+                c not in schema and c not in fresh_names and p in reserved
+            ):
+                return f"re-mapped {c!r}, landed as {p!r} (a metadata race)"
+    if idents is not None and (tip.get("identity") or {}) != idents:
+        return "moved the identity watermark the landed values came from (a race)"
+
+    def initial(meta: dict) -> set[str]:
+        cds = meta.get("column_defaults") or {}
+        return {c for c, d in cds.items() if d.get("initial") is not None}
+
+    omitted = initial(tip) - initial(pinned) - set(landed)
+    if omitted:
+        return f"gave {sorted(omitted)} an initial default the landed files omit"
+    return None
 
 
 def _prune_candidates(
@@ -4287,6 +4255,7 @@ def _mutate_where(
     use_dvs: bool,
     meta: dict,
     fresh: DataFrame | None = None,
+    types: dict[str, str] | None = None,
 ) -> int:
     """Phases 1 and 2 of the predicate mutations (DELETE, UPDATE,
     replaceWhere; copy-on-write or DV) at ``read_v`` and its table meta
@@ -4302,7 +4271,8 @@ def _mutate_where(
        their positions (the predicate filters the scan itself, so it
        pushes down); already-DV-dead positions never re-match.
 
-    SQL three-valued logic: a NULL predicate fires nothing."""
+    SQL three-valued logic: a NULL predicate fires nothing. ``fresh``
+    and ``types`` pass through to :func:`_mutate`."""
     fields = _table_fields(spark, path, read_v, pinned)
     _check_assignments([clause[1]], fields)
     ranges = {prune_col: (lo, hi)} if prune_col is not None else {}
@@ -4326,6 +4296,7 @@ def _mutate_where(
     return _mutate(
         spark, path, read_v, pinned, meta, predicate, fields,
         frame=frame, clauses=clauses, rewrite=matched, use_dvs=use_dvs, fresh=fresh,
+        types=types,
     )
 
 
@@ -4344,7 +4315,9 @@ def _mutate(
     rewrite: list[str] = (),
     use_dvs: bool = False,
     fresh: DataFrame | None = None,
-    mapping: dict | None = None,
+    types: dict[str, str] | None = None,
+    merge_schema: bool = False,
+    fresh_names: dict[str, str] | None = None,
     stats_also=(),
 ) -> int:
     """Phases 3 and 4 of every row-level mutation: apply the clauses,
@@ -4355,9 +4328,13 @@ def _mutate(
     is ``[]`` and no ``predicate`` probes a concurrent append.
 
     ``pinned`` is the table meta at ``read_v``; this core resolves no
-    meta of its own. The column mapping, the identity and row-tracking
-    flags, the deletion-vector feature fold and the write contract of
-    the update outputs (:func:`_write_contract`) all come from it.
+    meta of its own. The column mapping the groups land under (plus
+    ``fresh_names``, the :func:`_fresh_physical` names of MERGE's new
+    columns), the identity flag and the write contract of the update
+    outputs (:func:`_write_contract`) come from it; the commit meta's
+    schema (from ``types``, the post-mutation types of a writer that
+    records one, and ``merge_schema``), protocol and row-id bases come
+    from the tip each commit attempt lands after.
 
     ``frame`` (aliased ``t``; None when no row is targeted) carries per
     row ``__act``, the index into ``clauses`` of the clause that fires,
@@ -4394,7 +4371,7 @@ def _mutate(
     version, or ``read_v`` when nothing changed (no empty commit)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    mapping = pinned.get("column_mapping") or {} if mapping is None else mapping
+    mapping = {**(pinned.get("column_mapping") or {}), **(fresh_names or {})}
     wrote: list[str] = []  # group dirs this call landed
 
     def land(df: DataFrame, writer) -> list[str]:
@@ -4510,10 +4487,6 @@ def _mutate(
         factory = _identity_insert_factory(
             path, ins_frame, list(fields), mapping, stat_cols, bloom_cols, wrote
         )
-    if dv_adds:
-        # irreversible-layout gate: pre-DV engine builds must refuse the
-        # table, not resurrect rows
-        meta = _with_feature(pinned, meta, "deletion-vectors")
     try:
         return _commit_serializable(
             spark,
@@ -4528,7 +4501,11 @@ def _mutate(
             predicate=predicate,
             dv_adds=dv_adds or None,
             change_data=change_data,
-            alloc_row_bases_for=fresh_adds,
+            fresh_rows=fresh_adds,
+            types=types,
+            merge_schema=merge_schema,
+            landed=list(fields),
+            fresh_names=fresh_names,
             ins_factory=factory,
         )
     except CommitConflict:
@@ -4651,9 +4628,8 @@ def overwrite_where(
             "delete_where + append instead"
         )
     new_df = _write_contract(new_df, pinned, new="replacement")
-    schema_meta = _validate_append_schema(
-        pinned.get("schema"), new_df, merge_schema=False
-    )
+    types = dict(new_df.dtypes)
+    _validate_append_schema(pinned.get("schema"), types, merge_schema=False)
     predicate = _as_col(predicate)
     if enforce:
         stray = new_df.filter(~F.coalesce(predicate, F.lit(False))).limit(1).count()
@@ -4664,8 +4640,7 @@ def overwrite_where(
             )
     return _mutate_where(
         spark, path, read_v, pinned, predicate, ("delete", None), prune_col,
-        lo, hi, False, {"op": "replace_where", "schema": schema_meta},
-        fresh=new_df,
+        lo, hi, False, {"op": "replace_where"}, fresh=new_df, types=types,
     )
 
 
@@ -4968,14 +4943,18 @@ def table_changes(
     lands) and legacy pre-change-record rewrite commits (their diff
     predates id materialization)."""
     to_v = current_version(path) if to_version is None else to_version
-    _check_reader(path, to_v)
+    # to_v's meta renders the whole feed: resolved once, not per commit
+    meta_to = _meta_at(path, to_v)
+    _check_reader(path, meta=meta_to)
+    sch_to = meta_to.get("schema") or {}
+    mapping = meta_to.get("column_mapping") or {}
     # the feed reads every commit record in (from_v, to_v]; a window
     # reaching below an expire_log horizon fails deterministically with
     # the named floor (same contract as snapshot reads below it)
     vs0 = _versions(path)
     if vs0 and vs0[0] > 1 and from_version + 1 < vs0[0]:
         raise _expired_read_error(path, from_version + 1)
-    if include_row_ids and not row_tracking_enabled(path, to_v):
+    if include_row_ids and not meta_to.get("row_tracking"):
         raise ValueError(
             f"include_row_ids needs row tracking enabled on {path!r}"
         )
@@ -5008,8 +4987,7 @@ def table_changes(
             # file is WIDER (a restore below a type widening records the
             # removed wide rows losslessly — casting them to the narrow
             # post-restore type would overflow exactly those rows)
-            sch = latest_meta(path, "schema", to_v)
-            mapping = _column_mapping(path, to_v)
+            sch = meta_to.get("schema")
             if sch is not None:
                 dd = dict(cd.dtypes)
                 sch = {
@@ -5025,9 +5003,7 @@ def table_changes(
             # add render the backfill, like every data-file read (the
             # commit version is the exact predates test here — all of
             # this commit's change files share it)
-            cds_meta = latest_meta(path, "column_defaults", to_v) or {}
-            sch_to = latest_meta(path, "schema", to_v) or {}
-            for c, d in cds_meta.items():
+            for c, d in (meta_to.get("column_defaults") or {}).items():
                 if (
                     d.get("initial") is not None
                     and c in sch_to
@@ -5051,8 +5027,7 @@ def table_changes(
             # widening sits inside the window), scan and render at the
             # covering type, or the explicit narrow scan schema fails on
             # the wide pages (the same fix as _snapshot_diff's)
-            sch_to = latest_meta(path, "schema", to_v) or {}
-            sch_at_v = latest_meta(path, "schema", v) or {}
+            sch_at_v = _meta_at(path, v).get("schema") or {}
             cdf_overrides = {
                 c: t
                 for c, t in sch_at_v.items()
@@ -5079,6 +5054,7 @@ def table_changes(
                 version=to_v,
                 type_overrides=cdf_overrides or None,
                 row_bases=bases,
+                meta=meta_to,
             )
             if include_row_ids:
                 rows = rows.withColumnRenamed(_ROWID, "row_id")
@@ -5090,7 +5066,7 @@ def table_changes(
             continue
         d = _snapshot_diff(
             spark, path, v - 1, v, schema_v=to_v,
-            include_row_ids=include_row_ids,
+            include_row_ids=include_row_ids, schema_meta=meta_to,
         )
         if d is not None:
             legs.append(
@@ -5101,7 +5077,9 @@ def table_changes(
     if not legs:
         # data-bearing commits, zero row-level change (e.g. an OPTIMIZE-only
         # window): an EMPTY frame in the feed's schema, not an error
-        t = _read_data(spark, path, [], merge_schema=True, version=to_v)
+        t = _read_data(
+            spark, path, [], merge_schema=True, version=to_v, meta=meta_to
+        )
         extra = (
             [F.lit(None).cast("long").alias("row_id")] if include_row_ids else []
         )
@@ -5126,6 +5104,7 @@ def _snapshot_diff(
     v_to: int,
     schema_v: int,
     include_row_ids: bool = False,
+    schema_meta: dict | None = None,
 ) -> DataFrame | None:
     """Net row-level diff between two snapshots — the cross-file CDC
     engine: file-set symmetric difference + deletion-vector corrections,
@@ -5139,18 +5118,24 @@ def _snapshot_diff(
     physical pages the narrow type cannot hold — scanning narrow would
     fail (or silently wrap) on exactly the rows the record must report,
     so the record stays lossless at the wide type. Returns ``None`` when
-    the snapshots are provably identical (no file or DV difference)."""
-    f_from = set(visible_files(path, v_from))
-    f_to = set(visible_files(path, v_to))
+    the snapshots are provably identical (no file or DV difference).
+    ``schema_meta`` is the table meta at ``schema_v`` when the caller
+    holds it; each version's files and meta come from one log walk."""
+    (live_from, meta_from), (live_to, meta_to) = (
+        _snapshot(path, v) for v in (v_from, v_to)
+    )
+    if schema_meta is None:
+        schema_meta = meta_to if schema_v == v_to else _meta_at(path, schema_v)
+    f_from = {os.path.join(path, rel) for rel in live_from}
+    f_to = {os.path.join(path, rel) for rel in live_to}
     added = sorted(f_to - f_from)
     removed = sorted(f_from - f_to)
-    sv = latest_meta(path, "schema", schema_v) or {}
+    sv = schema_meta.get("schema") or {}
     type_overrides: dict = {}
-    for other_v in (v_from, v_to):
+    for other_v, meta in ((v_from, meta_from), (v_to, meta_to)):
         if other_v == schema_v:
             continue
-        so = latest_meta(path, "schema", other_v) or {}
-        for c, t in so.items():
+        for c, t in (meta.get("schema") or {}).items():
             base = type_overrides.get(c, sv.get(c))
             if base is not None and t != base and _widens_to(base, t):
                 type_overrides[c] = t
@@ -5167,8 +5152,8 @@ def _snapshot_diff(
     #     positions added as deletes and — since RESTORE's dv_set can
     #     SHRINK a file's DV list back to an older state — the positions
     #     removed as inserts (resurrected rows re-enter the snapshot).
-    dvs_from = visible_dvs(path, v_from)
-    dvs_to = visible_dvs(path, v_to)
+    dvs_from = _live_dvs(path, live_from)
+    dvs_to = _live_dvs(path, live_to)
 
     def _live(files, dv_map):
         # render at schema_v's logical names but the COVERING types (the
@@ -5176,7 +5161,7 @@ def _snapshot_diff(
         # record exists to report)
         return _read_data(
             spark, path, files, version=schema_v,
-            type_overrides=type_overrides or None, dvs=dv_map,
+            type_overrides=type_overrides or None, dvs=dv_map, meta=schema_meta,
         )
 
     common = sorted(f_from & f_to)
@@ -5191,7 +5176,7 @@ def _snapshot_diff(
     a = _live(added, dvs_to) if added else None
     r = _live(removed, dvs_from) if removed else None
     if a is None and r is None:
-        a = r = _read_data(spark, path, [], version=schema_v)
+        a = r = _read_data(spark, path, [], version=schema_v, meta=schema_meta)
     elif a is None:
         a = r.limit(0)
     elif r is None:
@@ -5208,9 +5193,14 @@ def _snapshot_diff(
         new_pos = _dv_positions(spark, path, dvs_to, dv_changed)
         old_pos = _dv_positions(spark, path, dvs_from, dv_changed)
         # position-exact identity for DV-commit changes
+        bases = None
+        if include_row_ids:
+            bases = {
+                rel: e["base"] for rel, e in live_to.items() if e.get("base") is not None
+            }
         rows = _read_data(
             spark, path, dv_changed, version=schema_v, tags=True,
-            row_bases=visible_row_bases(path, v_to) if include_row_ids else None,
+            row_bases=bases, meta=schema_meta,
         )
         if include_row_ids:
             rows = rows.withColumnRenamed(_ROWID, "row_id")
@@ -5409,7 +5399,7 @@ def clone(src_path: str, dst_path: str, version: int | None = None) -> int:
     vacuuming the SOURCE can reclaim files the clone references — retain
     accordingly, or deep-copy via ``overwrite(read(...), dst)``.
     Returns the clone's first version."""
-    live = _replay(src_path, version)
+    live, src_meta = _snapshot(src_path, version)
     if not live:
         raise FileNotFoundError(f"no table at {src_path!r} (empty log)")
     if _versions(dst_path):
@@ -5443,15 +5433,14 @@ def clone(src_path: str, dst_path: str, version: int | None = None) -> int:
         # the policies-live-with-the-data story
         "properties",
     ):
-        m = latest_meta(src_path, key, version)
-        if m is not None:
-            meta[key] = m
+        if src_meta.get(key) is not None:
+            meta[key] = src_meta[key]
     # column defaults ride along, but a clone's one-commit log cannot
     # resolve the SOURCE's add-commit versions — record each initial
     # default's pre-add population as an explicit dst-relative file list
     # (bounded by the clone's own file count, like the stats it already
     # serializes). Clone-of-clone re-keys the list it inherited.
-    cds = latest_meta(src_path, "column_defaults", version)
+    cds = src_meta.get("column_defaults")
     if cds is not None:
         out_cds = {}
         for c, d in cds.items():
@@ -5486,9 +5475,8 @@ def clone(src_path: str, dst_path: str, version: int | None = None) -> int:
     # source snapshot; the clone allocates its own fresh ids from the
     # carried watermark thereafter)
     for key in ("row_tracking", "row_id_watermark"):
-        m = latest_meta(src_path, key, version)
-        if m is not None:
-            meta[key] = m
+        if src_meta.get(key) is not None:
+            meta[key] = src_meta[key]
     row_bases = {
         rel: e["base"] for rel, e in rel_map.items() if e.get("base") is not None
     }
@@ -6494,14 +6482,14 @@ def _row_id_watermark(path: str) -> int:
     return int(latest_meta(path, "row_id_watermark") or 0)
 
 
-def _alloc_row_bases(path: str, rels: list[str], wm: int | None = None):
+def _alloc_row_bases(path: str, rels: list[str], wm: int):
     """Allocate contiguous fresh-id ranges for new file groups: each file's
-    base is the running watermark, advanced by its exact footer row count.
-    Returns ``(row_bases, new_watermark)``. Callers racing for a version
-    re-invoke per commit attempt — only the commit WINNER's allocation
-    lands, so id ranges are serialized by commit order and never overlap."""
-    if wm is None:
-        wm = _row_id_watermark(path)
+    base is the running watermark, starting at ``wm`` (the table meta's
+    ``row_id_watermark`` at the version the commit lands after), advanced
+    by its exact footer row count. Returns ``(row_bases,
+    new_watermark)``. Callers racing for a version re-invoke per commit
+    attempt — only the commit WINNER's allocation lands, so id ranges are
+    serialized by commit order and never overlap."""
     bases: dict[str, int] = {}
     for rel in sorted(rels):
         bases[rel] = wm

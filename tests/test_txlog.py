@@ -7,6 +7,7 @@ import datetime as dt
 import json
 import os
 import shutil
+import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -36,6 +37,17 @@ def _orphans(path):
         if not os.path.relpath(root, path).startswith("_txlog")
         and root not in committed
         for f in files
+    ]
+
+
+def _fresh(prefix="r12_"):
+    return os.path.join(tempfile.mkdtemp(prefix=prefix), "t")
+
+
+def _ops(path):
+    return [
+        txlog._load_commit(path, v).get("meta", {}).get("op")
+        for v in txlog._versions(path)
     ]
 
 
@@ -2879,6 +2891,584 @@ class TestSchemaEnforcement:
         assert "note" in txlog.latest_meta(path, "schema")
 
 
+class TestWidenColumnType:
+    def _table(self, spark):
+        path = _fresh("r12w_")
+        txlog.append(
+            spark.createDataFrame([(1, 1.5), (2, 2.5)], "k int, x float"),
+            path,
+            stats_cols=["k"],
+            bloom_cols=["k"],
+        )
+        return path
+
+    def test_widen_is_metadata_only_and_reads_wide(self, spark):
+        path = self._table(spark)
+        pre_files = sorted(txlog.visible_files(path))
+        v = txlog.widen_column_type(path, "k", "bigint")
+        assert v == 2
+        c = txlog._load_commit(path, v)
+        assert c["adds"] == [] and c["removes"] == []  # metadata-only
+        assert sorted(txlog.visible_files(path)) == pre_files  # no rewrite
+        df = txlog.read(spark, path)
+        assert dict(df.dtypes)["k"] == "bigint"
+        assert sorted(r.k for r in df.collect()) == [1, 2]
+        # float chain too
+        txlog.widen_column_type(path, "x", "double")
+        assert dict(txlog.read(spark, path).dtypes)["x"] == "double"
+
+    def test_narrow_appends_keep_landing_after_widen(self, spark):
+        """The CDC steady state: a producer whose schema froze at int
+        keeps appending after the table widened — files land narrow, the
+        commit records the WIDE logged type, the scan upcasts."""
+        path = self._table(spark)
+        txlog.widen_column_type(path, "k", "bigint")
+        txlog.append(
+            spark.createDataFrame([(3, 3.5)], "k int, x float"), path
+        )
+        txlog.append(
+            spark.createDataFrame([(4, 4.5)], "k bigint, x float"), path
+        )
+        df = txlog.read(spark, path)
+        assert dict(df.dtypes)["k"] == "bigint"
+        assert sorted(r.k for r in df.collect()) == [1, 2, 3, 4]
+        assert (txlog.latest_meta(path, "schema") or {})["k"] == "bigint"
+        # widening the OTHER way on append is still rejected: an int
+        # table does not silently become bigint because one frame was
+        path2 = self._table(spark)
+        with pytest.raises(TypeError, match="widen_column_type"):
+            txlog.append(
+                spark.createDataFrame([(9, 9.5)], "k bigint, x float"), path2
+            )
+
+    def test_time_travel_sees_the_old_type(self, spark):
+        path = self._table(spark)
+        txlog.widen_column_type(path, "k", "bigint")
+        assert dict(txlog.read(spark, path, version=1).dtypes)["k"] == "int"
+
+    def test_illegal_moves_rejected_and_same_type_noop(self, spark):
+        path = self._table(spark)
+        txlog.widen_column_type(path, "k", "bigint")
+        with pytest.raises(ValueError, match="widening"):
+            txlog.widen_column_type(path, "k", "int")  # narrowing
+        with pytest.raises(ValueError, match="widening"):
+            txlog.widen_column_type(path, "x", "bigint")  # cross-chain
+        with pytest.raises(ValueError, match="no column"):
+            txlog.widen_column_type(path, "zz", "bigint")
+        v = txlog.current_version(path)
+        assert txlog.widen_column_type(path, "k", "bigint") == v  # no-op
+        assert txlog.current_version(path) == v
+
+    def test_reader_feature_gate(self, spark, monkeypatch):
+        path = self._table(spark)
+        txlog.widen_column_type(path, "k", "bigint")
+        assert "type-widening" in txlog.table_protocol(path)["reader_features"]
+        monkeypatch.setattr(
+            txlog,
+            "_READER_FEATURES",
+            txlog._READER_FEATURES - {"type-widening"},
+        )
+        with pytest.raises(ValueError, match="type-widening"):
+            txlog.read(spark, path)
+
+    def test_skipping_survives_widen(self, spark):
+        """Stats and blooms collected at the narrow type keep pruning
+        after the widen (value-level comparisons are representation-
+        independent)."""
+        path = _fresh("r12wp_")
+        for i in range(4):
+            txlog.append(
+                spark.createDataFrame(
+                    [(i * 10 + j, float(i)) for j in range(10)],
+                    "k int, x float",
+                ).coalesce(1),
+                path,
+                stats_cols=["k"],
+                bloom_cols=["k"],
+            )
+        txlog.widen_column_type(path, "k", "bigint")
+        got = txlog.read_pruned(spark, path, "k", lo=15, hi=17)
+        assert sorted(r.k for r in got.collect()) == [15, 16, 17]
+        assert txlog.read_point(spark, path, "k", 23).count() == 1
+        assert txlog.fast_count(path) == 40
+
+    def test_mutations_and_cdf_across_widen(self, spark):
+        path = self._table(spark)
+        txlog.widen_column_type(path, "k", "bigint")
+        txlog.update_where(
+            spark, path, F.col("k") == 2, {"x": F.lit(9.5).cast("float")}
+        )
+        rows = {r.k: r.x for r in txlog.read(spark, path).collect()}
+        assert rows == {1: 1.5, 2: 9.5}
+        ch = txlog.table_changes(spark, path, 2, 3)  # window is (from, to]
+        assert dict(ch.dtypes)["k"] == "bigint"
+        # this engine's CDF records an UPDATE as its delete+insert pair
+        got = sorted((r["_change_type"], r.k, r.x) for r in ch.collect())
+        assert got == [("delete", 2, 2.5), ("insert", 2, 9.5)]
+
+    def test_widen_after_rename_uses_logical_name(self, spark):
+        path = self._table(spark)
+        txlog.rename_column(path, "k", "key")
+        txlog.widen_column_type(path, "key", "bigint")
+        df = txlog.read(spark, path)
+        assert dict(df.dtypes)["key"] == "bigint"
+        assert sorted(r.key for r in df.collect()) == [1, 2]
+
+    def test_stream_started_after_widen_upcasts_backlog(self, spark):
+        """A stream starting on a widened table declares the WIDE schema
+        but its backlog holds narrow physical files — the executor-side
+        cast renders them uniformly (pre-round-12 this crashed on the
+        arrow/declared type mismatch)."""
+        from datalake_brief_spark.streaming.source import register_txlog_source
+
+        register_txlog_source(spark)
+        path = self._table(spark)
+        txlog.widen_column_type(path, "k", "bigint")
+        txlog.append(
+            spark.createDataFrame([(3, 3.5)], "k int, x float"), path
+        )  # narrow post-widen
+        txlog.append(
+            spark.createDataFrame([(4, 4.5)], "k bigint, x float"), path
+        )  # wide post-widen
+        got = (
+            spark.readStream.format("txlog").option("path", path).load()
+        )
+        assert dict(got.dtypes)["k"] == "bigint"
+        q = (
+            got.writeStream.format("memory")
+            .queryName("r12_widen_stream")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        rows = spark.sql("SELECT k FROM r12_widen_stream").collect()
+        assert sorted(r.k for r in rows) == [1, 2, 3, 4]
+
+    def test_cdf_stream_started_after_widen_upcasts(self, spark):
+        from datalake_brief_spark.streaming.source import register_txlog_source
+
+        register_txlog_source(spark)
+        path = self._table(spark)
+        txlog.widen_column_type(path, "k", "bigint")
+        txlog.append(
+            spark.createDataFrame([(3, 3.5)], "k int, x float"), path
+        )
+        got = (
+            spark.readStream.format("txlog")
+            .option("path", path)
+            .option("readChangeFeed", "true")
+            .load()
+        )
+        assert dict(got.dtypes)["k"] == "bigint"
+        q = (
+            got.writeStream.format("memory")
+            .queryName("r12_widen_cdf")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        rows = spark.sql(
+            "SELECT k, _change_type FROM r12_widen_cdf"
+        ).collect()
+        assert sorted((r.k, r._change_type) for r in rows) == [
+            (1, "insert"),
+            (2, "insert"),
+            (3, "insert"),
+        ]
+
+    def test_mid_stream_widen_fails_without_tracking(self, spark):
+        """A running stream's declared schema froze narrow; post-widen
+        appends may land the WIDER physical type, so the widen commit
+        must fail the stream like rename/drop (never silently downcast)."""
+        from datalake_brief_spark.streaming.source import register_txlog_source
+
+        register_txlog_source(spark)
+        path = self._table(spark)
+        got = (
+            spark.readStream.format("txlog").option("path", path).load()
+        )  # schema frozen at k int
+        txlog.widen_column_type(path, "k", "bigint")
+        txlog.append(
+            spark.createDataFrame([(2**40, 9.5)], "k bigint, x float"), path
+        )
+        q = (
+            got.writeStream.format("memory")
+            .queryName("r12_widen_mid")
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination(120)
+        except Exception:
+            pass
+        exc = q.exception()
+        q.stop()
+        assert exc is not None and "widen_column_type" in str(exc)
+
+    def test_mid_stream_widen_tracking_restart_resumes_wide(self, spark):
+        """With schemaTrackingLocation the widen failure records the wide
+        schema; a plain restart drains the backlog — including the
+        out-of-int32-range row — at bigint. Mirrors the rename-restart
+        contract (round 11)."""
+        from datalake_brief_spark.streaming.source import register_txlog_source
+
+        register_txlog_source(spark)
+        path = self._table(spark)
+        loc = tempfile.mkdtemp(prefix="r12wloc_")
+        ck = tempfile.mkdtemp(prefix="r12wck_")
+        rows: list = []
+
+        def drain(sink):
+            got = (
+                spark.readStream.format("txlog")
+                .option("path", path)
+                .option("schemaTrackingLocation", loc)
+                .load()
+            )
+            q = (
+                got.writeStream.foreachBatch(
+                    lambda df, _eid: sink.extend(df.collect())
+                )
+                .option("checkpointLocation", ck)
+                .trigger(availableNow=True)
+                .start()
+            )
+            try:
+                q.awaitTermination(180)
+            except Exception:
+                pass
+            exc = q.exception()
+            q.stop()
+            return exc
+
+        assert drain(rows) is None
+        assert sorted(r.k for r in rows) == [1, 2]
+        txlog.widen_column_type(path, "k", "bigint")
+        txlog.append(
+            spark.createDataFrame([(2**40, 9.5)], "k bigint, x float"), path
+        )
+        mid: list = []
+        exc = drain(mid)
+        assert exc is not None and "schemaTrackingLocation" in str(exc)
+        assert mid == []  # the failed batch committed nothing
+        post: list = []
+        assert drain(post) is None
+        assert sorted(r.k for r in post) == [2**40]
+
+    def test_extended_lattice_int_to_double_and_decimal(self, spark):
+        """The full Delta type-widening GA lattice: int→double,
+        integer→decimal (enough integral digits), decimal growth —
+        all metadata-only, all readable over narrow physical pages."""
+        path = _fresh("r12wx_")
+        txlog.append(
+            spark.range(3)
+            .selectExpr(
+                "CAST(id AS INT) k",
+                "CAST(id * 10 AS INT) d",
+                "CAST(id + 0.25 AS DECIMAL(10,2)) m",
+            ),
+            path,
+            stats_cols=["k"],
+        )
+        txlog.widen_column_type(path, "k", "double")
+        txlog.widen_column_type(path, "d", "decimal(12,2)")
+        txlog.widen_column_type(path, "m", "decimal(20,4)")
+        df = txlog.read(spark, path)
+        assert dict(df.dtypes) == {
+            "k": "double",
+            "d": "decimal(12,2)",
+            "m": "decimal(20,4)",
+        }
+        import decimal
+
+        rows = sorted((r.k, r.d, r.m) for r in df.collect())
+        assert rows[1] == (
+            1.0,
+            decimal.Decimal("10.00"),
+            decimal.Decimal("1.2500"),
+        )
+        # pruning on the int->double column still skips from old int stats
+        assert txlog.read_pruned(spark, path, "k", lo=1, hi=1).count() == 1
+        # refusals: lossy or cross-family moves
+        with pytest.raises(ValueError, match="widening"):
+            txlog.widen_column_type(path, "m", "decimal(20,2)")  # scale shrink
+        path2 = _fresh("r12wx2_")
+        txlog.append(
+            spark.range(2).selectExpr("CAST(id AS BIGINT) k", "CAST(id AS FLOAT) f"),
+            path2,
+        )
+        with pytest.raises(ValueError, match="widening"):
+            txlog.widen_column_type(path2, "k", "double")  # bigint->double lossy
+        with pytest.raises(ValueError, match="widening"):
+            txlog.widen_column_type(path2, "k", "decimal(18,0)")  # too few digits
+        with pytest.raises(ValueError, match="widening"):
+            txlog.widen_column_type(path2, "f", "decimal(20,4)")  # float->decimal
+        assert txlog.widen_column_type(path2, "k", "decimal(21,1)") > 0
+
+    def test_stream_over_int_to_double_widened_table(self, spark):
+        from datalake_brief_spark.streaming.source import register_txlog_source
+
+        register_txlog_source(spark)
+        path = _fresh("r12wsd_")
+        txlog.append(
+            spark.range(2).selectExpr("CAST(id AS INT) k"), path
+        )
+        txlog.widen_column_type(path, "k", "double")
+        txlog.append(spark.range(2, 4).selectExpr("CAST(id AS INT) k"), path)
+        got = spark.readStream.format("txlog").option("path", path).load()
+        assert dict(got.dtypes)["k"] == "double"
+        q = (
+            got.writeStream.format("memory")
+            .queryName("r12_wsd")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        rows = spark.sql("SELECT k FROM r12_wsd").collect()
+        assert sorted(r.k for r in rows) == [0.0, 1.0, 2.0, 3.0]
+
+    def test_widen_survives_checkpoint_and_expiry(self, spark):
+        """The widened schema must resolve from a CHECKPOINT's folded
+        meta after the widening commit itself is reclaimed by
+        expire_log — the long-lived-table shape."""
+        path = _fresh("r12wck_")
+        txlog.append(
+            spark.range(5).selectExpr("CAST(id AS INT) k"), path,
+            stats_cols=["k"],
+        )
+        txlog.widen_column_type(path, "k", "bigint")
+        for i in range(1, 12):  # checkpoints at 10 land past the widen
+            txlog.append(
+                spark.range(i * 5, i * 5 + 5).selectExpr("CAST(id AS INT) k"),
+                path,
+            )
+        txlog.expire_log(path, retain_versions=3)
+        assert txlog._versions(path)[0] == 10  # widen commit (v2) reclaimed
+        df = txlog.read(spark, path)
+        assert dict(df.dtypes)["k"] == "bigint"
+        assert df.count() == 60
+        assert "type-widening" in txlog.table_protocol(path)["reader_features"]
+
+    def test_merge_with_narrow_source_after_widen(self, spark):
+        path = self._table(spark)
+        txlog.widen_column_type(path, "k", "bigint")
+        src = spark.createDataFrame([(2, 7.5), (3, 3.5)], "k int, x float")
+        txlog.merge_into(
+            spark,
+            path,
+            src,
+            keys=["k"],
+            when_matched=[("update", {"x": "s.x"})],
+            when_not_matched=True,
+        )
+        rows = {r.k: r.x for r in txlog.read(spark, path).collect()}
+        assert rows == {1: 1.5, 2: 7.5, 3: 3.5}
+        assert dict(txlog.read(spark, path).dtypes)["k"] == "bigint"
+
+
+class TestWidenBloomInteraction:
+    def _table(self, spark, n=4):
+        path = _fresh("r12wb_")
+        for i in range(n):
+            txlog.append(
+                spark.range(i * 10, (i + 1) * 10)
+                .selectExpr("CAST(id AS INT) k")
+                .coalesce(1),
+                path,
+                stats_cols=["k"],
+                bloom_cols=["k"],
+            )
+        return path
+
+    def test_chain_leaving_widen_retires_blooms_no_false_skip(self, spark):
+        """Stored blooms hash INT bits; a probe at double/decimal hashes
+        the repr — consulting them would silently false-skip. The widen
+        commit retires the column's blooms instead: point reads keep the
+        files (correct, conservatively unskipped)."""
+        path = self._table(spark)
+        assert any(
+            "k" in bl for bl in txlog.visible_blooms(path).values()
+        )
+        txlog.widen_column_type(path, "k", "double")
+        assert not any(
+            "k" in bl for bl in txlog.visible_blooms(path).values()
+        )
+        got = txlog.read_point(spark, path, "k", 23.0)
+        assert [r.k for r in got.collect()] == [23.0]
+        # time travel below the widen still serves the blooms
+        assert any(
+            "k" in bl for bl in txlog.visible_blooms(path, version=4).values()
+        )
+
+    def test_int_chain_widen_keeps_blooms_skipping(self, spark):
+        """Within the int chain probes stay python ints and hash
+        identically — blooms keep skipping after the widen."""
+        path = self._table(spark)
+        txlog.widen_column_type(path, "k", "bigint")
+        assert any(
+            "k" in bl for bl in txlog.visible_blooms(path).values()
+        )
+        got = txlog.read_point(spark, path, "k", 23)
+        assert [r.k for r in got.collect()] == [23]
+
+
+class TestWidenRestoreOptimizeClone:
+    def _widened(self, spark, big=2**40):
+        path = _fresh("r12wr_")
+        txlog.append(
+            spark.createDataFrame([(1,)], "k int"), path, stats_cols=["k"]
+        )
+        txlog.widen_column_type(path, "k", "bigint")
+        txlog.append(spark.createDataFrame([(big,)], "k bigint"), path)
+        return path
+
+    def test_restore_below_widen_narrows_back_and_records_losslessly(
+        self, spark
+    ):
+        """RESTORE below the widening reverts the schema (Delta restores
+        metadata) and its change record reports the removed WIDE rows at
+        the covering type — never a downcast overflow or a silent wrap."""
+        path = self._widened(spark)
+        v = txlog.restore(path, 1, spark)
+        df = txlog.read(spark, path)
+        assert dict(df.dtypes)["k"] == "int"  # schema reverted with data
+        assert [r.k for r in df.collect()] == [1]
+        ch = txlog.table_changes(spark, path, v - 1, v)
+        assert dict(ch.dtypes)["k"] == "bigint"  # lossless record
+        assert sorted((r["_change_type"], r.k) for r in ch.collect()) == [
+            ("delete", 2**40)
+        ]
+        # and the same via the read-time diff (session-less restore)
+        path2 = self._widened(spark)
+        v2 = txlog.restore(path2, 1)
+        ch2 = txlog.table_changes(spark, path2, v2 - 1, v2)
+        assert sorted((r["_change_type"], r.k) for r in ch2.collect()) == [
+            ("delete", 2**40)
+        ]
+
+    def test_optimize_after_widen_lands_wide_files(self, spark):
+        import pyarrow.parquet as pq
+
+        path = _fresh("r12wo_")
+        for i in range(3):
+            txlog.append(
+                spark.createDataFrame([(i,)], "k int").coalesce(1),
+                path,
+                stats_cols=["k"],
+            )
+        txlog.widen_column_type(path, "k", "bigint")
+        txlog.optimize(spark, path, target_file_bytes=1 << 30)
+        files = txlog.visible_files(path)
+        assert len(files) == 1
+        assert str(pq.ParquetFile(files[0]).schema_arrow.field("k").type) == "int64"
+        assert sorted(r.k for r in txlog.read(spark, path).collect()) == [0, 1, 2]
+        assert txlog.read_pruned(spark, path, "k", lo=1, hi=1).count() == 1
+
+    def test_clone_carries_widened_schema_and_protocol(self, spark):
+        path = self._widened(spark)
+        dst = _fresh("r12wc_")
+        txlog.clone(path, dst)
+        assert dict(txlog.read(spark, dst).dtypes)["k"] == "bigint"
+        assert "type-widening" in txlog.table_protocol(dst)["reader_features"]
+        assert sorted(r.k for r in txlog.read(spark, dst).collect()) == [
+            1,
+            2**40,
+        ]
+
+
+class TestReviewHardeningRound12:
+    """Regression pins for the round-12 adversarial review findings."""
+
+    def test_anchored_read_inside_reclaimed_band_fails_loudly(self, spark):
+        """Crash-mid-expiry toward a NEWER horizon can reclaim commits
+        ABOVE an older surviving checkpoint; an anchored read whose tail
+        was reclaimed must raise, never return the checkpoint state
+        silently labeled as the requested version."""
+        path = _fresh("r12anc_")
+        for i in range(25):
+            txlog.append(spark.range(10).coalesce(1), path)
+        # crash window: commits 11-12 reclaimed, checkpoints 10+20 intact
+        os.remove(txlog._commit_path(path, 11))
+        os.remove(txlog._commit_path(path, 12))
+        with pytest.raises(FileNotFoundError, match="expired-log horizon"):
+            txlog.read(spark, path, version=12)
+        with pytest.raises(FileNotFoundError, match="expired-log horizon"):
+            txlog.read(spark, path, version=15)  # density check band
+        # anchored-and-complete reads stay fine
+        assert txlog.read(spark, path, version=10).count() == 100
+        assert txlog.read(spark, path).count() == 250  # pointer path
+        assert txlog.read(spark, path, version=20).count() == 200
+
+    def test_read_beyond_latest_raises_not_silently_tip(self, spark):
+        path = _fresh("r12beyond_")
+        for i in range(3):
+            txlog.append(spark.range(5).coalesce(1), path)
+        with pytest.raises(ValueError, match="beyond the latest"):
+            txlog.read(spark, path, version=9)
+        # and through the pointer fast path too
+        path2 = _fresh("r12beyond2_")
+        for i in range(12):
+            txlog.append(spark.range(5).coalesce(1), path2)
+        assert txlog._pointer_version(path2) == 10
+        with pytest.raises(ValueError, match="beyond the latest"):
+            txlog.read(spark, path2, version=99)
+
+    def test_bloom_rejected_on_narrow_append_after_chain_leaving_widen(
+        self, spark
+    ):
+        """The LOGGED type is the bloom contract: after int->double, a
+        narrow producer's int frame must not land an int-hashed bloom on
+        the logically-double column (probes would false-skip)."""
+        path = _fresh("r12bw_")
+        txlog.append(spark.createDataFrame([(1,)], "k int"), path)
+        txlog.widen_column_type(path, "k", "double")
+        with pytest.raises(TypeError, match="logged type"):
+            txlog.append(
+                spark.createDataFrame([(2,)], "k int"), path, bloom_cols=["k"]
+            )
+        # int-chain widen keeps blooms legal (probes hash identically)
+        path2 = _fresh("r12bw2_")
+        txlog.append(spark.createDataFrame([(1,)], "k int"), path2)
+        txlog.widen_column_type(path2, "k", "bigint")
+        txlog.append(
+            spark.createDataFrame([(2,)], "k int"), path2, bloom_cols=["k"]
+        )
+        assert txlog.read_point(spark, path2, "k", 2).count() == 1
+
+    def test_clone_carries_bloom_retirement_and_properties(self, spark):
+        src = _fresh("r12clsrc_")
+        for i in range(2):
+            txlog.append(
+                spark.createDataFrame([(i * 10 + 3,)], "k int").coalesce(1),
+                src,
+                stats_cols=["k"],
+                bloom_cols=["k"],
+            )
+        txlog.widen_column_type(src, "k", "double")  # retires blooms
+        txlog.set_table_properties(src, {"autoCompact": "true"})
+        dst = _fresh("r12cldst_")
+        txlog.clone(src, dst)
+        assert not any("k" in bl for bl in txlog.visible_blooms(dst).values())
+        assert [r.k for r in txlog.read_point(spark, dst, "k", 13.0).collect()] == [
+            13.0
+        ]
+        assert txlog.table_properties(dst)["autoCompact"] == "true"
+
+    def test_cdf_append_leg_across_narrowing_restore(self, spark):
+        """A pure-append commit of WIDE pages inside a window whose to_v
+        schema is narrower (restore below the widen) must scan and render
+        at the covering type, not fail or wrap."""
+        path = _fresh("r12cdfw_")
+        txlog.append(spark.createDataFrame([(1,)], "k int"), path)
+        txlog.widen_column_type(path, "k", "bigint")
+        txlog.append(spark.createDataFrame([(2**40,)], "k bigint"), path)
+        v = txlog.restore(path, 1)  # session-less: read-time diff
+        ch = txlog.table_changes(spark, path, 1, v)
+        got = sorted((r["_change_type"], r.k, r["_commit_version"]) for r in ch.collect())
+        assert got == [("delete", 2**40, 4), ("insert", 2**40, 3)]
+        assert dict(ch.dtypes)["k"] == "bigint"
+
+
 class TestFastCount:
     def test_count_tracks_mutations_without_scans(self, spark, tmp_path):
         path = str(tmp_path / "t")
@@ -3332,6 +3922,108 @@ class TestMutationRace:
         got = sorted(r.id for r in txlog.read(spark, path).collect())
         assert got == list(range(9))  # only the racer's delete landed
 
+    _RACE_WRITERS = {
+        "merge_into": lambda spark, p: txlog.merge_into(
+            spark,
+            p,
+            spark.createDataFrame(
+                [(1, "b", 1), (50, "c", 50)], "id long, v string, n int"
+            ),
+            ["id"],
+            when_matched=[("update", "*")],
+            when_not_matched=True,
+        ),
+        "overwrite_where": lambda spark, p: txlog.overwrite_where(
+            spark, p, spark.createDataFrame([(1, "r", 1)], "id long, v string, n int"),
+            "id = 1",
+        ),
+        "delete_where_dv": lambda spark, p: txlog.delete_where_dv(spark, p, "id = 2"),
+        "update_where_dv": lambda spark, p: txlog.update_where_dv(
+            spark, p, "id = 3", {"v": F.lit("u")}
+        ),
+        "append": lambda spark, p: txlog.append(
+            spark.createDataFrame([(20, "x", 20)], "id long, v string, n int"), p
+        ),
+    }
+    _RACERS = {
+        "evolve": lambda spark, p: txlog.append(
+            spark.createDataFrame(
+                [(100, "z", 100, 7)], "id long, v string, n int, extra long"
+            ),
+            p,
+            merge_schema=True,
+        ),
+        "widen": lambda spark, p: txlog.widen_column_type(p, "n", "bigint"),
+        "add_column_default": lambda spark, p: txlog.add_column(
+            spark, p, "d", "int", default="7"
+        ),
+    }
+
+    @pytest.mark.parametrize(
+        "writer,racer",
+        [
+            ("merge_into", "evolve"),
+            ("overwrite_where", "evolve"),
+            ("merge_into", "widen"),
+            ("delete_where_dv", "widen"),
+            ("update_where_dv", "widen"),
+            ("append", "add_column_default"),
+        ],
+    )
+    def test_retry_carries_the_racers_meta_forward(
+        self, spark, monkeypatch, tmp_path, writer, racer
+    ):
+        """A writer whose commit version a disjoint racer took retries with
+        the meta of the tip it lands after: the table ends with the schema,
+        protocol and rows of the serial order racer-then-writer, never with
+        the racer's evolution, widening or feature undone. A blind append
+        whose files omit a column the racer gave an initial default has no
+        serial equivalent (its rows would read NULL there): it conflicts
+        and sweeps its group."""
+        def table(name):
+            p = str(tmp_path / name)
+            txlog.append(
+                spark.createDataFrame(
+                    [(i, "a", i) for i in range(10)], "id long, v string, n int"
+                ).coalesce(1),
+                p,
+            )
+            return p
+
+        def state(p):
+            rows = {
+                tuple(sorted(r.asDict().items()))
+                for r in txlog.read(spark, p).collect()
+            }
+            return txlog.latest_meta(p, "schema"), txlog.table_protocol(p), rows
+
+        serial = table("serial")
+        self._RACERS[racer](spark, serial)
+        self._RACE_WRITERS[writer](spark, serial)
+        path = table("t")
+        real_try = txlog._try_commit
+
+        def racing_try(p, version, *a, **kw):
+            if racing_try.armed:  # the writer's first attempt
+                racing_try.armed = False
+                self._RACERS[racer](spark, p)  # lands ``version`` first
+            return real_try(p, version, *a, **kw)
+
+        racing_try.armed = True
+        monkeypatch.setattr(txlog, "_try_commit", racing_try)
+        if writer == "append":
+            with pytest.raises(txlog.CommitConflict, match="initial default"):
+                self._RACE_WRITERS[writer](spark, path)
+            monkeypatch.undo()
+            assert txlog.history(path)[0]["op"] == "add_column"
+            assert txlog.read(spark, path).filter("d = 7").count() == 10
+            assert not _orphans(path)
+            return
+        v = self._RACE_WRITERS[writer](spark, path)
+        monkeypatch.undo()
+        assert v == 3  # the racer took version 2
+        assert state(path) == state(serial)
+
 
 class TestCheckConstraints:
     def test_violating_append_rejected_before_commit(self, spark, tmp_path):
@@ -3414,6 +4106,243 @@ class TestNeedsOptimize:
         assert after["n_files"] < before["n_files"]
         # content unchanged
         assert txlog.read(spark, path).count() == 900
+
+
+class TestAutoCompact:
+    def test_bounds_file_count_and_preserves_content(self, spark):
+        path = _fresh("r12ac_")
+        for i in range(24):
+            txlog.append(
+                spark.range(10)
+                .withColumnRenamed("id", "k")
+                .withColumn("batch", F.lit(i).cast("int"))
+                .coalesce(1),
+                path,
+                stats_cols=["k"],
+                auto_compact=True,
+                auto_compact_min_files=8,
+            )
+        # without compaction this snapshot would hold 24 one-file groups;
+        # the hook keeps the visible count bounded by the trigger
+        assert len(txlog.visible_files(path)) < 10
+        assert txlog.read(spark, path).count() == 240
+        assert (
+            txlog.read(spark, path).groupBy().agg(F.sum("batch")).collect()[0][0]
+            == sum(range(24)) * 10
+        )
+        assert _ops(path).count("optimize") >= 2
+        # data skipping survives: the rewrite recollects stats
+        assert txlog.read_pruned(spark, path, "k", lo=3, hi=3).count() == 24
+
+    def test_below_threshold_is_noop(self, spark):
+        path = _fresh("r12acn_")
+        for i in range(4):
+            txlog.append(
+                spark.range(5).coalesce(1),
+                path,
+                auto_compact=True,
+                auto_compact_min_files=8,
+            )
+        assert txlog.current_version(path) == 4
+        assert "optimize" not in _ops(path)
+
+    def test_streaming_append_sink_auto_compacts_and_replays_safely(
+        self, spark
+    ):
+        """The CDC motivation end-to-end: a foreachBatch append stream with
+        auto_compact keeps the table's file count bounded, replayed
+        epochs stay no-ops, and a DOWNSTREAM txlog stream never re-emits
+        compacted rows (optimize commits are dataChange=false)."""
+        from datalake_brief_spark.streaming.sinks import apply_append_batch
+        from datalake_brief_spark.streaming.source import register_txlog_source
+
+        path = _fresh("r12acs_")
+        for epoch in range(20):
+            assert apply_append_batch(
+                spark.range(epoch * 10, epoch * 10 + 10)
+                .withColumnRenamed("id", "k")
+                .coalesce(1),
+                path,
+                "r12app",
+                epoch,
+                auto_compact=True,
+            )
+        # replay of an already-landed epoch: skipped before any write
+        v = txlog.current_version(path)
+        assert not apply_append_batch(
+            spark.range(5).coalesce(1), path, "r12app", 7, auto_compact=True
+        )
+        assert txlog.current_version(path) == v
+        assert len(txlog.visible_files(path)) < 16  # bounded (20 raw)
+        assert txlog.read(spark, path).count() == 200
+        assert _ops(path).count("optimize") >= 1
+        # downstream consumer: compaction commits are invisible
+        register_txlog_source(spark)
+        got = spark.readStream.format("txlog").option("path", path).load()
+        q = (
+            got.writeStream.format("memory")
+            .queryName("r12_ac_downstream")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        n = spark.sql("SELECT count(*) c FROM r12_ac_downstream").collect()[0]["c"]
+        assert n == 200  # every row exactly once, none re-emitted
+
+    def test_lost_compaction_race_is_benign(self, spark, monkeypatch):
+        """Best-effort contract: the append is durable before the hook
+        runs; a compaction losing its commit race must not fail the
+        append."""
+        path = _fresh("r12acr_")
+        for i in range(8):
+            txlog.append(spark.range(5).coalesce(1), path)
+
+        def lose_race(*a, **k):
+            raise txlog.CommitConflict("simulated racer owns the version")
+
+        monkeypatch.setattr(txlog, "optimize", lose_race)
+        v = txlog.append(
+            spark.range(5).coalesce(1),
+            path,
+            auto_compact=True,
+            auto_compact_min_files=2,
+        )
+        assert v == 9
+        assert txlog.read(spark, path).count() == 45
+
+
+class TestMaintain:
+    def test_property_driven_full_cycle(self, spark):
+        """compact -> checkpoint -> expire -> vacuum from TBLPROPERTIES
+        alone — one scheduler call per table."""
+        path = _fresh("r12mn_")
+        txlog.append(spark.range(5).coalesce(1), path, stats_cols=["id"])
+        txlog.set_table_properties(
+            path,
+            {
+                "autoCompact": "true",
+                "autoCompact.minFiles": 6,
+                "checkpoint.onMaintain": "true",
+                "logRetention.versions": 3,
+                "vacuum.retainVersions": 1,
+            },
+        )
+        for i in range(12):
+            # plain appends; the property already auto-compacts inline,
+            # so spread data for maintain() to have work left: disable
+            # per-call to accumulate small files
+            txlog.append(
+                spark.range(i * 5, i * 5 + 5).coalesce(1),
+                path,
+                auto_compact=False,
+            )
+        expect = txlog.read(spark, path).count()
+        rep = txlog.maintain(spark, path)
+        assert rep["compacted_to"] is not None  # small files trip-wired
+        # the checkpoint lands at the post-compaction tip (15); the FIRST
+        # expiry then writes the log-retention feature commit (16)
+        assert rep["checkpointed"] == rep["compacted_to"]
+        assert txlog.current_version(path) == rep["checkpointed"] + 1
+        assert rep["log_expired"] > 0  # commits below the horizon reclaimed
+        assert rep["files_vacuumed"] > 0  # superseded data files swept
+        assert txlog.read(spark, path).count() == expect
+        assert txlog._versions(path)[0] > 1
+        # idempotent-ish: a second run finds nothing to compact/expire
+        rep2 = txlog.maintain(spark, path)
+        assert rep2["compacted_to"] is None and rep2["log_expired"] == 0
+
+    def test_no_properties_is_noop(self, spark):
+        path = _fresh("r12mn0_")
+        txlog.append(spark.range(5).coalesce(1), path)
+        v = txlog.current_version(path)
+        rep = txlog.maintain(spark, path)
+        assert rep == {
+            "reclustered_to": None,  # r13: property-driven re-clustering step
+            "compacted_to": None,
+            "checkpointed": None,
+            "log_expired": 0,
+            "files_vacuumed": 0,
+        }
+        assert txlog.current_version(path) == v
+
+
+class TestTableProperties:
+    def _seed(self, spark):
+        path = _fresh("r12tp_")
+        txlog.append(spark.range(5).coalesce(1), path)
+        return path
+
+    def test_set_unset_describe_and_time_travel(self, spark):
+        path = self._seed(spark)
+        v = txlog.set_table_properties(
+            path, {"autoCompact": "true", "owner": "team-data", "ttl": 30}
+        )
+        assert txlog.table_properties(path) == {
+            "autoCompact": "true",
+            "owner": "team-data",
+            "ttl": "30",  # values stringify (Delta convention)
+        }
+        assert txlog.table_properties(path, version=v - 1) == {}
+        assert (
+            txlog.describe_detail(path)["properties"]["owner"] == "team-data"
+        )
+        c = txlog._load_commit(path, v)
+        assert c["adds"] == [] and c["removes"] == []  # metadata-only
+        txlog.set_table_properties(path, {"owner": "team-ml"})  # merge
+        assert txlog.table_properties(path)["owner"] == "team-ml"
+        assert txlog.table_properties(path)["autoCompact"] == "true"
+        txlog.unset_table_properties(path, ["ttl", "missing-key"])
+        assert "ttl" not in txlog.table_properties(path)
+
+    def test_property_drives_auto_compact_and_call_overrides(self, spark):
+        path = self._seed(spark)
+        txlog.set_table_properties(
+            path, {"autoCompact": "true", "autoCompact.minFiles": 6}
+        )
+        for i in range(10):  # plain appends — no per-call flag
+            txlog.append(spark.range(5).coalesce(1), path)
+        ops = [
+            txlog._load_commit(path, v).get("meta", {}).get("op")
+            for v in txlog._versions(path)
+        ]
+        assert ops.count("optimize") >= 1
+        assert len(txlog.visible_files(path)) < 8
+        # explicit False overrides the property
+        n_opt = ops.count("optimize")
+        for i in range(8):
+            txlog.append(spark.range(5).coalesce(1), path, auto_compact=False)
+        ops2 = [
+            txlog._load_commit(path, v).get("meta", {}).get("op")
+            for v in txlog._versions(path)
+        ]
+        assert ops2.count("optimize") == n_opt
+        # flipping the property off stops the hook for plain appends too
+        txlog.set_table_properties(path, {"autoCompact": "false"})
+        for i in range(4):
+            txlog.append(spark.range(5).coalesce(1), path)
+        ops3 = [
+            txlog._load_commit(path, v).get("meta", {}).get("op")
+            for v in txlog._versions(path)
+        ]
+        assert ops3.count("optimize") == n_opt
+
+    def test_sink_inherits_table_policy(self, spark):
+        from datalake_brief_spark.streaming.sinks import apply_append_batch
+
+        path = self._seed(spark)
+        txlog.set_table_properties(
+            path, {"autoCompact": "true", "autoCompact.minFiles": 6}
+        )
+        for epoch in range(10):
+            apply_append_batch(
+                spark.range(5).coalesce(1), path, "r12tp", epoch
+            )
+        ops = [
+            txlog._load_commit(path, v).get("meta", {}).get("op")
+            for v in txlog._versions(path)
+        ]
+        assert ops.count("optimize") >= 1
+        assert txlog.read(spark, path).count() == 55
 
 
 class TestTimestampTimeTravel:
